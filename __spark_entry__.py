@@ -502,16 +502,6 @@ WHERE p.lat BETWEEN f.lat_min AND f.lat_max
 """
 
 
-def _poly_fences_df(spark: SparkSession) -> DataFrame:
-    rows = [
-        (name, [(float(lat), float(lng)) for lat, lng in poly])
-        for name, poly in _POLY_FENCES
-    ]
-    return spark.createDataFrame(
-        rows, "name string, polygon array<struct<lat:double,lng:double>>"
-    )
-
-
 def _fences_sql(fences: list) -> str:
     """DuckDB literal fence rows (name, polygon) for a fence set."""
     return " UNION ALL ".join(
@@ -2594,13 +2584,9 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # shared replay-source materialization (runner.py::
-    # pinned_replay_source, round-10 verdict #5): one partitionBy
-    # write + driver renames, cached per (sf_dir, slicing) for the
-    # session so bench warm re-runs skip the slicing jobs entirely
+    # pinned_replay_source): one partitionBy write + driver renames
     src_dir = pinned_replay_source(
-        sliced.select("event_id", "point", "b"),
-        n_batches,
-        cache_key=(sf_dir, "skm_pts_ts_eventid_v1"),
+        sliced.select("event_id", "point", "b"), n_batches
     )
 
     stream = (
@@ -8213,11 +8199,7 @@ def _fanout_replay_source(spark: SparkSession, sf_dir: str, nb: int) -> str:
     """The fan-out family's pinned replay source: ALL events rows
     (validity filtering happens inside each micro-batch, exactly like
     the stream), projected to the Kafka-message payload columns and
-    ntile(nb)-sliced over the total order (ts, event_id).  Shared —
-    via pinned_replay_source's per-session cache — by
-    streaming_telco_fanout and streaming_geofence_hot_reload, so a
-    bench/driver run executing both (or re-running one for its warm
-    medians) slices events once (round-10 verdict #5)."""
+    ntile(nb)-sliced over the total order (ts, event_id)."""
     from pyspark.sql import Window
 
     from botkop_telcotraffic_spark_spark.streaming.runner import (
@@ -8233,44 +8215,26 @@ def _fanout_replay_source(spark: SparkSession, sf_dir: str, nb: int) -> str:
         F.get_json_object("props", "$.k").cast("double").alias("kv"),
         F.ntile(nb).over(Window.orderBy("ts", "event_id")).alias("b"),
     )
-    return pinned_replay_source(
-        sliced, nb, cache_key=(sf_dir, "fanout_ts_eventid_v1")
-    )
-
-
-import threading as _threading  # noqa: E402
-
-# per-process cache of the fan-out family's finished sink dirs keyed
-# on (sf_dir,): streaming_telco_fanout and
-# streaming_geofence_hot_reload share the replay source AND the
-# foreachBatch harness, so one 5-batch replay can produce both
-# entries' outputs (round-11 verdict #7).
-_FANOUT_FAMILY_CACHE: dict[tuple, dict[str, str]] = {}
-_FANOUT_FAMILY_LOCK = _threading.Lock()
+    return pinned_replay_source(sliced, nb)
 
 
 def _run_fanout_family(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Run the fan-out family's 5-batch pinned availableNow replay
-    ONCE per (process, sf_dir), producing the per-batch sink outputs
-    of BOTH streaming_telco_fanout AND streaming_geofence_hot_reload
-    (round-11 verdict #7): the two entries share the replay source
-    and consumer harness, so a bench/driver session that executes
-    both (or re-runs either for its warm medians) pays ONE replay
-    instead of two.  The shared batch_fn runs each entry's consumer
-    graph unchanged on the same micro-batch frames — fan-out's
-    enrichment join + TrafficPipeline.process_batch (4 consumers,
-    static v1 fence file) and hot-reload's projection +
-    geofence_matches against ITS OWN fence file, rewritten to the v2
-    set at the batch-4 boundary — so both outputs are byte-identical
-    to the previous per-entry replays (parity pinned by
-    test_oracle_parity + test_geofence_hot_reload_boundary).
+    """Run the fan-out family's 5-batch pinned availableNow replay,
+    producing the per-batch sink outputs of BOTH
+    streaming_telco_fanout AND streaming_geofence_hot_reload: the two
+    entries share the replay source and consumer harness.  The
+    batch_fn runs each entry's consumer graph on the same micro-batch
+    frames — fan-out's enrichment join +
+    TrafficPipeline.process_batch (4 consumers, static v1 fence file)
+    and hot-reload's projection + geofence_matches against ITS OWN
+    fence file, rewritten to the v2 set at the batch-4 boundary
+    (parity pinned by test_oracle_parity +
+    test_geofence_hot_reload_boundary).  Every call slices and
+    replays afresh into new scratch dirs.
 
     Returns the sink dirs: ``cell``/``sub``/``geo``/``out``
     (fan-out's four consumers) and ``gfhot`` (hot-reload's geofence
-    stream).  Lock-guarded: registry-wide audits run builders from an
-    8-thread pool, and a second concurrent caller must wait for (and
-    reuse) the first one's finished run, not start a duplicate
-    (identical to today's cost: the run itself is serialized)."""
+    stream)."""
     import json as _json
     import os as _os
 
@@ -8284,147 +8248,138 @@ def _run_fanout_family(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         replay_partitions,
     )
 
-    key = (sf_dir,)
-    with _FANOUT_FAMILY_LOCK:
-        cached = _FANOUT_FAMILY_CACHE.get(key)
-        if cached is not None and all(
-            _os.path.isdir(d) and _os.listdir(d) for d in cached.values()
-        ):
-            return cached
+    nb = 5
+    src_dir = _fanout_replay_source(spark, sf_dir, nb)
 
-        nb = 5
-        src_dir = _fanout_replay_source(spark, sf_dir, nb)
-
-        # static attach table: latest order per customer, pinned once
-        # (localCheckpoint — 5 per-batch broadcast joins read the
-        # materialized k-row table, not 5 re-runs of the window rank)
-        o = _t(spark, sf_dir, "orders")
-        w_dim = Window.partitionBy("o_custkey").orderBy(
-            F.desc("o_orderdate"), F.desc("o_orderkey")
+    # static attach table: latest order per customer, pinned once
+    # (localCheckpoint — 5 per-batch broadcast joins read the
+    # materialized k-row table, not 5 re-runs of the window rank)
+    o = _t(spark, sf_dir, "orders")
+    w_dim = Window.partitionBy("o_custkey").orderBy(
+        F.desc("o_orderdate"), F.desc("o_orderkey")
+    )
+    dim = (
+        o.select("o_custkey", "o_totalprice", "o_orderdate", "o_orderkey")
+        .withColumn("_rn", F.row_number().over(w_dim))
+        .where(F.col("_rn") == 1)
+        .select(
+            "o_custkey", F.col("o_totalprice").cast("double").alias("price")
         )
-        dim = (
-            o.select("o_custkey", "o_totalprice", "o_orderdate", "o_orderkey")
-            .withColumn("_rn", F.row_number().over(w_dim))
-            .where(F.col("_rn") == 1)
-            .select(
-                "o_custkey", F.col("o_totalprice").cast("double").alias("price")
-            )
-            .localCheckpoint()
+        .localCheckpoint()
+    )
+
+    def fence_json(fences: list) -> list:
+        return [
+            {
+                "name": name,
+                "path": "",
+                "polygon": [
+                    {"lat": float(a), "lng": float(b)} for a, b in poly
+                ],
+            }
+            for name, poly in fences
+        ]
+
+    # fan-out's geofence side input: static v1 set, re-read per
+    # batch by TrafficPipeline.geofence_matches
+    gf_path = _os.path.join(_scratch_dir("fanout_gf_"), "fences.json")
+    with open(gf_path, "w") as fh:
+        _json.dump(fence_json(_POLY_FENCES), fh)
+
+    # hot-reload's OWN fence file: starts at v1, rewritten to v2
+    # from inside the batch_fn at the batch-4 boundary
+    gfhot_path = _os.path.join(_scratch_dir("gfhot_"), "fences.json")
+    with open(gfhot_path, "w") as fh:
+        _json.dump(fence_json(_POLY_FENCES), fh)
+
+    dirs = {
+        n: _scratch_dir(f"fanout_{n}_")
+        for n in ("cell", "sub", "geo", "out")
+    }
+    dirs["gfhot"] = _scratch_dir("gfhot_out_")
+    pipe = TrafficPipeline(
+        metric_names=["value", "k", "price"],
+        kmeans_dims=["value", "k"],
+        geofence_path=gf_path,
+        k=3,
+        decay=1.0,
+        window="30 seconds",
+        slide=None,
+        stats_sink=idempotent_parquet_sink(dirs["cell"]),
+        subscriber_stats_sink=idempotent_parquet_sink(dirs["sub"]),
+        geofence_sink=idempotent_parquet_sink(dirs["geo"]),
+        outlier_sink=idempotent_parquet_sink(dirs["out"]),
+        round_state=9,
+    )
+    gfhot_pipe = TrafficPipeline(
+        metric_names=["value"],
+        kmeans_dims=["value", "kv"],
+        geofence_path=gfhot_path,
+    )
+    gfhot_sink = idempotent_parquet_sink(dirs["gfhot"])
+
+    cell = (F.col("event_id") % 20).cast("bigint")
+    celltower = F.struct(
+        F.concat(F.lit("c"), cell.cast("string")).alias("id"),
+        F.struct(
+            (cell * 9 - 90 + F.lit(0.5)).cast("double").alias("lat"),
+            (((cell * 37) % 360) - 180 + F.lit(0.5))
+            .cast("double")
+            .alias("lng"),
+        ).alias("location"),
+    ).alias("celltower")
+
+    def batch_fn(batch: DataFrame, batch_id: int) -> None:
+        if batch_id + 1 == 4:
+            # the S5 hot-reload moment: the stream is mid-flight
+            # and hot-reload's file changes on disk; its
+            # geofence_matches per-batch re-read (this batch's)
+            # sees the new set.  Fan-out's gf_path is untouched.
+            with open(gfhot_path, "w") as fh:
+                _json.dump(fence_json(_HOT_RELOAD_FENCES_V2), fh)
+        enriched = batch.join(
+            F.broadcast(dim), batch["user_id"] == dim["o_custkey"]
+        ).select(
+            F.col("user_id").alias("subscriber"),
+            celltower,
+            F.create_map(
+                F.lit("value"), F.col("value"),
+                F.lit("k"), F.col("kv"),
+                F.lit("price"), F.col("price"),
+            ).alias("metrics"),
+            F.col("ts").alias("event_time"),
         )
-
-        def fence_json(fences: list) -> list:
-            return [
-                {
-                    "name": name,
-                    "path": "",
-                    "polygon": [
-                        {"lat": float(a), "lng": float(b)} for a, b in poly
-                    ],
-                }
-                for name, poly in fences
-            ]
-
-        # fan-out's geofence side input: static v1 set, re-read per
-        # batch by TrafficPipeline.geofence_matches
-        gf_path = _os.path.join(_scratch_dir("fanout_gf_"), "fences.json")
-        with open(gf_path, "w") as fh:
-            _json.dump(fence_json(_POLY_FENCES), fh)
-
-        # hot-reload's OWN fence file: starts at v1, rewritten to v2
-        # from inside the batch_fn at the batch-4 boundary
-        gfhot_path = _os.path.join(_scratch_dir("gfhot_"), "fences.json")
-        with open(gfhot_path, "w") as fh:
-            _json.dump(fence_json(_POLY_FENCES), fh)
-
-        dirs = {
-            n: _scratch_dir(f"fanout_{n}_")
-            for n in ("cell", "sub", "geo", "out")
-        }
-        dirs["gfhot"] = _scratch_dir("gfhot_out_")
-        pipe = TrafficPipeline(
-            metric_names=["value", "k", "price"],
-            kmeans_dims=["value", "k"],
-            geofence_path=gf_path,
-            k=3,
-            decay=1.0,
-            window="30 seconds",
-            slide=None,
-            stats_sink=idempotent_parquet_sink(dirs["cell"]),
-            subscriber_stats_sink=idempotent_parquet_sink(dirs["sub"]),
-            geofence_sink=idempotent_parquet_sink(dirs["geo"]),
-            outlier_sink=idempotent_parquet_sink(dirs["out"]),
-            round_state=9,
+        pipe.process_batch(enriched, batch_id)
+        gf_enriched = batch.select(
+            F.col("user_id").alias("subscriber"), celltower
         )
-        gfhot_pipe = TrafficPipeline(
-            metric_names=["value"],
-            kmeans_dims=["value", "kv"],
-            geofence_path=gfhot_path,
+        gfhot_sink(gfhot_pipe.geofence_matches(gf_enriched), batch_id)
+
+    stream = (
+        spark.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, "
+            "value double, kv double"
         )
-        gfhot_sink = idempotent_parquet_sink(dirs["gfhot"])
-
-        cell = (F.col("event_id") % 20).cast("bigint")
-        celltower = F.struct(
-            F.concat(F.lit("c"), cell.cast("string")).alias("id"),
-            F.struct(
-                (cell * 9 - 90 + F.lit(0.5)).cast("double").alias("lat"),
-                (((cell * 37) % 360) - 180 + F.lit(0.5))
-                .cast("double")
-                .alias("lng"),
-            ).alias("location"),
-        ).alias("celltower")
-
-        def batch_fn(batch: DataFrame, batch_id: int) -> None:
-            if batch_id + 1 == 4:
-                # the S5 hot-reload moment: the stream is mid-flight
-                # and hot-reload's file changes on disk; its
-                # geofence_matches per-batch re-read (this batch's)
-                # sees the new set.  Fan-out's gf_path is untouched.
-                with open(gfhot_path, "w") as fh:
-                    _json.dump(fence_json(_HOT_RELOAD_FENCES_V2), fh)
-            enriched = batch.join(
-                F.broadcast(dim), batch["user_id"] == dim["o_custkey"]
-            ).select(
-                F.col("user_id").alias("subscriber"),
-                celltower,
-                F.create_map(
-                    F.lit("value"), F.col("value"),
-                    F.lit("k"), F.col("kv"),
-                    F.lit("price"), F.col("price"),
-                ).alias("metrics"),
-                F.col("ts").alias("event_time"),
-            )
-            pipe.process_batch(enriched, batch_id)
-            gf_enriched = batch.select(
-                F.col("user_id").alias("subscriber"), celltower
-            )
-            gfhot_sink(gfhot_pipe.geofence_matches(gf_enriched), batch_id)
-
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, ts timestamp, user_id bigint, "
-                "value double, kv double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    ckpt = _scratch_dir("fanout_ck_")
+    # n=2, not the single-partition rule of the Python-stateful
+    # replays: this replay is 4 JVM-side consumers per batch whose
+    # aggregations dominate, and two-way parallelism beats the
+    # per-task overhead (interleaved A/B at sf0.1, 3 reps:
+    # n=1 16.3-18.0 s, n=2 14.0-14.8 s, n=4 12.5-17.0 s — n=2 is
+    # the stable winner; PROGRESS fanout_harvest_r10)
+    with replay_partitions(spark, 2):
+        q = (
+            stream.writeStream.foreachBatch(batch_fn)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        ckpt = _scratch_dir("fanout_ck_")
-        # n=2, not the single-partition rule of the Python-stateful
-        # replays: this replay is 4 JVM-side consumers per batch whose
-        # aggregations dominate, and two-way parallelism beats the
-        # per-task overhead (interleaved A/B at sf0.1, 3 reps:
-        # n=1 16.3-18.0 s, n=2 14.0-14.8 s, n=4 12.5-17.0 s — n=2 is
-        # the stable winner; PROGRESS fanout_harvest_r10)
-        with replay_partitions(spark, 2):
-            q = (
-                stream.writeStream.foreachBatch(batch_fn)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        q.awaitTermination()
 
-        _FANOUT_FAMILY_CACHE[key] = dirs
-        return dirs
+    return dirs
 
 
 def streaming_telco_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8469,11 +8424,9 @@ def streaming_telco_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     custom slicing: ALL rows sliced first, validity-filtered inside
     each batch, exactly like the stream).
 
-    The replay itself runs through _run_fanout_family (round-11
-    verdict #7): one 5-batch availableNow query per (process,
-    sf_dir) produces this entry's four sink dirs AND
-    streaming_geofence_hot_reload's, so a session executing both
-    entries slices and replays once."""
+    The replay itself runs through _run_fanout_family: one 5-batch
+    availableNow query produces this entry's four sink dirs (and
+    streaming_geofence_hot_reload's, which this entry ignores)."""
     tune(spark)
     dirs = _run_fanout_family(spark, sf_dir)
 
@@ -8681,21 +8634,17 @@ def streaming_geofence_hot_reload(spark: SparkSession, sf_dir: str) -> DataFrame
     both regimes.
 
     Replay source: the SAME pinned ntile(5)-over-(ts, event_id)
-    slicing — and per-session materialization cache — as
-    streaming_telco_fanout (_fanout_replay_source).  Consumer: the
-    production TrafficPipeline.geofence_matches path (per-batch
-    side-input re-read → unrolled-literal point-in-polygon column
-    expressions) into the idempotent per-batch parquet sink.  No
+    slicing as streaming_telco_fanout (_fanout_replay_source).
+    Consumer: the production TrafficPipeline.geofence_matches path
+    (per-batch side-input re-read → unrolled-literal point-in-polygon
+    column expressions) into the idempotent per-batch parquet sink.  No
     driver collect; the reload is a driver-side side-input swap, the
     matching stays JVM-side.
 
-    The replay runs through _run_fanout_family (round-11 verdict
-    #7): the SAME 5-batch availableNow query that feeds
-    streaming_telco_fanout also drives this entry's
-    geofence_matches consumer (against its own fence file, swapped
-    at the batch-4 boundary), so a session executing both entries
-    replays once.  This entry's consumer graph and output are
-    unchanged — only the harness is shared."""
+    The replay runs through _run_fanout_family: the SAME 5-batch
+    availableNow harness that feeds streaming_telco_fanout also
+    drives this entry's geofence_matches consumer (against its own
+    fence file, swapped at the batch-4 boundary)."""
     tune(spark)
     dirs = _run_fanout_family(spark, sf_dir)
 
@@ -8790,7 +8739,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_partitions,
     )
     from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-        seeded_store,
+        KeyedUpsertStore,
     )
 
     tune(spark)
@@ -8802,29 +8751,17 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         F.ntile(nb).over(Window.orderBy("doc_id")).alias("b"),
     )
-    src_dir = pinned_replay_source(
-        rest, nb, cache_key=(sf_dir, "incdedup_docid_v1")
+    src_dir = pinned_replay_source(rest, nb)
+
+    # Seed index: the corpus band buckets at ver 0
+    store = KeyedUpsertStore(
+        spark, _scratch_dir("incded_store_"), key_col="bk", order_col="ver"
     )
-
-    # Seed index (corpus band buckets at ver 0) built from parquet
-    # once per (process, sf_dir), then COPIED per run — the
-    # pinned_replay_source discipline applied to the deterministic
-    # seed state (r13; this run's mutations stay in its private copy)
-    def _build_seed(st) -> None:
-        st.upsert(
-            minhash_bucket_keys(corpus)
-            .select("bk")
-            .distinct()
-            .withColumn("ver", F.lit(0))
-        )
-
-    store, _ = seeded_store(
-        spark,
-        _scratch_dir("incded_store_"),
-        key_col="bk",
-        order_col="ver",
-        cache_key=(sf_dir, "incdedup_seed_v1"),
-        build=_build_seed,
+    store.upsert(
+        minhash_bucket_keys(corpus)
+        .select("bk")
+        .distinct()
+        .withColumn("ver", F.lit(0))
     )
 
     out_dir = _scratch_dir("incded_out_")
@@ -8943,7 +8880,7 @@ def streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_partitions,
     )
     from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-        seeded_store,
+        KeyedUpsertStore,
     )
 
     tune(spark)
@@ -8955,18 +8892,15 @@ def streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.ntile(nb).over(Window.orderBy("vec_id")).alias("b"),
     )
-    src_dir = pinned_replay_source(
-        rest, nb, cache_key=(sf_dir, "ivf_vecid_v1")
-    )
+    src_dir = pinned_replay_source(rest, nb)
 
-    # Seed state built from parquet once per (process, sf_dir):
-    # quantizer centroids + seed assignments (store ver 0) + per-cell
-    # seed counts.  Later runs COPY the seeded store and rebuild the
-    # k-row frames from the collected extras (model-sized driver
-    # state, the StreamingKMeans/MMR contract); the centroid PAIRS
-    # feed assign()'s literal fast path per micro-batch — deleting
-    # the per-batch aggregate subtree + broadcast build sub-job
-    # (operators/kmeans.py::assign docstring) with identical doubles.
+    # Seed state: quantizer centroids + seed assignments (store ver 0)
+    # + per-cell seed counts.  The k-row frames are collected as
+    # driver-side extras (model-sized state, the StreamingKMeans/MMR
+    # contract); the centroid PAIRS feed assign()'s literal fast path
+    # per micro-batch — deleting the per-batch aggregate subtree +
+    # broadcast build sub-job (operators/kmeans.py::assign docstring)
+    # with identical doubles.
     def _build_seed(st):
         cents_df = kmeans.label_centroids(seed, round_digits=9).localCheckpoint()
         seed_asg = ivf_assignments(seed, cents_df).localCheckpoint()
@@ -8986,14 +8920,10 @@ def streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cell_type": dict(seed_asg.dtypes)["cell"],
         }
 
-    store, seed_extras = seeded_store(
-        spark,
-        _scratch_dir("ivfidx_store_"),
-        key_col="vec_id",
-        order_col="ver",
-        cache_key=(sf_dir, "ivf_seed_v1"),
-        build=_build_seed,
+    store = KeyedUpsertStore(
+        spark, _scratch_dir("ivfidx_store_"), key_col="vec_id", order_col="ver"
     )
+    seed_extras = _build_seed(store)
     cents = seed_extras["cent_pairs"]
     seed_cells = spark.createDataFrame(
         seed_extras["cells"],
@@ -9167,9 +9097,7 @@ def streaming_late_data_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .over(Window.orderBy(F.col("event_id") % 7, "event_id"))
         .alias("b"),
     )
-    src_dir = pinned_replay_source(
-        sliced, nb, cache_key=(sf_dir, "wm_eventid_mod7_v1")
-    )
+    src_dir = pinned_replay_source(sliced, nb)
 
     stream = (
         spark.readStream.schema(

@@ -2,16 +2,16 @@
 
 The reference flatMaps every event against an executor-local list of
 polygons with an external point-in-polygon helper
-(``Geofencer.scala:27-31``) — a de-facto broadcast nested-loop
-spatial theta-join.  Here that is exactly what Catalyst plans:
-``points.crossJoin(broadcast(fences)).where(point_in_polygon(...))``
-→ BroadcastNestedLoopJoin with the predicate inside codegen.
+(``Geofencer.scala:27-31``).  Here ``polygon_geofence_join`` unrolls
+that driver-local fence list into literal ray-casting column
+expressions, so containment is one codegen'd scan with array/explode:
+no join and no driver job.  ``rect_geofence_join`` matches a table of
+rectangles through a broadcast cross join.
 
 Scale notes: geofence sets are small (dozens-thousands of polygons)
-→ broadcast is the right strategy at any event volume; the join is
-embarrassingly partition-parallel on the points side.  For huge fence
-sets, pre-filter with a bounding-box range join (min/max lat/lng
-columns are cheap to derive) before the exact test.
+and the scan is embarrassingly partition-parallel on the points side.
+For huge fence sets, pre-filter with a bounding-box range join
+(min/max lat/lng columns are cheap to derive) before the exact test.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import point_in_polygon, point_in_polygon_literal
+from ..functions.geo import point_in_polygon_literal
 
 # (name, [(lat, lng), ...]) — a driver-local fence list, the
 # reference's own representation (Geofencer.scala:18)
@@ -48,48 +48,27 @@ def rect_geofence_join(
 
 def polygon_geofence_join(
     points: DataFrame,
-    fences: DataFrame | FenceList,
+    fences: FenceList,
     x_col: str = "lng",
     y_col: str = "lat",
-    polygon_col: str = "polygon",
     name_col: str = "name",
-    max_unrolled_fences: int = 256,
 ) -> DataFrame:
     """Point-in-polygon containment join (ray casting, pure exprs).
 
-    ``fences``: either a plain driver-local fence list (the
-    reference's own regime — its geofences are a local variable,
-    Geofencer.scala:18) or a DataFrame of name +
-    ``polygon: array<struct<lat,lng>>`` (the shape of the reference's
-    ``work/traffic-geofences.json`` side input).  One output row per
-    (point, containing fence) — the reference's flatMap/UDTF shape
-    (SURVEY.md §2.11).
+    ``fences``: a plain driver-local fence list, the reference's own
+    regime (its geofences are a local variable, Geofencer.scala:18).
+    One output row per (point, containing fence) — the reference's
+    flatMap/UDTF shape (SURVEY.md §2.11).
 
-    Two physical strategies:
-      * fence set small (a list, or a DataFrame with few rows): unroll
-        each polygon's edges into literal codegen'd expressions at
-        plan time; containment becomes ONE scan with array/explode —
-        no join, no driver jobs, ~20x faster than the generic path and
-        trivially partition-parallel at any point volume.
-      * fence set large: broadcast nested-loop join with the generic
-        higher-order-function predicate.
+    Each polygon's edges are unrolled into literal codegen'd
+    expressions at plan time; containment is ONE scan with
+    array/explode — no join, no driver jobs, and trivially
+    partition-parallel at any point volume.
     """
-    if not isinstance(fences, DataFrame):
-        named_polys = [
-            (name, [(float(lng), float(lat)) for lat, lng in poly])
-            for name, poly in fences
-        ]
-    else:
-        # single incremental-scan job (CollectLimit); a count() here
-        # would scan every fence partition just to pick a strategy
-        rows = fences.select(name_col, polygon_col).take(max_unrolled_fences + 1)
-        if len(rows) > max_unrolled_fences:
-            inside = point_in_polygon(F.col(x_col), F.col(y_col), F.col(polygon_col))
-            return points.crossJoin(F.broadcast(fences)).where(inside)
-        named_polys = [
-            (row[name_col], [(v["lng"], v["lat"]) for v in row[polygon_col]])
-            for row in rows
-        ]
+    named_polys = [
+        (name, [(float(lng), float(lat)) for lat, lng in poly])
+        for name, poly in fences
+    ]
     px, py = F.col(x_col), F.col(y_col)
     hits = [
         F.when(point_in_polygon_literal(px, py, poly), F.lit(name))

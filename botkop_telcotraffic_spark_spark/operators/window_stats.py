@@ -58,9 +58,6 @@ def keyed_stats(
     return df.groupBy(*key_cols).agg(*stat_aggs(value_col, round_digits))
 
 
-PARTIAL_FIELDS = ("n", "s", "s2", "vmin", "vmax")
-
-
 def stat_partials(
     df: DataFrame, key_cols: Sequence[str], value_col: str
 ) -> DataFrame:

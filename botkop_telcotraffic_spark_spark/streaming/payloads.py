@@ -56,7 +56,7 @@ def metric_stats_payload(stats: DataFrame, entity_col: str) -> DataFrame:
     """(value: string) messages — one per (entity, window) — in the
     reference's subscriber/celltower stats shape.
 
-    ``stats``: output of ``TrafficPipeline.metric_stats`` (columns
+    ``stats``: a slice of ``TrafficPipeline.metric_stats_fused`` (columns
     window_start, window_end, <entity_col>, metric, n, mean, stdev,
     vmax, vmin)."""
     entry = F.format_string(

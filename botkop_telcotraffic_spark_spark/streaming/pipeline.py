@@ -24,12 +24,11 @@ from pyspark.sql import functions as F
 
 from ..operators.geofence import polygon_geofence_join
 from ..operators.kmeans import StreamingKMeans
-from ..operators.window_stats import windowed_stats
 
 Sink = Callable[[DataFrame, int], None]
 
 
-def parquet_append_sink(path: str, stamp_batch_id: bool = True) -> Sink:
+def parquet_append_sink(path: str) -> Sink:
     """Production sink: append each micro-batch result to a parquet
     directory (Kafka/Delta writers swap in behind the same callable
     shape).  foreachBatch + append is at-least-once under retry —
@@ -39,8 +38,7 @@ def parquet_append_sink(path: str, stamp_batch_id: bool = True) -> Sink:
     anywhere: the batch result flows executor->parquet."""
 
     def sink(df: DataFrame, batch_id: int) -> None:
-        out = df.withColumn("_batch_id", F.lit(batch_id)) if stamp_batch_id else df
-        out.write.mode("append").parquet(path)
+        df.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(path)
 
     return sink
 
@@ -131,17 +129,6 @@ class TrafficPipeline:
 
     # --- per-batch analyses (plain batch DataFrame ops) ---------------
 
-    def metric_stats(self, enriched: DataFrame, key: str) -> DataFrame:
-        """A1/A2: per-key sliding-window stats for every metric (explode
-        the metrics map so metric names stay data, not schema)."""
-        exploded = enriched.select(
-            key, "event_time", F.explode("metrics").alias("metric", "value")
-        )
-        return windowed_stats(
-            exploded, "event_time", [key, "metric"], "value",
-            window=self.window, slide=self.slide,
-        )
-
     def metric_stats_fused(
         self, enriched: DataFrame
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -205,11 +192,8 @@ class TrafficPipeline:
     def geofence_matches(self, enriched: DataFrame) -> DataFrame:
         """J3: celltower location containment against the (re-read)
         geofence side input.  The JSON is already driver-local, so the
-        fence LIST goes straight into polygon_geofence_join's
-        unrolled-literal path — routing it through a DataFrame cost a
-        take() strategy-probe job + a createDataFrame round-trip PER
-        BATCH for a side input the driver just parsed (round-10
-        fan-out harvest: ~0.5 s/batch at sf0.1)."""
+        fence list goes straight into polygon_geofence_join: no Spark
+        job and no DataFrame round-trip for the side input."""
         with open(self.geofence_path) as fh:
             fences = [
                 (g["name"], [(p["lat"], p["lng"]) for p in g["polygon"]])
@@ -290,24 +274,20 @@ class TrafficPipeline:
 
     def process_batch(self, enriched: DataFrame, batch_id: int) -> None:
         """W5 single-read fan-out: persist once, run all analyses.
-        When both stats topics are wired, they share ONE aggregation
-        (metric_stats_fused) whose grouped result is persisted so the
-        second topic's write scans the tiny grouped rows instead of
-        re-aggregating the batch."""
+        The stats topics come from ONE aggregation (metric_stats_fused)
+        whose grouped result is persisted, so each wired stats sink
+        (cell first, then subscriber) scans the tiny grouped rows
+        instead of re-aggregating the batch."""
         enriched.persist()
         fused = None
         try:
-            if self.stats_sink is not None and self.subscriber_stats_sink is not None:
+            if self.stats_sink is not None or self.subscriber_stats_sink is not None:
                 fused, by_cell, by_sub = self.metric_stats_fused(enriched)
                 fused.persist()
-                self.stats_sink(by_cell, batch_id)
-                self.subscriber_stats_sink(by_sub, batch_id)
-            elif self.stats_sink is not None:
-                by_cell = self.metric_stats(enriched, "celltower")
-                self.stats_sink(by_cell, batch_id)
-            elif self.subscriber_stats_sink is not None:
-                by_sub = self.metric_stats(enriched, "subscriber")
-                self.subscriber_stats_sink(by_sub, batch_id)
+                if self.stats_sink is not None:
+                    self.stats_sink(by_cell, batch_id)
+                if self.subscriber_stats_sink is not None:
+                    self.subscriber_stats_sink(by_sub, batch_id)
             if self.geofence_sink is not None and self.geofence_path:
                 self.geofence_sink(self.geofence_matches(enriched), batch_id)
             if self.outlier_sink is not None:

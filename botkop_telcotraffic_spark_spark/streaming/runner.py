@@ -62,41 +62,9 @@ def run_to_memory(
     return spark.table(name)
 
 
-# per-process cache of materialized replay sources keyed on
-# (cache_key, nb, payload schema, plan fingerprint): a bench/driver
-# run that executes several replay entries (or re-runs one entry for
-# its warm medians) slices the input ONCE per slicing, not once per
-# invocation (round-10 verdict #5 — each materialization is ~2 write
-# jobs).  The plan fingerprint (r11 ADVICE) hashes the analyzed plan
-# of `sliced` with exprIds stripped, so a changed slicing/ordering
-# expression can never reuse stale files even when a caller forgets
-# to bump its version tag.  Guarded by a lock: builders run from an
-# 8-thread pool in the registry-wide audits.
-_REPLAY_SOURCE_CACHE: dict[tuple, str] = {}
-import threading as _threading  # noqa: E402
-
-_REPLAY_SOURCE_LOCK = _threading.Lock()
-
-
-def _plan_fingerprint(df: DataFrame) -> str:
-    """sha256 (16 hex chars) of the analyzed logical plan with the
-    session-monotonic exprIds (`#123`) masked out — deterministic for
-    the same logical query across invocations, different for any
-    change to the slicing/ordering expressions or input paths."""
-    import hashlib
-    import re
-
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return hashlib.sha256(
-        re.sub(r"#\d+", "#", plan).encode()
-    ).hexdigest()[:16]
-
-
-def pinned_replay_source(
-    sliced: DataFrame, nb: int, cache_key: tuple | None = None
-) -> str:
+def pinned_replay_source(sliced: DataFrame, nb: int) -> str:
     """Materialize an ntile-sliced DataFrame as ``nb`` mtime-ordered
-    single parquet files — the deterministic replay source shared by
+    single parquet files — the deterministic replay source used by
     the streaming hash oracles (fan-out, watermark, K-Means).
 
     ``sliced`` must carry an integer column ``b`` in 1..nb (the ntile
@@ -111,30 +79,15 @@ def pinned_replay_source(
     NOT contain ``b`` (partition column), matching the readStream
     schemas.  No driver collect of data at any size.
 
-    ``cache_key`` (e.g. ``(sf_dir, "fanout_v1")``) enables the
-    per-process cache above; keep the version tag in lockstep with
-    the slicing expression so a changed slicing never reuses stale
-    files.  Returns the source directory (scratch, removed at
-    interpreter exit)."""
+    Every call slices its own input into a fresh directory; nothing is
+    reused across calls.  Returns the source directory (scratch,
+    removed at interpreter exit)."""
     import atexit
     import glob
     import os
     import shutil
     import tempfile
     import time
-
-    key = None
-    if cache_key is not None:
-        key = (
-            cache_key,
-            nb,
-            tuple(f.name for f in sliced.schema.fields),
-            _plan_fingerprint(sliced),
-        )
-        with _REPLAY_SOURCE_LOCK:
-            cached = _REPLAY_SOURCE_CACHE.get(key)
-        if cached and len(glob.glob(os.path.join(cached, "b*.parquet"))) == nb:
-            return cached
 
     src_dir = tempfile.mkdtemp(prefix="replay_src_")
     atexit.register(shutil.rmtree, src_dir, ignore_errors=True)
@@ -150,9 +103,6 @@ def pinned_replay_source(
         os.rename(part[0], dst)
         os.utime(dst, (base + 10 * t, base + 10 * t))
     shutil.rmtree(tmp)
-    if key is not None:
-        with _REPLAY_SOURCE_LOCK:
-            _REPLAY_SOURCE_CACHE[key] = src_dir
     return src_dir
 
 

@@ -10,15 +10,21 @@ and unmatched events drop (inner join).  A watermarked stream-stream
 join cannot reproduce that; a keyed upsert store can.
 
 ``KeyedUpsertStore`` is a parquet-backed compacted table, hash-
-bucketed by key: rows live under ``_bucket=hash(key) % B`` partition
-directories.  Each micro-batch merge touches ONLY the buckets its
-keys fall in — the current snapshot of those buckets is read
-(partition-pruned), unioned with the batch, compacted latest-wins,
-and the rewritten bucket directories are swapped in; every other
-bucket's files are left byte-for-byte untouched.  Per-batch cost is
-therefore O(batch + store/B · touched_buckets), not O(store): at
-100 TB of accumulated attach state with B sized so a bucket fits an
-executor (e.g. B = store_bytes / 256 MB), a batch touching k distinct
+bucketed by key.  It has one on-disk layout:
+
+* ``_bucket=<hash(key) % B>/`` partition directories holding the rows;
+* ``_meta.json`` recording B, written with the first upsert and
+  authoritative whenever the store is reopened;
+* ``_SUCCESS``, the commit marker (no marker, no store).
+
+Each micro-batch merge touches ONLY the buckets its keys fall in — the
+current snapshot of those buckets is read (partition-pruned), unioned
+with the batch, compacted latest-wins, and the rewritten bucket
+directories are swapped in; every other bucket's files are left
+byte-for-byte untouched.  Per-batch cost is therefore
+O(batch + store/B · touched_buckets), not O(store): with B sized so a
+bucket fits an executor (e.g. B = store_bytes / 256 MB, passed as
+``n_buckets`` when the store is created), a batch touching k distinct
 key-buckets rewrites only those k · 256 MB.  On a real cluster this
 is Delta ``MERGE`` (same semantics, transactional, file-level skip);
 parquet-dir-swap keeps the container dependency-free while preserving
@@ -27,7 +33,7 @@ the incremental shape.
 
 from __future__ import annotations
 
-import glob
+import json
 import os
 import shutil
 
@@ -38,20 +44,13 @@ from ..operators.enrich import latest_per_key
 
 _BUCKET = "_bucket"
 
-
-def _default_n_buckets() -> int:
-    """Bucket count for NEW stores.  A bucket is a rewrite unit (one
-    parquet directory): production sizes it so a bucket stays near a
-    target file size (B ~ store_bytes / 256 MB — SCALE.md), via
-    ``SPARK_GRAFT_STORE_BUCKETS``.  The local default is small
-    because at testdata scale every bucket holds a few KB and the
-    dominant upsert cost is the per-directory commit of the bucket
-    write (r13 measurement: 16 -> 4 buckets cut the per-batch store
-    rewrite ~30% with byte-identical snapshots).  Stores REOPENED
-    from disk ignore this and adopt the bucket count they were
-    written with (``_meta.json``), so mixed-env readers can never
-    mis-bucket keys."""
-    return int(os.environ.get("SPARK_GRAFT_STORE_BUCKETS", "4"))
+# Bucket count for NEW stores.  A bucket is a rewrite unit (one parquet
+# directory).  The default is small because at testdata scale every
+# bucket holds a few KB and the dominant upsert cost is the
+# per-directory commit of the bucket write (16 -> 4 buckets cut the
+# per-batch store rewrite ~30% with byte-identical snapshots).  Larger
+# stores pass ``n_buckets`` when they are created.
+_DEFAULT_N_BUCKETS = 4
 
 
 class KeyedUpsertStore:
@@ -70,21 +69,26 @@ class KeyedUpsertStore:
         self.path = path
         self.key_col = key_col
         self.order_col = order_col
-        self.n_buckets = n_buckets or _default_n_buckets()
-        self._schema = None  # pinned after the first read/write
+        self._schema = None  # pinned by the first read
         # A store that already exists on disk keeps the bucketing it
         # was written with — the hash-to-directory mapping is part of
-        # the on-disk layout, not a session preference.
+        # the on-disk layout, not a session preference.  A different
+        # modulus would put an upserted key's new row in a new bucket
+        # while its old row stays in the old one.
         meta = self._meta_path()
-        if n_buckets is None and os.path.exists(meta):
+        if os.path.exists(meta):
             try:
-                import json
-
-                self.n_buckets = int(
-                    json.load(open(meta)).get("n_buckets", self.n_buckets)
+                with open(meta) as fh:
+                    written = int(json.load(fh)["n_buckets"])
+            except (OSError, ValueError, KeyError, TypeError) as e:
+                raise ValueError(f"unreadable store meta {meta}: {e!r}") from e
+            if n_buckets is not None and n_buckets != written:
+                raise ValueError(
+                    f"store {path} was written with {written} buckets, "
+                    f"not {n_buckets}"
                 )
-            except (OSError, ValueError):
-                pass
+            n_buckets = written
+        self.n_buckets = n_buckets or _DEFAULT_N_BUCKETS
 
     def _meta_path(self) -> str:
         return os.path.join(self.path, "_meta.json")
@@ -103,51 +107,19 @@ class KeyedUpsertStore:
         return os.path.exists(os.path.join(self.path, "_SUCCESS"))
 
     def _raw(self) -> DataFrame | None:
-        """Snapshot including the _bucket partition column.
-
-        Stores written by the earlier flat (pre-bucketing) layout —
-        part files at the store root, no ``_bucket=N`` directories —
-        are read without the partition column; ``_bucket`` is derived
-        on the fly so the first upsert migrates them: every legacy
-        key's bucket counts as touched and the root part files are
-        removed after the bucketed rewrite lands."""
+        """Snapshot including the _bucket partition column."""
         if not self.exists():
             return None
-        legacy = self._legacy_root_files()
-        bucket_dirs = glob.glob(os.path.join(self.path, f"{_BUCKET}=*"))
-        if legacy and bucket_dirs:
-            # Crash window between the migration's bucket-dir renames
-            # and the legacy-file removal leaves BOTH layouts on disk;
-            # partition discovery over the mixed tree fails, so read
-            # each layout from its explicit file list and self-heal:
-            # latest-wins collapses the stale flat rows (they are the
-            # same or older versions of keys already in buckets), and
-            # the next upsert's migration pass removes them for good.
-            flat = self.spark.read.parquet(*legacy).withColumn(
-                _BUCKET, self._bucket_expr()
-            )
-            part = self.spark.read.option("basePath", self.path).parquet(
-                *bucket_dirs
-            )
-            return latest_per_key(
-                part.unionByName(flat), [self.key_col], [self.order_col]
-            )
         reader = self.spark.read.option("basePath", self.path)
         if self._schema is not None:
-            # schema pinned from the previous read/write of THIS store
+            # schema pinned from the previous read of THIS store
             # object: skips the per-read parquet footer-inference job
             # (one driver sub-job per snapshot otherwise — measured on
-            # the foreachBatch hot path, r13)
+            # the foreachBatch hot path)
             reader = reader.schema(self._schema)
         raw = reader.parquet(self.path)
-        if _BUCKET not in raw.columns:  # legacy flat layout
-            raw = raw.withColumn(_BUCKET, self._bucket_expr())
-        else:
-            self._schema = raw.schema
+        self._schema = raw.schema
         return raw
-
-    def _legacy_root_files(self) -> list[str]:
-        return glob.glob(os.path.join(self.path, "part-*"))
 
     def snapshot(self) -> DataFrame | None:
         raw = self._raw()
@@ -175,21 +147,12 @@ class KeyedUpsertStore:
         newb = batch.withColumn(_BUCKET, self._bucket_expr())
         if cur is None:
             cur = self._raw()
-        legacy = self._legacy_root_files() if cur is not None else []
-        if cur is not None and legacy:
-            # One-time migration off the flat layout: every legacy
-            # row must land in a bucket directory, so this batch
-            # rewrites every occupied bucket (subsequent batches are
-            # touched-only again).
+        # Tiny driver-side list (<= n_buckets ints) — this is what
+        # bounds the rewrite to touched buckets.
+        touched = [r[0] for r in newb.select(_BUCKET).distinct().collect()]
+        if cur is not None:
+            cur = cur.where(F.col(_BUCKET).isin(touched))  # pruned
             newb = cur.unionByName(newb, allowMissingColumns=True)
-            touched = [r[0] for r in newb.select(_BUCKET).distinct().collect()]
-        else:
-            # Tiny driver-side list (<= n_buckets ints) — this is what
-            # bounds the rewrite to touched buckets.
-            touched = [r[0] for r in newb.select(_BUCKET).distinct().collect()]
-            if cur is not None:
-                cur = cur.where(F.col(_BUCKET).isin(touched))  # pruned
-                newb = cur.unionByName(newb, allowMissingColumns=True)
         merged = latest_per_key(newb, [self.key_col], [self.order_col])
         # Stage the rewritten buckets, then swap each directory in —
         # never read-and-overwrite the same files in one job.
@@ -206,13 +169,9 @@ class KeyedUpsertStore:
             if os.path.exists(src):
                 os.rename(src, dst)
         shutil.rmtree(tmp)
-        for f in legacy:  # flat-layout files now folded into buckets
-            os.remove(f)
         # Layout metadata: the bucket count the store was written
         # with (reopeners adopt it — see __init__).
         if not os.path.exists(self._meta_path()):
-            import json
-
             with open(self._meta_path(), "w") as fh:
                 json.dump({"n_buckets": self.n_buckets}, fh)
         # Commit marker (idempotent).
@@ -232,69 +191,6 @@ class KeyedUpsertStore:
         dim = dim.drop(*overlap)
         joined = facts.join(dim, facts[fact_key] == dim[self.key_col], how)
         return joined.drop(dim[self.key_col]) if fact_key == self.key_col else joined
-
-
-# Per-process cache of deterministic store SEEDS keyed on a caller
-# cache_key (include sf_dir + a version tag kept in lockstep with the
-# seed recipe — the pinned_replay_source contract): a bench/driver
-# session re-running a store-backed streaming entry rebuilds the seed
-# index from the parquet inputs ONCE, then each later run COPIES the
-# seeded directory byte-for-byte into its own fresh store path (state
-# stays per-run/per-entry — the copy is mutated, the cached seed
-# never is).  Alongside the directory the cache keeps the build's
-# driver-side extras (k-row model state such as centroid pairs).
-# Validity: the cached dir must still carry its _SUCCESS marker and
-# bucket meta, else the seed is rebuilt (gutted-cache rule, 1dee73c).
-# Per-key locks so distinct keys never serialize (r12 ADVICE).
-import threading as _threading
-
-_SEED_STORE_CACHE: dict[tuple, tuple[str, int, object]] = {}
-_SEED_STORE_LOCKS: dict[tuple, _threading.Lock] = {}
-_SEED_STORE_LOCKS_GUARD = _threading.Lock()
-
-
-def seeded_store(
-    spark: SparkSession,
-    path: str,
-    key_col: str,
-    order_col: str,
-    cache_key: tuple,
-    build,
-):
-    """(KeyedUpsertStore at ``path`` pre-populated with the
-    deterministic seed, extras) — ``build(store)`` runs the real seed
-    jobs on the first call per (process, cache_key) and returns the
-    extras payload; later calls copy the finished seed directory.
-    """
-    import shutil
-    import tempfile
-
-    key = (cache_key, key_col, order_col, _default_n_buckets())
-    with _SEED_STORE_LOCKS_GUARD:
-        lock = _SEED_STORE_LOCKS.setdefault(key, _threading.Lock())
-    with lock:
-        cached = _SEED_STORE_CACHE.get(key)
-        if cached is not None:
-            seed_dir, n_buckets, extras = cached
-            if os.path.exists(os.path.join(seed_dir, "_SUCCESS")):
-                shutil.copytree(seed_dir, path, dirs_exist_ok=True)
-                store = KeyedUpsertStore(
-                    spark, path, key_col, order_col, n_buckets=n_buckets
-                )
-                return store, extras
-            del _SEED_STORE_CACHE[key]  # gutted — rebuild below
-        import atexit
-
-        seed_dir = tempfile.mkdtemp(prefix="store_seed_")
-        atexit.register(shutil.rmtree, seed_dir, ignore_errors=True)
-        seed_store_obj = KeyedUpsertStore(spark, seed_dir, key_col, order_col)
-        extras = build(seed_store_obj)
-        _SEED_STORE_CACHE[key] = (seed_dir, seed_store_obj.n_buckets, extras)
-        shutil.copytree(seed_dir, path, dirs_exist_ok=True)
-        store = KeyedUpsertStore(
-            spark, path, key_col, order_col, n_buckets=seed_store_obj.n_buckets
-        )
-        return store, extras
 
 
 def run_upsert_stream(

@@ -56,21 +56,6 @@ def test_geofence_small_fences_is_single_scan(spark):
     assert "Generate explode" in plan
 
 
-def test_geofence_large_fences_is_broadcast_not_cartesian(spark):
-    from pyspark.sql import functions as F
-
-    from botkop_telcotraffic_spark_spark.operators.geofence import (
-        polygon_geofence_join,
-    )
-
-    pts = entry_mod._event_points(spark, SF_DIR_001)
-    fences = entry_mod._poly_fences_df(spark)
-    df = polygon_geofence_join(pts, fences, max_unrolled_fences=1)
-    plan = physical_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_iqr_joinback_broadcast(spark):
     df = entry_mod.iqr_outliers_events(spark, SF_DIR_001)
     assert has_broadcast_join(df)
@@ -1163,20 +1148,17 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
     ).persist()
     try:
         enriched.count()  # materialize the cache, as process_batch does
-        # the two stats topics share ONE grouping-sets aggregation in
-        # production (metric_stats_fused) — audit those slices, plus
-        # the single-topic metric_stats path
+        # the two stats topics share ONE grouping-sets aggregation
+        # (metric_stats_fused) — audit both slices
         _, by_cell, by_sub = pipe.metric_stats_fused(enriched)
         branches = {
             "cellstats": by_cell,
             "substats": by_sub,
-            "solo_stats": pipe.metric_stats(enriched, "subscriber"),
             "geofence": pipe.geofence_matches(enriched),
             "anomalies": pipe.anomalies(enriched),
         }
         budget = {
-            "cellstats": 1, "substats": 1, "solo_stats": 1,
-            "geofence": 0, "anomalies": 2,
+            "cellstats": 1, "substats": 1, "geofence": 0, "anomalies": 2,
         }
         for name, df in branches.items():
             plan = strip_cache_recipes(physical_plan(df))

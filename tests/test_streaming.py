@@ -128,6 +128,41 @@ def test_full_pipeline_fanout(spark, fixtures):
         assert r["distance"] < r["lo"] or r["distance"] > r["hi"]
 
 
+def test_subscriber_stats_only_gets_fused_slice(spark):
+    """With only the subscriber stats sink wired, process_batch hands
+    it exactly the rows of metric_stats_fused's subscriber slice for
+    the same batch (the one stats path serves every sink wiring)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    rows = [
+        (
+            100 + i % 3,
+            (f"c{i % 2}", (10.0 + i % 2, 20.0)),
+            {"rtt": float(i), "byteLoss": float(i % 4)},
+            t0 + dt.timedelta(seconds=i),
+        )
+        for i in range(12)
+    ]
+    enriched = spark.createDataFrame(
+        rows,
+        "subscriber bigint, "
+        "celltower struct<id:string,location:struct<lat:double,lng:double>>, "
+        "metrics map<string,double>, event_time timestamp",
+    )
+    got = []
+    pipe = TrafficPipeline(
+        metric_names=["rtt", "byteLoss"],
+        kmeans_dims=["rtt", "byteLoss"],
+        subscriber_stats_sink=lambda df, bid: got.extend(df.collect()),
+    )
+    pipe.process_batch(enriched, 0)
+    _, _, by_sub = pipe.metric_stats_fused(enriched)
+    want = by_sub.collect()
+    assert want and "subscriber" in by_sub.columns
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_streaming_batch_unification(spark):
     """The same windowed_stats operator yields identical results as a
     streaming query (availableNow, complete mode) and a batch query —
@@ -731,72 +766,13 @@ def test_kafka_round_trip(spark, fixtures, tmp_path):
     assert src.isStreaming
 
 
-def test_upsert_store_migrates_legacy_flat_layout(spark, tmp_path):
-    """A store written by the old flat (non-bucketed) layout must
-    survive the first bucketed upsert: all legacy rows fold into
-    _bucket=N dirs, root part files disappear, latest-wins holds."""
-    import glob
-    import os
-
-    from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-        KeyedUpsertStore,
-    )
-
-    path = str(tmp_path / "legacy_store")
-    old = spark.createDataFrame(
-        [(1, 10, "a"), (2, 10, "b"), (3, 10, "c")], ["k", "v", "tag"]
-    )
-    old.write.parquet(path)  # flat layout: part-* at the root
-    assert glob.glob(os.path.join(path, "part-*"))
-
-    store = KeyedUpsertStore(spark, path, key_col="k", order_col="v")
-    batch = spark.createDataFrame([(2, 20, "B"), (4, 20, "d")], ["k", "v", "tag"])
-    store.upsert(batch)
-
-    snap = {r["k"]: (r["v"], r["tag"]) for r in store.snapshot().collect()}
-    assert snap == {1: (10, "a"), 2: (20, "B"), 3: (10, "c"), 4: (20, "d")}
-    assert not glob.glob(os.path.join(path, "part-*"))  # migrated
-    assert glob.glob(os.path.join(path, "_bucket=*"))
-
-
-def test_upsert_store_survives_mixed_layout(spark, tmp_path):
-    """Crash window between bucket-dir publish and legacy-file removal
-    leaves BOTH layouts on disk; reads must self-heal (latest-wins)
-    and the next upsert must purge the flat leftovers."""
-    import glob
-    import os
-
-    from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-        KeyedUpsertStore,
-    )
-
-    path = str(tmp_path / "mixed_store")
-    spark.createDataFrame([(1, 1, "a"), (2, 1, "b")], ["k", "v", "tag"]).write.parquet(path)
-    store = KeyedUpsertStore(spark, path, key_col="k", order_col="v")
-    store.upsert(spark.createDataFrame([(2, 2, "B")], ["k", "v", "tag"]))
-    assert not glob.glob(os.path.join(path, "part-*"))
-
-    # simulate the crash leftover: a stale flat file reappears at root
-    spark.createDataFrame([(1, 0, "stale")], ["k", "v", "tag"]).write.mode(
-        "append"
-    ).parquet(path)
-    assert glob.glob(os.path.join(path, "part-*"))
-
-    snap = {r["k"]: (r["v"], r["tag"]) for r in store.snapshot().collect()}
-    assert snap == {1: (1, "a"), 2: (2, "B")}  # stale row collapsed
-
-    store.upsert(spark.createDataFrame([(3, 1, "c")], ["k", "v", "tag"]))
-    assert not glob.glob(os.path.join(path, "part-*"))  # healed
-    snap = {r["k"]: (r["v"], r["tag"]) for r in store.snapshot().collect()}
-    assert snap == {1: (1, "a"), 2: (2, "B"), 3: (1, "c")}
-
-
 def test_upsert_store_reopen_adopts_written_bucket_count(spark, tmp_path):
     """A store REOPENED from disk must bucket keys with the count it
-    was WRITTEN with (persisted in _meta.json), never the session
-    default — otherwise a key's hash bucket moves between writers and
-    touched-bucket pruning silently drops rows (r13: the default
-    became env-tunable, so mixed-env reopen is a real path)."""
+    was WRITTEN with (persisted in _meta.json), never the default —
+    otherwise a key's hash bucket moves between writers: its new row
+    lands in a new bucket while the old row stays in the old one, so
+    the snapshot holds two rows for the key.  An explicit count that
+    contradicts the meta, or a meta that cannot be read, is refused."""
     path = str(tmp_path / "store")
     w = KeyedUpsertStore(spark, path, key_col="k", order_col="v", n_buckets=11)
     w.upsert(spark.createDataFrame([(i, 0) for i in range(30)], ["k", "v"]))
@@ -805,6 +781,16 @@ def test_upsert_store_reopen_adopts_written_bucket_count(spark, tmp_path):
     r.upsert(spark.createDataFrame([(1, 5), (99, 0)], ["k", "v"]))
     snap = {x["k"]: x["v"] for x in r.snapshot().collect()}
     assert snap[1] == 5 and snap[99] == 0 and len(snap) == 31
+
+    same = KeyedUpsertStore(spark, path, key_col="k", order_col="v", n_buckets=11)
+    assert same.n_buckets == 11
+    with pytest.raises(ValueError, match="11 buckets"):
+        KeyedUpsertStore(spark, path, key_col="k", order_col="v", n_buckets=4)
+
+    with open(os.path.join(path, "_meta.json"), "w") as fh:
+        fh.write("{not json")
+    with pytest.raises(ValueError, match="unreadable store meta"):
+        KeyedUpsertStore(spark, path, key_col="k", order_col="v")
 
 
 def test_upsert_with_preread_cur_matches_plain_upsert(spark, tmp_path):
@@ -832,57 +818,6 @@ def test_upsert_with_preread_cur_matches_plain_upsert(spark, tmp_path):
         )
     assert snaps[0] == snaps[1]
     assert (50, 1, "new") in snaps[0] and (7, 1, "b7") in snaps[0]
-
-
-def test_seeded_store_copies_and_isolates_state(spark, tmp_path):
-    """seeded_store builds the seed ONCE per cache key, later calls
-    get a byte-copy whose mutations never leak back into the cached
-    seed; a gutted cache dir triggers a rebuild (the 1dee73c rule)."""
-    import os as _os
-    import shutil as _shutil
-
-    from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-        _SEED_STORE_CACHE,
-        seeded_store,
-    )
-
-    calls = []
-
-    def build(st):
-        calls.append(1)
-        st.upsert(
-            spark.createDataFrame([(i, 0) for i in range(10)], ["k", "ver"])
-        )
-        return {"n": 10}
-
-    key = (str(tmp_path), "seed_test_v1")
-    s1, x1 = seeded_store(
-        spark, str(tmp_path / "c1"), "k", "ver", cache_key=key, build=build
-    )
-    s2, x2 = seeded_store(
-        spark, str(tmp_path / "c2"), "k", "ver", cache_key=key, build=build
-    )
-    assert calls == [1] and x1 == {"n": 10} and x2 == {"n": 10}
-    # mutate copy 2; copy-of-seed 3 must still see the pristine seed
-    s2.upsert(spark.createDataFrame([(1, 9)], ["k", "ver"]))
-    s3, _ = seeded_store(
-        spark, str(tmp_path / "c3"), "k", "ver", cache_key=key, build=build
-    )
-    assert calls == [1]
-    snap3 = {r["k"]: r["ver"] for r in s3.snapshot().collect()}
-    assert snap3[1] == 0 and len(snap3) == 10
-    # gut the cached seed dir -> next call rebuilds instead of copying
-    cache_key_full = next(
-        k for k in list(_SEED_STORE_CACHE) if k[0] == key
-    )
-    seed_dir = _SEED_STORE_CACHE[cache_key_full][0]
-    _os.remove(_os.path.join(seed_dir, "_SUCCESS"))
-    s4, _ = seeded_store(
-        spark, str(tmp_path / "c4"), "k", "ver", cache_key=key, build=build
-    )
-    assert calls == [1, 1]
-    assert len(s4.snapshot().collect()) == 10
-    _shutil.rmtree(seed_dir, ignore_errors=True)
 
 
 def test_idle_session_timer_finalizes_on_watermark(spark):
@@ -1952,71 +1887,6 @@ def test_geofence_hot_reload_boundary(spark):
     # the added fence matched after the reload, never before
     assert sorted(by_fence["band"]["bs"]) == [4, 5]
     assert sorted(by_fence["band"]["cells"]) == ["c14", "c15", "c16"]
-
-
-def test_fanout_family_shared_replay(spark):
-    """Round-11 verdict #7: streaming_telco_fanout and
-    streaming_geofence_hot_reload share ONE pinned availableNow
-    replay per (process, sf_dir) — after either entry has run, the
-    sibling (and any warm re-run of either) must reuse the finished
-    sink dirs instead of starting its own streaming query."""
-    import __spark_entry__ as em
-    from pyspark.sql.streaming import DataStreamWriter
-
-    em._FANOUT_FAMILY_CACHE.clear()
-    n1 = em.queries()["streaming_geofence_hot_reload"](
-        spark, SF_DIR_001
-    ).count()
-    assert list(em._FANOUT_FAMILY_CACHE) == [(SF_DIR_001,)]
-
-    started = []
-    orig = DataStreamWriter.start
-
-    def counting_start(self, *a, **kw):
-        started.append(1)
-        return orig(self, *a, **kw)
-
-    DataStreamWriter.start = counting_start
-    try:
-        assert em.queries()["streaming_telco_fanout"](
-            spark, SF_DIR_001
-        ).count() > 0
-        assert (
-            em.queries()["streaming_geofence_hot_reload"](
-                spark, SF_DIR_001
-            ).count()
-            == n1
-        )
-    finally:
-        DataStreamWriter.start = orig
-    assert not started, "sibling/warm runs must not start a new stream"
-
-
-def test_fanout_family_cache_invalidated_on_missing_dirs(spark):
-    """The family cache must validate its sink dirs before reuse: a
-    cached entry whose scratch dirs were cleaned (interpreter-exit
-    race, manual /tmp sweep) re-runs the replay instead of returning
-    paths to nothing — an empty DataFrame from a stale cache would
-    silently hash-mismatch the oracle."""
-    import shutil
-
-    import __spark_entry__ as em
-
-    # ensure a populated cache for this sf_dir, then gut one dir
-    em.queries()["streaming_geofence_hot_reload"](spark, SF_DIR_001).count()
-    key = (SF_DIR_001,)
-    dirs = em._FANOUT_FAMILY_CACHE[key]
-    shutil.rmtree(dirs["gfhot"], ignore_errors=True)
-    fresh = em._run_fanout_family(spark, SF_DIR_001)
-    assert fresh is not dirs, "gutted cache entry must not be reused"
-    assert os.path.isdir(fresh["gfhot"]) and os.listdir(fresh["gfhot"])
-    # and the rebuilt outputs still carry both fence regimes
-    n = (
-        spark.read.parquet(fresh["gfhot"])
-        .where("geofence in ('ell','band')")
-        .count()
-    )
-    assert n > 0
 
 
 def test_incremental_dedup_restart_exactly_once(spark):
