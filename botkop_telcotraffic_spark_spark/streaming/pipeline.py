@@ -3,10 +3,12 @@
 out to windowed stats (A1/A2), geofencing (J3/S5), and streaming
 K-Means anomaly detection (W6/A4/A5/J2).
 
-Wiring follows the reference's single-read fan-out (`cache` + three
-pipelines, ``TrafficStreamProcessor.scala:52-64``): one foreachBatch
-persists the enriched micro-batch and feeds all three analyses,
-instead of three queries re-reading the source.
+One query over both topics' JSON lines (TrafficPipeline.run) runs,
+per micro-batch, the reference's serial output-op order: the K1
+upsert, then the J1 join, then the fan-out.  The fan-out follows the
+reference's single read (`cache` + three pipelines,
+``TrafficStreamProcessor.scala:52-64``): process_batch persists the
+enriched micro-batch and feeds all three analyses.
 
 Every per-batch analysis is a plain batch DataFrame transformation
 from operators/ — the same code the batch surface uses.  Outputs go
@@ -24,6 +26,8 @@ from pyspark.sql import functions as F
 
 from ..operators.geofence import polygon_geofence_join
 from ..operators.kmeans import StreamingKMeans
+from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT, GEOFENCE
+from .json_stream import decode_json_stream
 
 Sink = Callable[[DataFrame, int], None]
 
@@ -72,8 +76,6 @@ def read_geofences(spark, path: str) -> DataFrame:
     the well-defined version of the reference's 5s hot reload
     (Geofencer.scala:16-23); driver-side read, broadcast to the join.
     File shape: JSON array of {name, path, polygon: [{lat, lng}]}."""
-    from ..schemas import GEOFENCE
-
     with open(path) as fh:
         fences = json.load(fh)
     rows = [
@@ -117,6 +119,9 @@ class TrafficPipeline:
             k=k, dim=len(kmeans_dims), decay=decay, round_state=round_state
         )
         self.stats_sink = stats_sink
+        # a path with no sink is valid: geofence_matches is called directly
+        if geofence_sink is not None and not geofence_path:
+            raise ValueError("geofence_sink is set but geofence_path is not")
         self.geofence_sink = geofence_sink
         self.outlier_sink = outlier_sink
         # 4th reference topic (MetricStatsProducer.scala:17-36): the
@@ -288,7 +293,7 @@ class TrafficPipeline:
                     self.stats_sink(by_cell, batch_id)
                 if self.subscriber_stats_sink is not None:
                     self.subscriber_stats_sink(by_sub, batch_id)
-            if self.geofence_sink is not None and self.geofence_path:
+            if self.geofence_sink is not None:
                 self.geofence_sink(self.geofence_matches(enriched), batch_id)
             if self.outlier_sink is not None:
                 self.outlier_sink(
@@ -304,21 +309,27 @@ class TrafficPipeline:
 
     def run(
         self,
-        celltower_stream: DataFrame,
+        lines: DataFrame,
         attach_store,
         checkpoint: str,
         available_now: bool = True,
     ):
-        """Drive the enrichment join (J1) + fan-out per micro-batch."""
+        """The product as ONE query.  ``lines``: the JSON lines of both
+        topics in a ``value`` column (a text file stream or a Kafka
+        source).  Per micro-batch, in the reference's serial output-op
+        order: upsert the batch's attaches (K1), enrich its celltower
+        events against the store (J1), fan out (process_batch)."""
 
         def sink(batch: DataFrame, batch_id: int) -> None:
-            enriched = attach_store.join(batch, fact_key="bearerId").select(
+            attach_store.upsert(decode_json_stream(batch, ATTACH_EVENT))
+            cells = decode_json_stream(batch, CELLTOWER_EVENT)
+            enriched = attach_store.join(cells, fact_key="bearerId").select(
                 "subscriber", "celltower", "metrics", "event_time"
             )
             self.process_batch(enriched, batch_id)
 
         writer = (
-            celltower_stream.writeStream.foreachBatch(sink)
+            lines.writeStream.foreachBatch(sink)
             .option("checkpointLocation", checkpoint)
         )
         if available_now:

@@ -10,7 +10,10 @@ and unmatched events drop (inner join).  A watermarked stream-stream
 join cannot reproduce that; a keyed upsert store can.
 
 ``KeyedUpsertStore`` is a parquet-backed compacted table, hash-
-bucketed by key.  It has one on-disk layout:
+bucketed by key.  It has one writer: the pipeline's own query
+(``TrafficPipeline.run``) upserts each micro-batch's attaches and only
+then joins that batch's celltower events, so no reader lists bucket
+files while a rewrite swaps them.  It has one on-disk layout:
 
 * ``_bucket=<hash(key) % B>/`` partition directories holding the rows;
 * ``_meta.json`` recording B, written with the first upsert and
@@ -135,7 +138,8 @@ class KeyedUpsertStore:
         """Merge a batch: latest row per key wins across (old, new).
 
         Only bucket directories containing a batch key are rewritten;
-        all other buckets are untouched on disk.
+        all other buckets are untouched on disk.  A batch with no rows
+        costs one job and changes nothing.
 
         ``cur``: the store's current RAW frame (``_raw()``) when the
         caller already read it this micro-batch (the dup-join /
@@ -145,11 +149,15 @@ class KeyedUpsertStore:
         leave it None.
         """
         newb = batch.withColumn(_BUCKET, self._bucket_expr())
+        # Tiny driver-side list (<= n_buckets ints) — this is what
+        # bounds the rewrite to touched buckets.  No bucket touched
+        # means no row: nothing to merge, and a store that does not
+        # exist yet must not be committed without a bucket.
+        touched = [r[0] for r in newb.select(_BUCKET).distinct().collect()]
+        if not touched:
+            return
         if cur is None:
             cur = self._raw()
-        # Tiny driver-side list (<= n_buckets ints) — this is what
-        # bounds the rewrite to touched buckets.
-        touched = [r[0] for r in newb.select(_BUCKET).distinct().collect()]
         if cur is not None:
             cur = cur.where(F.col(_BUCKET).isin(touched))  # pruned
             newb = cur.unionByName(newb, allowMissingColumns=True)
@@ -192,26 +200,3 @@ class KeyedUpsertStore:
         joined = facts.join(dim, facts[fact_key] == dim[self.key_col], how)
         return joined.drop(dim[self.key_col]) if fact_key == self.key_col else joined
 
-
-def run_upsert_stream(
-    attach_stream: DataFrame,
-    store: KeyedUpsertStore,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """K1: drive the attach stream into the store via foreachBatch."""
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        store.upsert(batch)
-
-    writer = (
-        attach_stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.start()

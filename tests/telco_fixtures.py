@@ -118,6 +118,14 @@ def write_fixtures(out_dir: str, n_subscribers: int = 20, n_events: int = 400, s
     }
 
 
+def fixture_lines(spark, fx: dict):
+    """The JSON lines of both fixture topics as ONE text stream (attach
+    lines unioned with celltower lines): TrafficPipeline.run's input."""
+    return spark.readStream.text(fx["attach_path"]).union(
+        spark.readStream.text(fx["cell_path"])
+    )
+
+
 def latest_attach_by_bearer(attaches: list[dict]) -> dict[str, dict]:
     out: dict[str, dict] = {}
     for ev in attaches:

@@ -25,10 +25,6 @@ import shutil
 
 import pytest
 
-from botkop_telcotraffic_spark_spark.streaming.json_stream import (
-    attach_source,
-    celltower_source,
-)
 from botkop_telcotraffic_spark_spark.streaming.payloads import (
     cluster_points_payload,
     geofence_payload,
@@ -38,12 +34,9 @@ from botkop_telcotraffic_spark_spark.streaming.pipeline import (
     TrafficPipeline,
     read_geofences,
 )
-from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-    KeyedUpsertStore,
-    run_upsert_stream,
-)
+from botkop_telcotraffic_spark_spark.streaming.upsert_join import KeyedUpsertStore
 from tests.conftest import REPO
-from tests.telco_fixtures import write_fixtures
+from tests.telco_fixtures import fixture_lines, write_fixtures
 
 TMP = os.path.join(REPO, ".tmp", "golden")
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens")
@@ -63,11 +56,6 @@ def payloads(spark):
         os.path.join(TMP, "attach_store"),
         key_col="bearerId",
         order_col="ts",
-    )
-    run_upsert_stream(
-        attach_source(spark, fx["attach_path"]),
-        store,
-        checkpoint=os.path.join(TMP, "ckpt_attach"),
     )
 
     out: dict[str, list[str]] = {t: [] for t in TOPICS}
@@ -105,11 +93,9 @@ def payloads(spark):
         outlier_sink=outlier_sink,
         publish_all_points=True,  # reference publishes ALL points
     )
-    pipe.run(
-        celltower_source(spark, fx["cell_path"]),
-        store,
-        checkpoint=os.path.join(TMP, "ckpt_cell"),
-    )
+    # one query over both topics' lines; under availableNow the union
+    # of the two fixture files arrives as a single micro-batch
+    pipe.run(fixture_lines(spark, fx), store, checkpoint=os.path.join(TMP, "ckpt"))
     return {t: sorted(v) for t, v in out.items()}
 
 

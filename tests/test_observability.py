@@ -75,10 +75,7 @@ def test_simulator_drives_full_pipeline(spark, tmp_path):
     the reference DAG (upsert store + enrichment + stats fan-out)."""
     from botkop_telcotraffic_spark_spark.sources import simulator
     from botkop_telcotraffic_spark_spark.streaming.pipeline import TrafficPipeline
-    from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-        KeyedUpsertStore,
-        run_upsert_stream,
-    )
+    from botkop_telcotraffic_spark_spark.streaming.upsert_join import KeyedUpsertStore
 
     simulator.register(spark)
     attach_stream = simulator.as_attach_events(
@@ -95,7 +92,6 @@ def test_simulator_drives_full_pipeline(spark, tmp_path):
         key_col="bearerId",
         order_col="ts",
     )
-    run_upsert_stream(attach_stream, store, checkpoint=str(tmp_path / "ck_a"))
 
     outputs = {"stats": []}
     pipe = TrafficPipeline(
@@ -110,7 +106,13 @@ def test_simulator_drives_full_pipeline(spark, tmp_path):
         .option("bearers", 40)
         .load()
     )
-    pipe.run(cell_stream, store, checkpoint=str(tmp_path / "ck_c"))
+
+    def as_lines(events):
+        return events.select(F.to_json(F.struct(*events.columns)).alias("value"))
+
+    # both simulator streams as JSON lines, one query
+    lines = as_lines(attach_stream).union(as_lines(cell_stream))
+    pipe.run(lines, store, checkpoint=str(tmp_path / "ck"))
 
     # attach generator covers all 40 bearers in 300 rows (whp), so
     # every celltower event enriches; stats must cover all 3 metrics

@@ -20,12 +20,10 @@ from botkop_telcotraffic_spark_spark.streaming.runner import (
     run_to_memory,
     stream_parquet_table,
 )
-from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
-    KeyedUpsertStore,
-    run_upsert_stream,
-)
+from botkop_telcotraffic_spark_spark.streaming.upsert_join import KeyedUpsertStore
 from tests.conftest import REPO, SF_DIR_001
 from tests.telco_fixtures import (
+    fixture_lines,
     latest_attach_by_bearer,
     point_in_polygon_py,
     write_fixtures,
@@ -47,8 +45,11 @@ def test_attach_upsert_store_latest_wins(spark, fixtures):
     store = KeyedUpsertStore(
         spark, os.path.join(TMP, "attach_store"), key_col="bearerId", order_col="ts"
     )
-    stream = attach_source(spark, fixtures["attach_path"])
-    run_upsert_stream(stream, store, checkpoint=os.path.join(TMP, "ckpt_attach"))
+    # the product's one query over both topics, with no sink wired:
+    # only the upsert leaves a trace
+    TrafficPipeline(metric_names=["rtt"], kmeans_dims=["rtt"]).run(
+        fixture_lines(spark, fixtures), store, checkpoint=os.path.join(TMP, "ckpt_attach")
+    )
 
     snap = {r["bearerId"]: r for r in store.snapshot().collect()}
     expected = latest_attach_by_bearer(fixtures["attaches"])
@@ -59,16 +60,11 @@ def test_attach_upsert_store_latest_wins(spark, fixtures):
 
 
 def test_full_pipeline_fanout(spark, fixtures):
-    """J1 + W5 fan-out + A1/J3/W6 pipelines over the celltower stream."""
+    """K1 upsert + J1 + W5 fan-out + A1/J3/W6 pipelines: one query
+    over the lines of both topics."""
     store = KeyedUpsertStore(
         spark, os.path.join(TMP, "attach_store2"), key_col="bearerId", order_col="ts"
     )
-    run_upsert_stream(
-        attach_source(spark, fixtures["attach_path"]),
-        store,
-        checkpoint=os.path.join(TMP, "ckpt_attach2"),
-    )
-
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
         parquet_append_sink,
     )
@@ -85,8 +81,7 @@ def test_full_pipeline_fanout(spark, fixtures):
         # executor-side parquet append, no driver collect
         outlier_sink=parquet_append_sink(outlier_dir),
     )
-    cell_stream = celltower_source(spark, fixtures["cell_path"])
-    pipe.run(cell_stream, store, checkpoint=os.path.join(TMP, "ckpt_cell"))
+    pipe.run(fixture_lines(spark, fixtures), store, checkpoint=os.path.join(TMP, "ckpt_full"))
     outputs["outliers"] = (
         spark.read.parquet(outlier_dir).collect()
         if os.path.exists(outlier_dir)
@@ -818,6 +813,59 @@ def test_upsert_with_preread_cur_matches_plain_upsert(spark, tmp_path):
         )
     assert snaps[0] == snaps[1]
     assert (50, 1, "new") in snaps[0] and (7, 1, "b7") in snaps[0]
+
+
+def test_empty_upsert_does_not_create_store(spark, tmp_path):
+    """A batch with no rows (the pipeline upserts every micro-batch,
+    also those with no attach lines) must not commit a store with no
+    bucket: exists() stays false and a join drops every fact."""
+    store = KeyedUpsertStore(spark, str(tmp_path / "store"), key_col="k", order_col="v")
+    store.upsert(spark.createDataFrame([], "k bigint, v bigint"))
+    assert not store.exists()
+    facts = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, x string")
+    assert store.join(facts, fact_key="k").count() == 0
+
+
+def test_empty_upsert_leaves_existing_store_untouched(spark, tmp_path):
+    """On an existing store, a batch with no rows rewrites no bucket
+    and costs at most the one job that finds no bucket touched."""
+    path = str(tmp_path / "store")
+    store = KeyedUpsertStore(spark, path, key_col="k", order_col="v")
+    store.upsert(spark.createDataFrame([(i, 0) for i in range(20)], "k bigint, v bigint"))
+
+    def bucket_files():
+        return {
+            d: sorted(os.listdir(os.path.join(path, d)))
+            for d in os.listdir(path)
+            if d.startswith("_bucket=")
+        }
+
+    before = bucket_files()
+    sc = spark.sparkContext
+    group, prev = "empty-upsert", sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        store.upsert(spark.createDataFrame([], "k bigint, v bigint"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert bucket_files() == before
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert store.snapshot().count() == 20
+
+
+def test_geofence_sink_requires_geofence_path():
+    """A wired geofence sink with no fence file is a misconfiguration,
+    refused up front rather than publishing nothing; a fence file with
+    no sink stays valid (geofence_matches is called directly)."""
+    with pytest.raises(ValueError, match="geofence_path"):
+        TrafficPipeline(
+            metric_names=["rtt"], kmeans_dims=["rtt"],
+            geofence_sink=lambda df, bid: None,
+        )
+    pipe = TrafficPipeline(
+        metric_names=["rtt"], kmeans_dims=["rtt"], geofence_path="fences.json"
+    )
+    assert pipe.geofence_sink is None
 
 
 def test_idle_session_timer_finalizes_on_watermark(spark):
