@@ -8431,14 +8431,17 @@ def streaming_telco_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     dirs = _run_fanout_family(spark, sf_dir)
 
     ct = "struct<id:string,location:struct<lat:double,lng:double>>"
-    stats_cols = "n bigint, mean double, stdev double, vmax double, vmin double"
+    stats_t = (
+        "array<struct<metric:string, n:bigint, mean:double, stdev:double, "
+        "vmax:double, vmin:double>>"
+    )
     b_out = (F.col("_batch_id") + 1).cast("int").alias("b")
     one = F.lit(1).cast("bigint")
 
     cellstats = spark.read.schema(
         f"window_start timestamp, window_end timestamp, celltower {ct}, "
-        f"metric string, {stats_cols}, _batch_id int"
-    ).parquet(dirs["cell"]).select(
+        f"stats {stats_t}, _batch_id int"
+    ).parquet(dirs["cell"]).select("*", F.inline("stats")).select(
         F.lit("cellstats").alias("branch"),
         b_out,
         F.col("celltower.id").alias("k1"),
@@ -8451,8 +8454,8 @@ def streaming_telco_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     substats = spark.read.schema(
         f"window_start timestamp, window_end timestamp, subscriber bigint, "
-        f"metric string, {stats_cols}, _batch_id int"
-    ).parquet(dirs["sub"]).select(
+        f"stats {stats_t}, _batch_id int"
+    ).parquet(dirs["sub"]).select("*", F.inline("stats")).select(
         F.lit("substats").alias("branch"),
         b_out,
         F.col("subscriber").cast("string").alias("k1"),

@@ -272,10 +272,6 @@ class StreamingKMeans:
         ]
         self.weights: list[float] = [0.0] * k
 
-    def _centroid_df(self, spark) -> DataFrame:
-        rows = [(i, [float(x) for x in c]) for i, c in enumerate(self.centroids)]
-        return spark.createDataFrame(rows, "prediction int, centroid array<double>")
-
     def _centroid_pairs(self) -> list:
         """Driver-held state as (id, vector) pairs — assign()'s
         literal fast path (no per-batch broadcast build)."""

@@ -30,16 +30,19 @@ case-class field order), so numeric and string cells render
 identically on the same JVM.
 
 Determinism for golden tests: map-entry order (Scala ``Map`` is
-unordered) is pinned to sorted metric name, and the points array is
-pinned to (subscriber.id, celltower.cell) order — both via
+unordered) is pinned at plan time by the sorted metric list of
+``TrafficPipeline.metric_stats_fused``; the points array is pinned to
+(subscriber.id, celltower.cell) order via
 ``array_sort(collect_list(struct(...)))``, associative and
 merge-order-free.
 
-Scale shape: stats/geofence payloads are row-wise projections (no
-extra shuffle beyond the upstream aggregate); the points message is
-one ``collect_list`` per micro-batch by reference contract (its
-``repartition(1).glom()``) — batch-sized by design, the reference
-emits a single array message per interval.
+Scale shape: the stats payload is a row-wise projection of the
+upstream aggregate (no shuffle of its own); the geofence payload
+broadcast-joins its side input back onto the matches (no shuffle of
+the matches); the points message is one ``collect_list`` per
+micro-batch by reference contract (its ``repartition(1).glom()``) —
+batch-sized by design, the reference emits a single array message
+per interval.
 """
 
 from __future__ import annotations
@@ -56,39 +59,24 @@ def metric_stats_payload(stats: DataFrame, entity_col: str) -> DataFrame:
     """(value: string) messages — one per (entity, window) — in the
     reference's subscriber/celltower stats shape.
 
-    ``stats``: a slice of ``TrafficPipeline.metric_stats_fused`` (columns
-    window_start, window_end, <entity_col>, metric, n, mean, stdev,
-    vmax, vmin)."""
-    entry = F.format_string(
-        STAT_ENTRY_FMT,
-        F.col("metric"),
-        F.col("n"),
-        F.col("mean"),
-        F.col("stdev"),
-        F.col("vmax"),
-        F.col("vmin"),
-    )
-    grouped = (
-        stats.groupBy(entity_col, "window_start", "window_end")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("metric"), entry.alias("e")))
-            ).alias("_es")
-        )
-    )
-    stats_json = F.concat(
-        F.lit("{"),
-        F.array_join(F.transform(F.col("_es"), lambda s: s["e"]), ","),
-        F.lit("}"),
+    ``stats``: a frame of ``TrafficPipeline.metric_stats_fused``
+    (columns window_start, window_end, <entity_col>, stats: array of
+    struct(metric, n, mean, stdev, vmax, vmin))."""
+    entries = F.transform(
+        F.col("stats"),
+        lambda s: F.format_string(
+            STAT_ENTRY_FMT, s["metric"], s["n"], s["mean"], s["stdev"],
+            s["vmax"], s["vmin"],
+        ),
     )
     value = F.concat(
         F.lit(f'{{ "{entity_col}":'),
         F.to_json(F.col(entity_col)),
-        F.lit(', "stats":'),
-        stats_json,
-        F.lit(" }"),
+        F.lit(', "stats":{'),
+        F.array_join(entries, ","),
+        F.lit("} }"),
     )
-    return grouped.select(value.alias("value"))
+    return stats.select(value.alias("value"))
 
 
 def geofence_payload(matches: DataFrame, fences: DataFrame) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..operators.geofence import polygon_geofence_join
 from ..operators.kmeans import StreamingKMeans
+from ..operators.window_stats import stat_aggs
 from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT, GEOFENCE
 from .json_stream import decode_json_stream
 
@@ -118,6 +119,11 @@ class TrafficPipeline:
         self.model = StreamingKMeans(
             k=k, dim=len(kmeans_dims), decay=decay, round_state=round_state
         )
+        # metric_names is the stats' config: with none, every group
+        # would publish an empty stats map
+        stats_wired = stats_sink is not None or subscriber_stats_sink is not None
+        if stats_wired and not metric_names:
+            raise ValueError("a stats sink is set but metric_names is empty")
         self.stats_sink = stats_sink
         # a path with no sink is valid: geofence_matches is called directly
         if geofence_sink is not None and not geofence_path:
@@ -136,63 +142,46 @@ class TrafficPipeline:
 
     def metric_stats_fused(
         self, enriched: DataFrame
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame]:
         """Both stats topics (cell + subscriber,
-        MetricStatsProducer.scala:17-36) from ONE aggregation job:
-        grouping sets [(window, celltower, metric), (window,
-        subscriber, metric)] aggregate the exploded metrics in a
-        single pass, replacing two full explode+aggregate scans of
-        the cached batch per micro-batch (round-10 fan-out harvest).
-        Identical values per topic: a grouping-sets expansion feeds
-        each input row to both sets, so each set's partial aggregates
-        see exactly the rows the standalone aggregation would.
-        Returns (shared, cell_stats, subscriber_stats): the two
-        topic frames are SLICES of ``shared`` — the caller persists
-        ``shared`` (process_batch) so the second slice's plan
-        cache-substitutes the tiny grouped result instead of
-        re-aggregating the raw batch."""
+        MetricStatsProducer.scala:17-58) as ``(by_cell, by_sub)``.
+        Each is ONE groupBy(window, entity) over the batch — one
+        partial + one final HashAggregate — whose single aggregate
+        column ``stats`` carries one StatCounter per configured metric
+        (MetricStats.scala:5-24): an array of struct(metric, n, mean,
+        stdev, vmax, vmin) in sorted metric-name order.
+
+        Two deliberate differences from the reference:
+        - the stats cover the configured ``metric_names``, not every
+          key of the metrics map (the reference iterates each event's
+          keys, and its merge throws when two events' key sets
+          differ);
+        - a metric whose value is null in every row of a (window,
+          entity) group is omitted from that group's ``stats`` (the
+          reference never publishes it either: play-json rejects a
+          null map value and drops the event)."""
         win = (
             F.window(F.col("event_time"), self.window, self.slide)
             if self.slide
             else F.window(F.col("event_time"), self.window)
         )
-        # the window is projected BEFORE the grouping sets: an aliased
-        # expression in the grouping-column list does not match the
-        # raw expression inside a set, which would silently demote the
-        # window to an always-NULL grouping column
-        exploded = enriched.select(
-            "celltower", "subscriber", win.alias("w"),
-            F.explode("metrics").alias("metric", "value"),
-        )
-        from ..operators.window_stats import stat_aggs
+        stats = F.filter(
+            F.array(*[
+                F.struct(F.lit(m).alias("metric"), *stat_aggs(F.col("metrics")[m]))
+                for m in sorted(set(self.metric_names))
+            ]),
+            lambda s: s["n"] > 0,
+        ).alias("stats")
 
-        both = (
-            exploded.groupingSets(
-                [
-                    [F.col("w"), F.col("celltower"), F.col("metric")],
-                    [F.col("w"), F.col("subscriber"), F.col("metric")],
-                ],
-                F.col("w"),
-                F.col("celltower"),
-                F.col("subscriber"),
-                F.col("metric"),
-            )
-            .agg(
-                F.grouping("subscriber").alias("_is_cell"),
-                *stat_aggs("value"),
-            )
-        )
-        def slice_for(key: str, flag: int) -> DataFrame:
-            return both.where(F.col("_is_cell") == flag).select(
+        def by(entity: str) -> DataFrame:
+            return enriched.groupBy(win.alias("w"), entity).agg(stats).select(
                 F.col("w.start").alias("window_start"),
                 F.col("w.end").alias("window_end"),
-                key,
-                "metric",
-                "n", "mean", "stdev", "vmax", "vmin",
+                entity,
+                "stats",
             )
-        # grouping(subscriber) = 1 in the set that aggregated OVER
-        # subscriber (i.e. the celltower set), 0 in the subscriber set
-        return both, slice_for("celltower", 1), slice_for("subscriber", 0)
+
+        return by("celltower"), by("subscriber")
 
     def geofence_matches(self, enriched: DataFrame) -> DataFrame:
         """J3: celltower location containment against the (re-read)
@@ -278,17 +267,13 @@ class TrafficPipeline:
     # --- wiring --------------------------------------------------------
 
     def process_batch(self, enriched: DataFrame, batch_id: int) -> None:
-        """W5 single-read fan-out: persist once, run all analyses.
-        The stats topics come from ONE aggregation (metric_stats_fused)
-        whose grouped result is persisted, so each wired stats sink
-        (cell first, then subscriber) scans the tiny grouped rows
-        instead of re-aggregating the batch."""
+        """W5 single-read fan-out: persist the enriched batch once and
+        run every wired analysis over it (stats cell first, then
+        subscriber, then geofence, then anomalies)."""
         enriched.persist()
-        fused = None
         try:
             if self.stats_sink is not None or self.subscriber_stats_sink is not None:
-                fused, by_cell, by_sub = self.metric_stats_fused(enriched)
-                fused.persist()
+                by_cell, by_sub = self.metric_stats_fused(enriched)
                 if self.stats_sink is not None:
                     self.stats_sink(by_cell, batch_id)
                 if self.subscriber_stats_sink is not None:
@@ -303,8 +288,6 @@ class TrafficPipeline:
                     batch_id,
                 )
         finally:
-            if fused is not None:
-                fused.unpersist()
             enriched.unpersist()
 
     def run(

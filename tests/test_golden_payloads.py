@@ -9,9 +9,11 @@ topics byte-match checked-in goldens:
 - K-Means outlier points   (ClusterAnalyser.scala:62-65, one
   points-array message per batch)
 
-This is the closest sandbox-achievable stand-in for the live Kafka
-round-trip (no broker here): the payload strings are exactly what
-``kafka_json_sink`` would publish per topic.
+These are the reference's message values, built by
+``streaming/payloads.py``.  Nothing here goes through a Kafka broker:
+``kafka_json_sink`` publishes ``to_json`` of every column of the frame
+it is given, and it is not wired to ``TrafficPipeline``; a Kafka
+egress of these exact bytes would publish the ``value`` column as is.
 
 Regenerate after an INTENTIONAL shape change with
 ``UPDATE_GOLDENS=1 python -m pytest tests/test_golden_payloads.py``

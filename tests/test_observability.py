@@ -116,9 +116,10 @@ def test_simulator_drives_full_pipeline(spark, tmp_path):
 
     # attach generator covers all 40 bearers in 300 rows (whp), so
     # every celltower event enriches; stats must cover all 3 metrics
-    assert {r["metric"] for r in outputs["stats"]} == {
+    entries = [s for r in outputs["stats"] for s in r["stats"]]
+    assert {s["metric"] for s in entries} == {
         "rtt",
         "byteLoss",
         "throughput",
     }
-    assert all(r["n"] > 0 for r in outputs["stats"])
+    assert all(s["n"] > 0 for s in entries)

@@ -1079,7 +1079,8 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
     `unifiedStream.cache`), every consumer's plan must read the
     InMemoryTableScan — never re-scan the source — carry no
     cartesian/BNLJ, and stay inside a per-branch exchange budget:
-    stats pays 1 hash-agg exchange; anomalies pays <=2 (round-10:
+    each stats topic is one groupBy(window, entity) and pays 1
+    hash-agg exchange; anomalies pays <=2 (round-10:
     the exact-IQR fences became scalar window expressions on one
     k-key shuffle — the streaming_kmeans_outliers r7 shave applied
     to the production operator — replacing the bounds aggregate +
@@ -1148,9 +1149,9 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
     ).persist()
     try:
         enriched.count()  # materialize the cache, as process_batch does
-        # the two stats topics share ONE grouping-sets aggregation
-        # (metric_stats_fused) — audit both slices
-        _, by_cell, by_sub = pipe.metric_stats_fused(enriched)
+        # each stats topic is ONE groupBy(window, entity) with a
+        # per-metric stats array (metric_stats_fused) — audit both
+        by_cell, by_sub = pipe.metric_stats_fused(enriched)
         branches = {
             "cellstats": by_cell,
             "substats": by_sub,

@@ -94,13 +94,15 @@ def test_full_pipeline_fanout(spark, fixtures):
     )
     n_known_events = sum(1 for c in fixtures["cells"] if c["bearerId"] in known)
 
-    # stats: per (celltower, metric, window); every metric name present
+    # stats: one row per (celltower, window) with a per-metric stats
+    # array; every metric name present
     assert outputs["stats"], "stats pipeline produced nothing"
-    metrics_seen = {r["metric"] for r in outputs["stats"]}
+    entries = [s for r in outputs["stats"] for s in r["stats"]]
+    metrics_seen = {s["metric"] for s in entries}
     assert metrics_seen == {"rtt", "byteLoss", "jitter"}
     # sliding 30s/2s => each event lands in 15 windows; total count mass
     # across windows per metric = 15 * enriched events
-    total_n = sum(r["n"] for r in outputs["stats"] if r["metric"] == "rtt")
+    total_n = sum(s["n"] for s in entries if s["metric"] == "rtt")
     assert total_n == 15 * n_known_events
 
     # geofence matches agree with an independent python ray-caster
@@ -125,7 +127,7 @@ def test_full_pipeline_fanout(spark, fixtures):
 
 def test_subscriber_stats_only_gets_fused_slice(spark):
     """With only the subscriber stats sink wired, process_batch hands
-    it exactly the rows of metric_stats_fused's subscriber slice for
+    it exactly the rows of metric_stats_fused's subscriber frame for
     the same batch (the one stats path serves every sink wiring)."""
     import datetime as dt
 
@@ -152,10 +154,76 @@ def test_subscriber_stats_only_gets_fused_slice(spark):
         subscriber_stats_sink=lambda df, bid: got.extend(df.collect()),
     )
     pipe.process_batch(enriched, 0)
-    _, _, by_sub = pipe.metric_stats_fused(enriched)
+    _, by_sub = pipe.metric_stats_fused(enriched)
     want = by_sub.collect()
     assert want and "subscriber" in by_sub.columns
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_stats_cover_configured_metrics_only(spark):
+    """The stats messages carry exactly the configured metrics that
+    have a value in the (window, entity) group: (a) a map key outside
+    ``metric_names`` is ignored, (b) a configured metric that is null
+    in every row of a group is omitted from that group's message, and
+    (c) a metric missing from some rows counts only the rows that
+    carry it."""
+    import datetime as dt
+
+    from botkop_telcotraffic_spark_spark.streaming.payloads import (
+        metric_stats_payload,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    rows = []
+    for i in range(5):
+        # c0: jitter always null, byteLoss in 3 of 5 rows
+        m0 = {"rtt": float(i), "jitter": None, "extra": 1.0}
+        if i < 3:
+            m0["byteLoss"] = float(i)
+        rows.append((1, ("c0", (1.0, 2.0)), m0, t0 + dt.timedelta(seconds=i)))
+        # c1: every configured metric present
+        m1 = {"rtt": float(i), "jitter": 0.5, "byteLoss": 2.0}
+        rows.append((2, ("c1", (3.0, 4.0)), m1, t0 + dt.timedelta(seconds=i)))
+    enriched = spark.createDataFrame(
+        rows,
+        "subscriber bigint, "
+        "celltower struct<id:string,location:struct<lat:double,lng:double>>, "
+        "metrics map<string,double>, event_time timestamp",
+    )
+    msgs = {}
+
+    def sink(df, bid):
+        for r in metric_stats_payload(df, "celltower").collect():
+            cell = "c0" if '"id":"c0"' in r["value"] else "c1"
+            msgs[cell] = r["value"]
+
+    TrafficPipeline(
+        metric_names=["rtt", "jitter", "byteLoss"],
+        kmeans_dims=["rtt"],
+        slide=None,
+        stats_sink=sink,
+    ).process_batch(enriched, 0)
+
+    assert set(msgs) == {"c0", "c1"}
+    # (a) the unconfigured map key appears in no message
+    assert all('"extra"' not in m for m in msgs.values())
+    # (b) all-null jitter is omitted for c0, present for c1
+    assert '"jitter"' not in msgs["c0"]
+    assert '"jitter": { "count":5,' in msgs["c1"]
+    # (c) byteLoss counts only the rows that carry it
+    assert '"byteLoss": { "count":3,' in msgs["c0"]
+    assert '"rtt": { "count":5,' in msgs["c0"]
+
+
+def test_stats_sink_requires_metric_names():
+    """A wired stats sink with no configured metrics is refused: every
+    group would otherwise publish an empty stats map."""
+    for sink_kw in ("stats_sink", "subscriber_stats_sink"):
+        with pytest.raises(ValueError, match="metric_names"):
+            TrafficPipeline(
+                metric_names=[], kmeans_dims=["rtt"],
+                **{sink_kw: lambda df, bid: None},
+            )
 
 
 def test_streaming_batch_unification(spark):
