@@ -4391,8 +4391,8 @@ WHERE levenshtein(a.p_name, tf.typo_name) <= 1
 
 def streaming_upsert_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's attach-store enrichment (S6+J1/K1) end-to-end
-    through the BUCKETED KeyedUpsertStore: replay orders as a stream,
-    foreachBatch-upsert into the hash-bucketed latest-wins store
+    through the KeyedUpsertStore: replay orders as a stream,
+    foreachBatch-upsert into the versioned latest-wins store
     (order col = o_orderkey, a total order, so the final snapshot is
     batching-independent), then enrich the customer dim against the
     snapshot — the exact keyed-lookup shape the reference runs against
@@ -8725,8 +8725,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
          test_incremental_dedup_restart_exactly_once).
 
     Store: streaming/upsert_join.py::KeyedUpsertStore keyed by the
-    band|bucket string — hash-bucketed parquet, touched-buckets-only
-    rewrite; the corpus is NEVER rescanned after seeding (the 100 TB
+    band|bucket string — one versioned latest-wins parquet snapshot
+    per batch; the corpus is NEVER rescanned after seeding (the 100 TB
     property: each increment scans only the new batch and semi-joins
     fixed-width bucket keys).  Replay: the non-src0 docs ntile(4)
     sliced over doc_id via the shared pinned_replay_source.  The
@@ -11314,15 +11314,18 @@ tok_b AS (
   FROM pts0 WHERE cum_tok > 0 AND cum_v > 0
 ), s AS (
   SELECT CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
+         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy,
+         max(y) > min(y) AS y_varies
   FROM pts
 )
 SELECT CAST(n AS BIGINT) AS n_points,
        round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) + 0.0 AS beta,
        round(exp((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n),
              6) + 0.0 AS k,
-       round(((n * sxy - sx * sy) * (n * sxy - sx * sy))
-             / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) + 0.0 AS r2
+       CASE WHEN y_varies THEN
+         round(((n * sxy - sx * sy) * (n * sxy - sx * sy))
+               / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) + 0.0
+       END AS r2
 FROM s
 """
 

@@ -670,8 +670,13 @@ def heaps_fit(
     syy = F.sum(F.col("y") * F.col("y"))
     beta = (n * sxy - sx * sy) / (n * sxx - sx * sx)
     lnk = (sy - beta * sx) / n
-    r2 = ((n * sxy - sx * sy) * (n * sxy - sx * sy)) / (
-        (n * sxx - sx * sx) * (n * syy - sy * sy)
+    # r2 is undefined for a constant vocabulary curve; n·syy - sy² of
+    # equal terms is 0 or a rounding residue depending on the partial
+    # sum order, so test the y range instead of that denominator
+    r2 = F.when(
+        F.max("y") > F.min("y"),
+        ((n * sxy - sx * sy) * (n * sxy - sx * sy))
+        / ((n * sxx - sx * sx) * (n * syy - sy * sy)),
     )
     return pts.agg(
         n.cast("long").alias("n_points"),

@@ -160,7 +160,7 @@ def incremental_dedup_batch(
     sink_dir: str | None = None,
 ) -> DataFrame:
     """One micro-batch of corpus-vs-batch incremental near-dup
-    screening through a KeyedUpsertStore bucket index (the
+    screening through a KeyedUpsertStore index of band buckets (the
     foreachBatch body of streaming_incremental_dedup; see
     tests/test_streaming.py::test_incremental_dedup_restart for the
     exactly-once chaos proof).
@@ -183,10 +183,11 @@ def incremental_dedup_batch(
     layout) and re-read from those files — the parquet write replaces
     the eager localCheckpoint job the caller's separate sink write
     used to follow (one materialization per batch instead of two; the
-    pin still lands BEFORE the store's bucket-directory swap, which
-    is the ordering the exactly-once contract needs).  Without it,
-    the flags come back localCheckpoint-pinned as before (callers
-    sink them AND derive the accepted cut — one materialization).
+    pin still lands BEFORE the store publishes its next version and
+    removes the files the flags were read from, which is the ordering
+    the exactly-once contract needs).  Without it, the flags come back
+    localCheckpoint-pinned as before (callers sink them AND derive
+    the accepted cut — one materialization).
 
     Returns the (id, is_dup) flags."""
     nbk = minhash_bucket_keys(
@@ -194,12 +195,10 @@ def incremental_dedup_batch(
         # lazy: the flags checkpoint's dup-join action below
         # materializes it in-job; the upsert reads the cached blocks
     ).localCheckpoint(eager=False)
-    # ONE store read per micro-batch: the raw (bucket-annotated)
-    # snapshot feeds the dup join here AND rides into the upsert as
-    # its ``cur`` side (r13: the second listing+read of the same
-    # files was ~10% of the batch wall)
-    raw = store.raw_snapshot()
-    snapshot = raw.drop("_bucket")
+    # ONE store read per micro-batch: the snapshot feeds the dup join
+    # here AND rides into the upsert as its ``cur`` side (r13: the
+    # second listing+read of the same files was ~10% of the batch wall)
+    snapshot = store.snapshot()
     # the pre-batch view: claims by the corpus seed (ver 0) and by
     # batches strictly before this one (ver j+1 <= batch_id)
     snap_prior = snapshot.where(F.col("ver") <= batch_id).select("bk")
@@ -217,7 +216,7 @@ def incremental_dedup_batch(
     )
     if sink_dir is not None:
         # The sink write IS the pin: values land on disk before the
-        # upsert swaps the store's bucket directories, and the
+        # upsert publishes the store's next version, and the
         # accepted cut below reads the stable written files.  A
         # re-delivered batch overwrites the same _batch_id directory
         # with byte-identical rows (idempotent_parquet_sink layout).
@@ -229,8 +228,8 @@ def incremental_dedup_batch(
         flags = batch.sparkSession.read.schema(pinned_schema).parquet(bdir)
     else:
         # EAGER on purpose: flags read the store's current files, and
-        # the sink consumes them AFTER upsert() swaps those bucket
-        # directories out — the pin must land before the swap
+        # the sink consumes them AFTER upsert() has published the next
+        # version and removed those files — the pin must land first
         flags = flags.localCheckpoint()
     accepted = (
         nbk.join(flags.where(~F.col("is_dup")), "id", "left_semi")
@@ -240,5 +239,5 @@ def incremental_dedup_batch(
     fresh = accepted.join(snap_all, "bk", "left_anti").withColumn(
         "ver", F.lit(batch_id + 1)
     )
-    store.upsert(fresh, cur=raw)
+    store.upsert(fresh, cur=snapshot)
     return flags

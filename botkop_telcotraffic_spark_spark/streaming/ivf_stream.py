@@ -28,8 +28,8 @@ byte-identical stats (tests/test_streaming.py::
 test_streaming_ivf_restart_exactly_once).
 
 100 TB shape: each increment touches ONLY the new batch (k distance
-evaluations per vector, zero shuffle) plus a touched-buckets-only
-store rewrite; the corpus is never rescanned.  Per-cell stats
+evaluations per vector, zero shuffle) plus one latest-wins store
+rewrite; the corpus is never rescanned.  Per-cell stats
 aggregate fixed-width (cell, ver) keys — #cells rows per batch.  The
 drift monitor downstream (per-cell index share vs the seed share the
 quantizer was trained on) is the re-train trigger: k-row frames,
@@ -75,25 +75,25 @@ def ivf_assign_batch(
 
     ``sink``: callable invoked with the stats frame BEFORE the store
     rewrite.  With it the whole micro-batch costs ONE store read: the
-    raw snapshot feeds the upsert as its ``cur`` side, and the stats
+    snapshot feeds the upsert as its ``cur`` side, and the stats
     come from the latest-wins merge of (that same read, this batch's
     assignments) — definitionally identical to re-reading the store
     after the upsert, because the upsert writes exactly that merge
     (r13 measurement: the post-upsert listing+scan was a full extra
     job per batch).  The sink MUST materialize its input (a write or
-    other action): after ``upsert`` swaps the rewritten bucket
-    directories in, plans built on the pre-upsert snapshot hold stale
-    file references.  Returns None in sink mode for exactly that
-    reason.  Without ``sink`` the original read-back ordering is
-    kept and the (still valid) stats frame is returned."""
+    other action): after ``upsert`` publishes the next version it
+    removes the old one, so plans built on the pre-upsert snapshot
+    hold stale file references.  Returns None in sink mode for
+    exactly that reason.  Without ``sink`` the original read-back
+    ordering is kept and the (still valid) stats frame is returned."""
     from ..operators.enrich import latest_per_key
 
     assigned = (
         ivf_assignments(batch, centroids, id_col, vec_col)
         .withColumn("ver", F.lit(batch_id + 1))
         # lazy: the batch's first action (sink-mode stats write, or
-        # the upsert's touched-bucket probe) materializes it in-job;
-        # later consumers read the cached blocks
+        # the upsert) materializes it in-job; later consumers read
+        # the cached blocks
         .localCheckpoint(eager=False)
     )
 
@@ -118,16 +118,14 @@ def ivf_assign_batch(
     if sink is None:
         store.upsert(assigned)
         return _stats(store.snapshot())
-    raw = store.raw_snapshot()
+    cur = store.snapshot()
     post = (
         assigned
-        if raw is None
-        else latest_per_key(
-            raw.drop("_bucket").unionByName(assigned), [id_col], ["ver"]
-        )
+        if cur is None
+        else latest_per_key(cur.unionByName(assigned), [id_col], ["ver"])
     )
     sink(_stats(post))
-    store.upsert(assigned, cur=raw)
+    store.upsert(assigned, cur=cur)
     return None
 
 

@@ -301,15 +301,27 @@ class TrafficPipeline:
         topics in a ``value`` column (a text file stream or a Kafka
         source).  Per micro-batch, in the reference's serial output-op
         order: upsert the batch's attaches (K1), enrich its celltower
-        events against the store (J1), fan out (process_batch)."""
+        events against the store (J1), fan out (process_batch).
+
+        Replay-safe: the K-Means model keeps its state under
+        ``<checkpoint>/kmeans/`` as one ``b<batch_id>.json`` per batch
+        (the last two kept).  Each batch first rolls the model to the
+        state after the previous batch (``StreamingKMeans.align``) and
+        saves its own state after the fan-out, so a batch replayed
+        after a crash, or by a new pipeline on the same checkpoint,
+        trains the model once.  With idempotent per-batch sinks the
+        topics then match a run with no crash byte for byte."""
+        state = os.path.join(checkpoint, "kmeans")
 
         def sink(batch: DataFrame, batch_id: int) -> None:
+            self.model.align(state, batch_id)
             attach_store.upsert(decode_json_stream(batch, ATTACH_EVENT))
             cells = decode_json_stream(batch, CELLTOWER_EVENT)
             enriched = attach_store.join(cells, fact_key="bearerId").select(
                 "subscriber", "celltower", "metrics", "event_time"
             )
             self.process_batch(enriched, batch_id)
+            self.model.snapshot(state, batch_id, keep_last=2)
 
         writer = (
             lines.writeStream.foreachBatch(sink)

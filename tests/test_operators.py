@@ -3962,6 +3962,8 @@ def test_heaps_fit_extremes(spark):
     )
     b0 = heaps_fit(closed, "doc_id", "text", buckets=32).collect()[0]
     assert abs(b0["beta"]) < 0.01
+    # a constant curve has no r2, whatever the partial-sum order
+    assert b0["r2"] is None
 
 
 def test_column_entropy_hand(spark):

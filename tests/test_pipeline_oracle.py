@@ -12,6 +12,10 @@ the generator's Spark-free counts, judged by ``perfbench/run.py``'s own
 - ``ref_sliding`` has no attach lines: every batch takes the
   empty-upsert path.
 
+A crash inside a batch, followed by a restart of a new pipeline on the
+same store and checkpoint, must leave every topic byte-identical to a
+run with no crash.
+
 The benchmark's modules are imported read-only, by file path.
 """
 
@@ -49,20 +53,17 @@ bench = _load_bench()
 gen = bench.gen
 
 
-@pytest.mark.parametrize("workload", ["ref_sliding", "attach_churn"])
-def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
-    inputs = str(tmp_path / "inputs")
-    exp = gen.generate(workload, 7, inputs, BATCHES, SCALE)
-    profile = gen.Profile(**exp["profile"])
-
-    # the benchmark's seed step: one upsert of the decoded seed lines
-    store = KeyedUpsertStore(
-        spark, str(tmp_path / "store"), key_col="bearerId", order_col="ts"
-    )
+def _seeded_store(spark, path, inputs):
+    """The benchmark's seed step: one upsert of the decoded seed lines."""
+    store = KeyedUpsertStore(spark, path, key_col="bearerId", order_col="ts")
     seed = spark.read.text(os.path.join(inputs, "seed.jsonl"))
     store.upsert(decode_json_stream(seed, ATTACH_EVENT))
+    return store
 
-    sinks = str(tmp_path / "sinks")
+
+def _pipeline(spark, inputs, sinks, profile):
+    """The four topics written to per-batch text sinks, each batch
+    overwriting its own directory (so a replayed batch rewrites it)."""
     fences_path = os.path.join(inputs, "fences.json")
     fences = read_geofences(spark, fences_path)
 
@@ -74,7 +75,7 @@ def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
 
         return write
 
-    pipe = TrafficPipeline(
+    return TrafficPipeline(
         metric_names=list(gen.METRICS),
         kmeans_dims=list(gen.KMEANS_DIMS),
         geofence_path=fences_path,
@@ -92,12 +93,26 @@ def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
         outlier_sink=sink("kmeans_points", payloads.cluster_points_payload),
         publish_all_points=True,
     )
-    lines = (
+
+
+def _lines(spark, inputs):
+    return (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 1)
         .load(os.path.join(inputs, "backlog"))
     )
-    pipe.run(lines, store, checkpoint=str(tmp_path / "checkpoint"))
+
+
+@pytest.mark.parametrize("workload", ["ref_sliding", "attach_churn"])
+def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
+    inputs = str(tmp_path / "inputs")
+    exp = gen.generate(workload, 7, inputs, BATCHES, SCALE)
+    profile = gen.Profile(**exp["profile"])
+
+    store = _seeded_store(spark, str(tmp_path / "store"), inputs)
+    sinks = str(tmp_path / "sinks")
+    pipe = _pipeline(spark, inputs, sinks, profile)
+    pipe.run(_lines(spark, inputs), store, checkpoint=str(tmp_path / "checkpoint"))
 
     for topic in gen.TOPICS:
         assert sorted(os.listdir(os.path.join(sinks, topic))) == [
@@ -105,3 +120,61 @@ def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
         ]
     for b, want in enumerate(exp["batches"]):
         assert bench.mismatches(bench.observed(sinks, b), want) == [], f"batch {b}"
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+def _crash_after(obj, name, batch):
+    """Make ``obj.<name>`` raise once, right after its call for micro-batch
+    ``batch`` has returned (one call per batch, counted from batch 0)."""
+    real, calls = getattr(obj, name), []
+
+    def wrapped(*args, **kwargs):
+        out = real(*args, **kwargs)
+        calls.append(None)
+        if len(calls) == batch + 1:
+            raise _InjectedCrash(f"injected crash after {name} of batch {batch}")
+        return out
+
+    setattr(obj, name, wrapped)
+
+
+@pytest.mark.parametrize("crash_after", ["upsert", "process_batch"])
+def test_run_restart_is_byte_identical(spark, tmp_path, crash_after):
+    """Kill the query inside batch 1, after the store upsert or after the
+    fan-out (before the offset commit), then restart a NEW pipeline on the
+    same store and checkpoint: every topic matches a run with no crash,
+    byte for byte.  The replayed batch re-upserts the same attaches (a
+    latest-wins no-op on the values) and retrains the K-Means model from
+    its state after batch 0, not from a fresh model."""
+    inputs = str(tmp_path / "inputs")
+    exp = gen.generate("attach_churn", 7, inputs, BATCHES, SCALE)
+    profile = gen.Profile(**exp["profile"])
+
+    def drain(root, crash):
+        store = _seeded_store(spark, str(root / "store"), inputs)
+        pipe = _pipeline(spark, inputs, str(root / "sinks"), profile)
+        ckpt = str(root / "checkpoint")
+        if crash:
+            _crash_after(store if crash_after == "upsert" else pipe, crash_after, 1)
+            with pytest.raises(Exception, match="injected crash"):
+                pipe.run(_lines(spark, inputs), store, checkpoint=ckpt)
+            store = KeyedUpsertStore(
+                spark, str(root / "store"), key_col="bearerId", order_col="ts"
+            )
+            pipe = _pipeline(spark, inputs, str(root / "sinks"), profile)
+        pipe.run(_lines(spark, inputs), store, checkpoint=ckpt)
+        return str(root / "sinks")
+
+    clean = drain(tmp_path / "clean", crash=False)
+    crashed = drain(tmp_path / "crashed", crash=True)
+    for topic in gen.TOPICS:
+        assert sorted(os.listdir(os.path.join(crashed, topic))) == [
+            f"b{b:05d}" for b in range(BATCHES)
+        ]
+        for b in range(BATCHES):
+            assert bench.read_topic(crashed, topic, b) == bench.read_topic(
+                clean, topic, b
+            ), f"{topic} batch {b}"

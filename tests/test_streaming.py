@@ -710,60 +710,6 @@ def test_simulator_stream_advances_offsets(spark, tmp_path):
     assert [tuple(r)[:7] for r in got2] == [e[:7] for e in exp80]
 
 
-def test_upsert_store_rewrites_only_touched_buckets(spark, tmp_path):
-    """Incremental merge contract: a batch rewrites ONLY the hash
-    buckets its keys fall in; every other bucket directory stays
-    byte-for-byte identical on disk (the O(batch), not O(store),
-    per-micro-batch cost model)."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    store = KeyedUpsertStore(
-        spark, str(tmp_path / "store"), key_col="k", order_col="ts", n_buckets=8
-    )
-    batch1 = spark.createDataFrame(
-        [(f"key{i}", i, f"v{i}") for i in range(40)], ["k", "ts", "val"]
-    )
-    store.upsert(batch1)
-
-    def dir_digest(d):
-        h = hashlib.sha256()
-        for root, _, files in sorted(os.walk(d)):
-            for f in sorted(files):
-                h.update(f.encode())
-                with open(os.path.join(root, f), "rb") as fh:
-                    h.update(fh.read())
-        return h.hexdigest()
-
-    buckets = sorted(
-        d for d in os.listdir(store.path) if d.startswith("_bucket=")
-    )
-    assert len(buckets) > 1, "fixture must span several buckets"
-    before = {b: dir_digest(os.path.join(store.path, b)) for b in buckets}
-
-    # second batch touches exactly one key -> exactly one bucket
-    target = (
-        batch1.where(F.col("k") == "key0")
-        .select(store._bucket_expr().alias("b"))
-        .collect()[0]["b"]
-    )
-    batch2 = spark.createDataFrame([("key0", 100, "v0new")], ["k", "ts", "val"])
-    touched_bucket = f"_bucket={target}"
-    store.upsert(batch2)
-
-    after = {b: dir_digest(os.path.join(store.path, b)) for b in buckets}
-    for b in buckets:
-        if b != touched_bucket:
-            assert after[b] == before[b], f"untouched bucket {b} was rewritten"
-    assert after[touched_bucket] != before[touched_bucket]
-
-    # latest-wins still holds across the incremental merge
-    snap = {r["k"]: (r["ts"], r["val"]) for r in store.snapshot().collect()}
-    assert snap["key0"] == (100, "v0new")
-    assert len(snap) == 40
-
-
 def _kafka_brokers():
     """Broker discovery for the optional Kafka integration test:
     KAFKA_BOOTSTRAP env var, else a TCP probe of localhost:9092."""
@@ -829,51 +775,65 @@ def test_kafka_round_trip(spark, fixtures, tmp_path):
     assert src.isStreaming
 
 
-def test_upsert_store_reopen_adopts_written_bucket_count(spark, tmp_path):
-    """A store REOPENED from disk must bucket keys with the count it
-    was WRITTEN with (persisted in _meta.json), never the default —
-    otherwise a key's hash bucket moves between writers: its new row
-    lands in a new bucket while the old row stays in the old one, so
-    the snapshot holds two rows for the key.  An explicit count that
-    contradicts the meta, or a meta that cannot be read, is refused."""
+def test_upsert_store_reopen_reads_latest_version(spark, tmp_path):
+    """A store REOPENED from disk reads the version its pointer names,
+    and an upsert through the reopened store is latest-wins over the
+    rows the first writer published and leaves one version on disk."""
     path = str(tmp_path / "store")
-    w = KeyedUpsertStore(spark, path, key_col="k", order_col="v", n_buckets=11)
+    w = KeyedUpsertStore(spark, path, key_col="k", order_col="v")
     w.upsert(spark.createDataFrame([(i, 0) for i in range(30)], ["k", "v"]))
     r = KeyedUpsertStore(spark, path, key_col="k", order_col="v")
-    assert r.n_buckets == 11
     r.upsert(spark.createDataFrame([(1, 5), (99, 0)], ["k", "v"]))
     snap = {x["k"]: x["v"] for x in r.snapshot().collect()}
     assert snap[1] == 5 and snap[99] == 0 and len(snap) == 31
+    assert sorted(os.listdir(path)) == ["_CURRENT", "v1"]
 
-    same = KeyedUpsertStore(spark, path, key_col="k", order_col="v", n_buckets=11)
-    assert same.n_buckets == 11
-    with pytest.raises(ValueError, match="11 buckets"):
-        KeyedUpsertStore(spark, path, key_col="k", order_col="v", n_buckets=4)
 
-    with open(os.path.join(path, "_meta.json"), "w") as fh:
-        fh.write("{not json")
-    with pytest.raises(ValueError, match="unreadable store meta"):
-        KeyedUpsertStore(spark, path, key_col="k", order_col="v")
+def test_upsert_crash_mid_publish_keeps_prior_snapshot(spark, tmp_path, monkeypatch):
+    """A crash while an upsert publishes its result leaves the store's
+    prior snapshot whole: a reopened store reads exactly the rows before
+    the crash, and the next upsert is latest-wins over everything."""
+    path = str(tmp_path / "store")
+    seed = [(i, 0, f"a{i}") for i in range(20)]
+    store = KeyedUpsertStore(spark, path, key_col="k", order_col="ts")
+    store.upsert(spark.createDataFrame(seed, ["k", "ts", "val"]))
+
+    def crash(*args, **kwargs):
+        raise OSError("injected crash")
+
+    overlap = [(i, 1, f"b{i}") for i in range(10, 25)]
+    batch = spark.createDataFrame(overlap, ["k", "ts", "val"])
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError, match="injected crash"):
+            store.upsert(batch)
+
+    def rows(s):
+        return sorted((r["k"], r["ts"], r["val"]) for r in s.snapshot().collect())
+
+    reopened = KeyedUpsertStore(spark, path, key_col="k", order_col="ts")
+    assert rows(reopened) == sorted(seed)
+
+    reopened.upsert(batch)
+    latest = {k: (k, ts, v) for k, ts, v in sorted(seed + overlap, key=lambda r: r[1])}
+    assert rows(reopened) == sorted(latest.values())
 
 
 def test_upsert_with_preread_cur_matches_plain_upsert(spark, tmp_path):
-    """upsert(batch, cur=raw_snapshot()) — the one-read-per-batch hot
+    """upsert(batch, cur=snapshot()) — the one-read-per-batch hot
     path — must produce the identical snapshot as a plain upsert."""
     rows0 = [(i, 0, f"a{i}") for i in range(20)]
     rows1 = [(i, 1, f"b{i}") for i in range(5, 10)] + [(50, 1, "new")]
     snaps = []
     for use_cur in (False, True):
         store = KeyedUpsertStore(
-            spark,
-            str(tmp_path / f"s_{use_cur}"),
-            key_col="k",
-            order_col="ts",
-            n_buckets=4,
+            spark, str(tmp_path / f"s_{use_cur}"), key_col="k", order_col="ts"
         )
         store.upsert(spark.createDataFrame(rows0, ["k", "ts", "val"]))
         batch = spark.createDataFrame(rows1, ["k", "ts", "val"])
         if use_cur:
-            store.upsert(batch, cur=store.raw_snapshot())
+            store.upsert(batch, cur=store.snapshot())
         else:
             store.upsert(batch)
         snaps.append(
@@ -895,20 +855,23 @@ def test_empty_upsert_does_not_create_store(spark, tmp_path):
 
 
 def test_empty_upsert_leaves_existing_store_untouched(spark, tmp_path):
-    """On an existing store, a batch with no rows rewrites no bucket
-    and costs at most the one job that finds no bucket touched."""
+    """On an existing store, a batch with no rows writes, removes and
+    rewrites no file, and costs at most the one job that finds it empty."""
     path = str(tmp_path / "store")
     store = KeyedUpsertStore(spark, path, key_col="k", order_col="v")
     store.upsert(spark.createDataFrame([(i, 0) for i in range(20)], "k bigint, v bigint"))
 
-    def bucket_files():
-        return {
-            d: sorted(os.listdir(os.path.join(path, d)))
-            for d in os.listdir(path)
-            if d.startswith("_bucket=")
-        }
+    def store_files():
+        out = {}
+        for root, _, files in os.walk(path):
+            for f in files:
+                p = os.path.join(root, f)
+                st = os.stat(p)
+                out[os.path.relpath(p, path)] = (st.st_size, st.st_mtime_ns)
+        return out
 
-    before = bucket_files()
+    before = store_files()
+    assert before, "the seeded store must have files"
     sc = spark.sparkContext
     group, prev = "empty-upsert", sc.getLocalProperty("spark.jobGroup.id")
     sc.setLocalProperty("spark.jobGroup.id", group)
@@ -916,7 +879,7 @@ def test_empty_upsert_leaves_existing_store_untouched(spark, tmp_path):
         store.upsert(spark.createDataFrame([], "k bigint, v bigint"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
-    assert bucket_files() == before
+    assert store_files() == before
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
     assert store.snapshot().count() == 20
 
