@@ -2554,10 +2554,7 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator code hash-checkable."""
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.operators.iqr import (
-        DOUBLE_MAX,
-        DOUBLE_MIN,
-    )
+    from botkop_telcotraffic_spark_spark.operators.iqr import with_iqr_fences
     from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans
     from botkop_telcotraffic_spark_spark.streaming.pipeline import idempotent_parquet_sink
     from botkop_telcotraffic_spark_spark.streaming.runner import (
@@ -2599,41 +2596,6 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = _scratch_dir("skm_state_")
     sink = idempotent_parquet_sink(out_dir)
 
-    # exact per-cluster IQR fences as SCALAR window expressions
-    # over prediction (identical order statistics to
-    # operators/iqr.py exact mode) instead of aggregate +
-    # broadcast join-back: the broadcast exchange cost one extra
-    # sub-job per micro-batch, so predict + fence + filter +
-    # write is now ONE job per batch on one k-key shuffle + sort
-    # (round-7 verdict #5 shave).  The order statistic at index
-    # i is picked by row_number == i, NEVER by indexing a
-    # collect_list window column — an array-valued window value
-    # is copied into EVERY row's buffer (O(rows x group) bytes;
-    # measured as a 5x blowup at sf0.1).
-    # r13: the per-batch chain is STATIC selectExpr SQL strings built
-    # once here, not ~50 Py4J Column constructions per micro-batch
-    # (measured 0.17 s/batch of pure driver build time); the parsed
-    # expression trees — and so every double — are identical.
-    _q1i = "CAST(FLOOR(_n / 4) + 1 AS INT)"
-    _q3i = "CAST(FLOOR(_n * 3 / 4) + 1 AS INT)"
-    _q1 = (
-        f"MAX(CASE WHEN _rn = {_q1i} THEN distance END)"
-        " OVER (PARTITION BY prediction)"
-    )
-    _q3 = (
-        f"MAX(CASE WHEN _rn = {_q3i} THEN distance END)"
-        " OVER (PARTITION BY prediction)"
-    )
-    fence_exprs = (
-        "event_id",
-        "prediction",
-        "distance",
-        f"CASE WHEN _n <= 4 THEN {DOUBLE_MIN!r}D"
-        f" ELSE {_q1} - 1.5D * ({_q3} - {_q1}) END AS lo",
-        f"CASE WHEN _n <= 4 THEN {DOUBLE_MAX!r}D"
-        f" ELSE {_q3} + 1.5D * ({_q3} - {_q1}) END AS hi",
-    )
-
     def batch_fn(df: DataFrame, batch_id: int) -> None:
         # exactly-once under restart: roll the driver model to the
         # post-(batch_id-1) snapshot, score, overwrite this batch's
@@ -2642,15 +2604,11 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = model.exactly_once_batch(
             df, batch_id, state_dir, vec_col="point"
         )
-        ranked = scored.selectExpr(
-            "event_id",
+        fenced = with_iqr_fences(
+            scored.select("event_id", "prediction", "distance"),
             "prediction",
             "distance",
-            "row_number() OVER (PARTITION BY prediction ORDER BY distance)"
-            " AS _rn",
-            "count(1) OVER (PARTITION BY prediction) AS _n",
         )
-        fenced = ranked.selectExpr(*fence_exprs)
         out = fenced.where("distance < lo OR distance > hi")
         sink(
             out.selectExpr(
@@ -3842,10 +3800,11 @@ FROM e
 
 
 def streaming_ewma_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed stateful streaming via the Spark 4 transformWithState
-    API (streaming/tws.py): per-user EWMA over (ts, event_id)-ordered
-    values, keyed ValueState.  The deterministic fold
-    lets the DuckDB oracle reproduce it with list_reduce."""
+    """Keyed stateful streaming via applyInPandasWithState
+    (streaming/tws.py::running_ewma): per-user EWMA over (ts,
+    event_id)-ordered values, an (n, ewma) state pair per user.  The
+    deterministic fold lets the DuckDB oracle reproduce it with
+    list_reduce."""
     from botkop_telcotraffic_spark_spark.streaming.runner import (
         run_to_memory,
         stream_parquet_table,
@@ -5958,8 +5917,8 @@ FROM counts, tot
 
 def streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming leaderboard: per-user running (count, value-sum)
-    held as transformWithState ValueState
-    (streaming/tws.py::KeyedCountProcessor), replayed availableNow,
+    held as applyInPandasWithState keyed state
+    (streaming/tws.py::running_keyed_counts), replayed availableNow,
     then an exact top-20 cut over the final snapshot (count desc, id
     asc — deterministic ties).  State math is exact (int count) /
     round-stable (double sum at 6dp), so the batch oracle reproduces
@@ -6319,10 +6278,10 @@ GROUP BY c_mktsegment
 
 
 def streaming_idle_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time TIMER sessionization
-    (streaming/tws.py::IdleSessionProcessor): per-user gap sessions
-    (5 min) finalized by input-time splits plus watermark-driven
-    timers; replayed availableNow.  Deterministic, so the oracle
+    """Event-time timeout sessionization
+    (streaming/tws.py::idle_sessions): per-user gap sessions (5 min)
+    finalized by input-time splits plus a watermark-driven
+    EventTimeTimeout; replayed availableNow.  Deterministic, so the oracle
     replays it relationally: classic lag/cumsum gap sessions, kept if
     closed by a later session OR expired against the final watermark
     (max ts − 10 s).
@@ -6383,9 +6342,9 @@ WHERE sid < max_sid OR last_ts + INTERVAL 5 MINUTE < w
 
 
 def streaming_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MapState streaming counts
-    (streaming/tws.py::TypeCountProcessor): per-(user, event type)
-    running counts where each type key is a state-store point lookup —
+    """Streaming counts by a secondary key
+    (streaming/tws.py::running_type_counts): per-(user, event type)
+    running counts held as one map<string,bigint> state per user —
     replayed availableNow; the final update-mode snapshot equals the
     batch group-by, which is the oracle."""
     from botkop_telcotraffic_spark_spark.streaming.runner import (
@@ -6410,9 +6369,9 @@ FROM events GROUP BY user_id, event_type
 
 
 def streaming_od_flows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OD flows (streaming/tws.py::HandoverProcessor): the
-    stateful-streaming twin of od_flows_events — one ValueState cell
-    per subscriber, transitions emitted exactly once across
+    """Streaming OD flows (streaming/tws.py::handover_transitions):
+    the stateful-streaming twin of od_flows_events — one last-cell
+    state scalar per subscriber, transitions emitted exactly once across
     micro-batch boundaries, flows aggregated from the append sink.
     Same oracle as the batch twin (the flow matrix is
     arrival-order-invariant given per-key event-time ordering)."""
@@ -6456,10 +6415,10 @@ def streaming_od_flows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def streaming_lastk_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ListState recent-history features
-    (streaming/tws.py::LastKProcessor): per event, the mean of the
-    user's previous 3 observed values — bounded k-scalar state per
-    key; the oracle is the exact ROWS-frame window over the non-null
+    """Keyed-state recent-history features
+    (streaming/tws.py::rolling_history_features): per event, the
+    mean of the user's previous 3 observed values — bounded k-scalar
+    state per key; the oracle is the exact ROWS-frame window over the non-null
     value stream."""
     from botkop_telcotraffic_spark_spark.streaming.runner import (
         run_to_memory,
@@ -11852,8 +11811,8 @@ FROM b GROUP BY 1, 2
 
 def streaming_pingpong_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ping-pong detection (streaming/tws.py::
-    PingPongProcessor): the stateful-streaming twin of
-    pingpong_cells_events — four scalars of ValueState per
+    pingpong_bounces): the stateful-streaming twin of
+    pingpong_cells_events — four scalars of keyed state per
     subscriber (last two fixes), bounces emitted exactly once even
     when the A->B->A excursion spans micro-batch boundaries, pairs
     aggregated from the append sink.  Same oracle as the batch twin
@@ -13140,8 +13099,8 @@ FROM g WHERE k >= 2 AND nt > k
 
 def streaming_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming time-to-convert (streaming/tws.py::
-    ConversionLagProcessor): the stateful-streaming twin of
-    conversion_lag_users — two scalars of ValueState per user
+    conversion_lags): the stateful-streaming twin of
+    conversion_lag_users — two scalars of keyed state per user
     (first-click micros + done flag), the lag emitted exactly once
     even when click and purchase span micro-batches, stats
     aggregated from the append sink.  Same oracle as the batch twin

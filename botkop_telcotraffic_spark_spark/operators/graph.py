@@ -420,7 +420,14 @@ def pagerank(
     hub) is absorbed by map-side partial aggregation.  Fixed
     ``iterations`` (not convergence-probed) keeps the plan
     deterministic and oracle-reproducible; each round ends in
-    localCheckpoint to keep lineage flat (cluster: persist).
+    localCheckpoint to keep lineage flat.
+
+    Fault tolerance: localCheckpoint blocks live only on the
+    executors that computed them and keep NO lineage, so losing an
+    executor mid-run fails the job instead of recomputing the lost
+    partitions (persist would recompute).  Fine in local mode; on a
+    cluster with executor churn, swap the localCheckpoint calls for
+    persist + unpersist.
     """
     # Iteration state is ONE table (node, deg, rank) hash-partitioned
     # on node, and the edge list is pre-partitioned on its source —

@@ -109,6 +109,41 @@ def iqr_bounds(
     return g.select(*key_cols, "n", "q1", "q3", "lo", "hi")
 
 
+def with_iqr_fences(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
+    """``df`` plus its key's exact IQR fences ``lo`` and ``hi`` (the
+    exact mode above: q1 = sorted[n DIV 4], q3 = sorted[3n DIV 4]
+    0-based, 1.5·IQR, ±DBL_MAX at n <= 4), as SCALAR window
+    expressions over ``key_col`` instead of an aggregate + broadcast
+    join-back: fence and filter run in the caller's job on one
+    key_col shuffle + sort, with no broadcast-build sub-job.  The
+    order statistic at index i is picked by row_number == i, never by
+    indexing a collect_list window column — an array-valued window
+    value is copied into every row's buffer (O(rows × group) bytes).
+    Built as SQL strings (parsed once JVM-side); ``1.5D`` because a
+    bare ``1.5`` parses as DECIMAL."""
+    part = f"PARTITION BY `{key_col}`"
+
+    def q(idx: str) -> str:
+        return (
+            f"MAX(CASE WHEN _rn = CAST(FLOOR({idx}) + 1 AS INT)"
+            f" THEN `{value_col}` END) OVER ({part})"
+        )
+
+    q1, q3 = q("_n / 4"), q("_n * 3 / 4")
+    cols = [f"`{c}`" for c in df.columns]
+    return df.selectExpr(
+        *cols,
+        f"row_number() OVER ({part} ORDER BY `{value_col}`) AS _rn",
+        f"count(1) OVER ({part}) AS _n",
+    ).selectExpr(
+        *cols,
+        f"CASE WHEN _n <= 4 THEN {DOUBLE_MIN!r}D"
+        f" ELSE {q1} - 1.5D * ({q3} - {q1}) END AS lo",
+        f"CASE WHEN _n <= 4 THEN {DOUBLE_MAX!r}D"
+        f" ELSE {q3} + 1.5D * ({q3} - {q1}) END AS hi",
+    )
+
+
 def iqr_outliers(
     df: DataFrame,
     key_cols: Sequence[str],

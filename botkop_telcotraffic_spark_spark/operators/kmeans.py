@@ -40,7 +40,15 @@ def _model_sized_shuffles(spark):
     already one 1-partition shuffle — its per-stage re-optimization
     was pure driver overhead here (measured ~1 s/round on the Lloyd
     loop).  Same set/restore pattern as
-    streaming/runner.py::replay_partitions."""
+    streaming/runner.py::replay_partitions.
+
+    The two confs are SESSION-WIDE: the block assumes no other query
+    runs on the session while it is open (a concurrent query would
+    plan with one shuffle partition and AQE off too), and EVERY
+    exchange planned inside it is affected, including data-sized
+    shuffles in the lineage of the caller's input frame (an upstream
+    join or aggregate is forced to one partition).  Callers should
+    pass a frame whose lineage has no data-sized shuffle."""
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
@@ -298,6 +306,10 @@ class StreamingKMeans:
     def update(self, batch: DataFrame, vec_col: str = "point") -> None:
         """One mini-batch update: distributed assign + per-cluster
         sum/count, then the O(k*dim) driver-side rule."""
+        # the model no longer matches any snapshot: if this batch dies
+        # before snapshot(), align() must reload instead of replaying
+        # the batch on top of this update
+        self._cursor = None
         spark = batch.sparkSession
         self._maybe_seed_from_batch(batch, vec_col)
         assigned = assign(batch.select(F.col(vec_col).alias("point")),

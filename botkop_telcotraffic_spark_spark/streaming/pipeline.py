@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.geofence import polygon_geofence_join
+from ..operators.iqr import with_iqr_fences
 from ..operators.kmeans import StreamingKMeans
 from ..operators.window_stats import stat_aggs
 from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT, GEOFENCE
@@ -160,11 +161,8 @@ class TrafficPipeline:
           entity) group is omitted from that group's ``stats`` (the
           reference never publishes it either: play-json rejects a
           null map value and drops the event)."""
-        win = (
-            F.window(F.col("event_time"), self.window, self.slide)
-            if self.slide
-            else F.window(F.col("event_time"), self.window)
-        )
+        # slide None is F.window's tumbling window
+        win = F.window(F.col("event_time"), self.window, self.slide)
         stats = F.filter(
             F.array(*[
                 F.struct(F.lit(m).alias("metric"), *stat_aggs(F.col("metrics")[m]))
@@ -213,22 +211,10 @@ class TrafficPipeline:
         default keeps only the rows outside the fences — the
         alert-stream variant.
 
-        Fence formulation: the exact per-cluster IQR order statistics
-        are SCALAR window expressions over prediction (identical
-        values to operators/iqr.py exact mode: q1 = sorted[n DIV 4],
-        q3 = sorted[3n DIV 4] 0-based, 1.5·IQR, ±DBL_MAX at n <= 4)
-        instead of an aggregate + broadcast join-back — the
-        streaming_kmeans_outliers round-7 shave applied to the
-        production pipeline: predict + fence + filter is ONE job per
-        micro-batch on one k-key shuffle, dropping the per-batch
-        broadcast-build sub-job (round-10 fan-out harvest).  The
-        rank-based pick uses row_number == idx, never indexing a
-        collect_list window column (an array-valued window value is
-        copied into every row's buffer — O(rows × group) bytes)."""
-        from pyspark.sql import Window
-
-        from ..operators.iqr import DOUBLE_MAX, DOUBLE_MIN
-
+        Fences: ``operators/iqr.py::with_iqr_fences`` — the exact
+        per-cluster IQR as window expressions over prediction, so
+        predict + fence + filter is ONE job per micro-batch on one
+        k-key shuffle."""
         pts = enriched.select(
             "subscriber",
             "celltower",
@@ -237,26 +223,7 @@ class TrafficPipeline:
             ).alias("point"),
         ).where(~F.exists("point", lambda x: x.isNull()))
         scored = self.model.update_and_assign(pts, vec_col="point")
-        w_ord = Window.partitionBy("prediction").orderBy("distance")
-        w_all = Window.partitionBy("prediction")
-        ranked = scored.select(
-            "subscriber", "celltower", "point", "prediction", "centroid",
-            "distance",
-            F.row_number().over(w_ord).alias("_rn"),
-            F.count(F.lit(1)).over(w_all).alias("_n"),
-        )
-        q1i = (F.floor(F.col("_n") / 4) + 1).cast("int")
-        q3i = (F.floor(F.col("_n") * 3 / 4) + 1).cast("int")
-        q1 = F.max(F.when(F.col("_rn") == q1i, F.col("distance"))).over(w_all)
-        q3 = F.max(F.when(F.col("_rn") == q3i, F.col("distance"))).over(w_all)
-        iqr_w = q3 - q1
-        degen = F.col("_n") <= 4
-        flagged = ranked.select(
-            "subscriber", "celltower", "point", "prediction", "centroid",
-            "distance",
-            F.when(degen, F.lit(DOUBLE_MIN)).otherwise(q1 - 1.5 * iqr_w).alias("lo"),
-            F.when(degen, F.lit(DOUBLE_MAX)).otherwise(q3 + 1.5 * iqr_w).alias("hi"),
-        )
+        flagged = with_iqr_fences(scored, "prediction", "distance")
         if not keep_all:
             flagged = flagged.where(
                 (F.col("distance") < F.col("lo"))

@@ -1,28 +1,20 @@
-"""Keyed stateful streaming via the transformWithState API (Spark
-4.x successor to applyInPandasWithState — SURVEY.md §2.9 W6's modern
-mapping).  Where stateful.py shows the classic GroupState path, this
-module shows the new StatefulProcessor surface: named state variables
-(ValueState here; ListState/MapState for fatter operators), explicit
-init/close lifecycle, timers, and RocksDB-backed state.
+"""Keyed stateful streaming operators on applyInPandasWithState, the
+PySpark form of Structured Streaming's mapGroupsWithState (SURVEY.md
+§2.9 W6).  Each operator groups the stream by ``user_id`` (the only
+shuffle) and folds a key's rows into a small state tuple in its
+``GroupState``; ``session.enable_large_state`` puts that state in the
+RocksDB store, so key cardinality is bounded by disk, not executor
+heap.  ``idle_sessions`` alone sets a timeout: an ``EventTimeTimeout``
+fires when the watermark passes a session's last event + gap.  Spark's
+newer transformWithState API is not used: its Python side needs
+``google.protobuf``.
 
-The operator: per-key exponential moving average (alpha = 1/2).  For
-each key's events in (ts, event_id) order:
-
-    ewma_0 = value_0            ewma_i = (ewma_{i-1} + value_i) / 2
-
-emitting one row per key per micro-batch with the post-batch EWMA.
-
-Determinism across engines: the fold is a fixed sequence of IEEE
-double ops, so DuckDB's ``list_reduce`` over the same ordered list
-reproduces it bit-exactly (the oracle still rounds, belt and
-braces).  Within a batch rows are sorted per key; cross-batch order
-is the replay source's (single-file availableNow replay = one
+Determinism across engines: order-dependent operators sort a key's
+rows within the batch, and ``running_ewma``'s fold is a fixed sequence
+of IEEE double ops, so DuckDB's ``list_reduce`` over the same ordered
+list reproduces it bit-exactly (the oracle still rounds).  Cross-batch
+order is the replay source's (single-file availableNow replay = one
 batch).
-
-Scale: state per key is (count, ewma) — two scalars in the RocksDB
-state store (session.enable_large_state), so key cardinality is
-bounded by disk, not executor heap; the only shuffle is the groupBy
-hash exchange Structured Streaming requires for keyed state.
 """
 
 from __future__ import annotations
@@ -32,49 +24,13 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 _STATE_SCHEMA = "n long, ewma double"
 OUT_SCHEMA = "user_id long, n long, ewma double"
 
 
-class EwmaProcessor(StatefulProcessor):
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("ewma", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-        prior = self._state.get() if self._state.exists() else None
-        n, ewma = prior if prior is not None else (0, 0.0)
-        for v in batch["value"]:
-            ewma = float(v) if n == 0 else (ewma + float(v)) / 2.0
-            n += 1
-        self._state.update((n, ewma))
-        yield pd.DataFrame({"user_id": [key[0]], "n": [n], "ewma": [ewma]})
-
-    def close(self) -> None:
-        pass
-
-
-def transform_with_state_available() -> bool:
-    """transformWithState's Python side speaks protobuf to the JVM
-    state server; environments without ``google.protobuf`` must fall
-    back to the classic applyInPandasWithState path."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _ewma_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    # classic-API twin of EwmaProcessor.handleInputRows
     n, ewma = state.get if state.exists else (0, 0.0)
     batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     for v in batch["value"]:
@@ -85,20 +41,13 @@ def _ewma_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFra
 
 
 def running_ewma(events: DataFrame) -> DataFrame:
-    """events(event_id, user_id, ts, value) -> per-user EWMA rows.
+    """events(event_id, user_id, ts, value) -> one row per user per
+    micro-batch with the post-batch exponential moving average (alpha
+    = 1/2) over the user's (ts, event_id)-ordered values:
 
-    Prefers the transformWithState API; falls back to
-    applyInPandasWithState (same semantics, same state shape) when the
-    protobuf dependency is absent."""
-    if transform_with_state_available():
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=EwmaProcessor(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+        ewma_0 = value_0            ewma_i = (ewma_{i-1} + value_i) / 2
 
+    State per key is (count, ewma): two scalars."""
     return events.groupBy("user_id").applyInPandasWithState(
         _ewma_group,
         outputStructType=OUT_SCHEMA,
@@ -112,38 +61,7 @@ _COUNT_STATE_SCHEMA = "n long, vsum double"
 COUNT_OUT_SCHEMA = "user_id long, n long, vsum double"
 
 
-class KeyedCountProcessor(StatefulProcessor):
-    """Running (count, value-sum) per key — the stateful substrate of
-    a streaming leaderboard / heavy-hitter monitor.  State is two
-    scalars per key in the RocksDB store; each micro-batch emits the
-    key's post-batch totals (update mode), and the top-k cut happens
-    OVER THE SNAPSHOT downstream, where it is a k-row sort — ranking
-    inside the processor would need cross-key state, which keyed
-    state deliberately cannot see."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("counts", _COUNT_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows))
-        prior = self._state.get() if self._state.exists() else None
-        n, vsum = prior if prior is not None else (0, 0.0)
-        vals = batch["value"].dropna()
-        n += int(len(batch))
-        vsum += float(vals.sum()) if len(vals) else 0.0
-        self._state.update((n, vsum))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n": [n], "vsum": [vsum]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
 def _count_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-    # classic-API twin of KeyedCountProcessor.handleInputRows
     n, vsum = state.get if state.exists else (0, 0.0)
     batch = pd.concat(list(pdfs))
     vals = batch["value"].dropna()
@@ -156,16 +74,12 @@ def _count_group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFr
 def running_keyed_counts(events: DataFrame) -> DataFrame:
     """events(user_id, value, ...) -> per-user running (n, vsum).
 
-    Same API preference dance as :func:`running_ewma`."""
-    if transform_with_state_available():
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=KeyedCountProcessor(),
-            outputStructType=COUNT_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    The stateful substrate of a streaming leaderboard / heavy-hitter
+    monitor: two scalars of state per key; each micro-batch emits the
+    key's post-batch totals (update mode), and the top-k cut happens
+    OVER THE SNAPSHOT downstream, where it is a k-row sort — ranking
+    inside the operator would need cross-key state, which keyed state
+    deliberately cannot see."""
     return events.groupBy("user_id").applyInPandasWithState(
         _count_group,
         outputStructType=COUNT_OUT_SCHEMA,
@@ -175,106 +89,33 @@ def running_keyed_counts(events: DataFrame) -> DataFrame:
     )
 
 
-# --- idle-session finalization via event-time TIMERS ----------------------
-
 _SESS_STATE_SCHEMA = "n long, vsum double, last_us long"
 SESSION_OUT_SCHEMA = "user_id long, n long, vsum double, last_us long"
 
 
-class IdleSessionProcessor(StatefulProcessor):
-    """Timer-driven sessionization: a user's session FINALIZES (one
-    emitted row, state cleared) when the event-time watermark passes
-    ``last_event + gap`` — the timer surface of transformWithState,
-    which the windowless processors here don't otherwise exercise.
+def idle_sessions(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
+    """events(user_id, ts, value) WITH a watermark already applied ->
+    finalized-session rows (user_id, n, vsum, last_us), emitted when
+    the watermark passes last_event + gap (applyInPandasWithState
+    EventTimeTimeout; the state is cleared on emission).
 
     Contrast with ``session_window`` aggregation: the built-in emits
-    when Spark's window state decides; the timer form hands the
+    when Spark's window state decides; the timeout form hands the
     expiry policy to user code (mixed policies, side effects on
-    expiry, cascaded timers), at the cost of owning correctness.
+    expiry), at the cost of owning correctness.
 
     Determinism contract for the oracle/tests: emission depends only
     on (events, watermark movement) = (data, file split), both fixed
     in replay; within-session aggregates are order-insensitive
     (count + sum).  Sessions still open when the query ends are NOT
     emitted — exactly the at-watermark semantics a downstream
-    consumer sees in production.
-    """
-
-    def __init__(self, gap_ms: int) -> None:
-        self._gap_ms = gap_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("sess", _SESS_STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows)).sort_values("ts")
-        prior = self._state.get() if self._state.exists() else None
-        n, vsum, last_us = prior if prior is not None else (0, 0.0, 0)
-        # gap-split AT INPUT TIME: the timer only closes the idle
-        # TAIL — a gap that has already elapsed when the next event
-        # arrives (watermark lag) must split here, or two sessions
-        # would silently merge
-        closed = []
-        for ts, v in zip(batch["ts"], batch["value"]):
-            t_us = int(ts.value // 1_000)
-            if n > 0 and t_us - last_us > self._gap_ms * 1_000:
-                closed.append((key[0], n, vsum, last_us))
-                n, vsum = 0, 0.0
-            n += 1
-            vsum += float(v) if pd.notna(v) else 0.0
-            last_us = max(last_us, t_us)
-        self._state.update((n, vsum, last_us))
-        # one live timer per key: re-arm at last_event + gap
-        for t in self._handle.listTimers():
-            self._handle.deleteTimer(t)
-        self._handle.registerTimer(last_us // 1_000 + self._gap_ms)
-        if closed:
-            yield pd.DataFrame(
-                closed, columns=["user_id", "n", "vsum", "last_us"]
-            )
-
-    def handleExpiredTimer(
-        self, key, timerValues, expiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        if self._state.exists():
-            n, vsum, last_us = self._state.get()
-            self._state.clear()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n": [n],
-                    "vsum": [vsum],
-                    "last_us": [last_us],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def idle_sessions(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
-    """events(user_id, ts, value) WITH a watermark already applied ->
-    finalized-session rows (user_id, n, vsum, last_us), emitted when
-    the watermark passes last_event + gap.  transformWithState
-    event-time timers; falls back to applyInPandasWithState
-    EventTimeTimeout (same semantics) without protobuf."""
+    consumer sees in production."""
     num, unit = gap.split()
     gap_ms = int(num) * {
         "second": 1_000, "seconds": 1_000,
         "minute": 60_000, "minutes": 60_000,
         "hour": 3_600_000, "hours": 3_600_000,
     }[unit]
-    if transform_with_state_available():
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=IdleSessionProcessor(gap_ms),
-            outputStructType=SESSION_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def _group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
@@ -287,6 +128,10 @@ def idle_sessions(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
             return
         n, vsum, last_us = state.get if state.exists else (0, 0.0, 0)
         batch = pd.concat(list(pdfs)).sort_values("ts")
+        # gap-split AT INPUT TIME: the timeout only closes the idle
+        # TAIL — a gap that has already elapsed when the next event
+        # arrives (watermark lag) must split here, or two sessions
+        # would silently merge
         closed = []
         for ts, v in zip(batch["ts"], batch["value"]):
             t_us = int(ts.value // 1_000)
@@ -312,73 +157,17 @@ def idle_sessions(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
     )
 
 
-# --- per-key MapState: running counts by a secondary dimension ------------
-
 TYPE_COUNT_OUT_SCHEMA = "user_id long, event_type string, n long"
 
 
-class TypeCountProcessor(StatefulProcessor):
-    """Per-user running counts BY EVENT TYPE held in MapState — the
-    state shape for "how many of each action has this entity taken",
-    where ValueState would need a full read-modify-write of the whole
-    map per batch and a windowed aggregate would shuffle per
-    (user, type).  MapState reads/writes ONLY the touched type keys
-    (RocksDB point lookups), so per-batch cost follows the batch, not
-    the accumulated per-user type universe.  Emits the post-batch
-    count for every type touched in the batch (update-mode
-    semantics)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._counts = handle.getMapState(
-            "type_counts", "event_type string", "n long"
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows))
-        touched = batch["event_type"].value_counts()
-        out_t, out_n = [], []
-        for etype, cnt in touched.items():
-            k = (etype,)
-            prior = (
-                self._counts.getValue(k)[0]
-                if self._counts.containsKey(k)
-                else 0
-            )
-            n = int(prior) + int(cnt)
-            self._counts.updateValue(k, (n,))
-            out_t.append(etype)
-            out_n.append(n)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]] * len(out_t),
-                "event_type": out_t,
-                "n": out_n,
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
 def running_type_counts(events: DataFrame) -> DataFrame:
-    """events(user_id, event_type) -> per-(user, type) running counts.
-
-    Primary path: transformWithState MapState (per-type point
-    lookups).  Fallback without protobuf: applyInPandasWithState with
-    a ``map<string,bigint>`` state column — same semantics, but the
-    WHOLE map is read-modify-written per batch, which is exactly the
-    cost profile MapState exists to avoid (acceptable for the
-    fallback, documented here)."""
-    if transform_with_state_available():
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TypeCountProcessor(),
-            outputStructType=TYPE_COUNT_OUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """events(user_id, event_type) -> per-(user, type) running counts,
+    emitting the post-batch count for every type touched in the batch
+    (update mode).  The state is one ``map<string,bigint>`` column per
+    user, and the WHOLE map is read, modified and written back every
+    batch the user appears in, so per-batch cost grows with the user's
+    accumulated type universe, not only with the types the batch
+    touches."""
 
     def _group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         (counts,) = state.get if state.exists else ({},)
@@ -405,62 +194,17 @@ def running_type_counts(events: DataFrame) -> DataFrame:
     )
 
 
-# --- per-key ListState: bounded recent-history features -------------------
-
 LASTK_OUT_SCHEMA = "event_id long, user_id long, n_prior long, mean_k double"
-
-
-class LastKProcessor(StatefulProcessor):
-    """Per-key bounded recent-history features via ListState: for
-    every (non-null-valued) event, the count and mean of the user's
-    PREVIOUS k observed values — the online feature-engineering shape
-    ("average of the last 3 readings") that a windowed aggregate
-    cannot produce per-event and a ValueState would have to encode by
-    hand.  ListState stores the rolling window as rows; state per key
-    is exactly k scalars (trimmed on every append)."""
-
-    def __init__(self, k: int) -> None:
-        self._k = k
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._recent = handle.getListState("recent", "v double")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-        vals = [t[0] for t in self._recent.get()] if self._recent.exists() else []
-        out = {"event_id": [], "user_id": [], "n_prior": [], "mean_k": []}
-        for eid, v in zip(batch["event_id"], batch["value"]):
-            if pd.isna(v):
-                continue
-            hist = vals[-self._k:]
-            out["event_id"].append(int(eid))
-            out["user_id"].append(key[0])
-            out["n_prior"].append(len(hist))
-            out["mean_k"].append(
-                sum(hist) / len(hist) if hist else None
-            )
-            vals.append(float(v))
-        self._recent.put([(v,) for v in vals[-self._k:]])
-        yield pd.DataFrame(out)
-
-    def close(self) -> None:
-        pass
 
 
 def rolling_history_features(events: DataFrame, k: int = 3) -> DataFrame:
     """events(event_id, user_id, ts, value) -> per-event features
-    from the user's previous k observed values.  ListState primary;
-    array-typed applyInPandasWithState fallback without protobuf."""
-    if transform_with_state_available():
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=LastKProcessor(k),
-            outputStructType=LASTK_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from the user's previous k observed values: for every
+    (non-null-valued) event, the count and mean of the user's PREVIOUS
+    k values — the online feature-engineering shape ("average of the
+    last 3 readings") that a windowed aggregate cannot produce
+    per-event.  The state is an ``array<double>`` trimmed to k values
+    on every batch."""
 
     def _group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         (vals,) = state.get if state.exists else ([],)
@@ -488,64 +232,23 @@ def rolling_history_features(events: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-# --- per-key ValueState: cell handover transitions ------------------------
-
 HANDOVER_OUT_SCHEMA = (
     "user_id long, from_cell string, to_cell string, t double"
 )
 
 
-class HandoverProcessor(StatefulProcessor):
-    """Per-key cell-handover detector via ValueState: remembers each
-    subscriber's last cell (one scalar per key — the minimal state
-    the task needs, vs. buffering fixes) and emits one row per
-    OBSERVED transition (prev != cell; dwelling emits nothing) — the
-    streaming half of the OD-flow matrix, the batch twin of
-    ``operators/trajectory.py::od_flows``.
+def handover_transitions(points: DataFrame) -> DataFrame:
+    """points(event_id, user_id, t, cell) -> one row per OBSERVED cell
+    transition (prev != cell; dwelling emits nothing) — the streaming
+    half of the OD-flow matrix, the batch twin of
+    ``operators/trajectory.py::od_flows``.  The state is each
+    subscriber's last cell: one scalar per key, the minimal state the
+    task needs (vs. buffering fixes).
 
     In-batch rows are sorted by (t, event_id) so replay batching
-    cannot reorder a key's timeline; state carries the last cell
-    ACROSS batches, so transitions spanning micro-batch boundaries
-    are emitted exactly once.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._last = handle.getValueState("last", "cell string")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows)).sort_values(["t", "event_id"])
-        prev = self._last.get()[0] if self._last.exists() else None
-        out = {"user_id": [], "from_cell": [], "to_cell": [], "t": []}
-        for _, row in batch.iterrows():
-            cell = row["cell"]
-            if prev is not None and prev != cell:
-                out["user_id"].append(key[0])
-                out["from_cell"].append(prev)
-                out["to_cell"].append(cell)
-                out["t"].append(float(row["t"]))
-            prev = cell
-        if prev is not None:
-            self._last.update((prev,))
-        yield pd.DataFrame(out)
-
-    def close(self) -> None:
-        pass
-
-
-def handover_transitions(points: DataFrame) -> DataFrame:
-    """points(event_id, user_id, t, cell) -> one row per cell
-    transition.  ValueState primary; scalar-state
-    applyInPandasWithState fallback without protobuf."""
-    if transform_with_state_available():
-        return points.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=HandoverProcessor(),
-            outputStructType=HANDOVER_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    cannot reorder a key's timeline; the state carries the last cell
+    ACROSS batches, so transitions spanning micro-batch boundaries are
+    emitted exactly once."""
 
     def _group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         (prev,) = state.get if state.exists else (None,)
@@ -572,80 +275,26 @@ def handover_transitions(points: DataFrame) -> DataFrame:
     )
 
 
-# --- per-key ValueState: ping-pong handover bounces ------------------------
-
 PINGPONG_OUT_SCHEMA = (
     "user_id long, cell_a string, cell_b string, t double"
 )
-
-
-class PingPongProcessor(StatefulProcessor):
-    """Per-key A->B->A ping-pong detector via ValueState: remembers
-    each subscriber's last TWO fixes — (prev cell, its time, the
-    cell before that, its time), four scalars per key, the minimal
-    state the bounce predicate needs — and emits one row per bounce
-    whose full excursion completes within ``max_gap_s``.  The
-    streaming half of ``operators/trajectory.py::
-    pingpong_handovers`` (same predicate, same batch oracle after
-    the pair aggregate).
-
-    In-batch rows are sorted by (t, event_id) so replay batching
-    cannot reorder a key's timeline; state carries the last two
-    fixes ACROSS batches, so bounces whose three fixes span
-    micro-batch boundaries are emitted exactly once.
-    """
-
-    def __init__(self, max_gap_s: float = 172_800.0) -> None:
-        self._max_gap_s = float(max_gap_s)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._prev = handle.getValueState(
-            "prev", "c1 string, t1 double, c2 string, t2 double"
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows)).sort_values(["t", "event_id"])
-        c1 = t1 = c2 = t2 = None
-        if self._prev.exists():
-            c1, t1, c2, t2 = self._prev.get()
-        out = {"user_id": [], "cell_a": [], "cell_b": [], "t": []}
-        for _, row in batch.iterrows():
-            cell, t = row["cell"], float(row["t"])
-            if (
-                c2 is not None
-                and cell == c2
-                and cell != c1
-                and (t - t2) <= self._max_gap_s
-            ):
-                out["user_id"].append(key[0])
-                out["cell_a"].append(min(cell, c1))
-                out["cell_b"].append(max(cell, c1))
-                out["t"].append(t)
-            c2, t2, c1, t1 = c1, t1, cell, t
-        if c1 is not None:
-            self._prev.update((c1, t1, c2, t2))
-        yield pd.DataFrame(out)
-
-    def close(self) -> None:
-        pass
 
 
 def pingpong_bounces(
     points: DataFrame, max_gap_s: float = 172_800.0
 ) -> DataFrame:
     """points(event_id, user_id, t, cell) -> one row per A->B->A
-    bounce.  ValueState primary; scalar-state applyInPandasWithState
-    fallback without protobuf."""
-    if transform_with_state_available():
-        return points.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=PingPongProcessor(max_gap_s),
-            outputStructType=PINGPONG_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    bounce whose full excursion completes within ``max_gap_s``.  The
+    streaming half of ``operators/trajectory.py::pingpong_handovers``
+    (same predicate, same batch oracle after the pair aggregate).  The
+    state is each subscriber's last TWO fixes — (prev cell, its time,
+    the cell before that, its time), four scalars per key, the minimal
+    state the bounce predicate needs.
+
+    In-batch rows are sorted by (t, event_id) so replay batching
+    cannot reorder a key's timeline; the state carries the last two
+    fixes ACROSS batches, so bounces whose three fixes span
+    micro-batch boundaries are emitted exactly once."""
 
     def _group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         c1 = t1 = c2 = t2 = None
@@ -682,69 +331,20 @@ def pingpong_bounces(
 CONV_LAG_OUT_SCHEMA = "user_id long, lag_us long"
 
 
-class ConversionLagProcessor(StatefulProcessor):
-    """Per-key first-conversion lag via ValueState: remembers each
-    entity's FIRST from-event microsecond timestamp and a done flag
-    (two scalars — the minimal state the first-to-first-after
-    predicate needs), emitting exactly ONE (user_id, lag_us) row at
-    the first to-event strictly after it, even when click and
-    purchase land in different micro-batches.  The streaming half of
-    ``operators/funnel.py::conversion_lag`` (identical predicate,
-    same batch oracle after the stats aggregate).
-
-    In-batch rows sort by (us, event_id); state carries (first_us,
-    done) across batches.
-    """
-
-    def __init__(self, from_type: str, to_type: str) -> None:
-        self._from = from_type
-        self._to = to_type
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("st", "first_us long, done int")
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = pd.concat(list(rows)).sort_values(["us", "event_id"])
-        first_us, done = (None, 0)
-        if self._st.exists():
-            first_us, done = self._st.get()
-        out = {"user_id": [], "lag_us": []}
-        for _, row in batch.iterrows():
-            et, us = row["event_type"], int(row["us"])
-            if et == self._from and first_us is None:
-                first_us = us
-            elif (
-                et == self._to
-                and not done
-                and first_us is not None
-                and us > first_us
-            ):
-                out["user_id"].append(key[0])
-                out["lag_us"].append(us - first_us)
-                done = 1
-        self._st.update((first_us, done))
-        yield pd.DataFrame(out)
-
-    def close(self) -> None:
-        pass
-
-
 def conversion_lags(
     events: DataFrame, from_type: str, to_type: str
 ) -> DataFrame:
-    """events(event_id, user_id, us, event_type) -> one row per
-    entity at its first conversion.  ValueState primary;
-    scalar-state applyInPandasWithState fallback without protobuf."""
-    if transform_with_state_available():
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=ConversionLagProcessor(from_type, to_type),
-            outputStructType=CONV_LAG_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """events(event_id, user_id, us, event_type) -> exactly ONE
+    (user_id, lag_us) row per entity, at the first to-event strictly
+    after its FIRST from-event, even when the two land in different
+    micro-batches.  The streaming half of
+    ``operators/funnel.py::conversion_lag`` (identical predicate, same
+    batch oracle after the stats aggregate).
+
+    In-batch rows sort by (us, event_id); the state is (first_us,
+    done), two scalars — the minimal state the first-to-first-after
+    predicate needs — with first_us = -1 standing for "no from-event
+    yet"."""
 
     def _group(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         first_us, done = (None, 0)

@@ -12,9 +12,9 @@ the generator's Spark-free counts, judged by ``perfbench/run.py``'s own
 - ``ref_sliding`` has no attach lines: every batch takes the
   empty-upsert path.
 
-A crash inside a batch, followed by a restart of a new pipeline on the
-same store and checkpoint, must leave every topic byte-identical to a
-run with no crash.
+A crash inside a batch, followed by a restart of a new pipeline (or of
+the crashed one) on the same store and checkpoint, must leave every
+topic byte-identical to a run with no crash.
 
 The benchmark's modules are imported read-only, by file path.
 """
@@ -141,14 +141,18 @@ def _crash_after(obj, name, batch):
     setattr(obj, name, wrapped)
 
 
-@pytest.mark.parametrize("crash_after", ["upsert", "process_batch"])
-def test_run_restart_is_byte_identical(spark, tmp_path, crash_after):
-    """Kill the query inside batch 1, after the store upsert or after the
-    fan-out (before the offset commit), then restart a NEW pipeline on the
-    same store and checkpoint: every topic matches a run with no crash,
-    byte for byte.  The replayed batch re-upserts the same attaches (a
-    latest-wins no-op on the values) and retrains the K-Means model from
-    its state after batch 0, not from a fresh model."""
+@pytest.mark.parametrize("same_pipe", [False, True])
+@pytest.mark.parametrize("crash_after", ["upsert", "geofence_sink", "process_batch"])
+def test_run_restart_is_byte_identical(spark, tmp_path, crash_after, same_pipe):
+    """Kill the query inside batch 1, after the store upsert, between the
+    sink writes (both stats topics written, the K-Means topic not), or
+    after the fan-out (before the offset commit), then restart on the same
+    store and checkpoint: every topic matches a run with no crash, byte for
+    byte.  The restart builds a new store object and either a NEW pipeline
+    or, with ``same_pipe``, calls ``run`` again on the crashed one.  The
+    replayed batch re-upserts the same attaches (a latest-wins no-op on the
+    values) and retrains the K-Means model from its state after batch 0,
+    never from a fresh model nor on top of the crashed batch's update."""
     inputs = str(tmp_path / "inputs")
     exp = gen.generate("attach_churn", 7, inputs, BATCHES, SCALE)
     profile = gen.Profile(**exp["profile"])
@@ -164,7 +168,8 @@ def test_run_restart_is_byte_identical(spark, tmp_path, crash_after):
             store = KeyedUpsertStore(
                 spark, str(root / "store"), key_col="bearerId", order_col="ts"
             )
-            pipe = _pipeline(spark, inputs, str(root / "sinks"), profile)
+            if not same_pipe:
+                pipe = _pipeline(spark, inputs, str(root / "sinks"), profile)
         pipe.run(_lines(spark, inputs), store, checkpoint=ckpt)
         return str(root / "sinks")
 

@@ -900,7 +900,7 @@ def test_geofence_sink_requires_geofence_path():
 
 
 def test_idle_session_timer_finalizes_on_watermark(spark):
-    """Event-time TIMERS (streaming/tws.py::IdleSessionProcessor):
+    """Event-time timeout (streaming/tws.py::idle_sessions):
     sessions from file A (two users, events within a minute) finalize
     when file B's much-later events advance the watermark past
     last+gap; the session B (re)opens stays un-emitted at query end —
@@ -948,9 +948,9 @@ def test_idle_session_timer_finalizes_on_watermark(spark):
 
 
 def test_mapstate_type_counts_accumulate_across_batches(spark):
-    """MapState (streaming/tws.py::TypeCountProcessor): counts
-    accumulate per (user, type) across two micro-batches; the final
-    emission per pair equals the full-batch group-by."""
+    """Map-valued keyed state (streaming/tws.py::running_type_counts):
+    counts accumulate per (user, type) across two micro-batches; the
+    final emission per pair equals the full-batch group-by."""
     import pandas as pd
 
     from botkop_telcotraffic_spark_spark.session import enable_large_state
@@ -996,10 +996,10 @@ def test_mapstate_type_counts_accumulate_across_batches(spark):
 
 
 def test_lastk_features_carry_history_across_batches(spark):
-    """ListState-backed rolling_history_features (streaming/tws.py):
-    the prior-3 mean for the first event of file B uses values from
-    file A (state carries); null values are skipped in history and
-    emission."""
+    """Array-valued keyed state in streaming/tws.py::
+    rolling_history_features: the prior-3 mean for the first event of
+    file B uses values from file A (state carries); null values are
+    skipped in history and emission."""
     import pandas as pd
 
     from botkop_telcotraffic_spark_spark.session import enable_large_state
@@ -1045,7 +1045,7 @@ def test_lastk_features_carry_history_across_batches(spark):
 
 
 def test_handover_transitions_cross_batch(spark):
-    """HandoverProcessor carries the last cell across micro-batches:
+    """handover_transitions carries the last cell across micro-batches:
     a transition whose endpoints straddle a file boundary is emitted
     EXACTLY once, and two-file one-per-trigger replay equals the
     single-batch run (streaming/tws.py::handover_transitions)."""
@@ -1107,7 +1107,7 @@ def test_handover_transitions_cross_batch(spark):
 
 
 def test_pingpong_bounces_cross_batch(spark):
-    """PingPongProcessor carries the last TWO fixes across
+    """pingpong_bounces carries the last TWO fixes across
     micro-batches: a bounce whose three fixes straddle a file
     boundary is emitted EXACTLY once, the time guard drops slow
     excursions, and two-file one-per-trigger replay equals the
@@ -1172,7 +1172,7 @@ def test_pingpong_bounces_cross_batch(spark):
 
 
 def test_conversion_lags_cross_batch_emit_once(spark):
-    """ConversionLagProcessor carries (first_us, done) across
+    """conversion_lags carries (first_us, done) across
     micro-batches: a click|purchase pair straddling a file boundary
     emits exactly one lag, later purchases emit nothing, a purchase
     BEFORE any click does not convert, and two-file one-per-trigger
@@ -1230,8 +1230,8 @@ def test_conversion_lags_cross_batch_emit_once(spark):
 
 
 # ---------------------------------------------------------------------------
-# Kill-and-restart chaos tests (round-6 verdict #7): the ValueState
-# twins must survive a query stop between micro-batches — state is
+# Kill-and-restart chaos tests (round-6 verdict #7): the keyed-state
+# operators must survive a query stop between micro-batches — state is
 # restored from the checkpointed store, output accumulates EXACTLY
 # once through the exactly-once streaming parquet sink, and the final
 # table is byte-identical to an uninterrupted run over the same data.
@@ -1254,7 +1254,7 @@ def _run_parquet_sink(stream_df, out_dir: str, ckpt: str) -> None:
 
 
 def test_conversion_lag_restart_exactly_once(spark):
-    """ConversionLagProcessor across a KILLED query: click lands in
+    """conversion_lags across a KILLED query: click lands in
     run 1, the query stops, the purchase arrives, a new query restarts
     from the same checkpoint — the lag row is emitted exactly once and
     the accumulated sink equals the uninterrupted run byte-for-byte."""
@@ -1328,7 +1328,7 @@ def test_conversion_lag_restart_exactly_once(spark):
 
 
 def test_pingpong_restart_exactly_once(spark):
-    """PingPongProcessor across a KILLED query: the A->B fixes land in
+    """pingpong_bounces across a KILLED query: the A->B fixes land in
     run 1, the returning A arrives after a restart — the bounce is
     emitted exactly once from restored (last two fixes) state, and the
     accumulated sink equals the uninterrupted run."""
@@ -1480,7 +1480,7 @@ def test_streaming_hll_restart_exactly_once(spark):
 
 def test_streaming_kmeans_restart_exactly_once(spark):
     """Driver-held StreamingKMeans across a KILLED query (the marquee
-    W6 gap the ValueState twins don't cover: Structured Streaming
+    W6 gap the keyed-state operators don't cover: Structured Streaming
     checkpoints source offsets, NOT a driver-held model).  The model
     snapshots its O(k*dim) state per batch_id and align() rolls to
     the post-(batch_id-1) snapshot on entry, while the scored output
@@ -1578,12 +1578,12 @@ def test_streaming_kmeans_restart_exactly_once(spark):
 
 
 def test_idle_session_timer_survives_restart(spark):
-    """Event-time TIMERS across a KILLED query: run 1 opens two
-    users' sessions (timers armed, watermark not yet past last+gap —
+    """Event-time timeouts across a KILLED query: run 1 opens two
+    users' sessions (timeouts set, watermark not yet past last+gap —
     nothing emitted), the query stops, and a much-later event for a
     DIFFERENT user arrives.  The restarted query (same checkpoint)
-    must fire the RESTORED timers — both sessions emitted exactly
-    once, from checkpointed state+timers, with the final table
+    must fire the RESTORED timeouts — both sessions emitted exactly
+    once, from checkpointed state+timeouts, with the final table
     byte-identical to an uninterrupted run."""
     import pandas as pd
 
@@ -1628,7 +1628,7 @@ def test_idle_session_timer_survives_restart(spark):
         (r["user_id"], r["n"], r["vsum"])
         for r in spark.read.parquet(dirs["out"]).collect()
     )
-    # both run-1 sessions fired from RESTORED timers; u99 still open
+    # both run-1 sessions fired from RESTORED timeouts; u99 still open
     assert got == [(1, 2, 30.0), (2, 2, 12.0)]
 
     _run_parquet_sink(q(), dirs["out_ref"], dirs["ckpt_ref"])  # uninterrupted
@@ -1640,10 +1640,10 @@ def test_idle_session_timer_survives_restart(spark):
 
 
 def test_lastk_liststate_survives_restart(spark):
-    """ListState across a KILLED query: the user's rolling last-k
-    value history written in run 1 must be restored on restart so the
-    post-restart event's features see the pre-restart values, and the
-    accumulated table equals the uninterrupted run."""
+    """Array-valued keyed state across a KILLED query: the user's
+    rolling last-k value history written in run 1 must be restored on
+    restart so the post-restart event's features see the pre-restart
+    values, and the accumulated table equals the uninterrupted run."""
     import pandas as pd
 
     from botkop_telcotraffic_spark_spark.session import enable_large_state
@@ -1711,8 +1711,8 @@ def _run_foreach_sink(stream_df, sink, ckpt: str) -> None:
 
 
 def test_mapstate_type_counts_survive_restart(spark):
-    """MapState across a KILLED query: run 1 accumulates per-type
-    counts, the restarted query (fresh processor instance, same
+    """Map-valued keyed state across a KILLED query: run 1 accumulates
+    per-type counts, the restarted query (same
     checkpoint) continues from the RESTORED map — the post-restart
     emission is prior+new, and the accumulated foreachBatch table
     equals the uninterrupted run's."""
@@ -1770,7 +1770,7 @@ def test_mapstate_type_counts_survive_restart(spark):
 
 
 def test_ewma_valuestate_survives_restart(spark):
-    """Running-EWMA ValueState across a KILLED query: the restarted
+    """Running-EWMA keyed state across a KILLED query: the restarted
     query's emission continues the halving recurrence from the
     RESTORED (n, ewma) pair, matching an uninterrupted run."""
     import pandas as pd
