@@ -1562,8 +1562,8 @@ def streaming_click_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same user's clicks in the trailing 10 minutes.  availableNow over
     the single-file fixture replays in one micro-batch, so no
     watermark eviction fires and the batch join SQL is the exact
-    oracle; multi-batch eviction semantics are covered by
-    tests/test_streaming.py::test_watermarked_stream_stream_join."""
+    oracle.  Multi-batch watermark eviction is not covered by any
+    test."""
     from botkop_telcotraffic_spark_spark.streaming.runner import (
         run_to_memory,
         stream_parquet_table,
@@ -14224,7 +14224,7 @@ FROM g, tot
 def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING distinct-count sketch maintenance: each micro-batch
     writes its per-type HLL register partial through the production
-    parquet-append sink (operators/sketch.py::ohll_registers —
+    idempotent parquet sink (operators/sketch.py::ohll_registers —
     ≤256 rows per type per batch regardless of batch size), and the
     serving read merges partials by register MAX and applies the
     closed-form estimate.  Register max-merge is arrival-order- and
@@ -14233,7 +14233,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     users so far" that never reshuffles raw events."""
     from botkop_telcotraffic_spark_spark.operators import sketch
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        parquet_append_sink,
+        idempotent_parquet_sink,
     )
     from botkop_telcotraffic_spark_spark.streaming.runner import (
         replay_partitions,
@@ -14245,7 +14245,7 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "user_id"
     )
     out_dir = _scratch_dir("shll_")
-    sink = parquet_append_sink(out_dir)
+    sink = idempotent_parquet_sink(out_dir)
 
     def batch_fn(df: DataFrame, batch_id: int) -> None:
         sink(sketch.ohll_registers(df, ["event_type"], "user_id"), batch_id)

@@ -158,10 +158,6 @@ def shingle_token_udf(k: int):
     return pandas_udf(_tokens, ArrayType(LongType()))
 
 
-def stopword_count(word_arr: Column, stopwords: list[str]) -> Column:
-    return F.size(F.filter(word_arr, lambda w: w.isin(*stopwords)))
-
-
 def rolling_fingerprint(text: Column) -> Column:
     """Polynomial rolling hash over the characters of ``text``:
     ``h = (h*131 + codepoint) mod 1e9+7``, sequential left fold.

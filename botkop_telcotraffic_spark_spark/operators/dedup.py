@@ -30,7 +30,6 @@ from ..functions.textfn import (
     shingle_tokens_sql,
     word_fingerprints,
     word_fingerprints_sql,
-    word_shingles,
     words,
 )
 
@@ -51,16 +50,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.groupBy(F.md5(F.col(text_col)).alias("doc_hash")).agg(
         F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("copies")
     )
-
-
-def shingle_postings(
-    df: DataFrame, id_col: str, text_col: str, k: int, distinct_shingles: bool = True
-) -> DataFrame:
-    """(id, shingle) inverted-index postings, plus per-doc set size."""
-    sh = word_shingles(F.col(text_col), k) if k > 1 else words(F.col(text_col))
-    if distinct_shingles:
-        sh = F.array_distinct(sh)
-    return df.select(F.col(id_col).alias("id"), F.explode(sh).alias("shingle"))
 
 
 def token_postings(

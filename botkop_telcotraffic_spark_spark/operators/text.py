@@ -78,10 +78,6 @@ def text_features(
     return df.selectExpr(f"`{id_col}`", *cols)
 
 
-def _lang_score(w: Column, markers: list[str]) -> Column:
-    return F.size(F.filter(w, lambda x: x.isin(*markers)))
-
-
 def lang_id(
     df: DataFrame, id_col: str, text_col: str, append: bool = False
 ) -> DataFrame:

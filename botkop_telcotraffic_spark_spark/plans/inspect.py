@@ -18,12 +18,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def has_broadcast_join(df: DataFrame) -> bool:
     p = physical_plan(df)
     return "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p

@@ -2,8 +2,7 @@
 
 Mirrors the reference's case classes
 (``/root/reference/src/main/scala/traffic/model/package.scala:10-45``):
-Celltower, Subscriber, AttachEvent, CelltowerEvent, plus the geofence
-side-input shape (``work/traffic-geofences.json``).  ``metrics`` is
+Celltower, Subscriber, AttachEvent, CelltowerEvent.  ``metrics`` is
 the dynamic part — MapType, metric names are data not schema.
 """
 
@@ -59,13 +58,5 @@ CELLTOWER_EVENT = T.StructType(
         T.StructField("metrics", T.MapType(T.StringType(), T.DoubleType())),
         T.StructField("topic", T.StringType()),
         T.StructField("ts", T.LongType()),  # epoch millis
-    ]
-)
-
-GEOFENCE = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("path", T.StringType()),
-        T.StructField("polygon", T.ArrayType(LATLNG)),
     ]
 )

@@ -7,19 +7,18 @@ re-expression: ``from_json`` (returns null on malformed) + an
 ``isNotNull`` filter — Catalyst prunes the parse to only referenced
 fields, and the drop happens before any shuffle.
 
-Sources are pluggable: Kafka when available (same decode path on the
-``value`` column), file streams for tests/replay.  Event time comes
-from the payload's epoch-millis ``ts`` (the W7 upgrade — the
+The decode runs on the ``value`` column of whatever source feeds
+``TrafficPipeline.run``: a Kafka source subscribed to both input
+topics, or a text file stream of the same JSON lines.  Event time
+comes from the payload's epoch-millis ``ts`` (the W7 upgrade — the
 reference carried ts but windowed on processing time).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT
 
 
 def decode_json_stream(raw: DataFrame, schema: T.StructType, value_col: str = "value") -> DataFrame:
@@ -41,32 +40,3 @@ def decode_json_stream(raw: DataFrame, schema: T.StructType, value_col: str = "v
         valid = valid.withColumn("event_time", F.timestamp_millis(F.col("ts")))
     return valid
 
-
-def file_json_source(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """File-based replay source: one JSON object per line (the Kafka
-    message shape, minus the broker)."""
-    raw = spark.readStream.format("text").load(path)
-    return decode_json_stream(raw, schema)
-
-
-def kafka_json_source(
-    spark: SparkSession, brokers: str, topic: str, schema: T.StructType
-) -> DataFrame:
-    """Kafka source (requires the spark-sql-kafka package on the
-    cluster; not available in the test container — gated here)."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .load()
-        .select(F.col("value").cast("string").alias("value"))
-    )
-    return decode_json_stream(raw, schema)
-
-
-def attach_source(spark: SparkSession, path: str) -> DataFrame:
-    return file_json_source(spark, path, ATTACH_EVENT)
-
-
-def celltower_source(spark: SparkSession, path: str) -> DataFrame:
-    return file_json_source(spark, path, CELLTOWER_EVENT)

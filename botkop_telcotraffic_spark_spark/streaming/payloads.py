@@ -37,10 +37,10 @@ unordered) is pinned at plan time by the sorted metric list of
 merge-order-free.
 
 Scale shape: the stats payload is a row-wise projection of the
-upstream aggregate (no shuffle of its own); the geofence payload
-broadcast-joins its side input back onto the matches (no shuffle of
-the matches); the points message is one ``collect_list`` per
-micro-batch by reference contract (its ``repartition(1).glom()``) —
+upstream aggregate (no shuffle of its own); the geofence payload is a
+projection of the matches over a constant name -> fence-JSON map; the
+points message is one ``collect_list`` per micro-batch by reference
+contract (its ``repartition(1).glom()``) —
 batch-sized by design, the reference emits a single array message
 per interval.
 """
@@ -79,30 +79,41 @@ def metric_stats_payload(stats: DataFrame, entity_col: str) -> DataFrame:
     return stats.select(value.alias("value"))
 
 
-def geofence_payload(matches: DataFrame, fences: DataFrame) -> DataFrame:
+def geofence_payload(matches: DataFrame, fences: list) -> DataFrame:
     """(value: string) messages in ``Geofencer.scala:33-37`` shape.
 
     ``matches``: output of ``TrafficPipeline.geofence_matches``
     (subscriber, celltower, geofence=name); ``fences``: the side
-    input (name, path, polygon) — broadcast-joined back so the
-    payload carries the full geofence object like the reference."""
-    f = fences.select(
-        F.col("name").alias("_gf_name"),
-        F.to_json(F.struct("name", "path", "polygon")).alias("_gf_json"),
-    )
-    joined = matches.join(
-        F.broadcast(f), matches["geofence"] == f["_gf_name"], "left"
-    )
+    input as ``read_geofences`` returns it, ``[(name, path, [(lat,
+    lng)])]``.  Each match looks up its full geofence object by name
+    in a literal map of ``to_json(struct(name, path, polygon))``
+    values, which the optimizer folds to constants: a projection, no
+    join."""
+    by_name = F.create_map(*[
+        c
+        for name, path, poly in fences
+        for c in (
+            F.lit(name),
+            F.to_json(F.struct(
+                F.lit(name).alias("name"),
+                F.lit(path).cast("string").alias("path"),
+                F.array(*[
+                    F.struct(F.lit(lat).alias("lat"), F.lit(lng).alias("lng"))
+                    for lat, lng in poly
+                ]).alias("polygon"),
+            )),
+        )
+    ]).cast("map<string,string>")  # typed even with no fences
     value = F.concat(
         F.lit('{ "subscriber": '),
         F.to_json(F.col("subscriber")),
         F.lit(', "celltower": '),
         F.to_json(F.col("celltower")),
         F.lit(', "geofence": '),
-        F.col("_gf_json"),
+        by_name[F.col("geofence")],
         F.lit(" }"),
     )
-    return joined.select(value.alias("value"))
+    return matches.select(value.alias("value"))
 
 
 def cluster_points_payload(outliers: DataFrame) -> DataFrame:

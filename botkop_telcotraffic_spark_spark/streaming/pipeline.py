@@ -12,8 +12,8 @@ enriched micro-batch and feeds all three analyses.
 
 Every per-batch analysis is a plain batch DataFrame transformation
 from operators/ — the same code the batch surface uses.  Outputs go
-to pluggable sinks (callables; Kafka writers in production, lists in
-tests)."""
+to pluggable sinks: ``(df, batch_id)`` callables such as
+idempotent_parquet_sink over a payloads.py frame."""
 
 from __future__ import annotations
 
@@ -28,25 +28,10 @@ from ..operators.geofence import polygon_geofence_join
 from ..operators.iqr import with_iqr_fences
 from ..operators.kmeans import StreamingKMeans
 from ..operators.window_stats import stat_aggs
-from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT, GEOFENCE
+from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT
 from .json_stream import decode_json_stream
 
 Sink = Callable[[DataFrame, int], None]
-
-
-def parquet_append_sink(path: str) -> Sink:
-    """Production sink: append each micro-batch result to a parquet
-    directory (Kafka/Delta writers swap in behind the same callable
-    shape).  foreachBatch + append is at-least-once under retry —
-    downstream readers dedup on (_batch_id, key) for effectively-once,
-    the same contract the reference's Kafka publisher exposes
-    (KafkaStreamPublisher.scala:9-25).  No driver-side collect
-    anywhere: the batch result flows executor->parquet."""
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(path)
-
-    return sink
 
 
 def idempotent_parquet_sink(path: str) -> Sink:
@@ -55,11 +40,9 @@ def idempotent_parquet_sink(path: str) -> Sink:
     batch foreachBatch re-delivers after a crash (sink write done,
     offset commit lost) simply rewrites the same files instead of
     appending duplicates — the standard idempotent-by-batch-id
-    pattern the Structured Streaming guide prescribes for foreachBatch
-    (parquet_append_sink documents the at-least-once alternative +
-    reader-side dedup).  Read the result with
-    ``spark.read.parquet(path)``: partition discovery restores
-    ``_batch_id`` as a column.
+    pattern the Structured Streaming guide prescribes for foreachBatch.
+    Read the result with ``spark.read.parquet(path)``: partition
+    discovery restores ``_batch_id`` as a column.
 
     Scale shape: executor-side write, no driver collect; one
     directory per micro-batch (compact with the layout tools if the
@@ -73,18 +56,29 @@ def idempotent_parquet_sink(path: str) -> Sink:
     return sink
 
 
-def read_geofences(spark, path: str) -> DataFrame:
-    """S5/W9: (re-)read the geofence side input.  Called per batch —
+def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, float]]]]:
+    """S5/W9: (re-)read the geofence side input as the driver-local
+    list ``[(name, path, [(lat, lng), ...])]``.  Called per batch —
     the well-defined version of the reference's 5s hot reload
-    (Geofencer.scala:16-23); driver-side read, broadcast to the join.
-    File shape: JSON array of {name, path, polygon: [{lat, lng}]}."""
+    (Geofencer.scala:16-23).  ``spark`` is unused: no Spark job reads
+    the file.  File shape: JSON array of {name, path, polygon:
+    [{lat, lng}]}; coordinates become floats, so ``52`` renders as
+    ``52.0`` in the payload like the reference's Double.
+
+    Raises ValueError on a duplicate fence name: the payload looks
+    fences up by name."""
     with open(path) as fh:
-        fences = json.load(fh)
-    rows = [
-        (g["name"], g.get("path", ""), [(p["lat"], p["lng"]) for p in g["polygon"]])
-        for g in fences
-    ]
-    return spark.createDataFrame(rows, GEOFENCE)
+        fences = [
+            (g["name"], g.get("path", ""),
+             [(float(p["lat"]), float(p["lng"])) for p in g["polygon"]])
+            for g in json.load(fh)
+        ]
+    seen = set()
+    for name, _, _ in fences:
+        if name in seen:
+            raise ValueError(f"duplicate geofence name {name!r} in {path}")
+        seen.add(name)
+    return fences
 
 
 class TrafficPipeline:
@@ -183,14 +177,12 @@ class TrafficPipeline:
 
     def geofence_matches(self, enriched: DataFrame) -> DataFrame:
         """J3: celltower location containment against the (re-read)
-        geofence side input.  The JSON is already driver-local, so the
-        fence list goes straight into polygon_geofence_join: no Spark
-        job and no DataFrame round-trip for the side input."""
-        with open(self.geofence_path) as fh:
-            fences = [
-                (g["name"], [(p["lat"], p["lng"]) for p in g["polygon"]])
-                for g in json.load(fh)
-            ]
+        geofence side input.  read_geofences keeps the fence list
+        driver-local, so it goes straight into polygon_geofence_join:
+        no Spark job and no DataFrame round-trip for the side input."""
+        fences = [
+            (name, poly) for name, _, poly in read_geofences(None, self.geofence_path)
+        ]
         pts = enriched.select(
             "subscriber", "celltower",
             F.col("celltower.location.lat").alias("lat"),
@@ -266,9 +258,12 @@ class TrafficPipeline:
     ):
         """The product as ONE query.  ``lines``: the JSON lines of both
         topics in a ``value`` column (a text file stream or a Kafka
-        source).  Per micro-batch, in the reference's serial output-op
-        order: upsert the batch's attaches (K1), enrich its celltower
-        events against the store (J1), fan out (process_batch).
+        source).  On Kafka that is one source subscribed to both input
+        topics (``subscribe`` = "<attach>,<celltower>") with ``value``
+        cast to string.  Per micro-batch, in the reference's serial
+        output-op order: upsert the batch's attaches (K1), enrich its
+        celltower events against the store (J1), fan out
+        (process_batch).
 
         Replay-safe: the K-Means model keeps its state under
         ``<checkpoint>/kmeans/`` as one ``b<batch_id>.json`` per batch

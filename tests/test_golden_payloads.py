@@ -11,9 +11,8 @@ topics byte-match checked-in goldens:
 
 These are the reference's message values, built by
 ``streaming/payloads.py``.  Nothing here goes through a Kafka broker:
-``kafka_json_sink`` publishes ``to_json`` of every column of the frame
-it is given, and it is not wired to ``TrafficPipeline``; a Kafka
-egress of these exact bytes would publish the ``value`` column as is.
+a Kafka egress of these exact bytes would be a foreachBatch write of
+the ``value`` column as is.
 
 Regenerate after an INTENTIONAL shape change with
 ``UPDATE_GOLDENS=1 python -m pytest tests/test_golden_payloads.py``

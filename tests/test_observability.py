@@ -1,39 +1,12 @@
-"""Tests for the operational surface: state-store reader, in-plan
-observation, SQL UDFs, and the simulator-driven end-to-end pipeline."""
+"""Tests for the operational surface: in-plan observation, SQL UDFs,
+and the simulator-driven end-to-end pipeline."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from botkop_telcotraffic_spark_spark.functions.sqlfn import register_sql_functions
 from botkop_telcotraffic_spark_spark.operators.monitor import observe_quality
-from botkop_telcotraffic_spark_spark.streaming import state_inspect
-from botkop_telcotraffic_spark_spark.streaming.runner import (
-    run_to_memory,
-    stream_parquet_table,
-)
-
-
-def test_state_reader_sees_agg_state(spark, tmp_path):
-    """After a checkpointed streaming agg, the state data source reads
-    back exactly the per-key state the query accumulated."""
-    ck = str(tmp_path / "ck")
-    s = stream_parquet_table(spark, "/root/testdata/sf0.001", "events")
-    agg = s.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    out = run_to_memory(agg, output_mode="complete", checkpoint=ck)
-    expected = {r["user_id"]: r["n"] for r in out.collect()}
-
-    meta = state_inspect.state_metadata(spark, ck).collect()
-    assert len(meta) == 1 and meta[0]["operatorName"] == "stateStoreSave"
-
-    rows = state_inspect.state_rows(spark, ck).collect()
-    got = {r["key"][0]: r["value"][0] for r in rows}
-    assert got == expected
-
-    summary = state_inspect.state_summary(spark, ck).collect()
-    assert sum(r["n_keys"] for r in summary) == len(expected)
 
 
 def test_observe_quality_counters(spark):

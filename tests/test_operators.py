@@ -305,33 +305,6 @@ def test_windowed_stats_two_phase_parity(spark):
     assert sorted(map(tuple, one.collect())) == sorted(map(tuple, two.collect()))
 
 
-def test_csv_json_roundtrip_lossless(spark, tmp_path):
-    """CSV and JSONL round-trips preserve every row including
-    microsecond timestamps (sources/formats.py)."""
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        read_csv,
-        read_jsonl,
-        write_csv,
-        write_jsonl,
-    )
-    from botkop_telcotraffic_spark_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR_001
-
-    e = load_table(spark, SF_DIR_001, "events").select(
-        "event_id", "user_id", "ts", "event_type", "value"
-    )
-    expect = sorted(map(tuple, e.collect()))
-
-    csv_p, json_p = str(tmp_path / "e_csv"), str(tmp_path / "e_json")
-    write_csv(e, csv_p)
-    got_csv = sorted(map(tuple, read_csv(spark, csv_p, e.schema).collect()))
-    assert got_csv == expect
-
-    write_jsonl(e, json_p)
-    got_json = sorted(map(tuple, read_jsonl(spark, json_p, e.schema).collect()))
-    assert got_json == expect
-
-
 def test_asof_join_property_vs_pandas(spark):
     """Property: asof_join agrees with pandas merge_asof on randomized
     inputs (keys, ties, empty matches)."""
@@ -474,22 +447,6 @@ def test_connected_components_star_fallback(spark):
         connected_components(
             df, driver_threshold=0, max_iter=1, fallback_star=False
         ).collect()
-
-
-def test_orc_roundtrip_lossless(spark, tmp_path):
-    """ORC round-trip preserves rows and types (sources/formats.py)."""
-    from botkop_telcotraffic_spark_spark.sources.formats import read_orc, write_orc
-    from botkop_telcotraffic_spark_spark.sources.tables import load_table
-    from tests.conftest import SF_DIR_001
-
-    e = load_table(spark, SF_DIR_001, "events").select(
-        "event_id", "user_id", "ts", "event_type", "value"
-    )
-    p = str(tmp_path / "e_orc")
-    write_orc(e, p)
-    back = read_orc(spark, p)
-    assert back.schema == e.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, e.collect()))
 
 
 def test_rollup_partials_match_direct(spark):
@@ -1911,57 +1868,6 @@ def test_label_propagation_driver_path_matches_distributed(spark):
         assert fast == dist, f"iterations={iters}: {fast} vs {dist}"
 
 
-def test_backfill_rewrites_only_touched_partitions(spark, tmp_path):
-    """backfill_partitions (sources/formats.py): overwriting one
-    day's slice leaves other days' files byte-identical and on disk,
-    replaces the target day, and a second identical backfill is
-    idempotent."""
-    import os
-
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        backfill_partitions,
-        write_partitioned_parquet,
-    )
-
-    path = str(tmp_path / "t")
-    base = spark.createDataFrame(
-        [("2024-01-01", i, float(i)) for i in range(10)]
-        + [("2024-01-02", i, float(i)) for i in range(10)],
-        "day string, k int, v double",
-    )
-    write_partitioned_parquet(base, path, ["day"])
-
-    def files(day):
-        d = os.path.join(path, f"day={day}")
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    day1_before = files("2024-01-01")
-    fix = spark.createDataFrame(
-        [("2024-01-02", i, float(i) * 10) for i in range(5)],
-        "day string, k int, v double",
-    )
-    backfill_partitions(fix, path, ["day"])
-
-    assert files("2024-01-01") == day1_before  # untouched, same files
-    got = spark.read.parquet(path)
-    assert got.where(F.col("day") == "2024-01-02").count() == 5
-    assert got.where(F.col("day") == "2024-01-01").count() == 10
-    [mx] = got.where(F.col("day") == "2024-01-02").agg(F.max("v")).collect()
-    assert mx[0] == 40.0
-    # conf restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        == "static"
-    )
-
-    backfill_partitions(fix, path, ["day"])  # idempotent
-    assert spark.read.parquet(path).count() == 15
-
-
 def test_mask_columns_deterministic_joinable_null_safe(spark):
     """mask_columns (operators/mask.py): same value same token
     (joins survive), different salt different token, NULL stays
@@ -1989,29 +1895,6 @@ def test_mask_columns_deterministic_joinable_null_safe(spark):
 
     with _pytest.raises(ValueError):
         mask_columns(df, ["name"], "s", algo="rot13")
-
-
-def test_read_parquet_merged_additive_evolution(spark, tmp_path):
-    """read_parquet_merged (sources/formats.py): a directory with
-    v1 files (k, v) and v2 files (k, v, extra) reads as one frame
-    with NULL extra for v1 rows; a plain read may drop the new
-    column depending on footer order, the merged read never does."""
-    path = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, v double")
-    v1.write.mode("append").parquet(path)
-    v2 = spark.createDataFrame(
-        [(3, 30.0, "x")], "k int, v double, extra string"
-    )
-    v2.write.mode("append").parquet(path)
-
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        read_parquet_merged,
-    )
-
-    got = read_parquet_merged(spark, path)
-    assert set(got.columns) == {"k", "v", "extra"}
-    rows = {r["k"]: r["extra"] for r in got.collect()}
-    assert rows == {1: None, 2: None, 3: "x"}
 
 
 def test_target_encode_shrinks_and_handles_unseen(spark):
@@ -2935,41 +2818,6 @@ def test_cross_corpus_overlap_planted_and_hot_token_cap(spark):
     assert out2 == []
 
 
-def test_read_jsonl_corpus_quarantines_corrupt(spark, tmp_path):
-    """read_jsonl_corpus (sources/formats.py): well-formed rows parse
-    typed; malformed JSON and type-drift rows land in the quarantine
-    stream with their raw line intact; quarantine=False returns only
-    the good side."""
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        read_jsonl_corpus,
-    )
-
-    p = tmp_path / "corpus.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world"}\n'
-        'not json at all\n'
-        '{"doc_id": "seven", "text": "type drift"}\n'
-        '{"doc_id": 4, "text": "fine again"}\n'
-    )
-    good, bad = read_jsonl_corpus(
-        spark, str(p), "doc_id long, text string"
-    )
-    g = {r["doc_id"]: r["text"] for r in good.collect()}
-    assert g == {1: "hello world", 4: "fine again"}
-    brows = bad.collect()
-    raws = sorted(r["raw"] for r in brows)
-    assert len(raws) == 2
-    assert raws[0] == 'not json at all'
-    assert '"seven"' in raws[1]
-    # type-drift row keeps its parseable fields for triage
-    drift = [r for r in brows if '"seven"' in r["raw"]][0]
-    assert drift["text"] == "type drift" and drift["doc_id"] is None
-    good_only, none_bad = read_jsonl_corpus(
-        spark, str(p), "doc_id long, text string", quarantine=False
-    )
-    assert none_bad is None and good_only.count() == 2
-
-
 def test_assemble_transcripts_budget_and_order(spark):
     """chunking.py::assemble_transcripts: recency-first truncation
     under the token budget, chronological emission, oversized-newest
@@ -3025,26 +2873,6 @@ def test_dp_counts_deterministic_noise_properties(spark):
     assert fresh != out1
     with pytest.raises(ValueError):
         dp_counts(df, ["g"], epsilon=0.0)
-
-
-def test_read_jsonl_corpus_nested_schema(spark, tmp_path):
-    """read_jsonl_corpus: DDL types containing commas (struct,
-    decimal) must parse — the naive comma-split regression."""
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        read_jsonl_corpus,
-    )
-
-    p = tmp_path / "nested.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "meta": {"a": 2, "b": 3}}\n'
-        'broken\n'
-    )
-    good, bad = read_jsonl_corpus(
-        spark, str(p), "doc_id long, meta struct<a:int,b:int>"
-    )
-    [r] = good.collect()
-    assert r["doc_id"] == 1 and r["meta"]["a"] == 2 and r["meta"]["b"] == 3
-    assert bad.count() == 1
 
 
 def test_dp_counts_key_injective_across_columns(spark):

@@ -74,35 +74,6 @@ def test_windowed_stats_is_codegen(spark):
     assert wholestage_codegen_ids(df) >= 1
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Bucket-aligned sort-merge join: no Exchange above either scan
-    (sources/bucketing.py — the amortize-the-shuffle-at-write path)."""
-    from botkop_telcotraffic_spark_spark.sources.bucketing import write_bucketed
-    from botkop_telcotraffic_spark_spark.sources.tables import load_table
-
-    o = load_table(spark, SF_DIR_001, "orders")
-    c = load_table(spark, SF_DIR_001, "customer")
-    write_bucketed(o.select("o_orderkey", "o_custkey", "o_totalprice"),
-                   "orders_b", ["o_custkey"], num_buckets=8)
-    write_bucketed(c.select("c_custkey", "c_name"),
-                   "cust_b", ["c_custkey"], num_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table("orders_b").join(
-            spark.table("cust_b"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = physical_plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert j.count() == o.count()  # every order has a customer
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS cust_b")
-
-
 def test_salted_join_matches_plain_join(spark):
     """Salting spreads hot keys without changing results
     (operators/skew.py)."""
@@ -118,29 +89,6 @@ def test_salted_join_matches_plain_join(spark):
     plain = e.join(dim, "user_id").drop("user_id")
     salted = salted_join(e, dim, on=["user_id"], n_salts=8).drop("user_id")
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_partitioned_write_prunes_partitions(spark, tmp_path):
-    """A filter on the partition column reaches the scan as a
-    PartitionFilter: non-matching directories are never read
-    (sources/formats.py::write_partitioned_parquet)."""
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        write_partitioned_parquet,
-    )
-    from botkop_telcotraffic_spark_spark.sources.tables import load_table
-
-    e = load_table(spark, SF_DIR_001, "events").select(
-        "event_id", "user_id", "value", "event_type"
-    )
-    path = str(tmp_path / "events_part")
-    write_partitioned_parquet(e, path, ["event_type"])
-
-    q = spark.read.parquet(path).where(F.col("event_type") == "click")
-    plan = physical_plan(q)
-    m = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert m and "event_type" in m[0]
-    # pruning is real: only the matching partition's rows are read
-    assert q.count() == e.where(F.col("event_type") == "click").count()
 
 
 def test_assign_is_shuffle_free(spark):
@@ -1178,6 +1126,31 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
         assert "Window" in physical_plan(branches["anomalies"])
     finally:
         enriched.unpersist()
+
+
+def test_geofence_payload_is_a_projection(spark, tmp_path):
+    """The geofence payload (streaming/payloads.py::geofence_payload)
+    looks each match's fence JSON up by name in a literal map: its
+    optimized plan holds no Join, and its physical plan no
+    BroadcastExchange to ship a fence table every micro-batch."""
+    import json
+
+    from botkop_telcotraffic_spark_spark.streaming.payloads import geofence_payload
+    from botkop_telcotraffic_spark_spark.streaming.pipeline import read_geofences
+    from tests.telco_fixtures import GEOFENCES
+
+    gf = tmp_path / "fences.json"
+    gf.write_text(json.dumps(GEOFENCES))
+    matches = spark.createDataFrame(
+        [((1,), (7,), "west"), ((2,), (8,), "центр")],
+        "subscriber struct<id:int>, celltower struct<cell:int>, geofence string",
+    )
+    df = geofence_payload(matches, read_geofences(spark, str(gf)))
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in optimized, optimized
+    plan = physical_plan(df)
+    assert "BroadcastExchange" not in plan, plan
+    assert all('"geofence": {"name":' in r["value"] for r in df.collect())
 
 
 @FLAGSHIP_SCALES

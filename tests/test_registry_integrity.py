@@ -149,3 +149,44 @@ def test_rotation_policy_no_stale_entries_outside_window():
         "scripts/reorder_registry.py (or free window slots): "
         + ", ".join(violations)
     )
+
+
+def _imported_modules(path: str) -> set[str]:
+    """Absolute module names ``path`` imports, at any depth: ``from A
+    import b`` yields both ``A`` and ``A.b`` (b may be a submodule)."""
+    rel = os.path.relpath(path, REPO)[: -len(".py")].split(os.sep)
+    pkg = rel[:-1]  # the package a relative import in ``path`` starts from
+    out = set()
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = pkg[: len(pkg) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            out.add(mod)
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    return out
+
+
+def test_every_io_module_has_a_non_test_importer():
+    """Every module under streaming/ and sources/ must be imported by
+    code that ships: another package module (a package __init__ does
+    not count), __spark_entry__.py or perfbench/.  A module only its
+    own tests import is dead I/O surface: delete it with its tests."""
+    importers = [
+        p for p in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+        if os.path.basename(p) != "__init__.py"
+    ] + [ENTRY] + [
+        p for p in glob.glob(os.path.join(REPO, "perfbench", "*.py"))
+        if not os.path.basename(p).startswith("test_")
+    ]
+    imports = {p: _imported_modules(p) for p in importers}
+    dead = []
+    for sub in ("streaming", "sources"):
+        for path in sorted(glob.glob(os.path.join(PKG, sub, "*.py"))):
+            if os.path.basename(path) == "__init__.py":
+                continue
+            mod = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
+            if not any(mod in names for p, names in imports.items() if p != path):
+                dead.append(mod)
+    assert not dead, f"modules no shipped code imports: {dead}"

@@ -1,14 +1,10 @@
-"""Tests: HLL sketch mergeability and the JSONL DataSource sink."""
+"""Tests: mergeability of the HLL, log-histogram and count-min sketches."""
 
 from __future__ import annotations
-
-import glob
-import json
 
 from pyspark.sql import functions as F
 
 from botkop_telcotraffic_spark_spark.operators import sketch
-from botkop_telcotraffic_spark_spark.sources import jsonl_sink
 
 
 def test_hll_union_of_partials_is_lossless(spark):
@@ -37,60 +33,6 @@ def test_hll_union_of_partials_is_lossless(spark):
     }
     for k, v in truth.items():
         assert abs(r[k] - v) <= max(2, 0.05 * v)
-
-
-def test_jsonl_batch_writer_roundtrip(spark, tmp_path):
-    out = str(tmp_path / "out")
-    jsonl_sink.register(spark)
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") * 2).alias("double_id")
-    ).repartition(4)
-    df.write.format("jsonl_dir").option("path", out).mode("append").save()
-
-    manifest = json.load(open(f"{out}/_SUCCESS"))
-    assert manifest["rows"] == 100
-    rows = []
-    for p in glob.glob(f"{out}/part-*.jsonl"):
-        rows += [json.loads(line) for line in open(p)]
-    assert sorted(r["id"] for r in rows) == list(range(100))
-    assert all(r["double_id"] == 2 * r["id"] for r in rows)
-    assert set(manifest["files"]) == set(glob.glob(f"{out}/part-*.jsonl"))
-
-
-def test_jsonl_stream_writer_batches(spark, tmp_path):
-    from botkop_telcotraffic_spark_spark.sources import simulator
-
-    out = str(tmp_path / "sout")
-    simulator.register(spark)
-    jsonl_sink.register(spark)
-    # the simple python stream source runs one micro-batch per
-    # availableNow trigger; two runs off one checkpoint = batches 0, 1
-    for _ in range(2):
-        s = (
-            spark.readStream.format("telco_traffic")
-            .option("rows_per_batch", 50)
-            .option("max_batches", 2)
-            .load()
-            .drop("metrics")
-        )
-        q = (
-            s.writeStream.format("jsonl_dir")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    manifests = sorted(glob.glob(f"{out}/_batch-*.json"))
-    assert manifests, "no committed batches"
-    total = sum(json.load(open(m))["rows"] for m in manifests)
-    assert total == 100
-    lines = []
-    for p in glob.glob(f"{out}/part-*.jsonl"):
-        lines += open(p).read().splitlines()
-    assert len(lines) == 100
-    assert {json.loads(x)["mcc"] for x in lines} == {206}
 
 
 def test_loghist_rollup_is_lossless_and_bounded(spark):

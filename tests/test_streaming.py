@@ -5,17 +5,18 @@ streaming/batch unification of the windowed stats operator."""
 from __future__ import annotations
 
 import datetime
+import json
 import os
 import shutil
 
 import pytest
 
 from botkop_telcotraffic_spark_spark.operators.window_stats import windowed_stats
-from botkop_telcotraffic_spark_spark.streaming.json_stream import (
-    attach_source,
-    celltower_source,
+from botkop_telcotraffic_spark_spark.streaming.payloads import geofence_payload
+from botkop_telcotraffic_spark_spark.streaming.pipeline import (
+    TrafficPipeline,
+    read_geofences,
 )
-from botkop_telcotraffic_spark_spark.streaming.pipeline import TrafficPipeline
 from botkop_telcotraffic_spark_spark.streaming.runner import (
     run_to_memory,
     stream_parquet_table,
@@ -23,6 +24,7 @@ from botkop_telcotraffic_spark_spark.streaming.runner import (
 from botkop_telcotraffic_spark_spark.streaming.upsert_join import KeyedUpsertStore
 from tests.conftest import REPO, SF_DIR_001
 from tests.telco_fixtures import (
+    GEOFENCES,
     fixture_lines,
     latest_attach_by_bearer,
     point_in_polygon_py,
@@ -66,7 +68,7 @@ def test_full_pipeline_fanout(spark, fixtures):
         spark, os.path.join(TMP, "attach_store2"), key_col="bearerId", order_col="ts"
     )
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        parquet_append_sink,
+        idempotent_parquet_sink,
     )
 
     outlier_dir = os.path.join(TMP, "outlier_sink")
@@ -78,8 +80,8 @@ def test_full_pipeline_fanout(spark, fixtures):
         stats_sink=lambda df, bid: outputs["stats"].extend(df.collect()),
         geofence_sink=lambda df, bid: outputs["geo"].extend(df.collect()),
         # kmeans branch runs end-to-end through the PRODUCTION sink:
-        # executor-side parquet append, no driver collect
-        outlier_sink=parquet_append_sink(outlier_dir),
+        # executor-side per-batch parquet write, no driver collect
+        outlier_sink=idempotent_parquet_sink(outlier_dir),
     )
     pipe.run(fixture_lines(spark, fixtures), store, checkpoint=os.path.join(TMP, "ckpt_full"))
     outputs["outliers"] = (
@@ -306,22 +308,6 @@ def test_stateful_zscore_cross_batch_state(spark):
     assert sum(1 for _, (_, a) in got.items() if a) == 1
 
 
-def test_kafka_payload_shape(spark):
-    """to_kafka_payload: (key, value-json) projection (K2 parity —
-    the sink itself needs a broker; the projection is the logic)."""
-    import json
-
-    from botkop_telcotraffic_spark_spark.streaming.kafka_sink import to_kafka_payload
-
-    df = spark.createDataFrame(
-        [(1, "a", 2.5), (2, "b", 0.5)], "id long, tag string, v double"
-    )
-    out = to_kafka_payload(df, key_cols=["id"]).collect()
-    assert [r["key"] for r in sorted(out, key=lambda r: r["key"])] == ["1", "2"]
-    payload = json.loads(sorted(out, key=lambda r: r["key"])[0]["value"])
-    assert payload == {"tag": "a", "v": 2.5}
-
-
 def test_watermark_append_mode_finalizes_windows(spark):
     """W7: with a watermark, append mode emits each window exactly
     once, finalized, and the emitted rows agree with the batch
@@ -406,47 +392,6 @@ def test_streaming_session_windows(spark):
     expect = {tuple(r) for r in batch.collect()}
     assert got <= expect  # emitted sessions are finalized == batch-identical
     assert len(got) >= len(expect) - 50  # only tail sessions may be withheld
-
-
-def test_watermarked_stream_stream_join(spark, fixtures):
-    """J1 Option B: watermarked stream-stream inner join on bearerId.
-
-    Against the fixture replay, every (celltower, attach) pair of the
-    same bearer with attach_ts <= cell_ts (within the lag bound) must
-    emit exactly once — verified against a Python nested loop.
-    """
-    from botkop_telcotraffic_spark_spark.streaming.stream_join import (
-        watermarked_enrich_join,
-    )
-
-    joined = watermarked_enrich_join(
-        attach_source(spark, fixtures["attach_path"]),
-        celltower_source(spark, fixtures["cell_path"]),
-        attach_ts_col="event_time",
-        cell_ts_col="event_time",
-        delay="10 seconds",
-        max_lag="1 hour",
-    )
-    out = run_to_memory(
-        joined,
-        output_mode="append",
-        checkpoint=os.path.join(TMP, "ckpt_ssjoin"),
-    ).collect()
-
-    expected = set()
-    for c in fixtures["cells"]:
-        for a in fixtures["attaches"]:
-            if (
-                a["bearerId"] == c["bearerId"]
-                and a["ts"] <= c["ts"]
-                and a["ts"] >= c["ts"] - 3_600_000
-            ):
-                expected.add((c["bearerId"], c["ts"], a["ts"]))
-    got = [(r["bearerId"], r["ts"], int(r["attach_ts"].timestamp() * 1000)) for r in out]
-    assert len(got) == len(expected), f"{len(got)} emitted vs {len(expected)} expected"
-    assert set(got) == expected
-    # enrichment payload rides along
-    assert all(r["subscriber"]["imsi"] is not None for r in out)
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
@@ -610,28 +555,6 @@ def test_rocksdb_state_store_profile(spark, tmp_path):
     assert b"RocksDBStateStoreProvider" in blob
 
 
-def test_binary_file_ingest_roundtrip(spark, tmp_path):
-    """binaryFile ingest: bytes land intact in the media schema and
-    feed multimodal byte_stats without a codec."""
-    from botkop_telcotraffic_spark_spark.operators.multimodal import byte_stats
-    from botkop_telcotraffic_spark_spark.sources.formats import (
-        binary_files_as_media,
-    )
-
-    payloads = {"a.bin": bytes(range(256)), "b.bin": b"\x00" * 64}
-    for fname, data in payloads.items():
-        (tmp_path / fname).write_bytes(data)
-    media = binary_files_as_media(spark, str(tmp_path), glob="*.bin")
-    rows = {r["meta"]["uri"].rsplit("/", 1)[-1]: r for r in media.collect()}
-    assert set(rows) == set(payloads)
-    assert bytes(rows["a.bin"]["content"]) == payloads["a.bin"]
-    stats = {
-        r["media_id"]: r for r in byte_stats(media, "media_id", "content").collect()
-    }
-    assert stats[rows["a.bin"]["media_id"]]["n_bytes"] == 256
-    assert stats[rows["b.bin"]["media_id"]]["n_bytes"] == 64
-
-
 def test_simulator_batch_source_deterministic(spark):
     """Python DataSource batch reader: deterministic rows from
     (seed, index), option-controlled partitioning, and attach ⨝
@@ -708,71 +631,6 @@ def test_simulator_stream_advances_offsets(spark, tmp_path):
     # second availableNow run resumed from the checkpoint: batch 1
     # appended after batch 0, nothing reprocessed
     assert [tuple(r)[:7] for r in got2] == [e[:7] for e in exp80]
-
-
-def _kafka_brokers():
-    """Broker discovery for the optional Kafka integration test:
-    KAFKA_BOOTSTRAP env var, else a TCP probe of localhost:9092."""
-    import socket
-
-    env = os.environ.get("KAFKA_BOOTSTRAP")
-    if env:
-        return env
-    try:
-        with socket.create_connection(("localhost", 9092), timeout=0.5):
-            return "localhost:9092"
-    except OSError:
-        return None
-
-
-@pytest.mark.skipif(_kafka_brokers() is None, reason="no Kafka broker reachable")
-def test_kafka_round_trip(spark, fixtures, tmp_path):
-    """S1/S2/K2 live: attach fixture JSONL -> kafka_json_sink (bounded
-    drain) -> kafka_json_source -> decode; payloads survive the broker
-    round trip.  Skips when no broker is reachable (none ships in the
-    CI sandbox); requires the spark-sql-kafka package on the session
-    classpath."""
-    import uuid
-
-    from botkop_telcotraffic_spark_spark.schemas import ATTACH
-    from botkop_telcotraffic_spark_spark.streaming.json_stream import (
-        decode_json_stream,
-        kafka_json_source,
-    )
-    from botkop_telcotraffic_spark_spark.streaming.kafka_sink import kafka_json_sink
-
-    brokers = _kafka_brokers()
-    topic = f"sparktest-{uuid.uuid4().hex[:8]}"
-    stream = attach_source(spark, fixtures["attach_path"])
-    try:
-        q = kafka_json_sink(
-            stream,
-            topic=topic,
-            bootstrap_servers=brokers,
-            checkpoint=str(tmp_path / "ck_kafka"),
-            key_cols=["bearerId"],
-            available_now=True,
-        )
-        q.awaitTermination()
-    except Exception as ex:  # missing spark-sql-kafka jar -> skip, not fail
-        if "kafka" in str(ex).lower() and "source" in str(ex).lower():
-            pytest.skip(f"spark-sql-kafka package unavailable: {ex}")
-        raise
-    raw = (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", "earliest")
-        .load()
-        .select(F.col("value").cast("string").alias("value"))
-    )
-    decoded = decode_json_stream(raw, ATTACH)
-    got = {r["bearerId"] for r in decoded.collect()}
-    want = {a["bearerId"] for a in fixtures["attaches"]}
-    assert got == want
-    # the streaming source builder accepts the same brokers/topic
-    src = kafka_json_source(spark, brokers, topic, ATTACH)
-    assert src.isStreaming
 
 
 def test_upsert_store_reopen_reads_latest_version(spark, tmp_path):
@@ -897,6 +755,65 @@ def test_geofence_sink_requires_geofence_path():
         metric_names=["rtt"], kmeans_dims=["rtt"], geofence_path="fences.json"
     )
     assert pipe.geofence_sink is None
+
+
+def test_read_geofences_refuses_duplicate_names(tmp_path):
+    """The payload looks fences up by name, so a fence file that names
+    two fences alike is outside input refused at read time."""
+    path = tmp_path / "fences.json"
+    path.write_text(json.dumps(GEOFENCES + [GEOFENCES[1]]))
+    with pytest.raises(ValueError, match="duplicate geofence name 'west'"):
+        read_geofences(None, str(path))
+
+
+def test_geofence_payload_renders_fence_added_by_reload(spark, tmp_path):
+    """S5/W9 hot reload through the payload: the fence file is rewritten
+    between two batches to add a fence.  The second batch's payload,
+    built from the re-read fence list, carries the new fence's full
+    JSON (integer coordinates rendered as doubles), never a null
+    value."""
+    fx = write_fixtures(str(tmp_path / "fx"))
+    store = KeyedUpsertStore(
+        spark, str(tmp_path / "store"), key_col="bearerId", order_col="ts"
+    )
+    out = {}
+
+    def sink(df, bid):
+        fences = read_geofences(spark, fx["geo_path"])
+        out[bid] = [r["value"] for r in geofence_payload(df, fences).collect()]
+
+    pipe = TrafficPipeline(
+        metric_names=["rtt"], kmeans_dims=["rtt"],
+        geofence_path=fx["geo_path"], geofence_sink=sink,
+    )
+    ckpt = str(tmp_path / "ckpt")
+    pipe.run(fixture_lines(spark, fx), store, checkpoint=ckpt)
+    everywhere = {
+        "name": "everywhere",
+        "path": "enc2",
+        "polygon": [
+            {"lat": -90, "lng": -180}, {"lat": 90, "lng": -180},
+            {"lat": 90, "lng": 180}, {"lat": -90, "lng": 180},
+        ],
+    }
+    with open(fx["geo_path"], "w") as fh:
+        json.dump(GEOFENCES + [everywhere], fh)
+    cell_file = os.path.join(fx["cell_path"], "celltower.jsonl")
+    shutil.copy(cell_file, os.path.join(fx["cell_path"], "celltower2.jsonl"))
+    pipe.run(fixture_lines(spark, fx), store, checkpoint=ckpt)
+
+    assert sorted(out) == [0, 1]
+    assert out[0] and None not in out[0]
+    assert not any('"name":"everywhere"' in v for v in out[0])
+    assert None not in out[1]
+    new = [v for v in out[1] if '"name":"everywhere"' in v]
+    known = set(latest_attach_by_bearer(fx["attaches"]))
+    assert len(new) == sum(c["bearerId"] in known for c in fx["cells"])
+    fence_json = (
+        '{"name":"everywhere","path":"enc2","polygon":[{"lat":-90.0,"lng":-180.0},'
+        '{"lat":90.0,"lng":-180.0},{"lat":90.0,"lng":180.0},{"lat":-90.0,"lng":180.0}]}'
+    )
+    assert all(v.endswith(f', "geofence": {fence_json} }}') for v in new)
 
 
 def test_idle_session_timer_finalizes_on_watermark(spark):
@@ -1412,7 +1329,7 @@ def test_streaming_hll_restart_exactly_once(spark):
 
     from botkop_telcotraffic_spark_spark.operators import sketch
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        parquet_append_sink,
+        idempotent_parquet_sink,
     )
 
     src = os.path.join(TMP, "shll_chaos_src")
@@ -1432,7 +1349,7 @@ def test_streaming_hll_restart_exactly_once(spark):
     )
     b1.to_parquet(os.path.join(src, "a.parquet"))
     schema = spark.read.parquet(src).schema
-    sink = parquet_append_sink(out)
+    sink = idempotent_parquet_sink(out)
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
@@ -1720,7 +1637,7 @@ def test_mapstate_type_counts_survive_restart(spark):
 
     from botkop_telcotraffic_spark_spark.session import enable_large_state
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        parquet_append_sink,
+        idempotent_parquet_sink,
     )
     from botkop_telcotraffic_spark_spark.streaming.tws import (
         running_type_counts,
@@ -1754,17 +1671,17 @@ def test_mapstate_type_counts_survive_restart(spark):
             for r in spark.read.parquet(path).collect()
         )
 
-    _run_foreach_sink(q(), parquet_append_sink(dirs["out"]), dirs["ckpt"])
+    _run_foreach_sink(q(), idempotent_parquet_sink(dirs["out"]), dirs["ckpt"])
     assert table(dirs["out"]) == [(0, "click", 1), (0, "view", 2)]
 
     b.to_parquet(os.path.join(src, "b.parquet"))
-    _run_foreach_sink(q(), parquet_append_sink(dirs["out"]), dirs["ckpt"])
+    _run_foreach_sink(q(), idempotent_parquet_sink(dirs["out"]), dirs["ckpt"])
     got = table(dirs["out"])
     # post-restart emission continues from the RESTORED map: 2+1
     assert got == [(0, "click", 1), (0, "view", 2), (1, "view", 3)]
 
     _run_foreach_sink(
-        q(), parquet_append_sink(dirs["out_ref"]), dirs["ckpt_ref"]
+        q(), idempotent_parquet_sink(dirs["out_ref"]), dirs["ckpt_ref"]
     )
     assert got == table(dirs["out_ref"])
 
@@ -1777,7 +1694,7 @@ def test_ewma_valuestate_survives_restart(spark):
 
     from botkop_telcotraffic_spark_spark.session import enable_large_state
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        parquet_append_sink,
+        idempotent_parquet_sink,
     )
     from botkop_telcotraffic_spark_spark.streaming.tws import running_ewma
 
@@ -1813,17 +1730,17 @@ def test_ewma_valuestate_survives_restart(spark):
             for r in spark.read.parquet(path).collect()
         )
 
-    _run_foreach_sink(q(), parquet_append_sink(dirs["out"]), dirs["ckpt"])
+    _run_foreach_sink(q(), idempotent_parquet_sink(dirs["out"]), dirs["ckpt"])
     assert table(dirs["out"]) == [(0, 2, 12.0)]
 
     b.to_parquet(os.path.join(src, "b.parquet"), coerce_timestamps="us")
-    _run_foreach_sink(q(), parquet_append_sink(dirs["out"]), dirs["ckpt"])
+    _run_foreach_sink(q(), idempotent_parquet_sink(dirs["out"]), dirs["ckpt"])
     got = table(dirs["out"])
     # the restart continues from restored (2, 12.0): (12+4)/2 = 8.0
     assert got == [(0, 2, 12.0), (1, 3, 8.0)]
 
     _run_foreach_sink(
-        q(), parquet_append_sink(dirs["out_ref"]), dirs["ckpt_ref"]
+        q(), idempotent_parquet_sink(dirs["out_ref"]), dirs["ckpt_ref"]
     )
     assert got == table(dirs["out_ref"])
 
