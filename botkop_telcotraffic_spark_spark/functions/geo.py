@@ -3,10 +3,14 @@
 The reference calls an external library for point-in-polygon
 (``GeoUtil.containsLocation`` at
 ``/root/reference/src/main/scala/traffic/process/Geofencer.scala:30``).
-Here the standard even-odd ray-casting test is expressed with Catalyst
-higher-order functions (``filter`` over the polygon's edge indices),
-so the spatial theta-join J3 runs entirely inside whole-stage codegen
-— no Python, no UDF, broadcast-friendly.
+Here the standard even-odd ray-casting test runs as JVM expressions —
+no Python, no UDF — in two forms: ``point_in_polygon`` over a polygon
+COLUMN (Catalyst higher-order functions, ``filter`` over the edge
+indices), and ``point_in_polygon_literal`` for a plan-time constant
+polygon, unrolled into one SQL expression that stays inside
+whole-stage codegen.  The streaming geofence (J3) uses the literal
+form: there is no join, so no side is hashed or broadcast; the fence
+list rides in the projection as constants.
 
 Edge cases: horizontal edges (y_i == y_j) make the crossing test's
 first conjunct false, so the division-by-zero branch is never *used*;
@@ -18,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .sqlfn import sql_double
 
 
 def point_in_polygon(
@@ -50,13 +56,21 @@ def point_in_polygon(
 
 
 def point_in_polygon_literal(
-    px: Column, py: Column, vertices: list[tuple[float, float]]
-) -> Column:
+    px: str, py: str, vertices: list[tuple[float, float]]
+) -> str:
     """Ray casting against a *plan-time constant* polygon, unrolled
-    into scalar expressions: one crossing term per edge, parity via
-    sum % 2.  No higher-order functions — stays inside whole-stage
-    codegen, ~20x faster per row than the generic HOF variant.
-    ``vertices`` is [(x, y), ...] in the same axis order as (px, py).
+    into ONE SQL expression: one crossing term per edge, parity via
+    sum % 2.  ``px``/``py`` are SQL expressions; ``vertices`` is
+    [(x, y), ...] in the same axis order.  No higher-order functions,
+    so it stays inside whole-stage codegen (~20x faster per row than
+    the generic HOF variant), and as text it costs one JVM parse
+    instead of a Py4J round-trip per Column node.
+
+    Each term computes ``(xj - xi) * (py - yi) / (yj - yi) + xi`` in
+    that order, with ``xj - xi`` and ``yj - yi`` folded in Python:
+    the hits are bit-identical to a Python ray cast with the same
+    operations.  Coordinates go in through ``sql_double`` (NaN/±Inf
+    raise ValueError).
     """
     n = len(vertices)
     terms = []
@@ -65,16 +79,15 @@ def point_in_polygon_literal(
         xj, yj = vertices[(i + 1) % n]
         if yi == yj:
             continue  # horizontal edge can never satisfy the crossing test
-        term = ((F.lit(yi) > py) != (F.lit(yj) > py)) & (
-            px < (xj - xi) * (py - yi) / (yj - yi) + xi
+        sxi, syi, syj = sql_double(xi), sql_double(yi), sql_double(yj)
+        terms.append(
+            f"CAST((({syi} > {py}) != ({syj} > {py})) AND ({px} < "
+            f"({py} - {syi}) * {sql_double(xj - xi)} / {sql_double(yj - yi)}"
+            f" + {sxi}) AS INT)"
         )
-        terms.append(term.cast("int"))
     if not terms:
-        return F.lit(False)
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc % 2 == 1
+        return "false"
+    return f"(({' + '.join(terms)}) % 2 = 1)"
 
 
 GEOHASH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"

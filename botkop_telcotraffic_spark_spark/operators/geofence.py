@@ -3,10 +3,11 @@
 The reference flatMaps every event against an executor-local list of
 polygons with an external point-in-polygon helper
 (``Geofencer.scala:27-31``).  Here ``polygon_geofence_join`` unrolls
-that driver-local fence list into literal ray-casting column
-expressions, so containment is one codegen'd scan with array/explode:
-no join and no driver job.  ``rect_geofence_join`` matches a table of
-rectangles through a broadcast cross join.
+that driver-local fence list into ONE literal ray-casting SQL
+expression, so containment is one codegen'd scan with array/explode:
+no join, so nothing is hashed or broadcast, and no driver job.
+``rect_geofence_join`` matches a table of rectangles through a
+broadcast cross join (the fence table is the broadcast side).
 
 Scale notes: geofence sets are small (dozens-thousands of polygons)
 and the scan is embarrassingly partition-parallel on the points side.
@@ -16,12 +17,14 @@ For huge fence sets, pre-filter with a bounding-box range join
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geo import point_in_polygon_literal
+from ..functions.sqlfn import sql_ident
 
 # (name, [(lat, lng), ...]) — a driver-local fence list, the
 # reference's own representation (Geofencer.scala:18)
@@ -63,16 +66,22 @@ def polygon_geofence_join(
     Each polygon's edges are unrolled into literal codegen'd
     expressions at plan time; containment is ONE scan with
     array/explode — no join, no driver jobs, and trivially
-    partition-parallel at any point volume.
+    partition-parallel at any point volume.  The containment tests
+    are one SQL expression (``array(<hit 0>, <hit 1>, ...)``) parsed
+    JVM-side in one call.  The fence names never enter SQL text: they
+    are one JSON string literal decoded to an array (folded to a
+    constant by the optimizer) and zipped against the hits.
     """
-    named_polys = [
-        (name, [(float(lng), float(lat)) for lat, lng in poly])
-        for name, poly in fences
-    ]
-    px, py = F.col(x_col), F.col(y_col)
-    hits = [
-        F.when(point_in_polygon_literal(px, py, poly), F.lit(name))
-        for name, poly in named_polys
-    ]
-    matched = F.filter(F.array(*hits), lambda x: x.isNotNull())
+    px, py = sql_ident(x_col), sql_ident(y_col)
+    hits = F.expr("CAST(array({}) AS ARRAY<BOOLEAN>)".format(", ".join(
+        point_in_polygon_literal(
+            px, py, [(float(lng), float(lat)) for lat, lng in poly]
+        )
+        for _, poly in fences
+    )))
+    names = F.from_json(F.lit(json.dumps([name for name, _ in fences])), "array<string>")
+    matched = F.filter(
+        F.zip_with(names, hits, lambda name, hit: F.when(hit, name)),
+        lambda x: x.isNotNull(),
+    )
     return points.withColumn(name_col, F.explode(matched))

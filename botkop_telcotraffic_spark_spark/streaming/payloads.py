@@ -21,7 +21,7 @@ output contract:
   "outlier": B  }`` (double spaces from the reference's interpolation
   of space-padded fragments).
 
-All builders are pure column expressions over the pipeline's batch
+All builders are pure expressions over the pipeline's batch
 outputs (``streaming/pipeline.py``) — ``format_string`` delegates to
 ``java.lang.String.format``, the same formatter the reference's
 Scala ``.format`` uses, and ``to_json`` renders the Subscriber /
@@ -36,22 +36,42 @@ unordered) is pinned at plan time by the sorted metric list of
 ``array_sort(collect_list(struct(...)))``, associative and
 merge-order-free.
 
+Every builder is SQL text parsed JVM-side in one call, not a Column
+tree built one Py4J round-trip per node; outside strings (entity and
+metric names, format strings) enter it only through
+``functions/sqlfn.py::sql_str``/``sql_ident``.
+
 Scale shape: the stats payload is a row-wise projection of the
 upstream aggregate (no shuffle of its own); the geofence payload is a
-projection of the matches over a constant name -> fence-JSON map; the
-points message is one ``collect_list`` per micro-batch by reference
-contract (its ``repartition(1).glom()``) —
-batch-sized by design, the reference emits a single array message
-per interval.
+projection of the matches over a constant fence array — no join, so
+no side is hashed or broadcast; the points message is one
+``collect_list`` per micro-batch by reference contract (its
+``repartition(1).glom()``) — batch-sized by design, the reference
+emits a single array message per interval.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqlfn import sql_ident, sql_str
+
+# read_geofences' list as JSON: field order is the payload's byte order
+FENCE_LIST = (
+    "array<struct<name:string, path:string,"
+    " polygon:array<struct<lat:double, lng:double>>>>"
+)
+
 STAT_ENTRY_FMT = (
     ' "%s": { "count":%d, "mean":%f, "stdev":%f, "max":%f, "min":%f } '
+)
+POINT_FMT = (
+    '{  "subscriber": %s ,  "celltower": %s ,  "point": %s ,'
+    '  "prediction": %s ,  "centroid": %s ,  "distance": %s ,'
+    '  "outlier": %s  }'
 )
 
 
@@ -62,21 +82,16 @@ def metric_stats_payload(stats: DataFrame, entity_col: str) -> DataFrame:
     ``stats``: a frame of ``TrafficPipeline.metric_stats_fused``
     (columns window_start, window_end, <entity_col>, stats: array of
     struct(metric, n, mean, stdev, vmax, vmin))."""
-    entries = F.transform(
-        F.col("stats"),
-        lambda s: F.format_string(
-            STAT_ENTRY_FMT, s["metric"], s["n"], s["mean"], s["stdev"],
-            s["vmax"], s["vmin"],
-        ),
+    head = sql_str(f'{{ "{entity_col}":')
+    entry = (
+        f"format_string({sql_str(STAT_ENTRY_FMT)},"
+        " s.metric, s.n, s.mean, s.stdev, s.vmax, s.vmin)"
     )
-    value = F.concat(
-        F.lit(f'{{ "{entity_col}":'),
-        F.to_json(F.col(entity_col)),
-        F.lit(', "stats":{'),
-        F.array_join(entries, ","),
-        F.lit("} }"),
+    entries = f"array_join(transform(stats, s -> {entry}), ',')"
+    return stats.selectExpr(
+        f"concat({head}, to_json({sql_ident(entity_col)}), ', \"stats\":{{',"
+        f" {entries}, '}} }}') AS value"
     )
-    return stats.select(value.alias("value"))
 
 
 def geofence_payload(matches: DataFrame, fences: list) -> DataFrame:
@@ -85,32 +100,34 @@ def geofence_payload(matches: DataFrame, fences: list) -> DataFrame:
     ``matches``: output of ``TrafficPipeline.geofence_matches``
     (subscriber, celltower, geofence=name); ``fences``: the side
     input as ``read_geofences`` returns it, ``[(name, path, [(lat,
-    lng)])]``.  Each match looks up its full geofence object by name
-    in a literal map of ``to_json(struct(name, path, polygon))``
-    values, which the optimizer folds to constants: a projection, no
-    join."""
-    by_name = F.create_map(*[
-        c
-        for name, path, poly in fences
-        for c in (
-            F.lit(name),
-            F.to_json(F.struct(
-                F.lit(name).alias("name"),
-                F.lit(path).cast("string").alias("path"),
-                F.array(*[
-                    F.struct(F.lit(lat).alias("lat"), F.lit(lng).alias("lng"))
-                    for lat, lng in poly
-                ]).alias("polygon"),
-            )),
-        )
-    ]).cast("map<string,string>")  # typed even with no fences
+    lng)])]``.  The whole list enters the plan as ONE JSON string
+    literal decoded by ``from_json``, which the optimizer folds to a
+    constant array, and so does its ``name`` column.  Each match finds
+    its fence's position in the names and renders that fence with
+    ``to_json``: a projection, no join, and a handful of Py4J calls
+    whatever the fence count.  Doubles survive the round trip bit for
+    bit (``repr`` out, a correctly rounded parse in), so the bytes are
+    those of the fence as read.  A name missing from ``fences`` gives
+    a null message, as a map lookup would."""
+    listed = F.from_json(
+        F.lit(json.dumps([
+            {
+                "name": name,
+                "path": path,
+                "polygon": [{"lat": lat, "lng": lng} for lat, lng in poly],
+            }
+            for name, path, poly in fences
+        ])),
+        FENCE_LIST,
+    )
+    fence = F.get(listed, F.array_position(listed["name"], F.col("geofence")) - 1)
     value = F.concat(
         F.lit('{ "subscriber": '),
         F.to_json(F.col("subscriber")),
         F.lit(', "celltower": '),
         F.to_json(F.col("celltower")),
         F.lit(', "geofence": '),
-        by_name[F.col("geofence")],
+        F.to_json(fence),
         F.lit(" }"),
     )
     return matches.select(value.alias("value"))
@@ -125,35 +142,17 @@ def cluster_points_payload(outliers: DataFrame) -> DataFrame:
     (subscriber, celltower, point, prediction, centroid, distance,
     lo, hi) — ``outlier`` is re-derived exactly as the reference
     stores it (distance outside [lo, hi])."""
-    point_json = F.format_string(
-        '{  "subscriber": %s ,  "celltower": %s ,  "point": %s ,'
-        '  "prediction": %s ,  "centroid": %s ,  "distance": %s ,'
-        '  "outlier": %s  }',
-        F.to_json(F.col("subscriber")),
-        F.to_json(F.col("celltower")),
-        F.to_json(F.col("point")),
-        F.col("prediction").cast("string"),
-        F.to_json(F.col("centroid")),
-        F.col("distance").cast("string"),
-        (
-            (F.col("distance") < F.col("lo"))
-            | (F.col("distance") > F.col("hi"))
-        ).cast("string"),
+    point_json = (
+        f"format_string({sql_str(POINT_FMT)}, to_json(subscriber),"
+        " to_json(celltower), to_json(point), CAST(prediction AS STRING),"
+        " to_json(centroid), CAST(distance AS STRING),"
+        " CAST(distance < lo OR distance > hi AS STRING))"
     )
-    one = outliers.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("subscriber.id").alias("_sid"),
-                    F.col("celltower.cell").alias("_cell"),
-                    point_json.alias("j"),
-                )
-            )
-        ).alias("_ps")
+    one = outliers.selectExpr(
+        "array_sort(collect_list(named_struct('_sid', subscriber.id,"
+        f" '_cell', celltower.cell, 'j', {point_json}))) AS _ps"
     )
-    value = F.concat(
-        F.lit('{ "points":  ['),
-        F.array_join(F.transform(F.col("_ps"), lambda s: s["j"]), ","),
-        F.lit("] }"),
+    return one.selectExpr(
+        "concat('{ \"points\":  [', array_join(transform(_ps, s -> s.j), ','), '] }')"
+        " AS value"
     )
-    return one.select(value.alias("value"))

@@ -18,16 +18,17 @@ idempotent_parquet_sink over a payloads.py frame."""
 from __future__ import annotations
 
 import json
+import math
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqlfn import sql_ident, sql_str
 from ..operators.geofence import polygon_geofence_join
 from ..operators.iqr import with_iqr_fences
 from ..operators.kmeans import StreamingKMeans
-from ..operators.window_stats import stat_aggs
 from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT
 from .json_stream import decode_json_stream
 
@@ -65,8 +66,9 @@ def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, f
     [{lat, lng}]}; coordinates become floats, so ``52`` renders as
     ``52.0`` in the payload like the reference's Double.
 
-    Raises ValueError on a duplicate fence name: the payload looks
-    fences up by name."""
+    Raises ValueError on a duplicate fence name (the payload looks
+    fences up by name) and on a NaN or infinite coordinate (the
+    containment test is SQL text, and those have no SQL literal)."""
     with open(path) as fh:
         fences = [
             (g["name"], g.get("path", ""),
@@ -74,10 +76,12 @@ def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, f
             for g in json.load(fh)
         ]
     seen = set()
-    for name, _, _ in fences:
+    for name, _, poly in fences:
         if name in seen:
             raise ValueError(f"duplicate geofence name {name!r} in {path}")
         seen.add(name)
+        if not all(math.isfinite(c) for vertex in poly for c in vertex):
+            raise ValueError(f"geofence {name!r} in {path} has a non-finite coordinate")
     return fences
 
 
@@ -144,7 +148,9 @@ class TrafficPipeline:
         partial + one final HashAggregate — whose single aggregate
         column ``stats`` carries one StatCounter per configured metric
         (MetricStats.scala:5-24): an array of struct(metric, n, mean,
-        stdev, vmax, vmin) in sorted metric-name order.
+        stdev, vmax, vmin) in sorted metric-name order.  The window and
+        the stats are SQL text (metric names and durations quoted by
+        ``sql_str``), parsed JVM-side in one call each.
 
         Two deliberate differences from the reference:
         - the stats cover the configured ``metric_names``, not every
@@ -154,22 +160,33 @@ class TrafficPipeline:
         - a metric whose value is null in every row of a (window,
           entity) group is omitted from that group's ``stats`` (the
           reference never publishes it either: play-json rejects a
-          null map value and drops the event)."""
-        # slide None is F.window's tumbling window
-        win = F.window(F.col("event_time"), self.window, self.slide)
-        stats = F.filter(
-            F.array(*[
-                F.struct(F.lit(m).alias("metric"), *stat_aggs(F.col("metrics")[m]))
-                for m in sorted(set(self.metric_names))
-            ]),
-            lambda s: s["n"] > 0,
-        ).alias("stats")
+          null map value and drops the event).
+
+        Float sums depend on the order rows reach the aggregate, as
+        the reference's do on its partition order: a change in how
+        the enriched batch is partitioned (e.g. the join side the
+        planner hashes) can move a ``mean`` that sits on a rounding
+        tie of the payload's ``%f`` by one unit in the 6th decimal.
+        Counts, max and min never move."""
+        durations = [self.window] + ([self.slide] if self.slide else [])
+        win = F.expr(
+            f"window(event_time, {', '.join(sql_str(d) for d in durations)})"
+        ).alias("w")
+        structs = []
+        for m in sorted(set(self.metric_names)):
+            v = f"metrics[{sql_str(m)}]"
+            structs.append(
+                f"named_struct('metric', {sql_str(m)}, 'n', count({v}),"
+                f" 'mean', avg({v}), 'stdev', stddev_pop({v}),"
+                f" 'vmax', max({v}), 'vmin', min({v}))"
+            )
+        stats = F.expr(f"filter(array({', '.join(structs)}), s -> s.n > 0)")
 
         def by(entity: str) -> DataFrame:
-            return enriched.groupBy(win.alias("w"), entity).agg(stats).select(
-                F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                entity,
+            return enriched.groupBy(win, entity).agg(stats.alias("stats")).selectExpr(
+                "w.start AS window_start",
+                "w.end AS window_end",
+                sql_ident(entity),
                 "stats",
             )
 
@@ -183,13 +200,12 @@ class TrafficPipeline:
         fences = [
             (name, poly) for name, _, poly in read_geofences(None, self.geofence_path)
         ]
-        pts = enriched.select(
+        pts = enriched.selectExpr(
             "subscriber", "celltower",
-            F.col("celltower.location.lat").alias("lat"),
-            F.col("celltower.location.lng").alias("lng"),
+            "celltower.location.lat AS lat", "celltower.location.lng AS lng",
         )
         out = polygon_geofence_join(pts, fences)
-        return out.select("subscriber", "celltower", F.col("name").alias("geofence"))
+        return out.selectExpr("subscriber", "celltower", "name AS geofence")
 
     def anomalies(
         self, enriched: DataFrame, keep_all: bool = False
@@ -207,20 +223,14 @@ class TrafficPipeline:
         per-cluster IQR as window expressions over prediction, so
         predict + fence + filter is ONE job per micro-batch on one
         k-key shuffle."""
-        pts = enriched.select(
-            "subscriber",
-            "celltower",
-            F.array(
-                *[F.col("metrics").getItem(d) for d in self.kmeans_dims]
-            ).alias("point"),
-        ).where(~F.exists("point", lambda x: x.isNull()))
+        dims = ", ".join(f"metrics[{sql_str(d)}]" for d in self.kmeans_dims)
+        pts = enriched.selectExpr(
+            "subscriber", "celltower", f"array({dims}) AS point"
+        ).where("NOT exists(point, x -> x IS NULL)")
         scored = self.model.update_and_assign(pts, vec_col="point")
         flagged = with_iqr_fences(scored, "prediction", "distance")
         if not keep_all:
-            flagged = flagged.where(
-                (F.col("distance") < F.col("lo"))
-                | (F.col("distance") > F.col("hi"))
-            )
+            flagged = flagged.where("distance < lo OR distance > hi")
         return flagged
 
     # --- wiring --------------------------------------------------------

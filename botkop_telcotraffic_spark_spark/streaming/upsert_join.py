@@ -133,7 +133,15 @@ class KeyedUpsertStore:
         drop-unmatched semantics).  Dim columns that collide with fact
         columns (topic/ts/...) are dropped from the dim side — the
         fact stream's values win, matching the reference's projection
-        right after the join (TrafficStreamProcessor.scala:54-56)."""
+        right after the join (TrafficStreamProcessor.scala:54-56).
+
+        No hint picks the join strategy: the planner hashes the smaller
+        side by its size estimate.  With ``decode_json_stream`` parsing
+        each line once, a micro-batch (1k-5k events, about 1.2 MB) is
+        the smaller side against a 50k-100k-row store, so the batch is
+        hashed and broadcast (``BuildLeft``) and the store's partitions
+        stream through it; a large backlog batch lets the planner pick
+        the store instead."""
         dim = self.snapshot()
         if dim is None:
             return facts.limit(0) if how == "inner" else facts

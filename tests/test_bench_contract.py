@@ -155,14 +155,16 @@ def test_no_unexplained_warm_regressions_vs_committed_baseline():
     # cross-core-count runs are not comparable (r14): the driver
     # benches at 32 then 8 cores and the 8-core record can be the one
     # left in (or committed to) BENCH_LOCAL.json — comparing it
-    # against a 32-core snapshot flags every wide query.  Records
-    # predating the "cpus" field were all 32-core runs.
-    if int(cur.get("cpus", 32)) != int(base.get("cpus", 32)):
+    # against a 32-core snapshot flags every wide query.  A record
+    # with no "cpus" field ran on an unknown core count, so it is not
+    # comparable either.
+    cur_cpus, base_cpus = cur.get("cpus"), base.get("cpus")
+    if cur_cpus is None or base_cpus is None or int(cur_cpus) != int(base_cpus):
         import pytest
 
         pytest.skip(
-            f"local bench run used {cur.get('cpus')} cores, committed "
-            f"baseline used {base.get('cpus', 32)} — not comparable"
+            f"local bench run used {cur_cpus} cores, committed "
+            f"baseline used {base_cpus} — not comparable"
         )
     # lucky-baseline healing (round-11 verdict #1): a snapshot value
     # that improved >1.3x/0.2s over its predecessor with no recorded

@@ -12,6 +12,15 @@ the generator's Spark-free counts, judged by ``perfbench/run.py``'s own
 - ``ref_sliding`` has no attach lines: every batch takes the
   empty-upsert path.
 
+Beyond the counts, every stats message's values are checked against a
+pure-Python model recomputed from the generated seed and backlog
+lines: per (window, key), ``count`` exactly and mean/stdev
+(population)/max/min within 1e-6 absolute, the ``%f`` print
+precision.  Every published K-Means point's ``distance`` must be the
+Euclidean distance from its ``point`` to its ``centroid``.  The
+geofence containment test must agree with the generator's ray cast
+point for point, on edges and vertices too.
+
 A crash inside a batch, followed by a restart of a new pipeline (or of
 the crashed one) on the same store and checkpoint, must leave every
 topic byte-identical to a run with no crash.
@@ -22,11 +31,14 @@ The benchmark's modules are imported read-only, by file path.
 from __future__ import annotations
 
 import importlib.util
+import json
+import math
 import os
 
 import pytest
 
-from botkop_telcotraffic_spark_spark.schemas import ATTACH_EVENT
+from botkop_telcotraffic_spark_spark.operators.geofence import polygon_geofence_join
+from botkop_telcotraffic_spark_spark.schemas import ATTACH_EVENT, CELLTOWER_EVENT
 from botkop_telcotraffic_spark_spark.streaming import payloads
 from botkop_telcotraffic_spark_spark.streaming.json_stream import decode_json_stream
 from botkop_telcotraffic_spark_spark.streaming.pipeline import (
@@ -35,6 +47,7 @@ from botkop_telcotraffic_spark_spark.streaming.pipeline import (
 )
 from botkop_telcotraffic_spark_spark.streaming.upsert_join import KeyedUpsertStore
 from tests.conftest import REPO
+from tests.telco_fixtures import GEOFENCES
 
 BATCHES = 3
 SCALE = 0.04  # the benchmark smoke test's scale: about 200 events per batch
@@ -120,6 +133,191 @@ def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
         ]
     for b, want in enumerate(exp["batches"]):
         assert bench.mismatches(bench.observed(sinks, b), want) == [], f"batch {b}"
+    for b, model in enumerate(_stats_model(inputs, BATCHES, profile.slide_ms)):
+        for topic, entity in (
+            ("celltower_stats", "celltower"), ("subscriber_stats", "subscriber"),
+        ):
+            assert _stats_mismatches(sinks, topic, entity, b, model[entity]) == [], (
+                f"{topic} batch {b}"
+            )
+        assert _distance_mismatches(sinks, b) == [], f"kmeans_points batch {b}"
+
+
+@pytest.mark.parametrize("fence_set", ["fixture", "ref_sliding", "geofence_dense"])
+def test_geofence_hits_match_generator(spark, tmp_path, fence_set):
+    """The benchmark counts geofence hits with ``gen.contains``, so
+    ``polygon_geofence_join`` must give the same hits on every point,
+    also on an edge or a vertex, where only the same literals and the
+    same operation order keep the two bit-identical.  Points: a grid
+    over the fences' bounding box, every vertex, every edge midpoint,
+    and a row of points level with each vertex (a ray through it)."""
+    if fence_set == "fixture":
+        path = str(tmp_path / "fences.json")
+        with open(path, "w") as fh:
+            json.dump(GEOFENCES, fh)
+    else:
+        gen.generate(fence_set, 1, str(tmp_path), 1, SCALE)
+        path = str(tmp_path / "fences.json")
+    fences = [(name, poly) for name, _, poly in read_geofences(spark, path)]
+
+    lats = [lat for _, poly in fences for lat, _ in poly]
+    lngs = [lng for _, poly in fences for _, lng in poly]
+    lat0, lat1 = min(lats) - 0.1, max(lats) + 0.1
+    lng0, lng1 = min(lngs) - 0.1, max(lngs) + 0.1
+    steps = 40
+    grid_lngs = [lng0 + (lng1 - lng0) * j / steps for j in range(steps + 1)]
+    points = {
+        (lat0 + (lat1 - lat0) * i / steps, lng)
+        for i in range(steps + 1) for lng in grid_lngs
+    }
+    for _, poly in fences:
+        for k, (lat, lng) in enumerate(poly):
+            nlat, nlng = poly[(k + 1) % len(poly)]
+            points.add((lat, lng))
+            points.add(((lat + nlat) / 2, (lng + nlng) / 2))
+            points.update((lat, x) for x in grid_lngs)
+    points = sorted(points)
+
+    df = spark.createDataFrame(
+        [(i, lat, lng) for i, (lat, lng) in enumerate(points)],
+        "id INT, lat DOUBLE, lng DOUBLE",
+    )
+    got = sorted(
+        (r["id"], r["name"])
+        for r in polygon_geofence_join(df, fences).select("id", "name").collect()
+    )
+    want = sorted(
+        (i, name)
+        for i, (lat, lng) in enumerate(points)
+        for name, poly in fences
+        if gen.contains(lng, lat, [(x, y) for y, x in poly])
+    )
+    assert len(want) > 50
+    assert got == want
+
+
+# --- value-level model ---------------------------------------------------
+
+STAT_TOL = 1e-6  # the payload prints floats with Java's %f: 6 decimals
+
+
+def _decoded(line, schema):
+    """The record ``decode_json_stream`` keeps for ``line``, else None:
+    a JSON object with every top-level field of ``schema`` non-null."""
+    try:
+        rec = json.loads(line)
+    except ValueError:
+        return None
+    if not isinstance(rec, dict) or any(rec.get(f.name) is None for f in schema.fields):
+        return None
+    return rec
+
+
+def _key(obj) -> str:
+    return json.dumps(obj, sort_keys=True)
+
+
+def _stat(values):
+    n = len(values)
+    mean = math.fsum(values) / n
+    return {
+        "count": n,
+        "mean": mean,
+        "stdev": math.sqrt(math.fsum((v - mean) ** 2 for v in values) / n),
+        "max": max(values),
+        "min": min(values),
+    }
+
+
+def _stats_model(inputs, batches, slide_ms):
+    """Per batch, ``{entity: {key: [stats of one window, ...]}}`` from the
+    raw lines: the seed and each batch's attaches fill a latest-wins
+    bearer store before that batch's celltower events join it, and
+    every joined event lands in each 30 s window holding its ts."""
+    store = {}
+
+    def upsert(lines):
+        for line in lines:
+            a = _decoded(line, ATTACH_EVENT)
+            if a is not None and (
+                a["bearerId"] not in store or a["ts"] > store[a["bearerId"]]["ts"]
+            ):
+                store[a["bearerId"]] = a
+
+    def read(path):
+        with open(path) as fh:
+            return fh.read().splitlines()
+
+    upsert(read(os.path.join(inputs, "seed.jsonl")))
+    out = []
+    for b in range(batches):
+        lines = read(os.path.join(inputs, "backlog", f"b{b:05d}.jsonl"))
+        upsert(lines)
+        groups = {"celltower": {}, "subscriber": {}}
+        for line in lines:
+            e = _decoded(line, CELLTOWER_EVENT)
+            if e is None or e["bearerId"] not in store:
+                continue
+            keys = {
+                "celltower": _key(e["celltower"]),
+                "subscriber": _key(store[e["bearerId"]]["subscriber"]),
+            }
+            for start in gen.window_starts(e["ts"], slide_ms):
+                for entity, key in keys.items():
+                    per_metric = groups[entity].setdefault((key, start), {})
+                    for m in gen.METRICS:
+                        if e["metrics"].get(m) is not None:
+                            per_metric.setdefault(m, []).append(e["metrics"][m])
+        out.append({
+            entity: _by_key({
+                k: {m: _stat(vs) for m, vs in per_metric.items()}
+                for k, per_metric in g.items()
+            })
+            for entity, g in groups.items()
+        })
+    return out
+
+
+def _by_key(windows):
+    by = {}
+    for (key, _), stats in windows.items():
+        by.setdefault(key, []).append(stats)
+    return by
+
+
+def _close(got, want) -> bool:
+    return got.keys() == want.keys() and all(
+        got[m]["count"] == want[m]["count"]
+        and all(abs(got[m][f] - want[m][f]) <= STAT_TOL for f in ("mean", "stdev", "max", "min"))
+        for m in want
+    )
+
+
+def _stats_mismatches(sinks, topic, entity, batch, model):
+    """Messages carry no window, so each key's messages must pair off
+    one to one with the model's windows for that key."""
+    left = {k: list(v) for k, v in model.items()}
+    bad = []
+    for line in bench.read_topic(sinks, topic, batch).decode().splitlines():
+        msg = json.loads(line)
+        cands = left.get(_key(msg[entity]), [])
+        hit = next((i for i, want in enumerate(cands) if _close(msg["stats"], want)), None)
+        if hit is None:
+            bad.append(f"no model window for {line}")
+        else:
+            cands.pop(hit)
+    bad += [f"{k}: {len(v)} model windows unpublished" for k, v in left.items() if v]
+    return bad
+
+
+def _distance_mismatches(sinks, batch):
+    (line,) = bench.read_topic(sinks, "kmeans_points", batch).decode().splitlines()
+    bad = []
+    for p in json.loads(line)["points"]:
+        want = math.sqrt(sum((x - c) ** 2 for x, c in zip(p["point"], p["centroid"])))
+        if not math.isclose(p["distance"], want, rel_tol=1e-9):
+            bad.append(f"distance {p['distance']} != {want} for {p}")
+    return bad
 
 
 class _InjectedCrash(RuntimeError):

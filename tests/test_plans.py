@@ -1174,3 +1174,52 @@ def test_r11_entries_exchange_counts_pinned(spark, sfd):
     assert "CartesianProduct" not in wf, wf
     n = wf.count("Exchange")
     assert n <= 3, f"mixture_waterfill_docs exchanges grew: {n}\n{wf}"
+
+
+def test_decode_parses_each_line_once(spark):
+    """streaming/json_stream.py::decode_json_stream: the optimized plan
+    holds ONE from_json.  Without the Generate barrier Catalyst pushes
+    the every-field null filter below the projection and splits it into
+    one pruned parse per field (7 for CELLTOWER_EVENT)."""
+    from botkop_telcotraffic_spark_spark.schemas import CELLTOWER_EVENT
+    from botkop_telcotraffic_spark_spark.streaming.json_stream import (
+        decode_json_stream,
+    )
+
+    raw = spark.createDataFrame([("{}",), ("#corrupt",)], "value string")
+    optimized = (
+        decode_json_stream(raw, CELLTOWER_EVENT)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert optimized.count("from_json(") == 1, optimized
+
+
+def test_enrichment_join_hashes_the_batch(spark, tmp_path):
+    """A 5k-event batch (perfbench ``ref_sliding``) joined against its
+    50k-row attach store: with one parse per line the batch's size
+    estimate is truthful, so the planner builds the join's hash table
+    from the batch (BuildLeft), not from the store.  No hint forces it:
+    a large backlog batch must still let the planner pick by size."""
+    from botkop_telcotraffic_spark_spark.schemas import (
+        ATTACH_EVENT,
+        CELLTOWER_EVENT,
+    )
+    from botkop_telcotraffic_spark_spark.streaming.json_stream import (
+        decode_json_stream,
+    )
+    from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
+        KeyedUpsertStore,
+    )
+    from tests.test_pipeline_oracle import gen  # perfbench/gen.py, read-only
+
+    inputs = str(tmp_path / "inputs")
+    exp = gen.generate("ref_sliding", 1, inputs, 1)
+    assert exp["profile"]["events"] == 5_000 and exp["profile"]["bearers"] == 50_000
+    store = KeyedUpsertStore(spark, str(tmp_path / "store"), key_col="bearerId", order_col="ts")
+    store.upsert(decode_json_stream(spark.read.text(f"{inputs}/seed.jsonl"), ATTACH_EVENT))
+    cells = decode_json_stream(spark.read.text(f"{inputs}/backlog"), CELLTOWER_EVENT)
+    joins = [
+        line for line in physical_plan(store.join(cells, fact_key="bearerId")).splitlines()
+        if "Join" in line
+    ]
+    assert len(joins) == 1 and "BuildLeft" in joins[0], joins

@@ -766,6 +766,59 @@ def test_read_geofences_refuses_duplicate_names(tmp_path):
         read_geofences(None, str(path))
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_read_geofences_refuses_non_finite_coordinates(tmp_path, bad):
+    """The containment test is SQL text with one DOUBLE literal per
+    coordinate, and NaN/±Inf have no literal form: a fence file that
+    holds one is refused at read time, naming the fence."""
+    fences = json.loads(json.dumps(GEOFENCES))
+    fences[1]["polygon"][2]["lng"] = bad
+    path = tmp_path / "fences.json"
+    path.write_text(json.dumps(fences))  # NaN / Infinity tokens
+    with pytest.raises(ValueError, match="geofence 'west'.*non-finite"):
+        read_geofences(None, str(path))
+
+
+@pytest.mark.parametrize("name", ["o'k\\x", "débit→😀"])
+def test_stats_payload_renders_any_metric_name(spark, name):
+    """Metric names enter the stats' SQL text only through its quoting
+    helper: a name with a quote and a backslash, or with non-ASCII
+    characters (one outside the BMP), aggregates and renders verbatim,
+    in the payload's exact bytes."""
+    import datetime as dt
+
+    from botkop_telcotraffic_spark_spark.streaming.payloads import (
+        STAT_ENTRY_FMT,
+        metric_stats_payload,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    enriched = spark.createDataFrame(
+        [
+            (1, ("c0",), {name: v, "rtt": 2 * v}, t0 + dt.timedelta(seconds=v))
+            for v in (1.0, 3.0)
+        ],
+        "subscriber bigint, celltower struct<id:string>, "
+        "metrics map<string,double>, event_time timestamp",
+    )
+    msgs = []
+    TrafficPipeline(
+        metric_names=[name, "rtt"],
+        kmeans_dims=["rtt"],
+        slide=None,
+        stats_sink=lambda df, bid: msgs.extend(
+            r["value"] for r in metric_stats_payload(df, "celltower").collect()
+        ),
+    ).process_batch(enriched, 0)
+
+    entries = {
+        name: STAT_ENTRY_FMT % (name, 2, 2.0, 1.0, 3.0, 1.0),
+        "rtt": STAT_ENTRY_FMT % ("rtt", 2, 4.0, 2.0, 6.0, 2.0),
+    }
+    stats = ",".join(entries[m] for m in sorted(entries))
+    assert msgs == [f'{{ "celltower":{{"id":"c0"}}, "stats":{{{stats}}} }}']
+
+
 def test_geofence_payload_renders_fence_added_by_reload(spark, tmp_path):
     """S5/W9 hot reload through the payload: the fence file is rewritten
     between two batches to add a fence.  The second batch's payload,
