@@ -48,7 +48,9 @@ def _model_sized_shuffles(spark):
     exchange planned inside it is affected, including data-sized
     shuffles in the lineage of the caller's input frame (an upstream
     join or aggregate is forced to one partition).  Callers should
-    pass a frame whose lineage has no data-sized shuffle."""
+    pass a frame whose lineage has no data-sized shuffle.
+    ``TrafficPipeline.process_batch`` keeps the first condition by
+    running the update before it starts its concurrent topic writes."""
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:

@@ -8,7 +8,12 @@ per micro-batch, the reference's serial output-op order: the K1
 upsert, then the J1 join, then the fan-out.  The fan-out follows the
 reference's single read (`cache` + three pipelines,
 ``TrafficStreamProcessor.scala:52-64``): process_batch persists the
-enriched micro-batch and feeds all three analyses.
+enriched micro-batch and feeds all three analyses.  Upsert, join and
+the fan-out's frame building stay serial; the four topic writes then
+run concurrently, one thread each, so their driver-side planning and
+one-task stages overlap.  This is the Structured Streaming analogue of
+DStreams' ``spark.streaming.concurrentJobs``, scoped to one batch: the
+next batch starts only after every write of this one has finished.
 
 Every per-batch analysis is a plain batch DataFrame transformation
 from operators/ — the same code the batch surface uses.  Outputs go
@@ -22,6 +27,7 @@ import math
 import os
 from collections.abc import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -236,28 +242,59 @@ class TrafficPipeline:
     # --- wiring --------------------------------------------------------
 
     def process_batch(self, enriched: DataFrame, batch_id: int) -> None:
-        """W5 single-read fan-out: persist the enriched batch once and
-        run every wired analysis over it (stats cell first, then
-        subscriber, then geofence, then anomalies)."""
+        """W5 single-read fan-out: persist the enriched batch once, build
+        every wired branch's frame on this thread, then write the wired
+        topics concurrently, one thread per sink.
+
+        Building runs ``anomalies()``, so the K-Means update (and the
+        first batch's seeding) finishes before any write starts; the
+        update's job also fills the persisted cache once.  No sink runs
+        while ``operators/kmeans.py::_model_sized_shuffles`` is open:
+        that block sets one shuffle partition and AQE off for the whole
+        session, and a branch planned inside it would inherit both.
+        That is why the update stays on this thread.
+
+        Each write runs on a ``pyspark.InheritableThread``, so its jobs
+        carry this thread's local properties, among them the streaming
+        query's job group that ``StreamingQuery.stop()`` cancels.  A
+        failing write does not stop the others: every write runs to
+        completion, then ``enriched`` is unpersisted and the first
+        failure (in wiring order) is re-raised."""
         enriched.persist()
         try:
+            writes = []
             if self.stats_sink is not None or self.subscriber_stats_sink is not None:
                 by_cell, by_sub = self.metric_stats_fused(enriched)
                 if self.stats_sink is not None:
-                    self.stats_sink(by_cell, batch_id)
+                    writes.append((self.stats_sink, by_cell))
                 if self.subscriber_stats_sink is not None:
-                    self.subscriber_stats_sink(by_sub, batch_id)
+                    writes.append((self.subscriber_stats_sink, by_sub))
             if self.geofence_sink is not None:
-                self.geofence_sink(self.geofence_matches(enriched), batch_id)
+                writes.append((self.geofence_sink, self.geofence_matches(enriched)))
             if self.outlier_sink is not None:
-                self.outlier_sink(
-                    self.anomalies(
-                        enriched, keep_all=self.publish_all_points
-                    ),
-                    batch_id,
-                )
+                writes.append((
+                    self.outlier_sink,
+                    self.anomalies(enriched, keep_all=self.publish_all_points),
+                ))
+            errors: list[BaseException | None] = [None] * len(writes)
+
+            def write(i: int) -> None:
+                sink, frame = writes[i]
+                try:
+                    sink(frame, batch_id)
+                except BaseException as e:  # re-raised below, on this thread
+                    errors[i] = e
+
+            threads = [InheritableThread(write, args=(i,)) for i in range(len(writes))]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join()
         finally:
             enriched.unpersist()
+        for e in errors:
+            if e is not None:
+                raise e
 
     def run(
         self,
@@ -273,7 +310,8 @@ class TrafficPipeline:
         cast to string.  Per micro-batch, in the reference's serial
         output-op order: upsert the batch's attaches (K1), enrich its
         celltower events against the store (J1), fan out
-        (process_batch).
+        (process_batch, whose four topic writes overlap; the batch
+        ends when all of them have finished).
 
         Replay-safe: the K-Means model keeps its state under
         ``<checkpoint>/kmeans/`` as one ``b<batch_id>.json`` per batch

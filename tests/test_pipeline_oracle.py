@@ -342,9 +342,10 @@ def _crash_after(obj, name, batch):
 @pytest.mark.parametrize("same_pipe", [False, True])
 @pytest.mark.parametrize("crash_after", ["upsert", "geofence_sink", "process_batch"])
 def test_run_restart_is_byte_identical(spark, tmp_path, crash_after, same_pipe):
-    """Kill the query inside batch 1, after the store upsert, between the
-    sink writes (both stats topics written, the K-Means topic not), or
-    after the fan-out (before the offset commit), then restart on the same
+    """Kill the query inside batch 1, after the store upsert, in the
+    geofence sink (its topic written, then an error; the other three
+    writes run concurrently and finish before the error ends the batch),
+    or after the fan-out (before the offset commit), then restart on the same
     store and checkpoint: every topic matches a run with no crash, byte for
     byte.  The restart builds a new store object and either a NEW pipeline
     or, with ``same_pipe``, calls ``run`` again on the crashed one.  The

@@ -4,14 +4,20 @@ streaming/batch unification of the windowed stats operator."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import json
 import os
 import shutil
+import threading
+import time
 
 import pytest
 
+from botkop_telcotraffic_spark_spark.operators import kmeans
 from botkop_telcotraffic_spark_spark.operators.window_stats import windowed_stats
+from botkop_telcotraffic_spark_spark.schemas import ATTACH_EVENT, CELLTOWER_EVENT
+from botkop_telcotraffic_spark_spark.streaming.json_stream import decode_json_stream
 from botkop_telcotraffic_spark_spark.streaming.payloads import geofence_payload
 from botkop_telcotraffic_spark_spark.streaming.pipeline import (
     TrafficPipeline,
@@ -226,6 +232,128 @@ def test_stats_sink_requires_metric_names():
                 metric_names=[], kmeans_dims=["rtt"],
                 **{sink_kw: lambda df, bid: None},
             )
+
+
+FOUR_SINKS = ("stats_sink", "subscriber_stats_sink", "geofence_sink", "outlier_sink")
+
+
+def _fixture_batch(spark, fixtures, store_path):
+    """The lines of both fixture topics as ONE micro-batch, enriched as
+    ``run`` does it: attaches upserted, celltower events joined to the
+    store."""
+    lines = spark.read.text([fixtures["attach_path"], fixtures["cell_path"]])
+    store = KeyedUpsertStore(spark, store_path, key_col="bearerId", order_col="ts")
+    store.upsert(decode_json_stream(lines, ATTACH_EVENT))
+    cells = decode_json_stream(lines, CELLTOWER_EVENT)
+    return store.join(cells, fact_key="bearerId").select(
+        "subscriber", "celltower", "metrics", "event_time"
+    )
+
+
+def _pipeline_with(fixtures, sinks):
+    """A pipeline over the fixture fences with the given sinks wired."""
+    return TrafficPipeline(
+        metric_names=["rtt", "byteLoss", "jitter"],
+        kmeans_dims=["rtt", "byteLoss"],
+        geofence_path=fixtures["geo_path"],
+        **sinks,
+    )
+
+
+def test_fanout_writes_overlap(spark, fixtures, tmp_path):
+    """process_batch writes the four topics concurrently: every sink
+    waits on one four-party barrier, which opens only while all four
+    writes are in flight together.  Written one after another, the
+    first wait times out with BrokenBarrierError."""
+    barrier = threading.Barrier(4, timeout=60)
+
+    def sink(df, bid):
+        barrier.wait()
+
+    pipe = _pipeline_with(fixtures, dict.fromkeys(FOUR_SINKS, sink))
+    pipe.process_batch(_fixture_batch(spark, fixtures, str(tmp_path / "store")), 0)
+
+
+def test_failing_write_lets_the_others_finish(spark, fixtures, tmp_path):
+    """A write that fails does not cut the others short: the K-Means
+    write still runs to the end with the enriched batch cached, and only
+    then is the batch unpersisted and the stats write's error raised."""
+    enriched = _fixture_batch(spark, fixtures, str(tmp_path / "store"))
+    finished = []
+
+    def failing(df, bid):
+        raise RuntimeError("injected stats write failure")
+
+    def slow(df, bid):
+        time.sleep(1)
+        finished.append(enriched.is_cached)
+
+    pipe = _pipeline_with(fixtures, {"stats_sink": failing, "outlier_sink": slow})
+    with pytest.raises(RuntimeError, match="injected stats write failure"):
+        pipe.process_batch(enriched, 0)
+    assert finished == [True]
+    assert not enriched.is_cached
+
+
+def test_fanout_writes_run_in_the_query_job_group(spark, fixtures, tmp_path):
+    """Every write runs its jobs under the streaming query's job group
+    (its run id), so StreamingQuery.stop() cancels a batch's writes in
+    flight.  A plain thread would see no job group at all."""
+    sc = spark.sparkContext
+    groups = {}
+
+    def sink_for(kw):
+        def sink(df, bid):
+            groups[kw] = sc.getLocalProperty("spark.jobGroup.id")
+
+        return sink
+
+    pipe = _pipeline_with(fixtures, {kw: sink_for(kw) for kw in FOUR_SINKS})
+    store = KeyedUpsertStore(
+        spark, str(tmp_path / "store"), key_col="bearerId", order_col="ts"
+    )
+    q = pipe.run(fixture_lines(spark, fixtures), store, checkpoint=str(tmp_path / "ckpt"))
+    assert groups == dict.fromkeys(FOUR_SINKS, str(q.runId))
+
+
+def test_no_write_runs_under_model_sized_shuffles(spark, fixtures, tmp_path, monkeypatch):
+    """_model_sized_shuffles sets one shuffle partition and AQE off for
+    the whole session while it is open, so no write may run inside it:
+    every sink sees AQE on, and the block never opens once a sink has
+    started (the K-Means update closes it before any write starts).  The
+    sinks meet at a barrier so that none returns before all four have
+    started: a K-Means branch that trained on its own thread would open
+    the block while the other three wait there."""
+    real = kmeans._model_sized_shuffles
+    lock = threading.Lock()
+    seen = {"open": False, "entered": 0, "started": 0, "clashes": 0}
+
+    @contextlib.contextmanager
+    def flagged(s):
+        with real(s):
+            with lock:
+                seen["open"] = True
+                seen["entered"] += 1
+                seen["clashes"] += seen["started"]
+            try:
+                yield
+            finally:
+                seen["open"] = False
+
+    monkeypatch.setattr(kmeans, "_model_sized_shuffles", flagged)
+    barrier = threading.Barrier(4, timeout=60)
+
+    def sink(df, bid):
+        with lock:
+            seen["started"] += 1
+            seen["clashes"] += seen["open"]
+        barrier.wait()
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+    pipe = _pipeline_with(fixtures, dict.fromkeys(FOUR_SINKS, sink))
+    pipe.process_batch(_fixture_batch(spark, fixtures, str(tmp_path / "store")), 0)
+    assert seen["entered"] >= 1
+    assert seen["clashes"] == 0
 
 
 def test_streaming_batch_unification(spark):
