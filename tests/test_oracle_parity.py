@@ -26,8 +26,12 @@ def test_entry_smoke(spark):
 
 
 def test_every_query_listed_has_callable():
-    for name in ORACLES:
-        assert name in QUERIES
+    """Every registry entry has an oracle and every oracle a query, so
+    an entry added without its oracle SQL fails here, wherever it sits
+    in the registry."""
+    assert set(QUERIES) == set(ORACLES), (
+        f"queries without an oracle: {sorted(set(QUERIES) - set(ORACLES))}"
+    )
 
 
 def test_no_oracle_hugeint_columns():

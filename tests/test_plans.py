@@ -898,60 +898,6 @@ def test_anomaly_ensemble_two_scans(spark):
     assert has_broadcast_join(df)
 
 
-def test_scan_census_no_unexplained_growth():
-    """Census growth gate (round-7 verdict #8): an entry's static
-    FileScan count must not GROW between the two newest committed
-    SCAN_CENSUS_r{N}.json files unless SCALE.md names the entry in a
-    round-{new-or-later} section — silent plan regressions (a lost
-    ReusedExchange, a broadcast that became a re-computed subtree)
-    surface as census growth first.  Regenerate with
-    scripts/scan_census.py and document intentional growth in
-    SCALE.md."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    files = sorted(
-        (int(m.group(1)), p)
-        for p in _glob.glob(_os.path.join(repo, "SCAN_CENSUS_r*.json"))
-        if (m := re.search(r"_r(\d+)\.json$", p))
-    )
-    if len(files) < 2:
-        return  # first census round: nothing to compare
-    (old_rnd, old_p), (new_rnd, new_p) = files[-2], files[-1]
-    old = _json.load(open(old_p))
-    new = _json.load(open(new_p))
-
-    with open(_os.path.join(repo, "SCALE.md")) as fh:
-        scale = fh.read()
-    # entries mentioned in a section headed "## Round-{>= new_rnd}"
-    explained: set[str] = set()
-    for sec in re.split(r"(?m)^## ", scale):
-        m = re.match(r"Round-(\d+)", sec)
-        if m and int(m.group(1)) >= new_rnd:
-            explained.update(
-                n for n in new if re.search(rf"\b{re.escape(n)}\b", sec)
-            )
-
-    grown = [
-        f"{n}: {old[n]} -> {new[n]}"
-        for n in new
-        if n in old and new[n] > old[n] >= 0 and n not in explained
-    ]
-    assert not grown, (
-        f"static FileScan count grew r{old_rnd}->r{new_rnd} without a "
-        f"SCALE.md round-{new_rnd}+ note: " + ", ".join(grown)
-    )
-    # a census error (-1) means the entry failed to even BUILD its
-    # plan at census time — that is a break, not a count
-    errored = [n for n, v in new.items() if v < 0]
-    assert not errored, (
-        f"entries errored during the r{new_rnd} census (plan build "
-        f"failed): {errored}"
-    )
-
-
 @FLAGSHIP_SCALES
 def test_dedup_ladder_plan_shape(spark, sfd):
     """Round-8 flagship (round-7 verdict #7): the 4-stage dedup
