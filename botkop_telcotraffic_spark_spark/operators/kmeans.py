@@ -15,9 +15,11 @@ mini-batch update rule the reference gets from Spark 1.6 MLlib
 with decay factor ``a``, per-batch cluster sums ``x_sum`` (m points).
 Model state is tiny (k x dim) and driver-held, exactly like the
 reference's ``latestModel``; each batch does one distributed
-assignment + one groupBy — no collect of raw points.  The reference
-trains on a batch *then* predicts the same batch with the updated
-model; ``update_and_assign`` replicates that order.
+assignment + one global aggregate that returns one row of k x (dim
++ 1) conditional sums — no keyed exchange, no session conf change,
+no collect of raw points.  The reference trains on a batch *then*
+predicts the same batch with the updated model; ``update_and_assign``
+replicates that order.
 """
 
 from __future__ import annotations
@@ -48,9 +50,10 @@ def _model_sized_shuffles(spark):
     exchange planned inside it is affected, including data-sized
     shuffles in the lineage of the caller's input frame (an upstream
     join or aggregate is forced to one partition).  Callers should
-    pass a frame whose lineage has no data-sized shuffle.
-    ``TrafficPipeline.process_batch`` keeps the first condition by
-    running the update before it starts its concurrent topic writes."""
+    pass a frame whose lineage has no data-sized shuffle.  Its one
+    caller is the batch ``lloyd_kmeans`` loop; the streaming update
+    (``StreamingKMeans.update``) needs no keyed exchange and so no
+    conf change."""
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
@@ -306,39 +309,41 @@ class StreamingKMeans:
             self.centroids[i] = c
 
     def update(self, batch: DataFrame, vec_col: str = "point") -> None:
-        """One mini-batch update: distributed assign + per-cluster
-        sum/count, then the O(k*dim) driver-side rule."""
+        """One mini-batch update: distributed assign, then one global
+        aggregate whose single row holds ``count_if(prediction = i)``
+        and ``sum(if(prediction = i, point[d], 0D))`` for every cluster
+        i and dimension d, then the O(k*dim) driver-side rule.  Adding
+        exact zeros leaves each sum as a keyed groupBy would compute it,
+        and the only shuffle carries one partial row per map task, so
+        no session conf needs changing.  A cluster with no point this
+        batch keeps its centroid and decays its weight."""
         # the model no longer matches any snapshot: if this batch dies
         # before snapshot(), align() must reload instead of replaying
         # the batch on top of this update
         self._cursor = None
-        spark = batch.sparkSession
         self._maybe_seed_from_batch(batch, vec_col)
         assigned = assign(batch.select(F.col(vec_col).alias("point")),
                           self._centroid_pairs(), vec_col="point",
                           dim=self.dim)
-        # k-row reduce over a shuffle-free argmin: model-sized (r14)
-        with _model_sized_shuffles(spark):
-            sums = (
-                assigned.select("prediction", "point")
-                .groupBy("prediction")
-                .agg(
-                    F.count(F.lit(1)).cast("double").alias("m"),
-                    *[
-                        F.sum(F.element_at("point", d + 1)).alias(f"s{d}")
-                        for d in range(self.dim)
-                    ],
-                )
-            ).collect()  # k rows — driver state update only
-        for row in sums:
-            i = row["prediction"]
-            m = row["m"]
+        terms = []
+        for i in range(self.k):
+            terms.append(f"count_if(prediction = {i}) AS m{i}")
+            terms += [
+                f"sum(if(prediction = {i}, element_at(point, {d + 1}), 0D))"
+                f" AS s{i}_{d}"
+                for d in range(self.dim)
+            ]
+        row = assigned.selectExpr(*terms).collect()[0]
+        for i in range(self.k):
+            m = float(row[f"m{i}"])
             n = self.weights[i] * self.decay
-            denom = n + m
-            if denom <= 0:
+            if m == 0:
+                # unseen this batch: decay only, never (c*n + 0) / n
+                self.weights[i] = n
                 continue
+            denom = n + m
             self.centroids[i] = [
-                (self.centroids[i][d] * n + row[f"s{d}"]) / denom
+                (self.centroids[i][d] * n + row[f"s{i}_{d}"]) / denom
                 for d in range(self.dim)
             ]
             if self.round_state is not None:
@@ -346,11 +351,6 @@ class StreamingKMeans:
                     round(x, self.round_state) for x in self.centroids[i]
                 ]
             self.weights[i] = denom
-        # decay clusters that saw no data this batch
-        seen = {row["prediction"] for row in sums}
-        for i in range(self.k):
-            if i not in seen:
-                self.weights[i] *= self.decay
 
     def update_and_assign(self, batch: DataFrame, vec_col: str = "point") -> DataFrame:
         """Train on the batch, then predict the same batch with the
@@ -628,7 +628,12 @@ def lloyd_kmeans(
     # MODEL, not the data (measured: the 32-task means reduce of 512
     # rows cost 0.6-0.9 s/round on 2 000 input rows, and AQE's
     # per-stage re-planning another ~1 s/round).  Probe medians on
-    # the same host: 6.8 s -> 3.0 s.
+    # the same host: 6.8 s -> 3.0 s.  StreamingKMeans.update's
+    # conditional-sum aggregate does not carry over: it has k x (dim
+    # + 1) terms, 9 at the streaming callers' k=3, dim=2, but a
+    # conditional-sum Lloyd at dim 32 took 6.3-6.5 s against 2.2-2.4 s
+    # with this block, and dropping the block alone cost 20-37% on a
+    # 32-partition session (local[3] probe, one 4-vCPU host).
     with _model_sized_shuffles(spark):
         for _ in range(iterations):
             assigned = assign(

@@ -134,6 +134,10 @@ class TrafficPipeline:
         if geofence_sink is not None and not geofence_path:
             raise ValueError("geofence_sink is set but geofence_path is not")
         self.geofence_sink = geofence_sink
+        # with no dimension the distance SQL has no term, and with no
+        # cluster there is nothing to score against
+        if outlier_sink is not None and (not kmeans_dims or k < 1):
+            raise ValueError("outlier_sink is set but kmeans_dims is empty or k < 1")
         self.outlier_sink = outlier_sink
         # 4th reference topic (MetricStatsProducer.scala:17-36): the
         # same windowed stats keyed by subscriber instead of celltower
@@ -247,12 +251,9 @@ class TrafficPipeline:
         topics concurrently, one thread per sink.
 
         Building runs ``anomalies()``, so the K-Means update (and the
-        first batch's seeding) finishes before any write starts; the
-        update's job also fills the persisted cache once.  No sink runs
-        while ``operators/kmeans.py::_model_sized_shuffles`` is open:
-        that block sets one shuffle partition and AQE off for the whole
-        session, and a branch planned inside it would inherit both.
-        That is why the update stays on this thread.
+        first batch's seeding) finishes before any write starts.  The
+        update changes no session conf; it runs first because its job
+        fills the persisted cache once, and the writes then read it.
 
         Each write runs on a ``pyspark.InheritableThread``, so its jobs
         carry this thread's local properties, among them the streaming

@@ -7,6 +7,7 @@ clock and batch boundaries (SURVEY.md §5 test strategy)."""
 
 from __future__ import annotations
 
+import contextlib
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,13 +23,13 @@ def run_to_memory(
     """Run a streaming DataFrame to completion (availableNow) into a
     memory sink; return the result as a batch DataFrame.
 
-    ``replay_partitions``: explicit shuffle-partition count for this
-    bounded replay, overriding the floor-8 default below.  Pass 1 for
-    PURE-JVM stateful queries whose per-partition store open/commit
-    dominates (round-9 A/B: the 4-store stream-stream join runs 3.1 s
-    at 8 partitions, 2.3 s at 1; but Python-stateful streams want the
-    parallelism — r8 negative — and native session-window merges run
-    WORSE at 1: 1.2 s -> 1.7 s)."""
+    ``replay_partitions``: narrow this bounded replay's shuffle width
+    to at most this many partitions instead of the floor-8 default
+    below.  Pass 1 for PURE-JVM stateful queries whose per-partition
+    store open/commit dominates (round-9 A/B: the 4-store
+    stream-stream join runs 3.1 s at 8 partitions, 2.3 s at 1; but
+    Python-stateful streams want the parallelism — r8 negative — and
+    native session-window merges run WORSE at 1: 1.2 s -> 1.7 s)."""
     spark = stream_df.sparkSession
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
     # Bounded-replay accommodation: each stateful partition opens its
@@ -39,14 +40,14 @@ def run_to_memory(
     # invocation make the pinned-at-start partition count safe to
     # vary; values are partitioning-independent.  Production streams
     # size shuffle partitions to the cluster instead (SCALE.md).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if replay_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(replay_partitions)
-            )
-        elif checkpoint is None and int(prev) > 8:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+    narrow = globals()["replay_partitions"]  # the keyword shadows the class
+    if replay_partitions is not None:
+        trim = narrow(spark, replay_partitions)
+    elif checkpoint is None:
+        trim = narrow(spark, 8)
+    else:
+        trim = contextlib.nullcontext()
+    with trim:
         writer = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -57,8 +58,6 @@ def run_to_memory(
             writer = writer.option("checkpointLocation", checkpoint)
         q = writer.start()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -130,11 +129,11 @@ def stream_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 
 class replay_partitions:
-    """Context manager applying the same bounded-replay shuffle trim
-    as run_to_memory to custom-started streams (foreachBatch
+    """Context manager for the bounded-replay shuffle trim, used by
+    run_to_memory and by custom-started streams (foreachBatch
     pipelines): fewer partitions = fewer per-batch state-store /
-    task round-trips on a tiny one-shot replay.  No-op when the
-    session is already at or below the floor."""
+    task round-trips on a tiny one-shot replay.  Only narrows: no-op
+    when the session is already at or below ``n``."""
 
     def __init__(self, spark: SparkSession, n: int = 8) -> None:
         self._spark, self._n = spark, n

@@ -77,9 +77,6 @@ class KeyedUpsertStore:
         except FileNotFoundError:
             return None
 
-    def exists(self) -> bool:
-        return os.path.exists(self._pointer())
-
     def snapshot(self) -> DataFrame | None:
         version = self._version()
         if version is None:

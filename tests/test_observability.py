@@ -1,11 +1,10 @@
-"""Tests for the operational surface: in-plan observation, SQL UDFs,
-and the simulator-driven end-to-end pipeline."""
+"""Tests for the operational surface: in-plan observation and the
+simulator-driven end-to-end pipeline."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from botkop_telcotraffic_spark_spark.functions.sqlfn import register_sql_functions
 from botkop_telcotraffic_spark_spark.operators.monitor import observe_quality
 
 
@@ -23,24 +22,6 @@ def test_observe_quality_counters(spark):
     assert m["rows"] == 3
     assert m["bad_value_present"] == 1
     assert m["bad_value_nonneg"] == 1
-
-
-def test_sql_udfs_inline(spark):
-    names = register_sql_functions(spark)
-    assert set(names) >= {"quality_frac", "hamming64", "n_tokens", "euclid"}
-    row = spark.sql(
-        "SELECT quality_frac(40, 4) AS q, hamming64(7, 1) AS h, "
-        "n_tokens('a b c') AS t, euclid(array(0.0, 0.0), array(3.0, 4.0)) AS e"
-    ).collect()[0]
-    assert row["q"] == 0.9 and row["h"] == 2 and row["t"] == 3 and row["e"] == 5.0
-    # SQL UDFs are plan-inlined expressions: no BatchEvalPython
-    plan = (
-        spark.sql("SELECT hamming64(7, 1)")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Python" not in plan
 
 
 def test_simulator_drives_full_pipeline(spark, tmp_path):

@@ -134,6 +134,59 @@ def test_streaming_kmeans_update_rule(spark):
     assert c0 != model.centroids[0]
 
 
+def _kmeans_rule(cents, weights, points, decay):
+    """Pure-Python model of one StreamingKMeans batch: nearest centroid
+    (lowest id on a tie), then c' = (c*n*a + sum(x)) / (n*a + m) and
+    n' = n*a + m; a cluster with m = 0 keeps c, and n' = n*a."""
+    groups = [[] for _ in cents]
+    for p in points:
+        d2 = [sum((x - y) ** 2 for x, y in zip(p, c)) for c in cents]
+        groups[d2.index(min(d2))].append(p)
+    new_c, new_w = [], []
+    for c, w, g in zip(cents, weights, groups):
+        n = w * decay
+        if not g:
+            new_c.append(list(c))
+            new_w.append(n)
+            continue
+        sums = [sum(p[d] for p in g) for d in range(len(c))]
+        new_c.append([(c[d] * n + sums[d]) / (n + len(g)) for d in range(len(c))])
+        new_w.append(n + len(g))
+    return new_c, new_w, [len(g) for g in groups]
+
+
+def test_streaming_kmeans_replay_matches_update_rule_exactly(spark):
+    """k=3, decay 0.5, four batches against ``_kmeans_rule``.  Batch 2
+    leaves cluster 2 empty and batch 4 cluster 0, so the unseen branch
+    runs.  The state is set directly, which skips seeding, and every
+    coordinate, sum and weight is dyadic, so no summation order can move
+    a bit: centroids and weights must match with ==."""
+    model = StreamingKMeans(k=3, dim=2, decay=0.5)
+    model.centroids = [[0.0, 0.0], [8.0, 8.0], [-8.0, 8.0]]
+    model.weights = [2.0, 4.0, 2.0]
+    batches = [
+        [[0.5, -0.25], [8.5, 8.0], [7.0, 9.5],
+         [-8.0, 7.5], [-9.0, 8.25], [-7.5, 8.0]],
+        [[0.25, 0.5], [-0.5, 0.0], [1.0, -0.75], [8.25, 7.75], [9.0, 8.5]],
+        [[0.0, 1.0], [-1.0, -0.5], [7.5, 8.0], [8.0, 7.0],
+         [-8.25, 8.75], [-7.75, 7.25], [-8.5, 8.0]],
+        [[8.75, 8.25], [7.25, 7.75], [-8.0, 8.0], [-9.0, 7.0],
+         [-7.0, 9.0], [-8.5, 8.5], [-7.5, 7.5], [-8.25, 8.25]],
+    ]
+    cents, weights = [list(c) for c in model.centroids], list(model.weights)
+    seen = []
+    for pts in batches:
+        cents, weights, m = _kmeans_rule(cents, weights, pts, 0.5)
+        seen.append(m)
+        # three map tasks, so the aggregate merges partial rows
+        df = spark.createDataFrame([(p,) for p in pts], "point array<double>")
+        model.update(df.repartition(3), "point")
+        assert model.centroids == cents
+        assert model.weights == weights
+    assert seen == [[1, 2, 3], [3, 2, 0], [2, 2, 3], [0, 2, 6]]
+    assert model.weights == [2.0, 4.0, 8.0]
+
+
 def test_streaming_kmeans_separates_blobs(spark):
     rng = random.Random(3)
     blobs = [(0.0, 0.0), (50.0, 50.0), (-40.0, 30.0)]

@@ -4,7 +4,6 @@ streaming/batch unification of the windowed stats operator."""
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import json
 import os
@@ -14,7 +13,6 @@ import time
 
 import pytest
 
-from botkop_telcotraffic_spark_spark.operators import kmeans
 from botkop_telcotraffic_spark_spark.operators.window_stats import windowed_stats
 from botkop_telcotraffic_spark_spark.schemas import ATTACH_EVENT, CELLTOWER_EVENT
 from botkop_telcotraffic_spark_spark.streaming.json_stream import decode_json_stream
@@ -316,44 +314,29 @@ def test_fanout_writes_run_in_the_query_job_group(spark, fixtures, tmp_path):
     assert groups == dict.fromkeys(FOUR_SINKS, str(q.runId))
 
 
-def test_no_write_runs_under_model_sized_shuffles(spark, fixtures, tmp_path, monkeypatch):
-    """_model_sized_shuffles sets one shuffle partition and AQE off for
-    the whole session while it is open, so no write may run inside it:
-    every sink sees AQE on, and the block never opens once a sink has
-    started (the K-Means update closes it before any write starts).  The
-    sinks meet at a barrier so that none returns before all four have
-    started: a K-Means branch that trained on its own thread would open
-    the block while the other three wait there."""
-    real = kmeans._model_sized_shuffles
-    lock = threading.Lock()
-    seen = {"open": False, "entered": 0, "started": 0, "clashes": 0}
+def test_run_changes_no_session_conf(spark, fixtures, tmp_path, monkeypatch):
+    """A conf set inside a batch would reach every query planned on the
+    session meanwhile, the batch's own concurrent writes among them.
+    With all four topics wired (the K-Means update included), run()
+    makes no RuntimeConfig.set call while it processes the fixture
+    lines."""
+    from pyspark.sql.conf import RuntimeConfig
 
-    @contextlib.contextmanager
-    def flagged(s):
-        with real(s):
-            with lock:
-                seen["open"] = True
-                seen["entered"] += 1
-                seen["clashes"] += seen["started"]
-            try:
-                yield
-            finally:
-                seen["open"] = False
+    pipe = _pipeline_with(fixtures, dict.fromkeys(FOUR_SINKS, lambda df, bid: df.count()))
+    store = KeyedUpsertStore(
+        spark, str(tmp_path / "store"), key_col="bearerId", order_col="ts"
+    )
+    lines = fixture_lines(spark, fixtures)
+    real, calls = RuntimeConfig.set, []
 
-    monkeypatch.setattr(kmeans, "_model_sized_shuffles", flagged)
-    barrier = threading.Barrier(4, timeout=60)
+    def recording(self, key, value):
+        calls.append(key)
+        real(self, key, value)
 
-    def sink(df, bid):
-        with lock:
-            seen["started"] += 1
-            seen["clashes"] += seen["open"]
-        barrier.wait()
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-    pipe = _pipeline_with(fixtures, dict.fromkeys(FOUR_SINKS, sink))
-    pipe.process_batch(_fixture_batch(spark, fixtures, str(tmp_path / "store")), 0)
-    assert seen["entered"] >= 1
-    assert seen["clashes"] == 0
+    monkeypatch.setattr(RuntimeConfig, "set", recording)
+    pipe.run(lines, store, checkpoint=str(tmp_path / "ckpt"))
+    assert any(w > 0 for w in pipe.model.weights)  # the update ran
+    assert calls == []
 
 
 def test_streaming_batch_unification(spark):
@@ -832,10 +815,10 @@ def test_upsert_with_preread_cur_matches_plain_upsert(spark, tmp_path):
 def test_empty_upsert_does_not_create_store(spark, tmp_path):
     """A batch with no rows (the pipeline upserts every micro-batch,
     also those with no attach lines) must not commit a store with no
-    bucket: exists() stays false and a join drops every fact."""
+    snapshot: snapshot() stays None and a join drops every fact."""
     store = KeyedUpsertStore(spark, str(tmp_path / "store"), key_col="k", order_col="v")
     store.upsert(spark.createDataFrame([], "k bigint, v bigint"))
-    assert not store.exists()
+    assert store.snapshot() is None
     facts = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, x string")
     assert store.join(facts, fact_key="k").count() == 0
 
@@ -883,6 +866,21 @@ def test_geofence_sink_requires_geofence_path():
         metric_names=["rtt"], kmeans_dims=["rtt"], geofence_path="fences.json"
     )
     assert pipe.geofence_sink is None
+
+
+@pytest.mark.parametrize("dims, k", [([], 3), (["rtt"], 0)], ids=["no_dims", "k0"])
+def test_outlier_sink_requires_kmeans_dims_and_k(dims, k):
+    """A wired outlier sink needs at least one K-Means dimension and one
+    cluster: with no dimension the distance SQL has no term and the
+    first batch fails to resolve it, and with no cluster no point has a
+    centroid to be scored against.  Refused up front; unwired, the same
+    settings stay valid."""
+    with pytest.raises(ValueError, match="kmeans_dims"):
+        TrafficPipeline(
+            metric_names=["rtt"], kmeans_dims=dims, k=k,
+            outlier_sink=lambda df, bid: None,
+        )
+    assert TrafficPipeline(metric_names=["rtt"], kmeans_dims=dims, k=k).outlier_sink is None
 
 
 def test_read_geofences_refuses_duplicate_names(tmp_path):
