@@ -25,6 +25,7 @@ replicates that order.
 from __future__ import annotations
 
 import contextlib
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
@@ -270,7 +271,14 @@ class StreamingKMeans:
         oracle) otherwise compounds batch over batch; rounding the
         O(k·dim) state resets it each round, making the whole run
         hash-reproducible (the avg-round-9 convention of the batch
-        Lloyd oracle, applied to the streaming update rule)."""
+        Lloyd oracle, applied to the streaming update rule).
+
+        Raises ValueError on a ``decay`` that is negative or not
+        finite (MLlib's ``setDecayFactor`` rule): a negative weight
+        turns the update into an extrapolation, or a division by zero
+        where ``n + m = 0``."""
+        if not (math.isfinite(decay) and decay >= 0):
+            raise ValueError(f"decay must be finite and >= 0, got {decay!r}")
         self.k, self.dim, self.decay = k, dim, decay
         self.round_state = round_state
         self._seed = seed

@@ -11,6 +11,18 @@ count and file-split size are env-tunable so the same code runs on a
 1000-executor cluster (set ``spark.sql.shuffle.partitions`` ~ 2-3x
 total cores there; AQE coalesces small post-shuffle partitions at
 runtime either way).
+
+One static conf is sized to the streaming product rather than tuned:
+``spark.sql.codegen.cache.maxEntries`` = 1000.  Structured Streaming
+plans every micro-batch as a new batch job, so its generated classes
+are looked up again each batch in CodeGenerator's LRU cache (Spark's
+default holds 100).  A perfbench run needs 131 distinct classes on
+``attach_churn`` and 114 on ``ref_sliding``; at 100 entries every
+later batch recompiled 48-107 (``attach_churn``) or 18-45
+(``ref_sliding``) classes with unchanged source, paying a Janino
+compile and a fresh HotSpot JIT each time.  At 1000 a batch after the
+first compiles none.  Being static, it is set only where this module
+builds the session; ``tune`` cannot change it on a running one.
 """
 
 from __future__ import annotations
@@ -83,7 +95,13 @@ _TUNED_SESSIONS: "_weakref.WeakSet[SparkSession]" = _weakref.WeakSet()
 def tune(spark: SparkSession, force: bool = False) -> SparkSession:
     """Apply runtime-settable confs to an existing session (e.g. the
     correctness driver's).  Safe to call repeatedly; after the first
-    call per session it is a no-op unless ``force``."""
+    call per session it is a no-op unless ``force``.
+
+    A running session's static confs cannot change, so ``tune`` cannot
+    size the codegen cache: a session the host builds without
+    ``spark.sql.codegen.cache.maxEntries`` keeps Spark's 100 entries,
+    and the streaming product then recompiles classes on every
+    micro-batch (see ``get_spark``)."""
     if not force and spark in _TUNED_SESSIONS:
         return spark
     for k, v in RUNTIME_CONFS.items():
@@ -127,6 +145,9 @@ def get_spark(
         # idle-host run.
         .config("spark.python.authenticate.socketTimeout", "120s")
         .config("spark.ui.enabled", "false")
+        # Static, read when the JVM first generates code: the product's
+        # 114-131 classes with room to spare (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # Whole-stage codegen across many distinct queries in one JVM
         # fills the default 240 MB code cache; once full, HotSpot

@@ -321,7 +321,13 @@ class TrafficPipeline:
         saves its own state after the fan-out, so a batch replayed
         after a crash, or by a new pipeline on the same checkpoint,
         trains the model once.  With idempotent per-batch sinks the
-        topics then match a run with no crash byte for byte."""
+        topics then match a run with no crash byte for byte.
+
+        Each batch is planned anew; its generated classes stay compiled
+        only if the session's codegen cache holds them, as it does on a
+        ``session.get_spark`` session.  The cache size is a static conf
+        that ``tune()`` cannot set, so on a session the host builds it
+        keeps Spark's 100 entries and every batch recompiles classes."""
         state = os.path.join(checkpoint, "kmeans")
 
         def sink(batch: DataFrame, batch_id: int) -> None:

@@ -134,6 +134,19 @@ def test_streaming_kmeans_update_rule(spark):
     assert c0 != model.centroids[0]
 
 
+@pytest.mark.parametrize("decay", [-1.0, -1e-9, math.nan, math.inf])
+def test_streaming_kmeans_refuses_negative_or_non_finite_decay(decay):
+    """MLlib's setDecayFactor rule (a >= 0), finite: a negative weight
+    extrapolates the centroids or divides by zero at n + m = 0.  The
+    pipeline, which builds its model at construction, refuses it too."""
+    from botkop_telcotraffic_spark_spark.streaming.pipeline import TrafficPipeline
+
+    with pytest.raises(ValueError, match="decay"):
+        StreamingKMeans(k=1, dim=2, decay=decay)
+    with pytest.raises(ValueError, match="decay"):
+        TrafficPipeline(metric_names=["rtt"], kmeans_dims=["rtt"], decay=decay)
+
+
 def _kmeans_rule(cents, weights, points, decay):
     """Pure-Python model of one StreamingKMeans batch: nearest centroid
     (lowest id on a tie), then c' = (c*n*a + sum(x)) / (n*a + m) and

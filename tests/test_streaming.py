@@ -339,6 +339,44 @@ def test_run_changes_no_session_conf(spark, fixtures, tmp_path, monkeypatch):
     assert calls == []
 
 
+def test_steady_state_batch_compiles_no_classes(spark, fixtures, tmp_path):
+    """Each micro-batch is planned anew, but its generated classes are
+    the same as the last batch's: once the first batches have filled
+    the codegen cache, a batch compiles nothing.  All four topics are
+    wired through their payload builders to a text write; the counter
+    is Spark's own count of Janino compiles in this JVM.  With the
+    default 100-entry cache the working set does not fit, and every
+    batch recompiles classes it evicted."""
+    from botkop_telcotraffic_spark_spark.streaming import payloads as pay
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    fences = read_geofences(spark, fixtures["geo_path"])
+
+    def text_sink(topic, payload):
+        def sink(df, bid):
+            payload(df).write.mode("overwrite").text(str(tmp_path / topic / f"b{bid}"))
+
+        return sink
+
+    pipe = _pipeline_with(fixtures, {
+        "stats_sink": text_sink(
+            "celltower_stats", lambda df: pay.metric_stats_payload(df, "celltower")),
+        "subscriber_stats_sink": text_sink(
+            "subscriber_stats", lambda df: pay.metric_stats_payload(df, "subscriber")),
+        "geofence_sink": text_sink(
+            "geofence", lambda df: pay.geofence_payload(df, fences)),
+        "outlier_sink": text_sink("kmeans_points", pay.cluster_points_payload),
+        "publish_all_points": True,
+    })
+    store = str(tmp_path / "store")
+    per_batch = []
+    for bid in range(4):
+        before = compiles.METRIC_COMPILATION_TIME().getCount()
+        pipe.process_batch(_fixture_batch(spark, fixtures, store), bid)
+        per_batch.append(compiles.METRIC_COMPILATION_TIME().getCount() - before)
+    assert per_batch[2:] == [0, 0], per_batch
+
+
 def test_streaming_batch_unification(spark):
     """The same windowed_stats operator yields identical results as a
     streaming query (availableNow, complete mode) and a batch query —
