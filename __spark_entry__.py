@@ -27,6 +27,7 @@ from botkop_telcotraffic_spark_spark.operators import (
     graph,
     iqr,
     kmeans,
+    kmeans_batch,
     similarity,
     text,
     window_stats,
@@ -488,8 +489,10 @@ _RECT_FENCES_SQL = "(VALUES " + ", ".join(
 
 def geofence_rect_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 (simplified): broadcast range-containment spatial join."""
+    from botkop_telcotraffic_spark_spark.functions.geo import rect_geofence_join
+
     pts = _event_points(spark, sf_dir)
-    out = geofence.rect_geofence_join(pts, _rect_fences_df(spark))
+    out = rect_geofence_join(pts, _rect_fences_df(spark))
     return out.select("event_id", "user_id", "lat", "lng", "name")
 
 
@@ -997,7 +1000,7 @@ GROUP BY user_id, event_type
 
 
 def lloyd_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch Lloyd K-Means (iterative; operators/kmeans.py::lloyd_kmeans):
+    """Batch Lloyd K-Means (iterative; operators/kmeans_batch.py::lloyd_kmeans):
     8 clusters, 3 rounds over the embeddings table, then final
     assignments.  Oracled by _lloyd_sql(): the 3 fixed rounds from
     deterministic seeds unroll into one CTE per round exactly like
@@ -1008,8 +1011,8 @@ def lloyd_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # as_pairs: final assignment through assign()'s literal-centroid
     # fast path (identical doubles; deletes the collect_list agg +
-    # broadcast build sub-job — kmeans.lloyd_kmeans docstring)
-    cents = kmeans.lloyd_kmeans(
+    # broadcast build sub-job — kmeans_batch.lloyd_kmeans docstring)
+    cents = kmeans_batch.lloyd_kmeans(
         emb, "embedding", k=8, iterations=3, dim=64, as_pairs=True
     )
     assigned = kmeans.assign(
@@ -1023,7 +1026,7 @@ def lloyd_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lloyd_sql(iters: int = 3, k: int = 8, dim: int = 64) -> str:
     """Oracle twin of lloyd_kmeans_embeddings: the Lloyd loop unrolled
     into one CTE per round (the _pagerank_sql pattern).  Parity points
-    with operators/kmeans.py::lloyd_kmeans:
+    with operators/kmeans_batch.py::lloyd_kmeans:
       * seeding: k evenly-spaced rows of the DISTINCT lexicographically
         sorted vectors; the index formula round(i*(n-1)/(k-1))+1 is the
         same double expression both sides (ties-at-.5 are impossible for
@@ -1488,8 +1491,8 @@ def kmeans_label_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-Means predict/distance stage (ClusterAnalyser.scala:41-45
     parity) with deterministic per-label mean centroids."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans.label_centroids(emb, round_digits=9)
-    out = kmeans.assign(
+    cents = kmeans_batch.label_centroids(emb, round_digits=9)
+    out = kmeans_batch.assign_frame(
         emb.select("vec_id", "label", "embedding"),
         cents,
         vec_col="embedding",
@@ -1533,7 +1536,7 @@ def streaming_session_windows_users(spark: SparkSession, sf_dir: str) -> DataFra
     availableNow replay, complete mode — merging session state across
     micro-batches.  Shares the batch islands-SQL oracle (full
     value-hash check)."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -1564,7 +1567,7 @@ def streaming_click_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark eviction fires and the batch join SQL is the exact
     oracle.  Multi-batch watermark eviction is not covered by any
     test."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -1902,6 +1905,7 @@ def asof_click_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each error event, the user's latest click at or
     before it (operators/asof.py; DuckDB expresses this natively)."""
     from botkop_telcotraffic_spark_spark.operators.asof import asof_join
+    from botkop_telcotraffic_spark_spark.streaming.upsert_join import latest_per_key
 
     e = _t(spark, sf_dir, "events")
     errors = e.where(F.col("event_type") == "error").select(
@@ -1914,7 +1918,7 @@ def asof_click_before_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("click_event_id"),
     )
     # dedupe right per (key, ts) for determinism (ties -> max event_id)
-    clicks = enrich.latest_per_key(clicks, ["user_id", "click_ts"], ["click_event_id"])
+    clicks = latest_per_key(clicks, ["user_id", "click_ts"], ["click_event_id"])
     out = asof_join(
         errors, clicks, key="user_id", left_ts="ts", right_ts="click_ts",
         right_cols=["click_value"],
@@ -2192,7 +2196,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells (deterministic per-label mean centroids), queries probe the
     2 nearest cells (operators/similarity.py::ivf_topk)."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans.label_centroids(emb, round_digits=9)
+    cents = kmeans_batch.label_centroids(emb, round_digits=9)
     q = emb.where(F.col("vec_id") < 50)
     return similarity.ivf_topk(q, emb, cents, k=5, nprobe=2)
 
@@ -2367,7 +2371,7 @@ def streaming_stats_user_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame
     query (availableNow replay over the events table, memory sink) —
     byte-identical to the batch plan, hence shares the batch oracle.
     Demonstrates W1-W5 (micro-batch, windows, checkpoint, sink)."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -2383,13 +2387,13 @@ def streaming_stats_user_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame
 def streaming_running_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom keyed stateful operator via applyInPandasWithState:
     per-user running z-score anomaly flags with exact integer state
-    (streaming/stateful.py).  Prefix-window SQL reproduces the flags
+    (registry/stateful.py).  Prefix-window SQL reproduces the flags
     bit-exactly, so this streaming op gets the full value-hash check."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.stateful import (
+    from botkop_telcotraffic_spark_spark.registry.stateful import (
         running_zscore_anomalies,
     )
 
@@ -2531,9 +2535,9 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's headline anomaly pipeline (W6 + A4/A5/J2) as a
     foreachBatch streaming query: train-then-predict streaming K-Means
     on 2-D points, exact-IQR-flag by within-cluster distance per
-    batch, through the PRODUCTION sink path (idempotent per-batch
-    partition overwrite — streaming/pipeline.py::
-    idempotent_parquet_sink; executor-side write, no driver collect)
+    batch, through an idempotent per-batch sink (partition
+    overwrite — registry/runner.py::idempotent_parquet_sink;
+    executor-side write, no driver collect)
     with per-batch model-state snapshots (operators/kmeans.py::
     snapshot/align) so a killed-and-restarted query resumes training
     from committed state, exactly-once
@@ -2554,13 +2558,13 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator code hash-checkable."""
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.operators.iqr import with_iqr_fences
     from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import idempotent_parquet_sink
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
+        idempotent_parquet_sink,
         pinned_replay_source,
         replay_partitions,
     )
+    from botkop_telcotraffic_spark_spark.streaming.pipeline import with_iqr_fences
 
     tune(spark)
     n_batches = 5
@@ -2601,9 +2605,8 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # post-(batch_id-1) snapshot, score, overwrite this batch's
         # partition, THEN commit the post-batch snapshot — a replayed
         # batch recomputes identical output into the same directory
-        scored = model.exactly_once_batch(
-            df, batch_id, state_dir, vec_col="point"
-        )
+        model.align(state_dir, batch_id)
+        scored = model.update_and_assign(df, vec_col="point")
         fenced = with_iqr_fences(
             scored.select("event_id", "prediction", "distance"),
             "prediction",
@@ -2657,8 +2660,8 @@ def minibatch_kmeans_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     class as streaming_kmeans_outliers — which keeps consuming real
     micro-batches (rows-only by nature) — but with batch composition
     pinned so the DuckDB oracle can unroll the 5 update rounds as a
-    CTE chain (operators/kmeans.py::minibatch_kmeans)."""
-    from botkop_telcotraffic_spark_spark.operators.kmeans import (
+    CTE chain (operators/kmeans_batch.py::minibatch_kmeans)."""
+    from botkop_telcotraffic_spark_spark.operators.kmeans_batch import (
         minibatch_kmeans,
     )
 
@@ -3801,15 +3804,15 @@ FROM e
 
 def streaming_ewma_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed stateful streaming via applyInPandasWithState
-    (streaming/tws.py::running_ewma): per-user EWMA over (ts,
+    (registry/tws.py::running_ewma): per-user EWMA over (ts,
     event_id)-ordered values, an (n, ewma) state pair per user.  The
     deterministic fold lets the DuckDB oracle reproduce it with
     list_reduce."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import running_ewma
+    from botkop_telcotraffic_spark_spark.registry.tws import running_ewma
 
     tune(spark)
     stream = stream_parquet_table(spark, sf_dir, "events").select(
@@ -4358,7 +4361,7 @@ def streaming_upsert_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cassandra (TrafficStreamProcessor.scala:42,53), value-hash
     oracled."""
 
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         stream_parquet_table,
     )
     from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
@@ -4377,7 +4380,7 @@ def streaming_upsert_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     def batch_fn(df: DataFrame, batch_id: int) -> None:
         store.upsert(df.select("o_custkey", "o_orderkey", "o_totalprice"))
 
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         replay_partitions,
     )
 
@@ -4415,7 +4418,7 @@ def streaming_geofence_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the identical Catalyst expressions, so this shares the
     batch oracle (the reference runs exactly this as its second
     DStream pipeline, TrafficStreamProcessor.scala:39-47)."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -4680,16 +4683,16 @@ def streaming_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming content dedup (§2.12 dedup × §2.9 streaming):
     replay documents as a bounded stream and suppress identical-text
     re-deliveries with ``dropDuplicatesWithinWatermark`` on the md5
-    content hash (streaming/dedup_stream.py) — state is bounded by
+    content hash (registry/dedup_stream.py) — state is bounded by
     the watermark horizon, not stream lifetime.  The emitted
     projection is the content-hash set: WHICH physical row survives
     a duplicate group depends on micro-batch arrival order, but the
     hash set does not, so this streaming operator gets the full
     value-hash oracle."""
-    from botkop_telcotraffic_spark_spark.streaming.dedup_stream import (
+    from botkop_telcotraffic_spark_spark.registry.dedup_stream import (
         dedup_content_stream,
     )
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -5918,7 +5921,7 @@ FROM counts, tot
 def streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming leaderboard: per-user running (count, value-sum)
     held as applyInPandasWithState keyed state
-    (streaming/tws.py::running_keyed_counts), replayed availableNow,
+    (registry/tws.py::running_keyed_counts), replayed availableNow,
     then an exact top-20 cut over the final snapshot (count desc, id
     asc — deterministic ties).  State math is exact (int count) /
     round-stable (double sum at 6dp), so the batch oracle reproduces
@@ -5930,11 +5933,11 @@ def streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = 1.53–1.71 s (≤1.16× r3, within the ≤1.2× bar) — the
     in-sweep drift is shared-JVM aging of a 196-query sweep, not a
     regression in the state-store plan."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import running_keyed_counts
+    from botkop_telcotraffic_spark_spark.registry.tws import running_keyed_counts
 
     tune(spark)
     stream = stream_parquet_table(spark, sf_dir, "events").select(
@@ -6279,7 +6282,7 @@ GROUP BY c_mktsegment
 
 def streaming_idle_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time timeout sessionization
-    (streaming/tws.py::idle_sessions): per-user gap sessions (5 min)
+    (registry/tws.py::idle_sessions): per-user gap sessions (5 min)
     finalized by input-time splits plus a watermark-driven
     EventTimeTimeout; replayed availableNow.  Deterministic, so the oracle
     replays it relationally: classic lag/cumsum gap sessions, kept if
@@ -6290,15 +6293,15 @@ def streaming_idle_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay keeps the DEFAULT in-memory store — its key
     cardinality is bounded by the fixture.  Unbounded production
     keyspaces switch to RocksDB with ONE call
-    (session.enable_large_state, changelog checkpoints); that path is
+    (tws.enable_large_state, changelog checkpoints); that path is
     exercised by the restart-chaos tests, which all run under
     RocksDB.  Measured at sf0.1 (PROGRESS stream_knobs_r9): provider
     flip costs 0-27% on tiny replays, values identical."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import idle_sessions
+    from botkop_telcotraffic_spark_spark.registry.tws import idle_sessions
 
     tune(spark)
     stream = (
@@ -6343,15 +6346,15 @@ WHERE sid < max_sid OR last_ts + INTERVAL 5 MINUTE < w
 
 def streaming_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming counts by a secondary key
-    (streaming/tws.py::running_type_counts): per-(user, event type)
+    (registry/tws.py::running_type_counts): per-(user, event type)
     running counts held as one map<string,bigint> state per user —
     replayed availableNow; the final update-mode snapshot equals the
     batch group-by, which is the oracle."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import running_type_counts
+    from botkop_telcotraffic_spark_spark.registry.tws import running_type_counts
 
     tune(spark)
     stream = stream_parquet_table(spark, sf_dir, "events").select(
@@ -6369,18 +6372,18 @@ FROM events GROUP BY user_id, event_type
 
 
 def streaming_od_flows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OD flows (streaming/tws.py::handover_transitions):
+    """Streaming OD flows (registry/tws.py::handover_transitions):
     the stateful-streaming twin of od_flows_events — one last-cell
     state scalar per subscriber, transitions emitted exactly once across
     micro-batch boundaries, flows aggregated from the append sink.
     Same oracle as the batch twin (the flow matrix is
     arrival-order-invariant given per-key event-time ordering)."""
     from botkop_telcotraffic_spark_spark.functions.geo import geohash_sql
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         handover_transitions,
     )
 
@@ -6416,15 +6419,15 @@ def streaming_od_flows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_lastk_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed-state recent-history features
-    (streaming/tws.py::rolling_history_features): per event, the
+    (registry/tws.py::rolling_history_features): per event, the
     mean of the user's previous 3 observed values — bounded k-scalar
     state per key; the oracle is the exact ROWS-frame window over the non-null
     value stream."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         rolling_history_features,
     )
 
@@ -6863,7 +6866,7 @@ def silhouette_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans.label_centroids(emb, round_digits=9)
+    cents = kmeans_batch.label_centroids(emb, round_digits=9)
     return simplified_silhouette(emb, cents)
 
 
@@ -6901,7 +6904,7 @@ def davies_bouldin_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    cents = kmeans.label_centroids(emb, round_digits=9)
+    cents = kmeans_batch.label_centroids(emb, round_digits=9)
     return davies_bouldin(emb, cents)
 
 
@@ -8161,7 +8164,7 @@ def _fanout_replay_source(spark: SparkSession, sf_dir: str, nb: int) -> str:
     ntile(nb)-sliced over the total order (ts, event_id)."""
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         pinned_replay_source,
     )
 
@@ -8199,13 +8202,11 @@ def _run_fanout_family(spark: SparkSession, sf_dir: str) -> dict[str, str]:
 
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        TrafficPipeline,
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         idempotent_parquet_sink,
-    )
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
         replay_partitions,
     )
+    from botkop_telcotraffic_spark_spark.streaming.pipeline import TrafficPipeline
 
     nb = 5
     src_dir = _fanout_replay_source(spark, sf_dir, nb)
@@ -8692,11 +8693,11 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB twin unrolls the 4 store-growth rounds as a CTE chain."""
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.streaming.dedup_stream import (
+    from botkop_telcotraffic_spark_spark.registry.dedup_stream import (
         incremental_dedup_batch,
         minhash_bucket_keys,
     )
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         pinned_replay_source,
         replay_partitions,
     )
@@ -8809,7 +8810,7 @@ def streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors arrive as 4 replayed micro-batches (ntile over vec_id
     via the shared pinned_replay_source).
 
-    Per micro-batch b (streaming/ivf_stream.py::ivf_assign_batch):
+    Per micro-batch b (registry/ivf_stream.py::ivf_assign_batch):
     argmin-assign the new vectors to the FIXED centroids (broadcast
     nested-loop, no shuffle), upsert (vec_id, cell, ver=b+1) into the
     KeyedUpsertStore, and emit per-cell stats FROM THE STORE's
@@ -8829,15 +8830,13 @@ def streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     is never rescanned; stats/drift frames are #cells-sized."""
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.streaming.ivf_stream import (
+    from botkop_telcotraffic_spark_spark.registry.ivf_stream import (
         index_drift_report,
         ivf_assign_batch,
         ivf_assignments,
     )
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         idempotent_parquet_sink,
-    )
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
         pinned_replay_source,
         replay_partitions,
     )
@@ -8864,7 +8863,7 @@ def streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast build sub-job (operators/kmeans.py::assign docstring)
     # with identical doubles.
     def _build_seed(st):
-        cents_df = kmeans.label_centroids(seed, round_digits=9).localCheckpoint()
+        cents_df = kmeans_batch.label_centroids(seed, round_digits=9).localCheckpoint()
         seed_asg = ivf_assignments(seed, cents_df).localCheckpoint()
         st.upsert(seed_asg.withColumn("ver", F.lit(0)))
         cell_rows = (
@@ -8937,7 +8936,7 @@ def _stream_ivf_sql(nb: int = 4) -> str:
     (cell, added-by-batch ab) with ab=0 for the seed, then per-batch
     counts over ``ab <= b``."""
     e2 = _EUCLID2_SQL.format(a="e.embedding", b="c.centroid")
-    from botkop_telcotraffic_spark_spark.streaming.ivf_stream import (
+    from botkop_telcotraffic_spark_spark.registry.ivf_stream import (
         DRIFT_RETRAIN_THRESHOLD,
     )
 
@@ -9040,7 +9039,7 @@ def streaming_late_data_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     with window end <= wm_nb."""
     from pyspark.sql import Window
 
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         pinned_replay_source,
         run_to_memory,
     )
@@ -9139,16 +9138,16 @@ GROUP BY 1, 2""")
 
 def streaming_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming near-dup bucket claims (§2.12 dedup × §2.9
-    streaming; streaming/dedup_stream.py::simhash_bucket_claims_stream):
+    streaming; registry/dedup_stream.py::simhash_bucket_claims_stream):
     documents replayed as a bounded stream claim their 4 SimHash band
     buckets; first arrival per bucket wins within the watermark
     horizon.  The claimed-bucket SET is arrival-order-independent, so
     this streaming operator gets the full value-hash oracle (the
     batch band projection of the same signatures)."""
-    from botkop_telcotraffic_spark_spark.streaming.dedup_stream import (
+    from botkop_telcotraffic_spark_spark.registry.dedup_stream import (
         simhash_bucket_claims_stream,
     )
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -9611,7 +9610,7 @@ def streaming_window_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop it — caught in review).  The baseline is the whole corpus,
     so its support is a superset of every window's.  Rounded to 6;
     deterministic, full value-hash oracle."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
@@ -11810,7 +11809,7 @@ FROM b GROUP BY 1, 2
 
 
 def streaming_pingpong_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ping-pong detection (streaming/tws.py::
+    """Streaming ping-pong detection (registry/tws.py::
     pingpong_bounces): the stateful-streaming twin of
     pingpong_cells_events — four scalars of keyed state per
     subscriber (last two fixes), bounces emitted exactly once even
@@ -11819,11 +11818,11 @@ def streaming_pingpong_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the pair matrix is arrival-order-invariant given per-key
     event-time ordering)."""
     from botkop_telcotraffic_spark_spark.functions.geo import geohash_sql
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         pingpong_bounces,
     )
 
@@ -13098,7 +13097,7 @@ FROM g WHERE k >= 2 AND nt > k
 
 
 def streaming_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming time-to-convert (streaming/tws.py::
+    """Streaming time-to-convert (registry/tws.py::
     conversion_lags): the stateful-streaming twin of
     conversion_lag_users — two scalars of keyed state per user
     (first-click micros + done flag), the lag emitted exactly once
@@ -13106,11 +13105,11 @@ def streaming_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated from the append sink.  Same oracle as the batch twin
     (first-to-first-after is arrival-order-invariant given per-key
     event-time ordering)."""
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
         stream_parquet_table,
     )
-    from botkop_telcotraffic_spark_spark.streaming.tws import conversion_lags
+    from botkop_telcotraffic_spark_spark.registry.tws import conversion_lags
 
     tune(spark)
     stream = stream_parquet_table(spark, sf_dir, "events").select(
@@ -13341,6 +13340,10 @@ def anomaly_ensemble_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine to ~1e8 values/group; the 100 TB path swaps in the approx
     sketch detectors."""
     from botkop_telcotraffic_spark_spark.operators import iqr as _iqr
+    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
+        DOUBLE_MAX,
+        DOUBLE_MIN,
+    )
 
     e = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
     v = F.col("value").cast("double")
@@ -13391,10 +13394,10 @@ def anomaly_ensemble_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_sd",
         "_med",
         "_mad",
-        F.when(degen, F.lit(_iqr.DOUBLE_MIN))
+        F.when(degen, F.lit(DOUBLE_MIN))
         .otherwise(q1 - 1.5 * iqr)
         .alias("lo"),
-        F.when(degen, F.lit(_iqr.DOUBLE_MAX))
+        F.when(degen, F.lit(DOUBLE_MAX))
         .otherwise(q3 + 1.5 * iqr)
         .alias("hi"),
     )  # _sv dropped HERE: the broadcast ships 5 doubles per type
@@ -14232,10 +14235,8 @@ def streaming_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the plain batch HLL — the sketch-family answer to "distinct
     users so far" that never reshuffles raw events."""
     from botkop_telcotraffic_spark_spark.operators import sketch
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         idempotent_parquet_sink,
-    )
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
         replay_partitions,
         stream_parquet_table,
     )

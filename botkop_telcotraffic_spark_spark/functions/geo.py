@@ -1,93 +1,35 @@
-"""Geospatial predicates as pure JVM column expressions.
+"""Geospatial helpers of the query registry.
 
-The reference calls an external library for point-in-polygon
-(``GeoUtil.containsLocation`` at
-``/root/reference/src/main/scala/traffic/process/Geofencer.scala:30``).
-Here the standard even-odd ray-casting test runs as JVM expressions —
-no Python, no UDF — in two forms: ``point_in_polygon`` over a polygon
-COLUMN (Catalyst higher-order functions, ``filter`` over the edge
-indices), and ``point_in_polygon_literal`` for a plan-time constant
-polygon, unrolled into one SQL expression that stays inside
-whole-stage codegen.  The streaming geofence (J3) uses the literal
-form: there is no join, so no side is hashed or broadcast; the fence
-list rides in the projection as constants.
-
-Edge cases: horizontal edges (y_i == y_j) make the crossing test's
-first conjunct false, so the division-by-zero branch is never *used*;
-Spark yields ±Infinity and DuckDB yields NULL for x/0.0, and both
-collapse to false under ``AND false`` — semantics agree.
+``geohash_sql`` emits the standard base32 geohash as one arithmetic
+expression for Spark or DuckDB; ``rect_geofence_join`` matches points
+against a table of axis-aligned rectangles.  The streaming product's
+polygon containment (``point_in_polygon_literal``,
+``polygon_geofence_join``) is ``operators/geofence.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sqlfn import sql_double
 
+def rect_geofence_join(
+    points: DataFrame,
+    fences: DataFrame,
+    x_col: str = "lng",
+    y_col: str = "lat",
+) -> DataFrame:
+    """Axis-aligned rectangle containment join: a broadcast cross
+    join, the fence table being the broadcast side.
 
-def point_in_polygon(
-    px: Column,
-    py: Column,
-    polygon: Column,
-    x_field: str = "lng",
-    y_field: str = "lat",
-) -> Column:
-    """Even-odd ray-casting containment.
-
-    ``polygon`` is ``array<struct<lat:double, lng:double>>`` (field
-    names configurable).  Returns a boolean column: true iff point
-    (px, py) is inside.  Vertices are not required to repeat the first
-    point; edges wrap around via modular indexing.
+    ``fences`` columns: name, lat_min, lat_max, lng_min, lng_max.
+    Inner semantics (non-matching points dropped), like the reference.
     """
-    n = F.size(polygon)
-
-    def crossing(i: Column) -> Column:
-        vi = F.element_at(polygon, i + 1)
-        vj = F.element_at(polygon, F.pmod(i + 1, n) + 1)
-        xi, yi = vi[x_field], vi[y_field]
-        xj, yj = vj[x_field], vj[y_field]
-        return ((yi > py) != (yj > py)) & (
-            px < (xj - xi) * (py - yi) / (yj - yi) + xi
-        )
-
-    crossings = F.filter(F.sequence(F.lit(0), n - 1), crossing)
-    return F.size(crossings) % 2 == 1
-
-
-def point_in_polygon_literal(
-    px: str, py: str, vertices: list[tuple[float, float]]
-) -> str:
-    """Ray casting against a *plan-time constant* polygon, unrolled
-    into ONE SQL expression: one crossing term per edge, parity via
-    sum % 2.  ``px``/``py`` are SQL expressions; ``vertices`` is
-    [(x, y), ...] in the same axis order.  No higher-order functions,
-    so it stays inside whole-stage codegen (~20x faster per row than
-    the generic HOF variant), and as text it costs one JVM parse
-    instead of a Py4J round-trip per Column node.
-
-    Each term computes ``(xj - xi) * (py - yi) / (yj - yi) + xi`` in
-    that order, with ``xj - xi`` and ``yj - yi`` folded in Python:
-    the hits are bit-identical to a Python ray cast with the same
-    operations.  Coordinates go in through ``sql_double`` (NaN/±Inf
-    raise ValueError).
-    """
-    n = len(vertices)
-    terms = []
-    for i in range(n):
-        xi, yi = vertices[i]
-        xj, yj = vertices[(i + 1) % n]
-        if yi == yj:
-            continue  # horizontal edge can never satisfy the crossing test
-        sxi, syi, syj = sql_double(xi), sql_double(yi), sql_double(yj)
-        terms.append(
-            f"CAST((({syi} > {py}) != ({syj} > {py})) AND ({px} < "
-            f"({py} - {syi}) * {sql_double(xj - xi)} / {sql_double(yj - yi)}"
-            f" + {sxi}) AS INT)"
-        )
-    if not terms:
-        return "false"
-    return f"(({' + '.join(terms)}) % 2 = 1)"
+    cond = (
+        F.col(y_col).between(F.col("lat_min"), F.col("lat_max"))
+        & F.col(x_col).between(F.col("lng_min"), F.col("lng_max"))
+    )
+    return points.crossJoin(F.broadcast(fences)).where(cond)
 
 
 GEOHASH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"

@@ -10,6 +10,10 @@ Determinism note: ``F.aggregate`` is a *sequential left fold* over the
 array, so the floating-point summation order is fixed (index order).
 The DuckDB oracle uses ``list_reduce`` (also a left fold) so both
 engines produce bit-identical doubles.
+
+These serve the query registry.  The streaming product's distance,
+the SQL-text ``euclidean_sql`` and ``euclidean_unrolled_sql``, lives
+with its one caller in ``operators/kmeans.py``.
 """
 
 from __future__ import annotations
@@ -63,34 +67,6 @@ def norm_sql(a: str) -> str:
 def cosine_sql(a: str, b: str) -> str:
     """SQL-string twin of :func:`cosine`."""
     return f"({dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)}))"
-
-
-def euclidean_sql(a: str, b: str) -> str:
-    """SQL-string twin of :func:`euclidean` (r13: one JVM parse
-    instead of ~10 Py4J Column constructions per call — the
-    construction route changes, the parsed expression tree and the
-    doubles it produces do not: same zip_with + left-fold aggregate,
-    same cast/multiply order)."""
-    return (
-        f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> "
-        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, "
-        "(acc, x) -> acc + x))"
-    )
-
-
-def euclidean_unrolled_sql(a: str, b: str, dim: int) -> str:
-    """SQL-string twin of :func:`euclidean_unrolled` — identical
-    left-associated term order, so the summed doubles are
-    bit-identical; only the construction route (one parse vs
-    4*dim Py4J round-trips) differs."""
-    terms = None
-    for i in range(1, dim + 1):
-        x = f"CAST(element_at({a}, {i}) AS DOUBLE)"
-        y = f"CAST(element_at({b}, {i}) AS DOUBLE)"
-        t = f"(({x} - {y}) * ({x} - {y}))"
-        terms = t if terms is None else f"({terms} + {t})"
-    return f"sqrt({terms})"
 
 
 def euclidean_unrolled(a: Column, b: Column, dim: int) -> Column:

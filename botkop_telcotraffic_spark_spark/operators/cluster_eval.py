@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import euclidean_sql
+from .kmeans import euclidean_sql
 
 
 def _point_centroid_dists(

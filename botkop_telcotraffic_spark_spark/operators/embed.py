@@ -293,7 +293,7 @@ def pq_codes(
     literature): split each vector into ``m`` subvectors, train an
     independent ``codebook_k``-centroid codebook per subspace (batch
     Lloyd, deterministic data-spread seeding —
-    ``kmeans.lloyd_kmeans``), and encode every vector as ``m`` small
+    ``kmeans_batch.lloyd_kmeans``), and encode every vector as ``m`` small
     codes — log2(k)·m bits/vector (8 bytes -> 2 for 64 dims at
     m=4, k=16) with far lower reconstruction error than scalar
     quantization at the same budget.
@@ -472,7 +472,7 @@ def pq_codes(
     # (kmeans.assign semantics: array_position first-occurrence over
     # the id-sorted array = lowest-id tiebreak, matching the oracle's
     # ORDER BY dist, prediction).
-    from ..functions.vector import euclidean_sql
+    from .kmeans import euclidean_sql
 
     combined = spark.createDataFrame(
         [tuple([(i, c) for i, c in enumerate(cents[s])] for s in range(m))],

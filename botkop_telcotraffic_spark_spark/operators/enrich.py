@@ -11,8 +11,9 @@ the reference's inner ``joinWithCassandraTable``.
 Scale notes: the latest-per-key reduction is ``max_by`` (one partial
 + final agg, no sort, no window-function shuffle-sort); the join is a
 plain equi-join Catalyst can broadcast (dim small) or sort-merge with
-AQE skew handling (dim large).  The streaming version keeps the dim
-as a compacted keyed store updated in foreachBatch — see
+AQE skew handling (dim large).  The streaming product keeps the dim
+as a compacted keyed store updated in foreachBatch, and
+``latest_per_key`` is that store's merge rule — see
 streaming/upsert_join.py.
 """
 
@@ -21,23 +22,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-
-def latest_per_key(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    order_cols: Sequence[str],
-) -> DataFrame:
-    """One row per key: the row with the max (order_cols...) tuple.
-
-    Implemented with ``max_by`` over a struct so ties break
-    deterministically on the later order columns.
-    """
-    ordk = F.struct(*[F.col(c) for c in order_cols])
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    latest = df.groupBy(*key_cols).agg(F.max_by(payload, ordk).alias("_r"))
-    return latest.select("_r.*")
+from ..streaming.upsert_join import latest_per_key
 
 
 def enrich_latest(

@@ -2,12 +2,12 @@
 
 The reference flatMaps every event against an executor-local list of
 polygons with an external point-in-polygon helper
-(``Geofencer.scala:27-31``).  Here ``polygon_geofence_join`` unrolls
-that driver-local fence list into ONE literal ray-casting SQL
-expression, so containment is one codegen'd scan with array/explode:
-no join, so nothing is hashed or broadcast, and no driver job.
-``rect_geofence_join`` matches a table of rectangles through a
-broadcast cross join (the fence table is the broadcast side).
+(``GeoUtil.containsLocation``, ``Geofencer.scala:27-31``).  Here
+``polygon_geofence_join`` unrolls that driver-local fence list into
+ONE literal ray-casting SQL expression (``point_in_polygon_literal``,
+the standard even-odd test), so containment is one codegen'd scan
+with array/explode: no join, so nothing is hashed or broadcast, and
+no driver job.
 
 Scale notes: geofence sets are small (dozens-thousands of polygons)
 and the scan is embarrassingly partition-parallel on the points side.
@@ -23,30 +23,49 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geo import point_in_polygon_literal
-from ..functions.sqlfn import sql_ident
+from ..functions.sqlfn import sql_double, sql_ident
 
 # (name, [(lat, lng), ...]) — a driver-local fence list, the
 # reference's own representation (Geofencer.scala:18)
 FenceList = Sequence[tuple[str, Sequence[tuple[float, float]]]]
 
 
-def rect_geofence_join(
-    points: DataFrame,
-    fences: DataFrame,
-    x_col: str = "lng",
-    y_col: str = "lat",
-) -> DataFrame:
-    """Axis-aligned rectangle containment join.
+def point_in_polygon_literal(
+    px: str, py: str, vertices: list[tuple[float, float]]
+) -> str:
+    """Ray casting against a *plan-time constant* polygon, unrolled
+    into ONE SQL expression: one crossing term per edge, parity via
+    sum % 2.  ``px``/``py`` are SQL expressions; ``vertices`` is
+    [(x, y), ...] in the same axis order, not repeating the first
+    vertex (the last edge wraps around).  No higher-order functions,
+    so it stays inside whole-stage codegen (~20x faster per row than
+    a higher-order test over a polygon column), and as text it costs
+    one JVM parse instead of a Py4J round-trip per Column node.
+    A horizontal edge (y_i == y_j) can never satisfy the crossing
+    test, so it gets no term.
 
-    ``fences`` columns: name, lat_min, lat_max, lng_min, lng_max.
-    Inner semantics (non-matching points dropped), like the reference.
+    Each term computes ``(xj - xi) * (py - yi) / (yj - yi) + xi`` in
+    that order, with ``xj - xi`` and ``yj - yi`` folded in Python:
+    the hits are bit-identical to a Python ray cast with the same
+    operations.  Coordinates go in through ``sql_double`` (NaN/±Inf
+    raise ValueError).
     """
-    cond = (
-        F.col(y_col).between(F.col("lat_min"), F.col("lat_max"))
-        & F.col(x_col).between(F.col("lng_min"), F.col("lng_max"))
-    )
-    return points.crossJoin(F.broadcast(fences)).where(cond)
+    n = len(vertices)
+    terms = []
+    for i in range(n):
+        xi, yi = vertices[i]
+        xj, yj = vertices[(i + 1) % n]
+        if yi == yj:
+            continue  # horizontal edge can never satisfy the crossing test
+        sxi, syi, syj = sql_double(xi), sql_double(yi), sql_double(yj)
+        terms.append(
+            f"CAST((({syi} > {py}) != ({syj} > {py})) AND ({px} < "
+            f"({py} - {syi}) * {sql_double(xj - xi)} / {sql_double(yj - yi)}"
+            f" + {sxi}) AS INT)"
+        )
+    if not terms:
+        return "false"
+    return f"(({' + '.join(terms)}) % 2 = 1)"
 
 
 def polygon_geofence_join(

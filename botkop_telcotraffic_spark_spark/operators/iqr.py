@@ -17,6 +17,10 @@ Two modes:
 The threshold join-back (reference J2, a per-window hash join on the
 group key) is a broadcast-friendly equi-join here: the threshold side
 has one row per group, so AQE/broadcast makes it shuffle-free.
+
+These serve the query registry.  The streaming product's fences,
+``with_iqr_fences``, sit next to their one caller in
+``streaming/pipeline.py``.
 """
 
 from __future__ import annotations
@@ -26,8 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DOUBLE_MIN = -1.7976931348623157e308
-DOUBLE_MAX = 1.7976931348623157e308
+from ..streaming.pipeline import DOUBLE_MAX, DOUBLE_MIN
 
 # Ceiling for exact-mode per-group sorted lists (round-8 verdict
 # #6): ~1e8 doubles ≈ 800 MB of raw values per group — the documented
@@ -107,41 +110,6 @@ def iqr_bounds(
         "hi", F.when(degenerate, F.lit(DOUBLE_MAX)).otherwise(F.col("q3") + 1.5 * iqr)
     )
     return g.select(*key_cols, "n", "q1", "q3", "lo", "hi")
-
-
-def with_iqr_fences(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """``df`` plus its key's exact IQR fences ``lo`` and ``hi`` (the
-    exact mode above: q1 = sorted[n DIV 4], q3 = sorted[3n DIV 4]
-    0-based, 1.5·IQR, ±DBL_MAX at n <= 4), as SCALAR window
-    expressions over ``key_col`` instead of an aggregate + broadcast
-    join-back: fence and filter run in the caller's job on one
-    key_col shuffle + sort, with no broadcast-build sub-job.  The
-    order statistic at index i is picked by row_number == i, never by
-    indexing a collect_list window column — an array-valued window
-    value is copied into every row's buffer (O(rows × group) bytes).
-    Built as SQL strings (parsed once JVM-side); ``1.5D`` because a
-    bare ``1.5`` parses as DECIMAL."""
-    part = f"PARTITION BY `{key_col}`"
-
-    def q(idx: str) -> str:
-        return (
-            f"MAX(CASE WHEN _rn = CAST(FLOOR({idx}) + 1 AS INT)"
-            f" THEN `{value_col}` END) OVER ({part})"
-        )
-
-    q1, q3 = q("_n / 4"), q("_n * 3 / 4")
-    cols = [f"`{c}`" for c in df.columns]
-    return df.selectExpr(
-        *cols,
-        f"row_number() OVER ({part} ORDER BY `{value_col}`) AS _rn",
-        f"count(1) OVER ({part}) AS _n",
-    ).selectExpr(
-        *cols,
-        f"CASE WHEN _n <= 4 THEN {DOUBLE_MIN!r}D"
-        f" ELSE {q1} - 1.5D * ({q3} - {q1}) END AS lo",
-        f"CASE WHEN _n <= 4 THEN {DOUBLE_MAX!r}D"
-        f" ELSE {q3} + 1.5D * ({q3} - {q1}) END AS hi",
-    )
 
 
 def iqr_outliers(

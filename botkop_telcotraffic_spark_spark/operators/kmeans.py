@@ -1,12 +1,7 @@
-"""K-Means operators (reference W6/A4/A5 pipeline, SURVEY.md §2.9).
+"""The streaming product's K-Means (reference W6/A4/A5, SURVEY.md §2.9).
 
-Batch surface: ``label_centroids`` + ``assign`` reproduce the
-predict/distance stage (``ClusterAnalyser.scala:41-45``) as pure
-DataFrame ops — centroids are a tiny DataFrame broadcast into a
-nested-loop argmin, all codegen'd.
-
-Streaming surface: ``StreamingKMeans`` implements the published
-mini-batch update rule the reference gets from Spark 1.6 MLlib
+``StreamingKMeans`` implements the published mini-batch update rule
+the reference gets from Spark 1.6 MLlib
 (``ClusterAnalyser.scala:15-19,33``):
 
     c' = (c * n * a + x_sum * m) / (n * a + m)
@@ -19,12 +14,17 @@ assignment + one global aggregate that returns one row of k x (dim
 + 1) conditional sums — no keyed exchange, no session conf change,
 no collect of raw points.  The reference trains on a batch *then*
 predicts the same batch with the updated model; ``update_and_assign``
-replicates that order.
+replicates that order.  ``assign`` is the predict/distance stage
+(``ClusterAnalyser.scala:41-45``) against the model's driver-held
+centroids.
+
+The registry's batch K-Means (Lloyd, the mini-batch twin, label
+centroids, assignment against a centroid DataFrame) builds on this
+module from ``operators/kmeans_batch.py``.
 """
 
 from __future__ import annotations
 
-import contextlib
 import math
 from collections.abc import Sequence
 
@@ -32,46 +32,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-@contextlib.contextmanager
-def _model_sized_shuffles(spark):
-    """Pin shuffle width to 1 and switch AQE off for a block whose
-    only shuffles are MODEL-sized (bounded at k or k x dim grouped
-    rows — set by the model, not the data; guide §2.2).  One reduce
-    partition is scale-correct at any input size because map-side
-    partial aggregation bounds what reaches it at (#map tasks) x k
-    (x dim) partial rows, and AQE cannot improve a plan that is
-    already one 1-partition shuffle — its per-stage re-optimization
-    was pure driver overhead here (measured ~1 s/round on the Lloyd
-    loop).  Same set/restore pattern as
-    streaming/runner.py::replay_partitions.
+def euclidean_sql(a: str, b: str) -> str:
+    """SQL-text twin of ``functions/vector.py::euclidean``
+    (ClusterAnalyser.scala:186-188): one JVM parse instead of ~10
+    Py4J Column constructions, with the same left fold, casts and
+    multiply order, so the doubles are bit-identical."""
+    return (
+        f"sqrt(aggregate(zip_with({a}, {b}, (x, y) -> "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), 0.0D, "
+        "(acc, x) -> acc + x))"
+    )
 
-    The two confs are SESSION-WIDE: the block assumes no other query
-    runs on the session while it is open (a concurrent query would
-    plan with one shuffle partition and AQE off too), and EVERY
-    exchange planned inside it is affected, including data-sized
-    shuffles in the lineage of the caller's input frame (an upstream
-    join or aggregate is forced to one partition).  Callers should
-    pass a frame whose lineage has no data-sized shuffle.  Its one
-    caller is the batch ``lloyd_kmeans`` loop; the streaming update
-    (``StreamingKMeans.update``) needs no keyed exchange and so no
-    conf change."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        if int(prev_parts) > 1:
-            spark.conf.set("spark.sql.shuffle.partitions", "1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
-from ..functions.vector import (
-    euclidean,
-    euclidean_sql,
-    euclidean_unrolled,
-    euclidean_unrolled_sql,
-)
+def euclidean_unrolled_sql(a: str, b: str, dim: int) -> str:
+    """SQL-text twin of ``functions/vector.py::euclidean_unrolled``:
+    the same left-associated term order, so the summed doubles are
+    bit-identical to the fold."""
+    terms = None
+    for i in range(1, dim + 1):
+        x = f"CAST(element_at({a}, {i}) AS DOUBLE)"
+        y = f"CAST(element_at({b}, {i}) AS DOUBLE)"
+        t = f"(({x} - {y}) * ({x} - {y}))"
+        terms = t if terms is None else f"({terms} + {t})"
+    return f"sqrt({terms})"
+
 
 # Unroll the fixed-width distance only while the generated code stays
 # compilable: measured crossover — dim=2 unrolled ~2x faster (HOF
@@ -82,22 +67,22 @@ _UNROLL_MAX_DIM = 16
 
 def assign(
     points: DataFrame,
-    centroids: DataFrame,
+    centroids: Sequence[tuple[int, Sequence[float]]],
     vec_col: str = "point",
-    centroid_vec_col: str = "centroid",
-    centroid_id_col: str = "prediction",
     dim: int | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment: adds prediction, centroid,
-    distance columns.
+    """Nearest-centroid assignment against a driver-side sequence of
+    (id, vector) pairs: adds prediction, centroid, distance columns.
 
-    Physical shape: the k centroids collapse into ONE array row
-    (collect_list) broadcast onto every point; the argmin is a
-    scan-side fold over that array — no shuffle, no per-row synthetic
-    id, no join-back.  (An earlier formulation keyed an argmin
-    groupBy on monotonically_increasing_id(); nondeterministic ids
-    evaluated in two plan branches silently mis-join once the scan
-    is multi-partition — never key on nondeterministic ids.)
+    Physical shape: the k*dim centroid doubles inline in the
+    projection as literals, and the argmin is a scan-side fold over
+    that literal array — no aggregate subtree, no broadcast exchange
+    and no per-batch build sub-job (the dominant fixed cost of a tiny
+    foreachBatch job), no shuffle, no per-row synthetic id.  (An
+    earlier formulation keyed an argmin groupBy on
+    monotonically_increasing_id(); nondeterministic ids evaluated in
+    two plan branches silently mis-join once the scan is
+    multi-partition — never key on nondeterministic ids.)
 
     Cost: exactly k distance evaluations per point (one transform
     over the centroid array, materialized once), then an O(k) scalar
@@ -108,139 +93,64 @@ def assign(
 
     ``dim``: when the vector width is statically known AND small
     (<= _UNROLL_MAX_DIM), the per-centroid distance uses the UNROLLED
-    codegen form (functions/vector.py::euclidean_unrolled —
-    bit-identical, but compiled instead of the interpreted HOF fold,
-    which costs ~1 s per 20k-row batch at k=3 on the streaming
-    replay hot path).  Wide vectors keep the fold: a 64-wide unroll
-    inside the k-element transform lambda blows past Janino's
-    codegen budget and falls back to interpreted eval of a huge tree
-    (measured ~2x SLOWER than the fold at dim=64) — unrolling only
-    pays while the expression stays compilable.
+    codegen form (``euclidean_unrolled_sql`` — bit-identical, but
+    compiled instead of the interpreted HOF fold, which costs ~1 s
+    per 20k-row batch at k=3 on the streaming replay hot path).
+    Wide vectors keep the fold: a 64-wide unroll inside the
+    k-element transform lambda blows past Janino's codegen budget and
+    falls back to interpreted eval of a huge tree (measured ~2x
+    SLOWER than the fold at dim=64) — unrolling only pays while the
+    expression stays compilable.
 
-    ``centroids`` may be a DataFrame (the general path: agg to one
-    array row, broadcast) OR a driver-side sequence of (id, vector)
-    pairs — the streaming-model fast path: k*dim literal doubles
-    inline in the projection, which deletes the aggregate subtree,
-    the broadcast exchange, AND its per-batch build sub-job (the
-    dominant fixed cost of a tiny foreachBatch job).  Values and
-    argmin tiebreak are identical either way.
+    ``operators/kmeans_batch.py::assign_frame`` takes the centroids
+    as a DataFrame instead, with identical values and tiebreak.
     """
     unroll = dim is not None and dim <= _UNROLL_MAX_DIM
-    if not isinstance(centroids, DataFrame):
-        # literal path: tiny (k x dim) constant — safe as a literal
-        # (the F.lit-per-row cost note applies to KB-sized literals,
-        # not 6 doubles); sorted by id to keep the argmin tiebreak.
-        # Built as ONE SQL string, not k*dim nested F.lit Columns:
-        # each Column node costs a Py4J round-trip at DataFrame build
-        # time (k=8 x dim=64 = 512 round-trips ~ seconds per build,
-        # and the driver/bench rebuild the frame per run).  repr() of
-        # a Python float is the shortest exact decimal and Java's
-        # Double.parseDouble is correctly rounded, so the 'D'-suffixed
-        # literal reproduces the identical double bit-for-bit.
-        # r13: the WHOLE three-stage chain is selectExpr SQL strings —
-        # this runs once per micro-batch on the streaming hot paths
-        # and per round in lloyd/minibatch loops, where the ~40 Py4J
-        # Column constructions per build were the measured dominant
-        # cost (~0.1 s/batch); the parsed expression tree, and so the
-        # doubles and the argmin tiebreak, are identical.
-        cents_sql = "array({})".format(
-            ", ".join(
-                "named_struct('id', {}, 'vec', array({}))".format(
-                    int(i), ", ".join(f"{float(x)!r}D" for x in vec)
-                )
-                for i, vec in sorted(centroids)
+    # tiny (k x dim) constant — safe as a literal (the F.lit-per-row
+    # cost note applies to KB-sized literals, not 6 doubles); sorted
+    # by id to keep the argmin tiebreak.  Built as ONE SQL string, not
+    # k*dim nested F.lit Columns: each Column node costs a Py4J
+    # round-trip at DataFrame build time (k=8 x dim=64 = 512
+    # round-trips ~ seconds per build, and the driver/bench rebuild
+    # the frame per run).  repr() of a Python float is the shortest
+    # exact decimal and Java's Double.parseDouble is correctly
+    # rounded, so the 'D'-suffixed literal reproduces the identical
+    # double bit-for-bit.  r13: the WHOLE three-stage chain is
+    # selectExpr SQL strings — this runs once per micro-batch on the
+    # streaming hot paths and per round in lloyd/minibatch loops,
+    # where the ~40 Py4J Column constructions per build were the
+    # measured dominant cost (~0.1 s/batch); the parsed expression
+    # tree, and so the doubles and the argmin tiebreak, are identical.
+    cents_sql = "array({})".format(
+        ", ".join(
+            "named_struct('id', {}, 'vec', array({}))".format(
+                int(i), ", ".join(f"{float(x)!r}D" for x in vec)
             )
+            for i, vec in sorted(centroids)
         )
-        dist_sql = (
-            euclidean_unrolled_sql(f"`{vec_col}`", "c.vec", dim)
-            if unroll
-            else euclidean_sql(f"`{vec_col}`", "c.vec")
-        )
-        cols = [f"`{c}`" for c in points.columns]
-        with_d = points.selectExpr(
-            *cols,
-            f"{cents_sql} AS _cents",
-            f"transform({cents_sql}, c -> {dist_sql}) AS _d",
-        )
-        with_best = with_d.selectExpr(
-            *cols,
-            "element_at(_cents, CAST(array_position(_d, array_min(_d))"
-            " AS INT)) AS _b",
-            "array_min(_d) AS distance",
-        )
-        return with_best.selectExpr(
-            *cols,
-            "_b.id AS prediction",
-            "_b.vec AS centroid",
-            "distance",
-        )
-
-    dist = (
-        (lambda p, c: euclidean_unrolled(p, c, dim))
+    )
+    dist_sql = (
+        euclidean_unrolled_sql(f"`{vec_col}`", "c.vec", dim)
         if unroll
-        else euclidean
+        else euclidean_sql(f"`{vec_col}`", "c.vec")
     )
-    cents = centroids.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col(centroid_id_col).alias("id"),
-                    F.col(centroid_vec_col).alias("vec"),
-                )
-            )
-        ).alias("_cents")
+    cols = [f"`{c}`" for c in points.columns]
+    with_d = points.selectExpr(
+        *cols,
+        f"{cents_sql} AS _cents",
+        f"transform({cents_sql}, c -> {dist_sql}) AS _d",
     )
-    base = points.crossJoin(F.broadcast(cents))
-    cents_col = F.col("_cents")
-    with_d = base.select(
-        *points.columns,
-        cents_col.alias("_cents"),
-        F.transform(
-            cents_col, lambda c: dist(F.col(vec_col), c["vec"])
-        ).alias("_d"),
+    with_best = with_d.selectExpr(
+        *cols,
+        "element_at(_cents, CAST(array_position(_d, array_min(_d))"
+        " AS INT)) AS _b",
+        "array_min(_d) AS distance",
     )
-    pos = F.array_position(F.col("_d"), F.array_min(F.col("_d"))).cast("int")
-    with_best = with_d.select(
-        *points.columns,
-        F.element_at("_cents", pos).alias("_b"),
-        F.array_min(F.col("_d")).alias("distance"),
-    )
-    return with_best.select(
-        *points.columns,
-        F.col("_b")["id"].alias("prediction"),
-        F.col("_b")["vec"].alias("centroid"),
+    return with_best.selectExpr(
+        *cols,
+        "_b.id AS prediction",
+        "_b.vec AS centroid",
         "distance",
-    )
-
-
-def label_centroids(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Per-label dimension-wise mean vectors -> (prediction, centroid).
-
-    The deterministic centroid source for oracle-checked assignment
-    (posexplode + avg + re-assemble; one shuffle on (label, dim)).
-    ``round_digits`` pins the means so downstream distance math is
-    bit-reproducible across engines despite AVG's order-dependence.
-    """
-    exploded = df.select(
-        F.col(label_col).alias("prediction"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
-    )
-    m = F.avg(F.col("x").cast("double"))
-    if round_digits is not None:
-        m = F.round(m, round_digits)
-    means = exploded.groupBy("prediction", "d").agg(m.alias("m"))
-    return (
-        means.groupBy("prediction")
-        .agg(F.array_sort(F.collect_list(F.struct("d", "m"))).alias("_dm"))
-        .select(
-            "prediction",
-            F.transform(F.col("_dm"), lambda s: s["m"]).alias("centroid"),
-        )
     )
 
 
@@ -460,89 +370,6 @@ class StreamingKMeans:
             self.centroids, self.weights = fresh.centroids, fresh.weights
         self._cursor = batch_id - 1
 
-    def exactly_once_batch(
-        self,
-        batch: DataFrame,
-        batch_id: int,
-        state_dir: str,
-        vec_col: str = "point",
-    ) -> DataFrame:
-        """align -> train-then-predict, for use inside foreachBatch.
-        Pair with an idempotent per-batch sink and call
-        :meth:`snapshot` after the sink write."""
-        self.align(state_dir, batch_id)
-        return self.update_and_assign(batch, vec_col)
-
-
-def minibatch_kmeans(
-    df: DataFrame,
-    id_col: str,
-    order_cols: list[str],
-    vec_col: str = "point",
-    k: int = 3,
-    dim: int = 2,
-    n_batches: int = 5,
-    decay: float = 1.0,
-    round_state: int | None = 9,
-) -> DataFrame:
-    """Deterministic mini-batch K-Means twin of the streaming model
-    (reference W6, ClusterAnalyser.scala:15-43): slice the input into
-    ``n_batches`` sequential mini-batches by ntile over a TOTAL order
-    (``order_cols`` must be a unique key), then replay the exact
-    StreamingKMeans train-then-predict loop batch by batch.
-
-    Purpose: a hash-checkable oracle for the streaming update rule.
-    The production path (streaming_kmeans_outliers) consumes real
-    micro-batches whose composition the driver picks at runtime; this
-    twin pins batch composition with SQL-expressible arithmetic
-    (ntile) so a DuckDB oracle can unroll the n_batches update rounds
-    as a CTE chain — the lloyd_kmeans oracle pattern applied to the
-    streaming rule (seed from batch 1, per-batch weighted centroid
-    update with decay, predict each batch with the just-updated
-    model).
-
-    Scale note: the global ntile is ONE total-order sort — this is a
-    VERIFICATION twin, not the production path (real batching comes
-    from the stream source; no global sort exists there).  The sliced
-    frame is localCheckpoint-ed once so the ``2 * n_batches`` passes
-    (update + predict per batch) read materialized blocks, not
-    n_batches re-sorts.
-
-    Returns (id_col, batch int, prediction int, distance double
-    rounded 6).
-    """
-    from pyspark.sql import Window
-
-    sliced = df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("point"),
-        F.ntile(n_batches)
-        .over(Window.orderBy(*order_cols))
-        .alias("b"),
-        # lazy: batch 1's update action materializes the slices; the
-        # remaining 2*n_batches-1 passes read the cached blocks
-    ).localCheckpoint(eager=False)
-
-    model = StreamingKMeans(
-        k=k, dim=dim, decay=decay, round_state=round_state
-    )
-    outs: list[DataFrame] = []
-    for t in range(1, n_batches + 1):
-        batch = sliced.where(F.col("b") == t)
-        scored = model.update_and_assign(batch, vec_col="point")
-        outs.append(
-            scored.select(
-                F.col(id_col),
-                F.lit(t).alias("batch"),
-                "prediction",
-                (F.round("distance", 6) + F.lit(0.0)).alias("distance"),
-            )
-        )
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res
-
 
 def _spread_seeds(distinct, vec_col: str, k: int) -> list[list[float]]:
     """Evenly-spaced seed vectors over the lexicographic order of the
@@ -583,96 +410,3 @@ def _spread_seeds(distinct, vec_col: str, k: int) -> list[list[float]]:
         )
     rows = ranked.where(is_seed).orderBy("rn").collect()
     return [[float(x) for x in r["_p"]] for r in rows]
-
-
-def lloyd_kmeans(
-    df: DataFrame,
-    vec_col: str,
-    k: int,
-    iterations: int = 5,
-    round_digits: int = 9,
-    dim: int | None = None,
-    as_pairs: bool = False,
-) -> DataFrame | list:
-    """Batch Lloyd's K-Means: deterministic data-spread seeding, then
-    ``iterations`` rounds of (distributed assign -> dimension-wise
-    mean recompute).  Returns the final (prediction, centroid) table.
-
-    Scale shape: per iteration one broadcast argmin (shuffle-free,
-    see ``assign``) + one (prediction, dim) aggregation shuffle of
-    posexploded points; ONLY the k x dim centroid table ever reaches
-    the driver.  Centroid means are rounded each round so results are
-    reproducible regardless of partitioning (AVG order-dependence).
-
-    Determinism: seeding takes k evenly-spaced rows of the distinct
-    lexicographically-sorted vectors (same spread trick as
-    StreamingKMeans seeding); everything downstream is a pure
-    function of those seeds.
-
-    ``dim``: pass the static vector width to run each round's argmin
-    through assign()'s literal-centroid + unrolled-distance fast path
-    (bit-identical; see assign) — the centroids are driver-held lists
-    between rounds anyway.
-
-    ``as_pairs``: return the final centroids as the driver-side
-    ``[(id, vector), ...]`` list instead of a DataFrame.  The loop
-    holds them driver-side anyway; handing them straight to
-    ``assign()``'s literal fast path deletes the final assignment's
-    collect_list aggregate + broadcast-exchange build sub-job
-    (measured 3x on the sf0.1 embeddings assignment) with identical
-    doubles.
-    """
-    spark = df.sparkSession
-    pts = df.select(F.col(vec_col).alias("point"))
-    seeds = _spread_seeds(pts.distinct(), "point", k)
-    if not seeds:
-        if as_pairs:
-            return []
-        return spark.createDataFrame([], "prediction int, centroid array<double>")
-    cents = seeds
-
-    # Model-sized shuffles (r14, guide §2.2): every per-round reduce
-    # below is bounded at k x dim grouped rows — a width set by the
-    # MODEL, not the data (measured: the 32-task means reduce of 512
-    # rows cost 0.6-0.9 s/round on 2 000 input rows, and AQE's
-    # per-stage re-planning another ~1 s/round).  Probe medians on
-    # the same host: 6.8 s -> 3.0 s.  StreamingKMeans.update's
-    # conditional-sum aggregate does not carry over: it has k x (dim
-    # + 1) terms, 9 at the streaming callers' k=3, dim=2, but a
-    # conditional-sum Lloyd at dim 32 took 6.3-6.5 s against 2.2-2.4 s
-    # with this block, and dropping the block alone cost 20-37% on a
-    # 32-partition session (local[3] probe, one 4-vCPU host).
-    with _model_sized_shuffles(spark):
-        for _ in range(iterations):
-            assigned = assign(
-                pts, list(enumerate(cents)), vec_col="point", dim=dim
-            )
-            # collect the k x dim (prediction, d, m) grid FLAT and
-            # assemble arrays driver-side (round-9: drops the second
-            # groupBy stage per round; the grid is bounded at k*dim
-            # rows)
-            means = (
-                assigned.select(
-                    "prediction", F.posexplode("point").alias("d", "x")
-                )
-                .groupBy("prediction", "d")
-                .agg(
-                    F.round(
-                        F.avg(F.col("x").cast("double")), round_digits
-                    ).alias("m")
-                )
-            ).collect()  # k * dim rows
-            by_pred: dict[int, dict[int, float]] = {}
-            for r in means:
-                by_pred.setdefault(r["prediction"], {})[r["d"]] = r["m"]
-            new = {
-                p: [dm[d] for d in sorted(dm)] for p, dm in by_pred.items()
-            }
-            cents = [new.get(i, cents[i]) for i in range(len(cents))]
-
-    if as_pairs:
-        return [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "prediction int, centroid array<double>",
-    )

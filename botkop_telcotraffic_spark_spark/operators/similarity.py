@@ -32,7 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import dot_sql, euclidean_sql, norm_sql
+from ..functions.vector import dot_sql, norm_sql
+from .kmeans import euclidean_sql
 
 def _paired_cosine():
     """Pair cosine from per-row precomputed norms: norms cost O(n·d)
@@ -410,7 +411,7 @@ def ivf_topk(
     partitioned into coarse-quantizer cells (nearest centroid); each
     query probes only its ``nprobe`` nearest cells.
 
-    ``centroids``: (prediction, centroid) — e.g. kmeans.label_centroids
+    ``centroids``: (prediction, centroid) — e.g. kmeans_batch.label_centroids
     output.  Same output shape as brute_force_topk.
 
     Physical shape: cell assignment is a broadcast nested-loop argmin
@@ -419,9 +420,9 @@ def ivf_topk(
     the corpus per query, the 100 TB path.  Cells inherit data skew;
     mitigate with more centroids or AQE skew-join.
     """
-    from .kmeans import assign
+    from .kmeans_batch import assign_frame
 
-    lists = assign(
+    lists = assign_frame(
         corpus.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("_cv"),

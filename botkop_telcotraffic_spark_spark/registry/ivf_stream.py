@@ -42,20 +42,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.kmeans import assign
+from ..operators.kmeans_batch import assign_frame
 
 
 def ivf_assignments(
     df: DataFrame,
-    centroids: DataFrame,
+    centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, cell) nearest-centroid assignment — the IVF list
     membership of each vector (broadcast argmin, ties to the lowest
-    centroid id; identical integers to ivf_topk's list build)."""
-    return assign(df.select(id_col, vec_col), centroids, vec_col=vec_col).select(
-        id_col, F.col("prediction").alias("cell")
-    )
+    centroid id; identical integers to ivf_topk's list build).
+    ``centroids``: a (prediction, centroid) DataFrame, or the same
+    centroids as driver-side (id, vector) pairs, which inline as
+    literals and skip the per-batch broadcast build."""
+    pts = df.select(id_col, vec_col)
+    if isinstance(centroids, DataFrame):
+        assigned = assign_frame(pts, centroids, vec_col=vec_col)
+    else:
+        assigned = assign(pts, centroids, vec_col=vec_col)
+    return assigned.select(id_col, F.col("prediction").alias("cell"))
 
 
 def ivf_assign_batch(
@@ -86,7 +93,7 @@ def ivf_assign_batch(
     hold stale file references.  Returns None in sink mode for
     exactly that reason.  Without ``sink`` the original read-back
     ordering is kept and the (still valid) stats frame is returned."""
-    from ..operators.enrich import latest_per_key
+    from ..streaming.upsert_join import latest_per_key
 
     assigned = (
         ivf_assignments(batch, centroids, id_col, vec_col)

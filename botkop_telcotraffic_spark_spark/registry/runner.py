@@ -3,12 +3,16 @@
 ``availableNow`` processes all available input then stops — replaying
 fixtures through the *same* operator code that runs continuously in
 production.  Event-time windows make results independent of wall
-clock and batch boundaries (SURVEY.md §5 test strategy)."""
+clock and batch boundaries (SURVEY.md §5 test strategy).
+``idempotent_parquet_sink`` is the registry's replay-safe
+foreachBatch sink."""
 
 from __future__ import annotations
 
 import contextlib
+import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,7 +87,6 @@ def pinned_replay_source(sliced: DataFrame, nb: int) -> str:
     removed at interpreter exit)."""
     import atexit
     import glob
-    import os
     import shutil
     import tempfile
     import time
@@ -148,3 +151,25 @@ class replay_partitions:
     def __exit__(self, *exc) -> None:
         if self._prev is not None:
             self._spark.conf.set("spark.sql.shuffle.partitions", self._prev)
+
+
+def idempotent_parquet_sink(path: str) -> Callable[[DataFrame, int], None]:
+    """EXACTLY-ONCE-effective foreachBatch parquet sink: each batch
+    overwrites its own ``_batch_id=<id>`` partition directory, so the
+    batch foreachBatch re-delivers after a crash (sink write done,
+    offset commit lost) simply rewrites the same files instead of
+    appending duplicates — the standard idempotent-by-batch-id
+    pattern the Structured Streaming guide prescribes for foreachBatch.
+    Read the result with ``spark.read.parquet(path)``: partition
+    discovery restores ``_batch_id`` as a column.
+
+    Scale shape: executor-side write, no driver collect; one
+    directory per micro-batch (compact with the layout tools if the
+    batch count grows unbounded)."""
+
+    def sink(df: DataFrame, batch_id: int) -> None:
+        df.write.mode("overwrite").parquet(
+            os.path.join(path, f"_batch_id={int(batch_id)}")
+        )
+
+    return sink

@@ -2,7 +2,7 @@
 PySpark form of Structured Streaming's mapGroupsWithState (SURVEY.md
 §2.9 W6).  Each operator groups the stream by ``user_id`` (the only
 shuffle) and folds a key's rows into a small state tuple in its
-``GroupState``; ``session.enable_large_state`` puts that state in the
+``GroupState``; ``enable_large_state`` puts that state in the
 RocksDB store, so key cardinality is bounded by disk, not executor
 heap.  ``idle_sessions`` alone sets a timeout: an ``EventTimeTimeout``
 fires when the watermark passes a session's last event + gap.  Spark's
@@ -23,8 +23,29 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+# Large-state streaming profile: the default HDFS-backed state store
+# keeps every key in executor heap — watermarked joins/dedup over
+# high-cardinality keys (the 100 TB shape) need RocksDB's off-heap,
+# disk-spilling store with incremental (changelog) checkpoints.
+# Session-settable; picked up by queries started afterwards.
+LARGE_STATE_CONFS: dict[str, str] = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+
+
+def enable_large_state(spark: SparkSession) -> SparkSession:
+    """Switch subsequently-started streaming queries to the RocksDB
+    state store (bounded executor memory at any key cardinality)."""
+    for k, v in LARGE_STATE_CONFS.items():
+        spark.conf.set(k, v)
+    return spark
+
 
 _STATE_SCHEMA = "n long, ewma double"
 OUT_SCHEMA = "user_id long, n long, ewma double"

@@ -59,27 +59,6 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-# Large-state streaming profile: the default HDFS-backed state store
-# keeps every key in executor heap — watermarked joins/dedup over
-# high-cardinality keys (the 100 TB shape) need RocksDB's off-heap,
-# disk-spilling store with incremental (changelog) checkpoints.
-# Session-settable; picked up by queries started afterwards.
-LARGE_STATE_CONFS: dict[str, str] = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    ),
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-}
-
-
-def enable_large_state(spark: SparkSession) -> SparkSession:
-    """Switch subsequently-started streaming queries to the RocksDB
-    state store (bounded executor memory at any key cardinality)."""
-    for k, v in LARGE_STATE_CONFS.items():
-        spark.conf.set(k, v)
-    return spark
-
-
 # Sessions already tuned by this process: tune() is called by the
 # `_t` table helper on EVERY query build (the driver contract — a
 # hostile session must be fixed up before its first query), which at

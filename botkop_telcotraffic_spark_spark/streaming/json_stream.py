@@ -35,9 +35,10 @@ from pyspark.sql import types as T
 from ..functions.sqlfn import sql_ident
 
 
-def decode_json_stream(raw: DataFrame, schema: T.StructType, value_col: str = "value") -> DataFrame:
-    """Parse ``value_col`` JSON strings into ``schema``; drop rows that
-    fail to decode; convert epoch-millis ts to an event-time column.
+def decode_json_stream(raw: DataFrame, schema: T.StructType) -> DataFrame:
+    """Parse the ``value`` column's JSON strings into ``schema``; drop
+    rows that fail to decode; convert epoch-millis ts to an event-time
+    column.
 
     PERMISSIVE ``from_json`` maps corrupt records to an all-null
     struct (not a null struct), and ``inline`` turns a null struct
@@ -45,7 +46,7 @@ def decode_json_stream(raw: DataFrame, schema: T.StructType, value_col: str = "v
     top-level field non-null — matching the reference's ``asOpt[T]``,
     which fails the decode if any case-class field is absent.
     """
-    parsed = raw.select(F.inline(F.array(F.from_json(F.col(value_col), schema))))
+    parsed = raw.select(F.inline(F.array(F.from_json(F.col("value"), schema))))
     valid = parsed.where(
         " AND ".join(f"{sql_ident(f.name)} IS NOT NULL" for f in schema.fields)
     )

@@ -15,10 +15,11 @@ one-task stages overlap.  This is the Structured Streaming analogue of
 DStreams' ``spark.streaming.concurrentJobs``, scoped to one batch: the
 next batch starts only after every write of this one has finished.
 
-Every per-batch analysis is a plain batch DataFrame transformation
-from operators/ — the same code the batch surface uses.  Outputs go
-to pluggable sinks: ``(df, batch_id)`` callables such as
-idempotent_parquet_sink over a payloads.py frame."""
+Every per-batch analysis is a plain batch DataFrame transformation.
+Outputs go to pluggable sinks: ``(df, batch_id)`` callables over a
+payloads.py frame, such as one that overwrites the batch's own
+``_batch_id=<id>`` directory, so a replayed batch rewrites its
+output instead of appending a duplicate."""
 
 from __future__ import annotations
 
@@ -33,34 +34,16 @@ from pyspark.sql import functions as F
 
 from ..functions.sqlfn import sql_ident, sql_str
 from ..operators.geofence import polygon_geofence_join
-from ..operators.iqr import with_iqr_fences
 from ..operators.kmeans import StreamingKMeans
 from ..schemas import ATTACH_EVENT, CELLTOWER_EVENT
 from .json_stream import decode_json_stream
 
 Sink = Callable[[DataFrame, int], None]
 
-
-def idempotent_parquet_sink(path: str) -> Sink:
-    """EXACTLY-ONCE-effective foreachBatch parquet sink: each batch
-    overwrites its own ``_batch_id=<id>`` partition directory, so the
-    batch foreachBatch re-delivers after a crash (sink write done,
-    offset commit lost) simply rewrites the same files instead of
-    appending duplicates — the standard idempotent-by-batch-id
-    pattern the Structured Streaming guide prescribes for foreachBatch.
-    Read the result with ``spark.read.parquet(path)``: partition
-    discovery restores ``_batch_id`` as a column.
-
-    Scale shape: executor-side write, no driver collect; one
-    directory per micro-batch (compact with the layout tools if the
-    batch count grows unbounded)."""
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(path, f"_batch_id={int(batch_id)}")
-        )
-
-    return sink
+# The reference's fences for a cluster of n <= 4 points: Scala's
+# Double.MinValue and Double.MaxValue (ClusterAnalyser.scala:157-170)
+DOUBLE_MIN = -1.7976931348623157e308
+DOUBLE_MAX = 1.7976931348623157e308
 
 
 def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, float]]]]:
@@ -89,6 +72,42 @@ def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, f
         if not all(math.isfinite(c) for vertex in poly for c in vertex):
             raise ValueError(f"geofence {name!r} in {path} has a non-finite coordinate")
     return fences
+
+
+def with_iqr_fences(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
+    """A4/A5: ``df`` plus its key's exact IQR fences ``lo`` and ``hi``,
+    the reference's naive order statistics
+    (``ClusterAnalyser.scala:47-58,157-170``): q1 = sorted[n DIV 4],
+    q3 = sorted[3n DIV 4] 0-based, 1.5·IQR, ±DBL_MAX at n <= 4.  They
+    are SCALAR window expressions over ``key_col`` instead of an
+    aggregate + broadcast join-back: fence and filter run in the
+    caller's job on one key_col shuffle + sort, with no
+    broadcast-build sub-job.  The order statistic at index i is picked
+    by row_number == i, never by indexing a collect_list window column
+    — an array-valued window value is copied into every row's buffer
+    (O(rows × group) bytes).  Built as SQL strings (parsed once
+    JVM-side); ``1.5D`` because a bare ``1.5`` parses as DECIMAL."""
+    part = f"PARTITION BY `{key_col}`"
+
+    def q(idx: str) -> str:
+        return (
+            f"MAX(CASE WHEN _rn = CAST(FLOOR({idx}) + 1 AS INT)"
+            f" THEN `{value_col}` END) OVER ({part})"
+        )
+
+    q1, q3 = q("_n / 4"), q("_n * 3 / 4")
+    cols = [f"`{c}`" for c in df.columns]
+    return df.selectExpr(
+        *cols,
+        f"row_number() OVER ({part} ORDER BY `{value_col}`) AS _rn",
+        f"count(1) OVER ({part}) AS _n",
+    ).selectExpr(
+        *cols,
+        f"CASE WHEN _n <= 4 THEN {DOUBLE_MIN!r}D"
+        f" ELSE {q1} - 1.5D * ({q3} - {q1}) END AS lo",
+        f"CASE WHEN _n <= 4 THEN {DOUBLE_MAX!r}D"
+        f" ELSE {q3} + 1.5D * ({q3} - {q1}) END AS hi",
+    )
 
 
 class TrafficPipeline:
@@ -172,6 +191,14 @@ class TrafficPipeline:
           reference never publishes it either: play-json rejects a
           null map value and drops the event).
 
+        Known gap, not a choice (ROADMAP item 3 closes it): the
+        windows cover only the current micro-batch.  The reference's
+        ``reduceByKeyAndWindow(30 s, 2 s)`` (SURVEY.md A1,
+        ``MetricStatsProducer.scala:16-36``) emits, once per slide, one
+        window over every event of the last 30 s across batches; here
+        each batch emits its own partial windows, each built from that
+        batch's events only.
+
         Float sums depend on the order rows reach the aggregate, as
         the reference's do on its partition order: a change in how
         the enriched batch is partitioned (e.g. the join side the
@@ -229,10 +256,17 @@ class TrafficPipeline:
         default keeps only the rows outside the fences — the
         alert-stream variant.
 
-        Fences: ``operators/iqr.py::with_iqr_fences`` — the exact
-        per-cluster IQR as window expressions over prediction, so
-        predict + fence + filter is ONE job per micro-batch on one
-        k-key shuffle."""
+        Fences: ``with_iqr_fences`` — the exact per-cluster IQR as
+        window expressions over prediction, so predict + fence +
+        filter is ONE job per micro-batch on one k-key shuffle.
+
+        Known gap, not a choice (ROADMAP item 4 closes it): the points
+        and their fences cover only the current micro-batch.  The
+        reference windows the points 30 s / 2 s before it predicts
+        (SURVEY.md W3/A4/A5, ``ClusterAnalyser.scala:39,47-53``), so
+        each slide scores, fences and publishes every point of the
+        last 30 s across batches.  The model is trained per batch in
+        both."""
         dims = ", ".join(f"metrics[{sql_str(d)}]" for d in self.kmeans_dims)
         pts = enriched.selectExpr(
             "subscriber", "celltower", f"array({dims}) AS point"

@@ -44,13 +44,29 @@ from __future__ import annotations
 import os
 import re
 import shutil
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..operators.enrich import latest_per_key
+from pyspark.sql import functions as F
 
 _CURRENT = "_CURRENT"
 _VERSION = re.compile(r"v\d+")
+
+
+def latest_per_key(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+) -> DataFrame:
+    """One row per key: the row with the max (order_cols...) tuple.
+
+    Implemented with ``max_by`` over a struct so ties break
+    deterministically on the later order columns.
+    """
+    ordk = F.struct(*[F.col(c) for c in order_cols])
+    payload = F.struct(*[F.col(c) for c in df.columns])
+    latest = df.groupBy(*key_cols).agg(F.max_by(payload, ordk).alias("_r"))
+    return latest.select("_r.*")
 
 
 class KeyedUpsertStore:
@@ -125,9 +141,10 @@ class KeyedUpsertStore:
             if d != nxt and _VERSION.fullmatch(d):
                 shutil.rmtree(os.path.join(self.path, d))
 
-    def join(self, facts: DataFrame, fact_key: str, how: str = "inner") -> DataFrame:
-        """Enrich facts against the current snapshot (inner = reference
-        drop-unmatched semantics).  Dim columns that collide with fact
+    def join(self, facts: DataFrame, fact_key: str) -> DataFrame:
+        """Enrich facts against the current snapshot with an inner join,
+        the reference's drop-unmatched semantics: with no store yet,
+        every fact drops.  Dim columns that collide with fact
         columns (topic/ts/...) are dropped from the dim side — the
         fact stream's values win, matching the reference's projection
         right after the join (TrafficStreamProcessor.scala:54-56).
@@ -141,8 +158,8 @@ class KeyedUpsertStore:
         the store instead."""
         dim = self.snapshot()
         if dim is None:
-            return facts.limit(0) if how == "inner" else facts
+            return facts.limit(0)
         overlap = (set(facts.columns) & set(dim.columns)) - {self.key_col}
         dim = dim.drop(*overlap)
-        joined = facts.join(dim, facts[fact_key] == dim[self.key_col], how)
+        joined = facts.join(dim, facts[fact_key] == dim[self.key_col])
         return joined.drop(dim[self.key_col]) if fact_key == self.key_col else joined

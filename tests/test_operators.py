@@ -10,12 +10,11 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from botkop_telcotraffic_spark_spark.functions.geo import point_in_polygon
 from botkop_telcotraffic_spark_spark.functions.vector import cosine, dot, euclidean
-from botkop_telcotraffic_spark_spark.operators.enrich import latest_per_key
 from botkop_telcotraffic_spark_spark.operators.iqr import iqr_bounds, iqr_outliers
 from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans, assign
 from botkop_telcotraffic_spark_spark.operators.window_stats import keyed_stats
+from botkop_telcotraffic_spark_spark.streaming.upsert_join import latest_per_key
 
 
 def test_keyed_stats_matches_python(spark):
@@ -92,7 +91,12 @@ def test_vector_functions(spark):
 
 
 def test_point_in_polygon_edges(spark):
-    # concave polygon with horizontal edges (div-by-zero branch)
+    """The product's containment test (polygon_geofence_join over
+    point_in_polygon_literal) on a concave polygon whose horizontal
+    edges get no crossing term."""
+    from botkop_telcotraffic_spark_spark.operators.geofence import polygon_geofence_join
+
+    # (x = lng, y = lat) vertices
     poly = [(0.0, 0.0), (0.0, 10.0), (5.0, 10.0), (5.0, 5.0), (10.0, 5.0), (10.0, 0.0)]
     cases = [
         (2.0, 2.0, True),     # plainly inside
@@ -102,17 +106,11 @@ def test_point_in_polygon_edges(spark):
         (20.0, 20.0, False),  # far outside
     ]
     df = spark.createDataFrame(
-        [(x, y, [{"lat": ly, "lng": lx} for ly, lx in [(py_, px_) for px_, py_ in poly]])
-         for x, y, _ in cases],
-        "px double, py double, polygon array<struct<lat:double,lng:double>>",
+        [(i, x, y) for i, (x, y, _) in enumerate(cases)], "id int, lng double, lat double"
     )
-    got = [
-        r[0]
-        for r in df.select(
-            point_in_polygon(F.col("px"), F.col("py"), F.col("polygon"))
-        ).collect()
-    ]
-    assert got == [c[2] for c in cases]
+    fences = [("concave", [(y, x) for x, y in poly])]
+    hits = {r["id"] for r in polygon_geofence_join(df, fences).collect()}
+    assert [i in hits for i in range(len(cases))] == [c[2] for c in cases]
 
 
 def test_streaming_kmeans_update_rule(spark):
@@ -221,16 +219,19 @@ def test_streaming_kmeans_separates_blobs(spark):
 
 
 def test_assign_nearest(spark):
-    cents = spark.createDataFrame(
-        [(0, [0.0, 0.0]), (1, [10.0, 10.0])],
-        "prediction int, centroid array<double>",
-    )
+    """The product's literal-pairs ``assign`` and the registry's
+    ``assign_frame`` over a centroid DataFrame agree."""
+    from botkop_telcotraffic_spark_spark.operators.kmeans_batch import assign_frame
+
+    pairs = [(0, [0.0, 0.0]), (1, [10.0, 10.0])]
+    cents = spark.createDataFrame(pairs, "prediction int, centroid array<double>")
     pts = spark.createDataFrame(
         [Row(id=1, point=[1.0, 1.0]), Row(id=2, point=[9.0, 9.0])]
     )
-    out = {r["id"]: r for r in assign(pts, cents, vec_col="point").collect()}
-    assert out[1]["prediction"] == 0 and out[2]["prediction"] == 1
-    assert out[1]["distance"] == pytest.approx(math.sqrt(2))
+    for out in (assign(pts, pairs, vec_col="point"), assign_frame(pts, cents)):
+        out = {r["id"]: r for r in out.collect()}
+        assert out[1]["prediction"] == 0 and out[2]["prediction"] == 1
+        assert out[1]["distance"] == pytest.approx(math.sqrt(2))
 
 
 def test_ivf_topk_probes_right_cells(spark):
@@ -541,7 +542,10 @@ def test_rollup_partials_match_direct(spark):
 def test_lloyd_kmeans_deterministic_and_improving(spark):
     """Lloyd iterations are deterministic (partitioning-independent)
     and never increase the total within-cluster distance."""
-    from botkop_telcotraffic_spark_spark.operators.kmeans import assign, lloyd_kmeans
+    from botkop_telcotraffic_spark_spark.operators.kmeans_batch import (
+        assign_frame,
+        lloyd_kmeans,
+    )
     from botkop_telcotraffic_spark_spark.sources.tables import load_table
     from tests.conftest import SF_DIR_001
 
@@ -550,7 +554,7 @@ def test_lloyd_kmeans_deterministic_and_improving(spark):
 
     def cost(iters):
         cents = lloyd_kmeans(emb, "embedding", k=4, iterations=iters)
-        a = assign(pts, cents)
+        a = assign_frame(pts, cents)
         return a.agg(F.sum("distance")).collect()[0][0], {
             r["prediction"]: [round(x, 9) for x in r["centroid"]]
             for r in cents.collect()
@@ -4956,14 +4960,16 @@ def test_streaming_kmeans_snapshot_pruning(spark, tmp_path):
     state = str(tmp_path / "state")
     m = StreamingKMeans(k=2, dim=2, decay=1.0, seed=3)
     for b in range(4):
-        m.exactly_once_batch(df, b, state)
+        m.align(state, b)
+        m.update_and_assign(df)
         m.snapshot(state, b, keep_last=2)
     assert sorted(os.listdir(state)) == ["b2.json", "b3.json"]
 
     # a fresh process replaying the last (possibly uncommitted) batch
     # restores from the retained b2 snapshot
     m2 = StreamingKMeans(k=2, dim=2, decay=1.0, seed=3)
-    out = m2.exactly_once_batch(df, 3, state).collect()
+    m2.align(state, 3)
+    out = m2.update_and_assign(df).collect()
     # replaying batch 3 from the b2 snapshot reproduces m's exact
     # post-batch-3 state
     assert m2.centroids == m.centroids
@@ -4988,7 +4994,8 @@ def test_streaming_kmeans_keep_last_one_replay_after_prune(spark, tmp_path):
     state = str(tmp_path / "state")
     m = StreamingKMeans(k=2, dim=2, decay=0.5, seed=7)
     for b in range(4):
-        m.exactly_once_batch(df, b, state)
+        m.align(state, b)
+        m.update_and_assign(df)
         m.snapshot(state, b, keep_last=1)
     # floor of 2 retained despite keep_last=1
     assert sorted(os.listdir(state)) == ["b2.json", "b3.json"]
@@ -4997,7 +5004,8 @@ def test_streaming_kmeans_keep_last_one_replay_after_prune(spark, tmp_path):
     # replays batch 3 and must land on the pre-crash post-batch-3
     # state, not a pristine-reset divergence
     m2 = StreamingKMeans(k=2, dim=2, decay=0.5, seed=7)
-    m2.exactly_once_batch(df, 3, state)
+    m2.align(state, 3)
+    m2.update_and_assign(df)
     assert m2.centroids == m.centroids
     assert m2.weights == m.weights
 

@@ -97,13 +97,16 @@ def test_assign_is_shuffle_free(spark):
     no Exchange above the points scan beyond the tiny agg branch)."""
     from pyspark.sql import functions as F
 
-    from botkop_telcotraffic_spark_spark.operators.kmeans import assign, label_centroids
+    from botkop_telcotraffic_spark_spark.operators.kmeans_batch import (
+        assign_frame,
+        label_centroids,
+    )
     from botkop_telcotraffic_spark_spark.sources.tables import load_table
     from tests.conftest import SF_DIR_001
 
     emb = load_table(spark, SF_DIR_001, "embeddings")
     pts = emb.select("vec_id", F.col("embedding").alias("point"))
-    out = assign(pts, label_centroids(emb, round_digits=9))
+    out = assign_frame(pts, label_centroids(emb, round_digits=9))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # the only exchanges allowed are for the k-row centroid aggregate

@@ -93,10 +93,11 @@ def _imported_modules(path: str) -> set[str]:
 
 
 def test_every_io_module_has_a_non_test_importer():
-    """Every module under streaming/ and sources/ must be imported by
-    code that ships: another package module (a package __init__ does
-    not count), __spark_entry__.py or perfbench/.  A module only its
-    own tests import is dead I/O surface: delete it with its tests."""
+    """Every module under streaming/, sources/ and registry/ must be
+    imported by code that ships: another package module (a package
+    __init__ does not count), __spark_entry__.py or perfbench/.  A
+    module only its own tests import is dead I/O surface: delete it
+    with its tests."""
     importers = [
         p for p in glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
         if os.path.basename(p) != "__init__.py"
@@ -106,7 +107,7 @@ def test_every_io_module_has_a_non_test_importer():
     ]
     imports = {p: _imported_modules(p) for p in importers}
     dead = []
-    for sub in ("streaming", "sources"):
+    for sub in ("streaming", "sources", "registry"):
         for path in sorted(glob.glob(os.path.join(PKG, sub, "*.py"))):
             if os.path.basename(path) == "__init__.py":
                 continue
@@ -116,27 +117,99 @@ def test_every_io_module_has_a_non_test_importer():
     assert not dead, f"modules no shipped code imports: {dead}"
 
 
-def test_product_imports_no_registry_only_module():
-    """The streaming product's modules load only what they run: the
-    package __init__ files import no submodules, so the registry-only
-    operators stay out of the product's import closure."""
-    product = [f"botkop_telcotraffic_spark_spark.streaming.{m}"
-               for m in ("pipeline", "payloads", "upsert_join", "json_stream")]
-    registry_only = [
-        "botkop_telcotraffic_spark_spark.operators.dedup",
-        "botkop_telcotraffic_spark_spark.operators.similarity",
-        "botkop_telcotraffic_spark_spark.operators.text",
-        "botkop_telcotraffic_spark_spark.operators.window_stats",
-        "botkop_telcotraffic_spark_spark.functions.textfn",
-        "botkop_telcotraffic_spark_spark.streaming.runner",
-    ]
+# The product: the streaming app's modules plus its session factory.
+PRODUCT = [
+    f"botkop_telcotraffic_spark_spark.streaming.{m}"
+    for m in ("pipeline", "payloads", "upsert_join", "json_stream")
+] + ["botkop_telcotraffic_spark_spark.session"]
+
+
+def _product_closure() -> dict[str, str]:
+    """Name -> source file of every package module a fresh
+    interpreter loads when it imports the product."""
     code = (
         "import sys\n"
-        + "".join(f"import {m}\n" for m in product)
-        + f"print(','.join(m for m in {registry_only!r} if m in sys.modules))"
+        + "".join(f"import {m}\n" for m in PRODUCT)
+        + "for n, m in sorted(sys.modules.items()):\n"
+        "    if n.split('.')[0] == 'botkop_telcotraffic_spark_spark':\n"
+        "        print(n, m.__file__)"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=REPO, capture_output=True,
         text=True, check=True,
-    ).stdout.strip()
-    assert not out, f"product import loads registry-only modules: {out}"
+    ).stdout
+    return dict(line.split() for line in out.splitlines())
+
+
+def test_product_imports_no_registry_only_module():
+    """The streaming product's modules load only what they run: the
+    package __init__ files import no submodules, so the registry-only
+    operators stay out of the product's import closure."""
+    registry_only = [
+        f"botkop_telcotraffic_spark_spark.{m}"
+        for m in (
+            "operators.dedup",
+            "operators.similarity",
+            "operators.text",
+            "operators.window_stats",
+            "functions.textfn",
+            # modules that took registry-only code out of the product's
+            # modules: a re-export from a product module loads them
+            "operators.enrich",
+            "operators.iqr",
+            "operators.kmeans_batch",
+            "functions.geo",
+            "functions.vector",
+            "registry.runner",
+            "registry.tws",
+        )
+    ]
+    loaded = sorted(set(registry_only) & _product_closure().keys())
+    assert not loaded, f"product import loads registry-only modules: {loaded}"
+
+
+def _identifiers(node: ast.AST) -> set[str]:
+    """Every name, attribute and imported name under ``node``."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add((n.asname or n.name).split(".")[-1])
+    return out
+
+
+def test_product_closure_holds_only_reached_code():
+    """Every top-level definition in the product's import closure is
+    reached from what perfbench/run.py calls, following name
+    references between the closure's definitions.  A definition only
+    the registry or tests reach belongs in a registry module: left in
+    the closure, it is loaded, read and maintained with the product."""
+    refs: dict[str, set[str]] = {}  # definition -> identifiers in it
+    for path in _product_closure().values():
+        for node in ast.parse(open(path).read()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    refs.setdefault(name, set()).update(_identifiers(node))
+    bench = ast.parse(open(os.path.join(REPO, "perfbench", "run.py")).read())
+    todo = list(_identifiers(bench) & refs.keys())
+    reached = set(todo)
+    while todo:
+        for name in refs[todo.pop()] & refs.keys():
+            if name not in reached:
+                reached.add(name)
+                todo.append(name)
+    unreached = sorted(refs.keys() - reached)
+    assert not unreached, (
+        f"{len(unreached)} definitions in the product's modules that the"
+        f" product never reaches: {unreached}"
+    )

@@ -21,7 +21,7 @@ from botkop_telcotraffic_spark_spark.streaming.pipeline import (
     TrafficPipeline,
     read_geofences,
 )
-from botkop_telcotraffic_spark_spark.streaming.runner import (
+from botkop_telcotraffic_spark_spark.registry.runner import (
     run_to_memory,
     stream_parquet_table,
 )
@@ -71,9 +71,7 @@ def test_full_pipeline_fanout(spark, fixtures):
     store = KeyedUpsertStore(
         spark, os.path.join(TMP, "attach_store2"), key_col="bearerId", order_col="ts"
     )
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
 
     outlier_dir = os.path.join(TMP, "outlier_sink")
     outputs = {"stats": [], "geo": []}
@@ -401,10 +399,10 @@ def test_streaming_batch_unification(spark):
 def test_stateful_zscore_cross_batch_state(spark):
     """applyInPandasWithState carries per-key state across micro-
     batches: two files streamed one-per-trigger must yield the same
-    flags as one batch containing all rows (streaming/stateful.py)."""
+    flags as one batch containing all rows (registry/stateful.py)."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.streaming.stateful import (
+    from botkop_telcotraffic_spark_spark.registry.stateful import (
         running_zscore_anomalies,
     )
 
@@ -551,7 +549,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from botkop_telcotraffic_spark_spark.streaming.dedup_stream import (
+    from botkop_telcotraffic_spark_spark.registry.dedup_stream import (
         dedup_content_stream,
         dedup_exact_stream,
     )
@@ -647,7 +645,7 @@ def test_checkpoint_restart_no_double_count(spark, tmp_path):
 
 
 def test_rocksdb_state_store_profile(spark, tmp_path):
-    """session.enable_large_state switches stateful queries to the
+    """tws.enable_large_state switches stateful queries to the
     RocksDB state store (bounded executor memory at any key
     cardinality); a watermarked streaming dedup produces identical
     results under it."""
@@ -656,11 +654,11 @@ def test_rocksdb_state_store_profile(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from botkop_telcotraffic_spark_spark.session import (
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         LARGE_STATE_CONFS,
         enable_large_state,
     )
-    from botkop_telcotraffic_spark_spark.streaming.dedup_stream import (
+    from botkop_telcotraffic_spark_spark.registry.dedup_stream import (
         dedup_exact_stream,
     )
 
@@ -1034,15 +1032,15 @@ def test_geofence_payload_renders_fence_added_by_reload(spark, tmp_path):
 
 
 def test_idle_session_timer_finalizes_on_watermark(spark):
-    """Event-time timeout (streaming/tws.py::idle_sessions):
+    """Event-time timeout (registry/tws.py::idle_sessions):
     sessions from file A (two users, events within a minute) finalize
     when file B's much-later events advance the watermark past
     last+gap; the session B (re)opens stays un-emitted at query end —
     at-watermark semantics."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.tws import idle_sessions
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.tws import idle_sessions
 
     enable_large_state(spark)
     src = os.path.join(TMP, "idle_sess_src")
@@ -1082,13 +1080,13 @@ def test_idle_session_timer_finalizes_on_watermark(spark):
 
 
 def test_mapstate_type_counts_accumulate_across_batches(spark):
-    """Map-valued keyed state (streaming/tws.py::running_type_counts):
+    """Map-valued keyed state (registry/tws.py::running_type_counts):
     counts accumulate per (user, type) across two micro-batches; the
     final emission per pair equals the full-batch group-by."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         running_type_counts,
     )
 
@@ -1130,14 +1128,14 @@ def test_mapstate_type_counts_accumulate_across_batches(spark):
 
 
 def test_lastk_features_carry_history_across_batches(spark):
-    """Array-valued keyed state in streaming/tws.py::
+    """Array-valued keyed state in registry/tws.py::
     rolling_history_features: the prior-3 mean for the first event of
     file B uses values from file A (state carries); null values are
     skipped in history and emission."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         rolling_history_features,
     )
 
@@ -1182,10 +1180,10 @@ def test_handover_transitions_cross_batch(spark):
     """handover_transitions carries the last cell across micro-batches:
     a transition whose endpoints straddle a file boundary is emitted
     EXACTLY once, and two-file one-per-trigger replay equals the
-    single-batch run (streaming/tws.py::handover_transitions)."""
+    single-batch run (registry/tws.py::handover_transitions)."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         handover_transitions,
     )
 
@@ -1245,10 +1243,10 @@ def test_pingpong_bounces_cross_batch(spark):
     micro-batches: a bounce whose three fixes straddle a file
     boundary is emitted EXACTLY once, the time guard drops slow
     excursions, and two-file one-per-trigger replay equals the
-    single-batch run (streaming/tws.py::pingpong_bounces)."""
+    single-batch run (registry/tws.py::pingpong_bounces)."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         pingpong_bounces,
     )
 
@@ -1310,11 +1308,11 @@ def test_conversion_lags_cross_batch_emit_once(spark):
     micro-batches: a click|purchase pair straddling a file boundary
     emits exactly one lag, later purchases emit nothing, a purchase
     BEFORE any click does not convert, and two-file one-per-trigger
-    replay equals the single-batch run (streaming/tws.py::
+    replay equals the single-batch run (registry/tws.py::
     conversion_lags)."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.streaming.tws import conversion_lags
+    from botkop_telcotraffic_spark_spark.registry.tws import conversion_lags
 
     src = os.path.join(TMP, "convlag_src")
     shutil.rmtree(src, ignore_errors=True)
@@ -1394,7 +1392,7 @@ def test_conversion_lag_restart_exactly_once(spark):
     the accumulated sink equals the uninterrupted run byte-for-byte."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.streaming.tws import conversion_lags
+    from botkop_telcotraffic_spark_spark.registry.tws import conversion_lags
 
     src = os.path.join(TMP, "convlag_chaos_src")
     out = os.path.join(TMP, "convlag_chaos_out")
@@ -1468,7 +1466,7 @@ def test_pingpong_restart_exactly_once(spark):
     accumulated sink equals the uninterrupted run."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.streaming.tws import pingpong_bounces
+    from botkop_telcotraffic_spark_spark.registry.tws import pingpong_bounces
 
     src = os.path.join(TMP, "pingpong_chaos_src")
     out = os.path.join(TMP, "pingpong_chaos_out")
@@ -1545,9 +1543,7 @@ def test_streaming_hll_restart_exactly_once(spark):
     import pandas as pd
 
     from botkop_telcotraffic_spark_spark.operators import sketch
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
 
     src = os.path.join(TMP, "shll_chaos_src")
     out = os.path.join(TMP, "shll_chaos_out")
@@ -1629,9 +1625,7 @@ def test_streaming_kmeans_restart_exactly_once(spark):
     from pyspark.sql import functions as F
 
     from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
 
     src = os.path.join(TMP, "skm_chaos_src")
     names = ["out", "ckpt", "state", "out_ref", "ckpt_ref", "state_ref"]
@@ -1656,7 +1650,8 @@ def test_streaming_kmeans_restart_exactly_once(spark):
         sink = idempotent_parquet_sink(out)
 
         def batch_fn(df, batch_id):
-            scored = model.exactly_once_batch(df, batch_id, state)
+            model.align(state, batch_id)
+            scored = model.update_and_assign(df)
             sink(scored.select("event_id", "prediction", "distance"),
                  batch_id)
             model.snapshot(state, batch_id)
@@ -1704,7 +1699,8 @@ def test_streaming_kmeans_restart_exactly_once(spark):
     snap = open(os.path.join(dirs["state"], "b1.json")).read()
     replay = spark.read.schema(schema).parquet(os.path.join(src, "b.parquet"))
     sink = idempotent_parquet_sink(dirs["out"])
-    scored = m2.exactly_once_batch(replay, 1, dirs["state"])
+    m2.align(dirs["state"], 1)
+    scored = m2.update_and_assign(replay)
     sink(scored.select("event_id", "prediction", "distance"), 1)
     m2.snapshot(dirs["state"], 1)
     assert table(dirs["out"]) == got2
@@ -1721,8 +1717,8 @@ def test_idle_session_timer_survives_restart(spark):
     byte-identical to an uninterrupted run."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.tws import idle_sessions
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.tws import idle_sessions
 
     enable_large_state(spark)
     src = os.path.join(TMP, "idle_chaos_src")
@@ -1780,8 +1776,8 @@ def test_lastk_liststate_survives_restart(spark):
     values, and the accumulated table equals the uninterrupted run."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         rolling_history_features,
     )
 
@@ -1852,11 +1848,9 @@ def test_mapstate_type_counts_survive_restart(spark):
     equals the uninterrupted run's."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
-    from botkop_telcotraffic_spark_spark.streaming.tws import (
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
+    from botkop_telcotraffic_spark_spark.registry.tws import (
         running_type_counts,
     )
 
@@ -1909,11 +1903,9 @@ def test_ewma_valuestate_survives_restart(spark):
     RESTORED (n, ewma) pair, matching an uninterrupted run."""
     import pandas as pd
 
-    from botkop_telcotraffic_spark_spark.session import enable_large_state
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
-    from botkop_telcotraffic_spark_spark.streaming.tws import running_ewma
+    from botkop_telcotraffic_spark_spark.registry.tws import enable_large_state
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
+    from botkop_telcotraffic_spark_spark.registry.tws import running_ewma
 
     enable_large_state(spark)
     src = os.path.join(TMP, "ewma_chaos_src")
@@ -1995,7 +1987,7 @@ def test_watermark_protocol_matches_simulation(spark, tmp_path):
 
     from pyspark.sql import functions as SF
 
-    from botkop_telcotraffic_spark_spark.streaming.runner import (
+    from botkop_telcotraffic_spark_spark.registry.runner import (
         run_to_memory,
     )
 
@@ -2104,7 +2096,7 @@ def test_geofence_hot_reload_boundary(spark):
 
 def test_incremental_dedup_restart_exactly_once(spark):
     """Exactly-once proof for the incremental-dedup batch core
-    (streaming/dedup_stream.py::incremental_dedup_batch): the dup
+    (registry/dedup_stream.py::incremental_dedup_batch): the dup
     join reads the ver <= batch_id store slice, so a re-delivered
     batch (crash between sink write and offset commit) does NOT see
     its own first run's bucket insertions — without that slice, every
@@ -2115,13 +2107,11 @@ def test_incremental_dedup_restart_exactly_once(spark):
 
     from pyspark.sql import functions as F
 
-    from botkop_telcotraffic_spark_spark.streaming.dedup_stream import (
+    from botkop_telcotraffic_spark_spark.registry.dedup_stream import (
         incremental_dedup_batch,
         minhash_bucket_keys,
     )
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
     from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
         KeyedUpsertStore,
     )
@@ -2231,7 +2221,7 @@ def test_incremental_dedup_restart_exactly_once(spark):
 
 def test_streaming_ivf_restart_exactly_once(spark):
     """Exactly-once proof for incremental IVF maintenance
-    (streaming/ivf_stream.py::ivf_assign_batch), the 31f69fd chaos
+    (registry/ivf_stream.py::ivf_assign_batch), the 31f69fd chaos
     discipline applied to centroid cells: stats read the
     ``ver <= batch_id + 1`` store slice, so a RE-DELIVERED batch
     (crash between sink write and offset commit) does not see later
@@ -2243,16 +2233,14 @@ def test_streaming_ivf_restart_exactly_once(spark):
 
     from pyspark.sql import functions as F
 
-    from botkop_telcotraffic_spark_spark.operators.kmeans import (
+    from botkop_telcotraffic_spark_spark.operators.kmeans_batch import (
         label_centroids,
     )
-    from botkop_telcotraffic_spark_spark.streaming.ivf_stream import (
+    from botkop_telcotraffic_spark_spark.registry.ivf_stream import (
         ivf_assign_batch,
         ivf_assignments,
     )
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
-        idempotent_parquet_sink,
-    )
+    from botkop_telcotraffic_spark_spark.registry.runner import idempotent_parquet_sink
     from botkop_telcotraffic_spark_spark.streaming.upsert_join import (
         KeyedUpsertStore,
     )
