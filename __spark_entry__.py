@@ -2558,13 +2558,13 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator code hash-checkable."""
     from pyspark.sql import Window
 
+    from botkop_telcotraffic_spark_spark.operators.iqr import iqr_outliers
     from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans
     from botkop_telcotraffic_spark_spark.registry.runner import (
         idempotent_parquet_sink,
         pinned_replay_source,
         replay_partitions,
     )
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import with_iqr_fences
 
     tune(spark)
     n_batches = 5
@@ -2607,12 +2607,12 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch recomputes identical output into the same directory
         model.align(state_dir, batch_id)
         scored = model.update_and_assign(df, vec_col="point")
-        fenced = with_iqr_fences(
+        out = iqr_outliers(
             scored.select("event_id", "prediction", "distance"),
-            "prediction",
+            ["prediction"],
             "distance",
+            mode="exact",
         )
-        out = fenced.where("distance < lo OR distance > hi")
         sink(
             out.selectExpr(
                 "event_id",
@@ -2624,7 +2624,7 @@ def streaming_kmeans_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             batch_id,
         )
-        model.snapshot(state_dir, batch_id, keep_last=2)
+        model.snapshot(state_dir, batch_id)
 
     # n=1: each pinned micro-batch is ~1/5 of one table's filtered
     # rows in ONE file — a single reduce partition minimizes per-task
@@ -8202,6 +8202,7 @@ def _run_fanout_family(spark: SparkSession, sf_dir: str) -> dict[str, str]:
 
     from pyspark.sql import Window
 
+    from botkop_telcotraffic_spark_spark.operators.iqr import iqr_outliers
     from botkop_telcotraffic_spark_spark.registry.runner import (
         idempotent_parquet_sink,
         replay_partitions,
@@ -8257,6 +8258,16 @@ def _run_fanout_family(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         for n in ("cell", "sub", "geo", "out")
     }
     dirs["gfhot"] = _scratch_dir("gfhot_out_")
+    out_sink = idempotent_parquet_sink(dirs["out"])
+
+    def outlier_rows_sink(points: DataFrame, batch_id: int) -> None:
+        # the pipeline hands over every scored point: keep the rows
+        # outside their cluster's exact IQR fences, (lo, hi) attached
+        out_sink(
+            iqr_outliers(points, ["prediction"], "distance", mode="exact"),
+            batch_id,
+        )
+
     pipe = TrafficPipeline(
         metric_names=["value", "k", "price"],
         kmeans_dims=["value", "k"],
@@ -8268,7 +8279,7 @@ def _run_fanout_family(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         stats_sink=idempotent_parquet_sink(dirs["cell"]),
         subscriber_stats_sink=idempotent_parquet_sink(dirs["sub"]),
         geofence_sink=idempotent_parquet_sink(dirs["geo"]),
-        outlier_sink=idempotent_parquet_sink(dirs["out"]),
+        outlier_sink=outlier_rows_sink,
         round_state=9,
     )
     gfhot_pipe = TrafficPipeline(
@@ -13340,7 +13351,7 @@ def anomaly_ensemble_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine to ~1e8 values/group; the 100 TB path swaps in the approx
     sketch detectors."""
     from botkop_telcotraffic_spark_spark.operators import iqr as _iqr
-    from botkop_telcotraffic_spark_spark.streaming.pipeline import (
+    from botkop_telcotraffic_spark_spark.streaming.payloads import (
         DOUBLE_MAX,
         DOUBLE_MIN,
     )

@@ -18,9 +18,10 @@ The threshold join-back (reference J2, a per-window hash join on the
 group key) is a broadcast-friendly equi-join here: the threshold side
 has one row per group, so AQE/broadcast makes it shuffle-free.
 
-These serve the query registry.  The streaming product's fences,
-``with_iqr_fences``, sit next to their one caller in
-``streaming/pipeline.py``.
+These serve the query registry.  The streaming product builds the same
+exact fences inside its points message
+(``streaming/payloads.py::cluster_points_payload``), from the list the
+message collects anyway; ``DOUBLE_MIN``/``DOUBLE_MAX`` come from there.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..streaming.pipeline import DOUBLE_MAX, DOUBLE_MIN
+from ..streaming.payloads import DOUBLE_MAX, DOUBLE_MIN
 
 # Ceiling for exact-mode per-group sorted lists (round-8 verdict
 # #6): ~1e8 doubles ≈ 800 MB of raw values per group — the documented

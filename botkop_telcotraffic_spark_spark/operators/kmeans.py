@@ -293,8 +293,7 @@ class StreamingKMeans:
     # exactly the post-(batch_id - 1) state — a replayed batch then
     # recomputes the identical update, and a fresh process resumes as
     # if never killed.  Snapshots are tiny JSON files written
-    # atomically (tmp + os.replace); at 10^3 batches this is a few
-    # hundred KB — prune old ids outside the engine if it matters.
+    # atomically (tmp + os.replace), and only the newest two are kept.
 
     _cursor: int | None = None
 
@@ -303,25 +302,16 @@ class StreamingKMeans:
 
         return os.path.join(state_dir, f"b{batch_id}.json")
 
-    def snapshot(
-        self, state_dir: str, batch_id: int, keep_last: int | None = None
-    ) -> None:
-        """Atomically persist post-``batch_id`` model state.  Call as
-        the LAST step of the foreachBatch body (after the sink write:
-        a crash in between replays the batch against the prior
-        snapshot, and an idempotent sink absorbs the rewrite).
+    def snapshot(self, state_dir: str, batch_id: int) -> None:
+        """Atomically persist post-``batch_id`` model state, then prune
+        every snapshot but the newest two.  Call as the LAST step of
+        the foreachBatch body (after the sink write: a crash in between
+        replays the batch against the prior snapshot, and an idempotent
+        sink absorbs the rewrite).
 
-        ``keep_last``: retain only the newest ``keep_last`` snapshots,
-        pruned AFTER the new one is committed, with a hard floor of
-        TWO retained files regardless of the requested value.  The
-        floor is what the restart path actually needs: a crash after
-        snapshot(N) but before the sink/offset commit replays batch N,
-        whose align() must load snapshot b(N-1) — keep_last=1 would
-        have pruned exactly that file the moment b(N) was written,
-        and align() would silently reset to pristine __init__ state
-        (round-7 ADVICE finding; the model diverges).  None = keep
-        everything (a long-running stream should pass a small number;
-        each snapshot is O(k*dim) bytes)."""
+        Two, because the restart path needs both: a crash after
+        snapshot(N) but before the offset commit replays batch N, whose
+        align() must load snapshot b(N-1)."""
         import json as _json
         import os
         import re as _re
@@ -334,16 +324,13 @@ class StreamingKMeans:
             )
         os.replace(tmp, self._state_path(state_dir, batch_id))
         self._cursor = batch_id
-        if keep_last is not None and keep_last >= 1:
-            ids = sorted(
-                int(m.group(1))
-                for f in os.listdir(state_dir)
-                if (m := _re.fullmatch(r"b(-?\d+)\.json", f))
-            )
-            # floor of 2: replaying the uncommitted batch N needs
-            # b(N-1), which keep_last=1 would prune (see docstring)
-            for old in ids[:-max(keep_last, 2)]:
-                os.remove(self._state_path(state_dir, old))
+        ids = sorted(
+            int(m.group(1))
+            for f in os.listdir(state_dir)
+            if (m := _re.fullmatch(r"b(-?\d+)\.json", f))
+        )
+        for old in ids[:-2]:
+            os.remove(self._state_path(state_dir, old))
 
     def align(self, state_dir: str, batch_id: int) -> None:
         """Roll the model to the exact post-(``batch_id`` - 1) state

@@ -32,9 +32,9 @@ identically on the same JVM.
 Determinism for golden tests: map-entry order (Scala ``Map`` is
 unordered) is pinned at plan time by the sorted metric list of
 ``TrafficPipeline.metric_stats_fused``; the points array is pinned to
-(subscriber.id, celltower.cell) order via
-``array_sort(collect_list(struct(...)))``, associative and
-merge-order-free.
+(subscriber.id, celltower.cell, point JSON) order by an
+``array_sort`` over the ``collect_list``, so neither the order nor the
+fences depend on the order in which partitions merge.
 
 Every builder is SQL text parsed JVM-side in one call, not a Column
 tree built one Py4J round-trip per node; outside strings (entity and
@@ -47,7 +47,9 @@ projection of the matches over a constant fence array — no join, so
 no side is hashed or broadcast; the points message is one
 ``collect_list`` per micro-batch by reference contract (its
 ``repartition(1).glom()``) — batch-sized by design, the reference
-emits a single array message per interval.
+emits a single array message per interval.  The same list gives each
+cluster's IQR fences, so flagging the outliers costs no shuffle, sort
+or join of its own.
 """
 
 from __future__ import annotations
@@ -68,11 +70,17 @@ FENCE_LIST = (
 STAT_ENTRY_FMT = (
     ' "%s": { "count":%d, "mean":%f, "stdev":%f, "max":%f, "min":%f } '
 )
+# a point's JSON up to its outlier flag; the flag and '  }' close it
 POINT_FMT = (
     '{  "subscriber": %s ,  "celltower": %s ,  "point": %s ,'
     '  "prediction": %s ,  "centroid": %s ,  "distance": %s ,'
-    '  "outlier": %s  }'
+    '  "outlier": '
 )
+
+# The reference's fences for a cluster of n <= 4 points: Scala's
+# Double.MinValue and Double.MaxValue (ClusterAnalyser.scala:157-170)
+DOUBLE_MIN = -1.7976931348623157e308
+DOUBLE_MAX = 1.7976931348623157e308
 
 
 def metric_stats_payload(stats: DataFrame, entity_col: str) -> DataFrame:
@@ -133,26 +141,54 @@ def geofence_payload(matches: DataFrame, fences: list) -> DataFrame:
     return matches.select(value.alias("value"))
 
 
-def cluster_points_payload(outliers: DataFrame) -> DataFrame:
+def cluster_points_payload(points: DataFrame) -> DataFrame:
     """ONE (value: string) message per batch in the reference's
     ``{ "points":  [...] }`` shape (``ClusterAnalyser.scala:62-65``;
-    point shape ``package.scala:47-57``).
+    point shape ``package.scala:47-57``), every point with its
+    ``outlier`` flag.
 
-    ``outliers``: output of ``TrafficPipeline.anomalies``
-    (subscriber, celltower, point, prediction, centroid, distance,
-    lo, hi) — ``outlier`` is re-derived exactly as the reference
-    stores it (distance outside [lo, hi])."""
+    ``points``: output of ``TrafficPipeline.anomalies`` (subscriber,
+    celltower, point, prediction, centroid, distance), every scored
+    point of the batch.
+
+    The flags come from the reference's A4/A5 fences
+    (``ClusterAnalyser.scala:47-58,157-170``), built from the one
+    ``collect_list`` the message needs anyway, as the reference builds
+    them from one list per cluster: each cluster's distances sorted,
+    q1 = sorted[n DIV 4] and q3 = sorted[3n DIV 4] 0-based, fences
+    q1 - 1.5·IQR and q3 + 1.5·IQR, ±DBL_MAX at n <= 4.  A point is an
+    outlier when its distance lies outside its cluster's fences.
+    ``1.5D`` because a bare ``1.5`` parses as DECIMAL."""
     point_json = (
         f"format_string({sql_str(POINT_FMT)}, to_json(subscriber),"
         " to_json(celltower), to_json(point), CAST(prediction AS STRING),"
-        " to_json(centroid), CAST(distance AS STRING),"
-        " CAST(distance < lo OR distance > hi AS STRING))"
+        " to_json(centroid), CAST(distance AS STRING))"
     )
-    one = outliers.selectExpr(
-        "array_sort(collect_list(named_struct('_sid', subscriber.id,"
-        f" '_cell', celltower.cell, 'j', {point_json}))) AS _ps"
+    one = points.selectExpr(
+        "collect_list(named_struct('_sid', subscriber.id, '_cell', celltower.cell,"
+        f" 'p', prediction, 'd', distance, 'j', {point_json})) AS _ps"
     )
-    return one.selectExpr(
+    # each cluster's distances, sorted
+    by_cluster = one.selectExpr(
+        "_ps",
+        "transform(array_distinct(transform(_ps, s -> s.p)), p -> named_struct("
+        "'p', p, 'v', array_sort(transform(filter(_ps, s -> s.p = p), s -> s.d))))"
+        " AS _sv",
+    )
+    q1, q3 = "g.v[size(g.v) DIV 4]", "g.v[3 * size(g.v) DIV 4]"
+    fences = by_cluster.selectExpr(
+        "_ps",
+        "map_from_entries(transform(_sv, g -> struct(g.p, named_struct("
+        f"'lo', IF(size(g.v) <= 4, {DOUBLE_MIN!r}D, {q1} - 1.5D * ({q3} - {q1})),"
+        f" 'hi', IF(size(g.v) <= 4, {DOUBLE_MAX!r}D, {q3} + 1.5D * ({q3} - {q1}))"
+        ")))) AS _f",
+    )
+    flagged = fences.selectExpr(
+        "array_sort(transform(_ps, s -> named_struct('_sid', s._sid, '_cell', s._cell,"
+        " 'j', concat(s.j, CAST(s.d < _f[s.p].lo OR s.d > _f[s.p].hi AS STRING), '  }'))))"
+        " AS _ps"
+    )
+    return flagged.selectExpr(
         "concat('{ \"points\":  [', array_join(transform(_ps, s -> s.j), ','), '] }')"
         " AS value"
     )

@@ -40,11 +40,6 @@ from .json_stream import decode_json_stream
 
 Sink = Callable[[DataFrame, int], None]
 
-# The reference's fences for a cluster of n <= 4 points: Scala's
-# Double.MinValue and Double.MaxValue (ClusterAnalyser.scala:157-170)
-DOUBLE_MIN = -1.7976931348623157e308
-DOUBLE_MAX = 1.7976931348623157e308
-
 
 def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, float]]]]:
     """S5/W9: (re-)read the geofence side input as the driver-local
@@ -74,42 +69,6 @@ def read_geofences(spark, path: str) -> list[tuple[str, str, list[tuple[float, f
     return fences
 
 
-def with_iqr_fences(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
-    """A4/A5: ``df`` plus its key's exact IQR fences ``lo`` and ``hi``,
-    the reference's naive order statistics
-    (``ClusterAnalyser.scala:47-58,157-170``): q1 = sorted[n DIV 4],
-    q3 = sorted[3n DIV 4] 0-based, 1.5·IQR, ±DBL_MAX at n <= 4.  They
-    are SCALAR window expressions over ``key_col`` instead of an
-    aggregate + broadcast join-back: fence and filter run in the
-    caller's job on one key_col shuffle + sort, with no
-    broadcast-build sub-job.  The order statistic at index i is picked
-    by row_number == i, never by indexing a collect_list window column
-    — an array-valued window value is copied into every row's buffer
-    (O(rows × group) bytes).  Built as SQL strings (parsed once
-    JVM-side); ``1.5D`` because a bare ``1.5`` parses as DECIMAL."""
-    part = f"PARTITION BY `{key_col}`"
-
-    def q(idx: str) -> str:
-        return (
-            f"MAX(CASE WHEN _rn = CAST(FLOOR({idx}) + 1 AS INT)"
-            f" THEN `{value_col}` END) OVER ({part})"
-        )
-
-    q1, q3 = q("_n / 4"), q("_n * 3 / 4")
-    cols = [f"`{c}`" for c in df.columns]
-    return df.selectExpr(
-        *cols,
-        f"row_number() OVER ({part} ORDER BY `{value_col}`) AS _rn",
-        f"count(1) OVER ({part}) AS _n",
-    ).selectExpr(
-        *cols,
-        f"CASE WHEN _n <= 4 THEN {DOUBLE_MIN!r}D"
-        f" ELSE {q1} - 1.5D * ({q3} - {q1}) END AS lo",
-        f"CASE WHEN _n <= 4 THEN {DOUBLE_MAX!r}D"
-        f" ELSE {q3} + 1.5D * ({q3} - {q1}) END AS hi",
-    )
-
-
 class TrafficPipeline:
     """The three analytics pipelines over an enriched celltower
     stream, driven per micro-batch."""
@@ -127,7 +86,7 @@ class TrafficPipeline:
         geofence_sink: Sink | None = None,
         outlier_sink: Sink | None = None,
         subscriber_stats_sink: Sink | None = None,
-        publish_all_points: bool = False,
+        publish_all_points: bool = True,
         round_state: int | None = None,
     ):
         self.metric_names = metric_names
@@ -161,10 +120,14 @@ class TrafficPipeline:
         # 4th reference topic (MetricStatsProducer.scala:17-36): the
         # same windowed stats keyed by subscriber instead of celltower
         self.subscriber_stats_sink = subscriber_stats_sink
-        # reference parity: publish every windowed point with its
-        # outlier flag (ClusterAnalyser.scala:55-65) instead of only
-        # the flagged rows
-        self.publish_all_points = publish_all_points
+        # the outlier sink gets every scored point, and the points
+        # message flags the outliers among them, as the reference
+        # publishes them (ClusterAnalyser.scala:55-65); True is the
+        # only mode
+        if not publish_all_points:
+            raise ValueError(
+                "publish_all_points must be True: the outlier sink gets every point"
+            )
 
     # --- per-batch analyses (plain batch DataFrame ops) ---------------
 
@@ -244,21 +207,14 @@ class TrafficPipeline:
         out = polygon_geofence_join(pts, fences)
         return out.selectExpr("subscriber", "celltower", "name AS geofence")
 
-    def anomalies(
-        self, enriched: DataFrame, keep_all: bool = False
-    ) -> DataFrame:
-        """W6 + A4/A5/J2: vectorize configured dims, train-then-predict
-        with the streaming model, IQR-flag by cluster distance.
-
-        ``keep_all=True`` returns EVERY scored point with its fences
-        attached (the reference publishes all windowed points with an
-        ``outlier`` flag, ``ClusterAnalyser.scala:55-65``); the
-        default keeps only the rows outside the fences — the
-        alert-stream variant.
-
-        Fences: ``with_iqr_fences`` — the exact per-cluster IQR as
-        window expressions over prediction, so predict + fence +
-        filter is ONE job per micro-batch on one k-key shuffle.
+    def anomalies(self, enriched: DataFrame) -> DataFrame:
+        """W6: vectorize the configured dims, then train-then-predict
+        with the streaming model.  Returns every scored point
+        (subscriber, celltower, point, prediction, centroid,
+        distance); ``payloads.cluster_points_payload`` fences them per
+        cluster (A4/A5) and flags the outliers in the message it
+        builds, as the reference publishes every point with an
+        ``outlier`` flag (``ClusterAnalyser.scala:55-65``).
 
         Known gap, not a choice (ROADMAP item 4 closes it): the points
         and their fences cover only the current micro-batch.  The
@@ -271,11 +227,7 @@ class TrafficPipeline:
         pts = enriched.selectExpr(
             "subscriber", "celltower", f"array({dims}) AS point"
         ).where("NOT exists(point, x -> x IS NULL)")
-        scored = self.model.update_and_assign(pts, vec_col="point")
-        flagged = with_iqr_fences(scored, "prediction", "distance")
-        if not keep_all:
-            flagged = flagged.where("distance < lo OR distance > hi")
-        return flagged
+        return self.model.update_and_assign(pts, vec_col="point")
 
     # --- wiring --------------------------------------------------------
 
@@ -288,6 +240,8 @@ class TrafficPipeline:
         first batch's seeding) finishes before any write starts.  The
         update changes no session conf; it runs first because its job
         fills the persisted cache once, and the writes then read it.
+        The outlier sink gets every scored point, with no fences:
+        ``payloads.cluster_points_payload`` fences and flags them.
 
         Each write runs on a ``pyspark.InheritableThread``, so its jobs
         carry this thread's local properties, among them the streaming
@@ -307,10 +261,7 @@ class TrafficPipeline:
             if self.geofence_sink is not None:
                 writes.append((self.geofence_sink, self.geofence_matches(enriched)))
             if self.outlier_sink is not None:
-                writes.append((
-                    self.outlier_sink,
-                    self.anomalies(enriched, keep_all=self.publish_all_points),
-                ))
+                writes.append((self.outlier_sink, self.anomalies(enriched)))
             errors: list[BaseException | None] = [None] * len(writes)
 
             def write(i: int) -> None:
@@ -366,13 +317,19 @@ class TrafficPipeline:
 
         def sink(batch: DataFrame, batch_id: int) -> None:
             self.model.align(state, batch_id)
-            attach_store.upsert(decode_json_stream(batch, ATTACH_EVENT))
+            attaches = decode_json_stream(batch, ATTACH_EVENT)
+            attach_store.upsert(attaches)
             cells = decode_json_stream(batch, CELLTOWER_EVENT)
-            enriched = attach_store.join(cells, fact_key="bearerId").select(
-                "subscriber", "celltower", "metrics", "event_time"
-            )
+            if attach_store.snapshot() is None:
+                # no attach seen yet, so no store: every event drops,
+                # joined to this batch's own attaches (there are none),
+                # which carry the store's columns
+                joined = cells.join(attaches.select("bearerId", "subscriber"), "bearerId")
+            else:
+                joined = attach_store.join(cells, fact_key="bearerId")
+            enriched = joined.select("subscriber", "celltower", "metrics", "event_time")
             self.process_batch(enriched, batch_id)
-            self.model.snapshot(state, batch_id, keep_last=2)
+            self.model.snapshot(state, batch_id)
 
         writer = (
             lines.writeStream.foreachBatch(sink)

@@ -92,7 +92,6 @@ def payloads(spark):
         subscriber_stats_sink=sub_stats_sink,
         geofence_sink=geo_sink,
         outlier_sink=outlier_sink,
-        publish_all_points=True,  # reference publishes ALL points
     )
     # one query over both topics' lines; under availableNow the union
     # of the two fixture files arrives as a single micro-batch
@@ -134,3 +133,38 @@ def test_payload_shapes_are_reference_exact(payloads):
     k = payloads["kmeans_outliers"][0]
     assert k.startswith('{ "points":  [')
     assert '"prediction":' in k and '"outlier":' in k
+
+
+def test_points_payload_flags_outliers_by_cluster_fences(spark):
+    """The points message's ``outlier`` flags over a hand-built batch,
+    against the reference's fences (``ClusterAnalyser.scala:157-170``).
+
+    - Cluster 0 holds 3 points, so it has no fence: its far point at
+      100.0 is not flagged.
+    - Cluster 1 holds 9 points, sorted [1, 10, 10, 10, 11, 12, 12, 15,
+      40].  q1 = sorted[2] = 10 is a tie of three values, and
+      q3 = sorted[6] = 12, so the fences are 7 and 15.  1 lies below
+      them and 40 above; 15 sits on the upper fence and is not
+      flagged.
+
+    Points come in (subscriber.id, celltower.cell) order, and each is
+    rendered in the reference's byte shape."""
+    c0 = [100.0, 0.0, 5.0]
+    c1 = [12.0, 1.0, 10.0, 40.0, 10.0, 11.0, 15.0, 10.0, 12.0]
+    rows = [((i,), (i % 2,), [d, 0.5], 0, [0.0, 0.5], d) for i, d in enumerate(c0)]
+    rows += [((10 + i,), (7,), [d, 0.5], 1, [0.0, 0.5], d) for i, d in enumerate(c1)]
+    df = spark.createDataFrame(
+        list(reversed(rows)),
+        "subscriber struct<id:int>, celltower struct<cell:int>, point array<double>,"
+        " prediction int, centroid array<double>, distance double",
+    )
+    (msg,) = [r["value"] for r in cluster_points_payload(df).collect()]
+    flagged = {1.0, 40.0}
+    want = [
+        '{  "subscriber": {"id":%d} ,  "celltower": {"cell":%d} ,  "point": [%r,0.5] ,'
+        '  "prediction": %d ,  "centroid": [0.0,0.5] ,  "distance": %r ,'
+        '  "outlier": %s  }'
+        % (sid[0], cell[0], d, p, d, str(p == 1 and d in flagged).lower())
+        for sid, cell, _, p, _, d in rows
+    ]
+    assert msg == '{ "points":  [' + ",".join(want) + "] }"

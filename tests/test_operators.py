@@ -4943,71 +4943,45 @@ def test_logrank_hand_curve(spark):
     assert logrank_test(cens, "dur", "obs", "g", "a", "b").count() == 0
 
 
-def test_streaming_kmeans_snapshot_pruning(spark, tmp_path):
-    """snapshot(keep_last=N) retains only the newest max(N, 2) state
-    files AFTER committing the new one, and align() still restores
-    from the retained snapshots.  The floor of 2 is load-bearing:
-    replaying the one uncommitted batch a restart can re-deliver
-    needs the PREVIOUS batch's snapshot, so keep_last=1 must not
-    prune it (round-7 ADVICE regression, covered below)."""
+@pytest.mark.parametrize(
+    "points, decay, seed",
+    [
+        ([[0.0, 0.0], [1.0, 1.0]], 1.0, 3),
+        ([[6.0, 3.0], [2.0, 1.0]], 0.5, 7),
+    ],
+    ids=["decay1_seed3", "decay0.5_seed7"],
+)
+def test_streaming_kmeans_snapshot_pruning(spark, tmp_path, points, decay, seed):
+    """snapshot() keeps only the newest two state files, pruned AFTER
+    the new one is committed, and align() still restores from them.
+    Two is load-bearing: a crash after snapshot(N) but before the
+    offset commit replays batch N, whose align() loads b(N-1); had
+    b(N-1) been pruned, a fresh process would silently reset to its
+    pristine state and the replayed model would diverge."""
     import os
 
     from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans
 
     df = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 1.0])], "id long, point array<double>"
+        [(i, p) for i, p in enumerate(points)], "id long, point array<double>"
     )
     state = str(tmp_path / "state")
-    m = StreamingKMeans(k=2, dim=2, decay=1.0, seed=3)
+    m = StreamingKMeans(k=2, dim=2, decay=decay, seed=seed)
     for b in range(4):
         m.align(state, b)
         m.update_and_assign(df)
-        m.snapshot(state, b, keep_last=2)
+        m.snapshot(state, b)
     assert sorted(os.listdir(state)) == ["b2.json", "b3.json"]
 
     # a fresh process replaying the last (possibly uncommitted) batch
-    # restores from the retained b2 snapshot
-    m2 = StreamingKMeans(k=2, dim=2, decay=1.0, seed=3)
+    # restores from the retained b2 snapshot and reproduces m's exact
+    # post-batch-3 state
+    m2 = StreamingKMeans(k=2, dim=2, decay=decay, seed=seed)
     m2.align(state, 3)
     out = m2.update_and_assign(df).collect()
-    # replaying batch 3 from the b2 snapshot reproduces m's exact
-    # post-batch-3 state
     assert m2.centroids == m.centroids
     assert m2.weights == m.weights
     assert len(out) == 2
-
-
-def test_streaming_kmeans_keep_last_one_replay_after_prune(spark, tmp_path):
-    """Regression (round-7 ADVICE): keep_last=1 must still retain the
-    previous batch's snapshot, because the crash window between
-    snapshot(N) and the offset commit replays batch N, whose align()
-    loads b(N-1).  Before the floor-of-2 fix, b(N-1) was pruned and a
-    fresh process silently reset to pristine __init__ state — the
-    replayed model diverged from the pre-crash one."""
-    import os
-
-    from botkop_telcotraffic_spark_spark.operators.kmeans import StreamingKMeans
-
-    df = spark.createDataFrame(
-        [(1, [6.0, 3.0]), (2, [2.0, 1.0])], "id long, point array<double>"
-    )
-    state = str(tmp_path / "state")
-    m = StreamingKMeans(k=2, dim=2, decay=0.5, seed=7)
-    for b in range(4):
-        m.align(state, b)
-        m.update_and_assign(df)
-        m.snapshot(state, b, keep_last=1)
-    # floor of 2 retained despite keep_last=1
-    assert sorted(os.listdir(state)) == ["b2.json", "b3.json"]
-
-    # crash after snapshot(3), offset commit lost: a fresh process
-    # replays batch 3 and must land on the pre-crash post-batch-3
-    # state, not a pristine-reset divergence
-    m2 = StreamingKMeans(k=2, dim=2, decay=0.5, seed=7)
-    m2.align(state, 3)
-    m2.update_and_assign(df)
-    assert m2.centroids == m.centroids
-    assert m2.weights == m.weights
 
 
 def test_cross_encoder_rerank_features_match_bruteforce(spark):

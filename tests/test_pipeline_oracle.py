@@ -17,7 +17,9 @@ pure-Python model recomputed from the generated seed and backlog
 lines: per (window, key), ``count`` exactly and mean/stdev
 (population)/max/min within 1e-6 absolute, the ``%f`` print
 precision.  Every published K-Means point's ``distance`` must be the
-Euclidean distance from its ``point`` to its ``centroid``.  The
+Euclidean distance from its ``point`` to its ``centroid``, and its
+``outlier`` flag must follow its cluster's IQR fences, recomputed from
+the message's own distances.  The
 geofence containment test must agree with the generator's ray cast
 point for point, on edges and vertices too.
 
@@ -34,6 +36,7 @@ import importlib.util
 import json
 import math
 import os
+import sys
 
 import pytest
 
@@ -104,7 +107,6 @@ def _pipeline(spark, inputs, sinks, profile):
         ),
         geofence_sink=sink("geofence", lambda df: payloads.geofence_payload(df, fences)),
         outlier_sink=sink("kmeans_points", payloads.cluster_points_payload),
-        publish_all_points=True,
     )
 
 
@@ -141,6 +143,7 @@ def test_run_matches_benchmark_oracle(spark, tmp_path, workload):
                 f"{topic} batch {b}"
             )
         assert _distance_mismatches(sinks, b) == [], f"kmeans_points batch {b}"
+        assert _outlier_flag_mismatches(sinks, b) == [], f"kmeans_points batch {b}"
 
 
 @pytest.mark.parametrize("fence_set", ["fixture", "ref_sliding", "geofence_dense"])
@@ -317,6 +320,36 @@ def _distance_mismatches(sinks, batch):
         want = math.sqrt(sum((x - c) ** 2 for x, c in zip(p["point"], p["centroid"])))
         if not math.isclose(p["distance"], want, rel_tol=1e-9):
             bad.append(f"distance {p['distance']} != {want} for {p}")
+    return bad
+
+
+def _iqr_fences(distances):
+    """The reference's fences over one cluster's distances
+    (``ClusterAnalyser.scala:47-58,157-170``): q1 = sorted[n // 4] and
+    q3 = sorted[3n // 4] 0-based, 1.5 IQR beyond them, and Scala's
+    Double.MinValue/MaxValue at n <= 4."""
+    n = len(distances)
+    if n <= 4:
+        return -sys.float_info.max, sys.float_info.max
+    v = sorted(distances)
+    q1, q3 = v[n // 4], v[3 * n // 4]
+    return q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+
+
+def _outlier_flag_mismatches(sinks, batch):
+    """Every point's ``outlier`` flag against its cluster's fences,
+    recomputed from the message's own (prediction, distance) pairs."""
+    (line,) = bench.read_topic(sinks, "kmeans_points", batch).decode().splitlines()
+    points = json.loads(line)["points"]
+    by_cluster = {}
+    for p in points:
+        by_cluster.setdefault(p["prediction"], []).append(p["distance"])
+    fences = {c: _iqr_fences(ds) for c, ds in by_cluster.items()}
+    bad = []
+    for p in points:
+        lo, hi = fences[p["prediction"]]
+        if p["outlier"] != (p["distance"] < lo or p["distance"] > hi):
+            bad.append(f"outlier {p['outlier']} outside fences ({lo}, {hi}) for {p}")
     return bad
 
 

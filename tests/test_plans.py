@@ -977,14 +977,13 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
     InMemoryTableScan — never re-scan the source — carry no
     cartesian/BNLJ, and stay inside a per-branch exchange budget:
     each stats topic is one groupBy(window, entity) and pays 1
-    hash-agg exchange; anomalies pays <=2 (round-10:
-    the exact-IQR fences became scalar window expressions on one
-    k-key shuffle — the streaming_kmeans_outliers r7 shave applied
-    to the production operator — replacing the bounds aggregate +
-    broadcast join-back, so predict + fence + filter is one job per
-    micro-batch with no broadcast build).  If an intentional change
-    moves a bound, update it WITH a docstring note (the
-    flagship-exchange-count contract).
+    hash-agg exchange.  The K-Means points message, with its
+    per-cluster IQR fences and outlier flags, is ONE global
+    collect_list: exactly one Exchange (SinglePartition) and no
+    Window or Sort node, so predict + fence + flag + render is one
+    aggregate per micro-batch.  If an intentional change moves a
+    bound, update it WITH a docstring note (the flagship-exchange-count
+    contract).
 
     Plan-text caveat: InMemoryRelation prints its cached-build RECIPE
     (including the original FileScan) as an indented block — those
@@ -992,6 +991,9 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
     executes, so they are stripped before asserting."""
     import json
 
+    from botkop_telcotraffic_spark_spark.streaming.payloads import (
+        cluster_points_payload,
+    )
     from botkop_telcotraffic_spark_spark.streaming.pipeline import (
         TrafficPipeline,
     )
@@ -1029,9 +1031,12 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
     )
     e = entry_mod._t(spark, sfd, "events")
     cell = (F.col("event_id") % 20).cast("bigint")
+    # the product's shape: the points message keys on subscriber.id
+    # and celltower.cell
     enriched = e.select(
-        F.col("user_id").alias("subscriber"),
+        F.struct(F.col("user_id").alias("id")).alias("subscriber"),
         F.struct(
+            cell.alias("cell"),
             F.concat(F.lit("c"), cell.cast("string")).alias("id"),
             F.struct(
                 (cell * 9 - 90 + F.lit(0.5)).cast("double").alias("lat"),
@@ -1053,10 +1058,10 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
             "cellstats": by_cell,
             "substats": by_sub,
             "geofence": pipe.geofence_matches(enriched),
-            "anomalies": pipe.anomalies(enriched),
+            "kmeans_points": cluster_points_payload(pipe.anomalies(enriched)),
         }
         budget = {
-            "cellstats": 1, "substats": 1, "geofence": 0, "anomalies": 2,
+            "cellstats": 1, "substats": 1, "geofence": 0, "kmeans_points": 1,
         }
         for name, df in branches.items():
             plan = strip_cache_recipes(physical_plan(df))
@@ -1070,9 +1075,13 @@ def test_streaming_fanout_per_batch_plan_shape(spark, tmp_path, sfd):
             assert ex <= budget[name], (
                 f"{name} exchanges grew: {ex} > {budget[name]}\n{plan}"
             )
-        # round-10: the IQR fences are window expressions on the
-        # k-key shuffle — no join (and so no broadcast) in the branch
-        assert "Window" in physical_plan(branches["anomalies"])
+        # the fences come from the message's own collect_list: its one
+        # Exchange gathers the batch, and nothing keys, sorts or joins
+        points = strip_cache_recipes(physical_plan(branches["kmeans_points"]))
+        exchanges = [ln for ln in points.splitlines() if "Exchange" in ln]
+        assert len(exchanges) == 1 and "SinglePartition" in exchanges[0], points
+        assert "Window" not in points and "Sort" not in points, points
+        assert "Join" not in points, points
     finally:
         enriched.unpersist()
 

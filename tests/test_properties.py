@@ -21,7 +21,7 @@ from botkop_telcotraffic_spark_spark.functions.textfn import (
 )
 from botkop_telcotraffic_spark_spark.operators.dedup import bucket_pairs
 from botkop_telcotraffic_spark_spark.operators.iqr import iqr_bounds
-from botkop_telcotraffic_spark_spark.streaming.pipeline import DOUBLE_MAX, DOUBLE_MIN
+from botkop_telcotraffic_spark_spark.streaming.payloads import DOUBLE_MAX, DOUBLE_MIN
 
 _SETTINGS = dict(
     max_examples=5,

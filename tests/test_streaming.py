@@ -123,10 +123,55 @@ def test_full_pipeline_fanout(spark, fixtures):
                 expected_matches += 1
     assert len(outputs["geo"]) == expected_matches
 
-    # anomaly pipeline ran: model trained (weights sum = events seen)
+    # anomaly pipeline ran: model trained (weights sum = events seen),
+    # and the outlier sink got every scored point, one per enriched
+    # event, with no fences (the points message flags the outliers)
     assert sum(pipe.model.weights) == pytest.approx(n_known_events)
-    for r in outputs["outliers"]:
-        assert r["distance"] < r["lo"] or r["distance"] > r["hi"]
+    assert len(outputs["outliers"]) == n_known_events
+    assert not {"lo", "hi"} & set(spark.read.parquet(outlier_dir).columns)
+
+
+def test_run_before_any_attach_drops_events_then_enriches(spark, fixtures, tmp_path):
+    """Celltower events that arrive before any attach has been seen
+    find no store: the batch finishes, every event drops (the
+    reference's inner join against an empty table) and no stats
+    message is written.  A later batch that carries attaches creates
+    the store and enriches its own events as usual."""
+    src = tmp_path / "lines"
+    src.mkdir()
+    cell_file = os.path.join(fixtures["cell_path"], "celltower.jsonl")
+    with open(cell_file) as fh:
+        first_event = fh.readline()
+    (src / "b0.jsonl").write_text(first_event)
+    stats = {}
+    pipe = TrafficPipeline(
+        metric_names=["rtt"],
+        kmeans_dims=["rtt"],
+        stats_sink=lambda df, bid: stats.setdefault(bid, []).extend(df.collect()),
+    )
+    store = KeyedUpsertStore(
+        spark, str(tmp_path / "store"), key_col="bearerId", order_col="ts"
+    )
+
+    def run_once():
+        lines = spark.readStream.format("text").option("maxFilesPerTrigger", 1).load(str(src))
+        pipe.run(lines, store, checkpoint=str(tmp_path / "ckpt"))
+
+    run_once()
+    assert store.snapshot() is None
+    assert stats == {0: []}
+
+    # the second batch: every fixture attach, then every celltower event
+    with open(os.path.join(fixtures["attach_path"], "attach.jsonl")) as fh:
+        attaches = fh.read()
+    with open(cell_file) as fh:
+        events = fh.read()
+    (src / "b1.jsonl").write_text(attaches + events)
+    run_once()
+    known = set(latest_attach_by_bearer(fixtures["attaches"]))
+    n_known = sum(1 for c in fixtures["cells"] if c["bearerId"] in known)
+    # sliding 30 s / 2 s: each enriched event lands in 15 windows
+    assert sum(s["n"] for r in stats[1] for s in r["stats"]) == 15 * n_known
 
 
 def test_subscriber_stats_only_gets_fused_slice(spark):
@@ -364,7 +409,6 @@ def test_steady_state_batch_compiles_no_classes(spark, fixtures, tmp_path):
         "geofence_sink": text_sink(
             "geofence", lambda df: pay.geofence_payload(df, fences)),
         "outlier_sink": text_sink("kmeans_points", pay.cluster_points_payload),
-        "publish_all_points": True,
     })
     store = str(tmp_path / "store")
     per_batch = []
@@ -902,6 +946,17 @@ def test_geofence_sink_requires_geofence_path():
         metric_names=["rtt"], kmeans_dims=["rtt"], geofence_path="fences.json"
     )
     assert pipe.geofence_sink is None
+
+
+def test_alert_stream_mode_is_refused():
+    """There is one K-Means mode: the outlier sink gets every scored
+    point, and the points message flags the outliers among them.
+    ``publish_all_points=False``, which would hand the sink only the
+    flagged rows, is refused up front."""
+    with pytest.raises(ValueError, match="publish_all_points"):
+        TrafficPipeline(
+            metric_names=["rtt"], kmeans_dims=["rtt"], publish_all_points=False
+        )
 
 
 @pytest.mark.parametrize("dims, k", [([], 3), (["rtt"], 0)], ids=["no_dims", "k0"])
